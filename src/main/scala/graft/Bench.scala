@@ -51,6 +51,26 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
+  /** Bench's session: [[GraftSession.builder]] on SPARK_GRAFT_CPUS cores
+    * with every file:// FS op counted (r10 verdict #1: each entry's steady
+    * run carries its FS-op fingerprint — load skew amplifies TIME but not
+    * op counts). The per-entry tools open theirs here too, so they run an
+    * entry exactly as Bench does.
+    */
+  private[graft] def openSession(): SparkSession =
+    GraftSession.builder(
+        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, "graft-bench")
+      .config("spark.hadoop.fs.file.impl",
+        classOf[graft.core.CountingLocalFileSystem].getName)
+      .getOrCreate()
+
+  /** Warm-up outside the clock: JVM + codegen + a first parquet read. */
+  private[graft] def warmUp(spark: SparkSession, sfDir: String): Unit = {
+    spark.range(1000000).selectExpr("sum(id)").collect()
+    try spark.read.parquet(s"$sfDir/lineitem.parquet").count()
+    catch { case _: Throwable => () }
+  }
+
   /** Budget-ratchet decision, factored for the spec: given the prior
     * budgets, fresh steady times, and the set of entries explicitly
     * authorized to raise, either the new budgets map (Right) or the
@@ -196,20 +216,8 @@ object Bench {
     val budgetPath = sys.env.getOrElse("SPARK_GRAFT_BUDGETS",
       if (sfBase == "sf0.01") "BENCH_BUDGETS.json"
       else s"BENCH_BUDGETS_$sfBase.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // self-adjudication (r10 verdict #1): every file:// FS op is
-      // counted globally so each entry's steady run carries its FS-op
-      // fingerprint — load skew amplifies TIME but not op counts
-      .config("spark.hadoop.fs.file.impl",
-        classOf[graft.core.CountingLocalFileSystem].getName)
-      .getOrCreate()
+    val spark = openSession()
     spark.sparkContext.setLogLevel("WARN")
 
     // per-entry Spark job/stage/task counts — the other half of the
@@ -236,10 +244,7 @@ object Bench {
         "tasks" -> taskCount.get)
     }
 
-    // Warm up: JVM + codegen + a first parquet read outside the clock.
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    try spark.read.parquet(s"$sfDir/lineitem.parquet").count()
-    catch { case _: Throwable => () }
+    warmUp(spark, sfDir)
 
     // A failed query must not masquerade as a fast one (round-6 post-mortem:
     // 21 throwing entries were timed-to-throw and read as "10-60x speedups").

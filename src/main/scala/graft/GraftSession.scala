@@ -8,19 +8,21 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
-  def local(cores: Int = Runtime.getRuntime.availableProcessors(),
-      appName: String = "graft"): SparkSession = {
-    val spark = SparkSession.builder()
+  /** The one session builder: every main and the test base start here and
+    * add only their own extras with `.config(...)`.
+    */
+  def builder(cores: Int, appName: String): SparkSession.Builder =
+    SparkSession.builder()
       .master(s"local[$cores]")
       .appName(appName)
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    install(spark)
-    spark
-  }
+
+  def local(cores: Int = Runtime.getRuntime.availableProcessors(),
+      appName: String = "graft"): SparkSession =
+    install(builder(cores, appName).getOrCreate())
 
   /** Install graft SQL functions and optimizer rules on any live session
     * (cluster deployments should prefer

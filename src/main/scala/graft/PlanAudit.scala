@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Prints condensed physical-plan diagnostics per query: scan schemas,
   * pushed filters, exchange count, join strategies. Used to audit that
   * filters/pruning reach the parquet scans and joins pick the intended
@@ -11,15 +9,10 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val only = if (args.length > 1) Some(args(1)) else None
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = GraftSession.builder(4, "graft-plan-audit")
       // default 100 truncates scan metadata BEFORE PartitionFilters — the
       // audit must be able to show partition pruning (v7's lists scan)
       .config("spark.sql.maxMetadataStringLength", "2000")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -37,14 +37,8 @@ object ScaleProbe {
         "triangles", "ranktopk", "ivftrain", "recovery", "annrank",
         "snapshot", "vtable", "manifest", "mvext", "occ", "vtstream")
     def on(p: String) = probes.contains(p)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.builder(cpus, "graft-scale-probe").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def t(name: String)(body: => Long): Unit = {
@@ -62,23 +56,13 @@ object ScaleProbe {
         else shifted
       }.reduce(_ unionByName _)
 
-    def deleteTree(dir: String): Unit = {
-      val p = java.nio.file.Paths.get(dir)
-      if (java.nio.file.Files.exists(p)) {
-        val walk = java.nio.file.Files.walk(p)
-        try walk.sorted(java.util.Comparator.reverseOrder())
-          .forEach(f => java.nio.file.Files.deleteIfExists(f))
-        finally walk.close()
-      }
-    }
-
     if (probes.intersect(
         Set("d3", "d11", "d15", "d18", "d21", "d35", "d37", "bpe", "d33",
           "d34", "bm25", "dsir", "phrase", "clf", "maxscore", "recovery",
           "ranktopk", "annrank", "snapshot")).nonEmpty) {
       val docs1 = graft.sources.Tables.load(spark, sfDir, "documents")
       val docsN = replicate(docs1, "doc_id", mult, mutate = true)
-        .repartition(cpus.toInt).persist()
+        .repartition(cpus).persist()
       println(s"corpus: ${docs1.count()} docs -> ${docsN.count()} docs (${mult}x)")
 
       for ((label, d) <- Seq("1x" -> docs1, s"${mult}x" -> docsN)) {
@@ -168,7 +152,7 @@ object ScaleProbe {
             Dedup.verifyPairsExact(slim, cands, "doc_id", "text",
               n = 3, threshold = 0.35).count()
           }
-          deleteTree(idxDir)
+          Fixture.deleteTree(idxDir)
         }
         if (on("bpe")) t(s"d28_bpe_tokens_$label") {
           // corpus-linear per-row merge loop (memoized per distinct word)
@@ -229,7 +213,7 @@ object ScaleProbe {
               w, "docs")
             spark.read.parquet(s"$whDir/docs_vocab").count()
           }
-          deleteTree(whDir)
+          Fixture.deleteTree(whDir)
         }
         // Max-score serving on the DELIBERATELY high-df adversary the r8
         // verdict asked for (production queries contain stop words): five
@@ -270,7 +254,7 @@ object ScaleProbe {
             Retrieval.queryBm25IndexMaxScore(spark, w, "docs", qs, k = 10,
               excludeSelf = true).count()
           }
-          deleteTree(whDir)
+          Fixture.deleteTree(whDir)
           val pdDir = java.nio.file.Files
             .createTempDirectory("probe_msp_").toString
           val wp = new graft.sources.TableWriter(pdDir)
@@ -285,7 +269,7 @@ object ScaleProbe {
             Retrieval.phraseQuery(spark, wp, "docs", phrases, k = 10,
               excludeSelf = true).count()
           }
-          deleteTree(pdDir)
+          Fixture.deleteTree(pdDir)
           zd.unpersist(blocking = false)
         }
         // ranktopk: the r9 verdict's weak, isolated — per-query rank must
@@ -347,7 +331,7 @@ object ScaleProbe {
           t(s"rank_serving_query_$label") {
             Retrieval.queryBm25Index(spark, w, "docs", oneQ, k = 10).count()
           }
-          deleteTree(whDir)
+          Fixture.deleteTree(whDir)
         }
         if (on("annrank")) {
           // the ANN twin of ranktopk: same 100-fanout candidate mass for
@@ -408,7 +392,7 @@ object ScaleProbe {
           t(s"snapshot_crashed_$label") {
             Retrieval.queryBm25Index(spark, w, "docs", qs, k = 10).count()
           }
-          deleteTree(whDir)
+          Fixture.deleteTree(whDir)
         }
         // d41: DSIR — one (doc, bin) combine shuffle, a 64-row bag model,
         // TakeOrdered selection. Must scale ~linearly in corpus size
@@ -448,7 +432,7 @@ object ScaleProbe {
             Retrieval.phraseQuery(spark, w, "docs", phrases, k = 10,
               excludeSelf = true).count()
           }
-          deleteTree(whDir)
+          Fixture.deleteTree(whDir)
         }
       }
       docsN.unpersist()
@@ -467,7 +451,7 @@ object ScaleProbe {
       for ((label, n) <- Seq("1x" -> 1, s"${mult}x" -> mult)) {
         val oN = (0 until n).map(r =>
             o1.withColumn("k", col("k") + lit(r * 1000000000L)))
-          .reduce(_ unionByName _).repartition(cpus.toInt).persist()
+          .reduce(_ unionByName _).repartition(cpus).persist()
         oN.count()
         val buckets = 16 * n
         val whDir = java.nio.file.Files
@@ -500,7 +484,7 @@ object ScaleProbe {
           w.rebucket(spark, "t", "k", newBuckets = buckets * 2)
           spark.read.parquet(s"$whDir/t").count()
         }
-        deleteTree(whDir)
+        Fixture.deleteTree(whDir)
         oN.unpersist()
       }
     }
@@ -518,7 +502,7 @@ object ScaleProbe {
         val evN = (0 until n).map { r =>
           ev1.withColumn("event_id", col("event_id") + lit(r * 1000000000L))
             .withColumn("ts", col("ts") + expr(s"INTERVAL ${r * 31} DAY"))
-        }.reduce(_ unionByName _).repartition(cpus.toInt).persist()
+        }.reduce(_ unionByName _).repartition(cpus).persist()
         evN.count()
         val us = unix_micros(col("ts"))
         if (on("q43")) t(s"q43_range_join_$label") {
@@ -551,7 +535,7 @@ object ScaleProbe {
       for ((label, n) <- Seq("1x" -> 1, s"${mult}x" -> mult)) {
         val evN = (0 until n).map { r =>
           ev1.withColumn("user_id", col("user_id") + lit(r * 1000000L))
-        }.reduce(_ unionByName _).repartition(cpus.toInt).persist()
+        }.reduce(_ unionByName _).repartition(cpus).persist()
         evN.count()
         t(s"q101_funnel_$label") {
           val s1 = evN.filter(col("event_type") === "view")
@@ -583,7 +567,7 @@ object ScaleProbe {
           val shifted = docs1.withColumn("doc_id", col("doc_id") + lit(r * 10000000L))
           if (r > 0) shifted.withColumn("text", concat(col("text"), lit(s" rep$r")))
           else shifted
-        }.reduce(_ unionByName _).repartition(cpus.toInt).persist()
+        }.reduce(_ unionByName _).repartition(cpus).persist()
         docsN.count()
         t(s"d45_countmin_$label") {
           graft.operators.Sketches.countMinEstimates(docsN).count()
@@ -622,7 +606,7 @@ object ScaleProbe {
           .select((col("b0") + col("i") + 4000L).as("id_a"),
             (col("b0") + col("i") + 4001L).as("id_b"))
         val edges = hub.unionByName(k4).unionByName(ring)
-          .repartition(cpus.toInt).persist()
+          .repartition(cpus).persist()
         val ne = edges.count()
         t(s"d44_triangles_$label") {
           val out = Dedup.triangleCounts(edges)
@@ -646,7 +630,7 @@ object ScaleProbe {
       for ((label, n) <- Seq("1x" -> 1, s"${mult}x" -> mult)) {
         val evN = (0 until n).map { r =>
           ev1.withColumn("user_id", col("user_id") + lit(r * 1000000L))
-        }.reduce(_ unionByName _).repartition(cpus.toInt).persist()
+        }.reduce(_ unionByName _).repartition(cpus).persist()
         evN.count()
         t(s"q96_gapfill_$label") {
           // aggregate over the FILLED columns — a bare count() lets
@@ -772,7 +756,7 @@ object ScaleProbe {
             } finally spark.conf.unset(clKey)
           } finally spark.conf.unset(key)
         }
-        deleteTree(stage)
+        Fixture.deleteTree(stage)
       }
     }
 
@@ -785,7 +769,7 @@ object ScaleProbe {
       val orders1 = graft.sources.Tables.load(spark, sfDir, "orders")
       val ordersN = (0 until mult).map { r =>
         orders1.withColumn("o_orderkey", col("o_orderkey") + lit(r * 100000000L))
-      }.reduce(_ unionByName _).repartition(cpus.toInt).persist()
+      }.reduce(_ unionByName _).repartition(cpus).persist()
       println(s"orders: ${orders1.count()} -> ${ordersN.count()} (${mult}x)")
       for ((label, o) <- Seq("1x" -> orders1, s"${mult}x" -> ordersN)) {
         def src = o.select(col("o_orderkey").as("k"),
@@ -802,7 +786,7 @@ object ScaleProbe {
           w.mergeByKey(spark, "m", base, "k")
           w.mergeByKey(spark, "m", changes, "k")
           val n = w.read(spark, "m").count()
-          deleteTree(wh)
+          Fixture.deleteTree(wh)
           n
         }
         // q95: shallow clone must be FLAT under replication (it writes
@@ -840,10 +824,7 @@ object ScaleProbe {
             .withColumn("batch_id", lit(1L))
             .withColumn("change_op", lit("insert"))
             .write.mode("overwrite").parquet(s"$feedRoot/batch=1")
-          if (!spark.experimental.extraOptimizations
-              .exists(_.isInstanceOf[MvRewrite]))
-            spark.experimental.extraOptimizations =
-              spark.experimental.extraOptimizations :+ MvRewrite(spark)
+          MvRewrite.install(spark)
           // force BOTH outputs (a count-only fold would let pruning
           // drop the SUM partials — the probe-honesty rule)
           def agg() = {
@@ -862,7 +843,7 @@ object ScaleProbe {
             comp = Some(MvRegistry.CompDef(feedRoot, frontier = 0L))))
           t(s"q121_mv_compensated_$label")(agg()) // view + fixed tail
           MvRegistry.deregister(spark, basePath)
-          deleteTree(wh)
+          Fixture.deleteTree(wh)
         }
         // q126: incremental view refresh must cost O(|tail| + |grain|):
         // the bootstrap fold over the mult× feed is the linear path
@@ -893,7 +874,7 @@ object ScaleProbe {
           t(s"q126_refresh_tail_$label") {
             MvMaintain.refresh(spark, feed, mv, vdef)
           }
-          deleteTree(wh)
+          Fixture.deleteTree(wh)
         }
         // q124: bloom-skip point lookups must stay FLAT as the table
         // grows — file size (and so per-file fpp) is held constant by
@@ -931,7 +912,7 @@ object ScaleProbe {
             spark.read.parquet(path)
               .filter(col("v").isin(targets: _*)).count()
           }
-          deleteTree(wh)
+          Fixture.deleteTree(wh)
         }
         if (on("vtable")) {
           val wh = java.nio.file.Files
@@ -972,7 +953,7 @@ object ScaleProbe {
             dv.toLong * 1000000L + df
           }
           batch.unpersist(blocking = false)
-          deleteTree(wh)
+          Fixture.deleteTree(wh)
         }
         if (on("occ")) {
           // optimistic commits (r12): a one-bucket optimistic commit's
@@ -1020,7 +1001,7 @@ object ScaleProbe {
           }
           mine.unpersist(blocking = false)
           other.unpersist(blocking = false)
-          deleteTree(wh)
+          Fixture.deleteTree(wh)
         }
         if (on("vtstream")) {
           // streaming manifest CDF (r12): draining a ONE-BUCKET-change
@@ -1057,7 +1038,7 @@ object ScaleProbe {
             try q.processAllAvailable() finally q.stop()
             buf.get()
           }
-          deleteTree(wh)
+          Fixture.deleteTree(wh)
         }
         if (on("mvext")) {
           // compensated EXTREMA serving (r11): MIN/MAX from a stale
@@ -1087,10 +1068,7 @@ object ScaleProbe {
             .agg(max(struct(col("price"), col("k"))).as("m"))
             .select(col("m.k").as("k"))
           w.deleteByKeyCdc(spark, "xt", victims, "k", batchId = 2L)
-          if (!spark.experimental.extraOptimizations
-              .exists(_.isInstanceOf[MvRewrite]))
-            spark.experimental.extraOptimizations =
-              spark.experimental.extraOptimizations :+ MvRewrite(spark)
+          MvRewrite.install(spark)
           MvRegistry.register(spark, w.path("xt"), MvRegistry.MvDef(
             s"$wh/xmv", Set("cust"), Map("price" -> "sum_price"), "n",
             comp = Some(MvRegistry.CompDef(w.path("xt_changes"), frontier = 1L)),
@@ -1102,7 +1080,7 @@ object ScaleProbe {
           t(s"q129_mvext_serve_$label") { serveQ.collect().length.toLong }
           MvRegistry.deregister(spark, w.path("xt"))
           t(s"q129_mvext_plain_$label") { serveQ.collect().length.toLong }
-          deleteTree(wh)
+          Fixture.deleteTree(wh)
         }
         if (on("manifest") && label == "1x") {
           // manifest METADATA layer at ~10⁵ live file entries, through
@@ -1145,7 +1123,7 @@ object ScaleProbe {
             graft.sources.VersionedTable.resolvedEntries(spark, root, 8L)
               .values.map(_.size.toLong).sum
           }
-          deleteTree(wh)
+          Fixture.deleteTree(wh)
         }
         if (on("clone")) {
           val wh = java.nio.file.Files
@@ -1169,7 +1147,7 @@ object ScaleProbe {
             w.readResolved(spark, "branch",
               Some(Seq(3))).count()
           }
-          deleteTree(wh)
+          Fixture.deleteTree(wh)
         }
         if (on("q59")) t(s"q59_snapshot_$label") {
           val wh = java.nio.file.Files
@@ -1194,7 +1172,7 @@ object ScaleProbe {
           val snap2 = ph("run2")(graft.operators.SnapshotStore.run(spark, w,
             "snap", v2, "k", Seq("price"), java.sql.Date.valueOf("2024-02-01")))
           val n = ph("count")(snap2.count())
-          deleteTree(wh)
+          Fixture.deleteTree(wh)
           n
         }
         // q69's claim is "compaction cost tracks small-file MASS, not
@@ -1215,7 +1193,7 @@ object ScaleProbe {
             val (before, after) = w.compact(spark, "t", targetBytes = 8L << 20)
             (before - after).toLong
           }
-          deleteTree(wh)
+          Fixture.deleteTree(wh)
         }
         // q70: range-partition + sort is ONE shuffle over the table —
         // expected ~linear in mult; file count scales with mult so file
@@ -1233,7 +1211,7 @@ object ScaleProbe {
             numFiles = 16 * (if (label == "1x") 1 else mult))
           val n = w.read(spark, "z")
             .filter(col("a") < 128 && col("b") >= 896).count()
-          deleteTree(wh)
+          Fixture.deleteTree(wh)
           n
         }
         // q71's claim is "delete cost tracks hit buckets, not table
@@ -1256,7 +1234,7 @@ object ScaleProbe {
             w.deleteByKey(spark, "t", doomed, "k", numBuckets = nb)
             w.read(spark, "t").count()
           }
-          deleteTree(wh)
+          Fixture.deleteTree(wh)
         }
         if (on("q63")) t(s"q63_bucketed_$label") {
           val wh = java.nio.file.Files
@@ -1272,7 +1250,7 @@ object ScaleProbe {
             .groupBy(col("c_mktsegment")).agg(count(lit(1))).count()
           spark.sql("DROP TABLE IF EXISTS probe_bk_orders")
           spark.sql("DROP TABLE IF EXISTS probe_bk_cust")
-          deleteTree(wh)
+          Fixture.deleteTree(wh)
           n
         }
       }
@@ -1297,7 +1275,7 @@ object ScaleProbe {
                 + d.cast("double") * lit(7.0))
               + lit(0.05) * sin(col("id").cast("double") * lit(13.0)
                 + d.cast("double") * lit(3.0))).as("embedding"))
-        .repartition(cpus.toInt).persist()
+        .repartition(cpus).persist()
       println(s"  ivftrain corpus: ${vecs.count()} vectors, K=10000, dim=$dim")
       t("ivftrain_K1e4") {
         Similarity.trainIvfCentroids(vecs, initStride = 100L, iters = 2)
@@ -1311,7 +1289,7 @@ object ScaleProbe {
       val emb1 = graft.sources.Tables.load(spark, sfDir, "embeddings")
       val embN = (0 until mult).map { r =>
         emb1.withColumn("vec_id", col("vec_id") + lit(r * 10000000L))
-      }.reduce(_ unionByName _).repartition(cpus.toInt).persist()
+      }.reduce(_ unionByName _).repartition(cpus).persist()
       for ((label, e, m) <- Seq(("1x", emb1, 1), (s"${mult}x", embN, mult))) {
         if (on("v5")) t(s"v5_ann_sq8_$label") {
           Similarity.sq8TopK(e, e.filter(col("vec_id") < 8), k = 5,
@@ -1369,7 +1347,7 @@ object ScaleProbe {
               w, "emb")
             spark.read.parquet(s"$wh/emb_lists").count()
           }
-          deleteTree(wh)
+          Fixture.deleteTree(wh)
         }
         // v9: the persisted IVF+PQ serving index. Build (train + encode +
         // write) is the once-per-corpus-version cost and must stay ~linear;
@@ -1398,7 +1376,7 @@ object ScaleProbe {
               e.filter(col("vec_id") < 8), k = 5, nprobe = 2,
               rerankFactor = 8).count()
           }
-          deleteTree(wh)
+          Fixture.deleteTree(wh)
           n
         }
         // v17: index deletion lifecycle against an index that grows with
@@ -1430,7 +1408,7 @@ object ScaleProbe {
             Similarity.vacuumIvfIndex(spark, w, "emb")
             spark.read.parquet(s"$wh/emb_lists").count()
           }
-          deleteTree(wh)
+          Fixture.deleteTree(wh)
         }
         // d36 SemDeDup: K scales as ~√N (stride = N/K), the regime that
         // balances centroid assignment (O(N·K)) against the within-cluster
@@ -1468,7 +1446,7 @@ object ScaleProbe {
       val orders1 = graft.sources.Tables.load(spark, sfDir, "orders")
       val ordersN = (0 until mult).map { r =>
         orders1.withColumn("o_orderkey", col("o_orderkey") + lit(r * 100000000L))
-      }.reduce(_ unionByName _).repartition(cpus.toInt).persist()
+      }.reduce(_ unionByName _).repartition(cpus).persist()
       for ((label, o) <- Seq("1x" -> orders1, s"${mult}x" -> ordersN)) {
         t(s"q32_classifier_$label") {
           o.createOrReplaceTempView("orders_scaleprobe")
@@ -1595,7 +1573,7 @@ object ScaleProbe {
       println(s"PROBE-INFO vocab1m: ${before.size} bucket files before, " +
         s"$untouched untouched after append; rewritten " +
         s"${rewrittenBytes / 1024} KiB of ${totalBytes / 1024} KiB total")
-      deleteTree(whDir)
+      Fixture.deleteTree(whDir)
     }
 
     // recovery: the streamed-ingest crash paths on a REAL-vocabulary-
@@ -1675,7 +1653,7 @@ object ScaleProbe {
         s"${strays.size} targeted deletes; pre-r10 sweep = " +
         s"${dirsListed + 1} listStatus calls (every bucket dir), " +
         "per batch, per redelivery")
-      deleteTree(whDir)
+      Fixture.deleteTree(whDir)
     }
 
     // dag: the COMPOSED 27-model reference DAG at replication scale (r9
@@ -1723,7 +1701,7 @@ object ScaleProbe {
             .runAllParallel(spark, sources, writer = Some(w))
           spark.read.parquet(s"$whDir/metrics_month").count()
         }
-        deleteTree(whDir)
+        Fixture.deleteTree(whDir)
       }
     }
     spark.stop()

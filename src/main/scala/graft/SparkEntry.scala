@@ -570,9 +570,9 @@ object SparkEntry {
     * different input by design.
     */
   private val d2PairCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+    new Fixture[DataFrame]("d2pairs", _.unpersist(blocking = false))
   private def d2PairsShared(s: SparkSession, dir: String): DataFrame =
-    d2PairCache.getOrElseUpdate((s, dir), d2NgramJaccard(s, dir).persist())
+    d2PairCache(s, dir)(_ => d2NgramJaccard(s, dir).persist())
 
   /** Best-of-cluster representative selection (d34 — the keep policy
     * real dedup pipelines want: d13 keeps the MIN-ID member per near-dup
@@ -976,11 +976,10 @@ object SparkEntry {
   // 532-branch classifier plan made every downstream run re-canonicalize
   // that huge plan for the cache lookup and left the blocks exposed to
   // storage-memory contention in long sessions — a table scan has neither
-  // problem). Cleared by releaseSessionCaches via the scratch-dir delete.
-  private val classifiedCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  // problem).
+  private val classifiedCache = new Fixture[DataFrame]("classified")
   private def cardClassified(s: SparkSession, dir: String): DataFrame =
-    classifiedCache.getOrElseUpdate((s, dir), {
+    classifiedCache(s, dir) { wh =>
       t(s, dir, "orders").createOrReplaceTempView("orders_cardfix")
       // the fixture scan is one split at test scale — fan out before the
       // CPU-heavy classifier so it uses every core (no-op at real scale)
@@ -988,16 +987,15 @@ object SparkEntry {
       // three arms (ReusedExchange), so no separate persist is needed here
       val tx = graft.operators.Parallelism.fanOut(
         s.sql(graft.models.CardFixture.txSql("orders_cardfix")))
-      val path = s"$q40Scratch/classified_${java.lang.Integer.toHexString(dir.hashCode)}"
       graft.models.CardModels.classifiedCardTransactions(
         tx, graft.models.CardFixture.rules,
         graft.models.CardFixture.merchantsDf(s),
         graft.models.CardFixture.mapDf(s),
         graft.models.CardFixture.leafDf(s),
         graft.models.CardFixture.merchantSeed)
-        .write.mode("overwrite").parquet(path)
-      s.read.parquet(path)
-    })
+        .write.mode("overwrite").parquet(wh)
+      s.read.parquet(wh)
+    }
 
   private def q32Classified(s: SparkSession, dir: String): DataFrame =
     cardClassified(s, dir).withColumn("amount", col("amount").cast("double"))
@@ -1020,16 +1018,13 @@ object SparkEntry {
     * hash contract, and only the touched key-hash buckets rewrite per
     * batch (the mergeByKey cost model).
     */
-  private val incClassifiedCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+  private val incClassifiedCache = new Fixture[DataFrame]("clsinc")
 
   private def q105IncrementalClassify(s: SparkSession, dir: String): DataFrame =
-    incClassifiedCache.getOrElseUpdate((s, dir), {
+    incClassifiedCache(s, dir) { wh =>
       t(s, dir, "orders").createOrReplaceTempView("orders_cardfix")
       val tx = graft.operators.Parallelism.fanOut(
         s.sql(graft.models.CardFixture.txSql("orders_cardfix")))
-      val wh = s"$q40Scratch/clsinc_${java.lang.Integer.toHexString(dir.hashCode)}"
-      deleteTree(java.nio.file.Paths.get(wh))
       val w = new graft.sources.TableWriter(wh)
       (0 to 2).foreach { c =>
         val batch = tx.filter(pmod(col("key").cast("long"), lit(3)) === c)
@@ -1046,7 +1041,7 @@ object SparkEntry {
       w.readResolved(s, "classified_inc")
         .drop("__bucket", "__k")
         .withColumn("amount", col("amount").cast("double"))
-    })
+    }
 
   /** Reference card_transactions_model (card_transactions_model.sql:1-24)
     * standalone (q85) — the legacy clean_type projection previously
@@ -1088,12 +1083,10 @@ object SparkEntry {
     * one model computes correctly in isolation.
     */
   // one DAG build per (session, sfdir) — a deployment materializes the
-  // DAG once per data version, then queries tables. Cleared by
-  // releaseSessionCaches via the scratch-dir delete.
-  private val dagRunCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.sources.TableWriter]
+  // DAG once per data version, then queries tables.
+  private val dagRunCache = new Fixture[graft.sources.TableWriter]("dagrun")
   private def q88RunAllParallel(s: SparkSession, dir: String): DataFrame = {
-    val writer = dagRunCache.getOrElseUpdate((s, dir), {
+    val writer = dagRunCache(s, dir) { wh =>
       val (ex, wt, rc, sh) = healthLogs(s, dir)
       t(s, dir, "orders").createOrReplaceTempView("orders_cardfix")
       val sources = Map(
@@ -1104,13 +1097,12 @@ object SparkEntry {
         "merchants" -> graft.models.CardFixture.merchantsDf(s),
         "merchant_account_map" -> graft.models.CardFixture.mapDf(s),
         "accounts_leaf" -> graft.models.CardFixture.leafDf(s))
-      val w = new graft.sources.TableWriter(
-        s"$q40Scratch/dagrun_${java.lang.Integer.toHexString(dir.hashCode)}")
+      val w = new graft.sources.TableWriter(wh)
       graft.models.ReferencePipeline.registry(
           java.time.LocalDate.parse(graft.models.HealthFixture.asOf))
         .runAllParallel(s, sources, writer = Some(w))
       w
-    })
+    }
     writer.read(s, "metrics_month")
       .withColumn("period_num", col("period_num").cast("long"))
   }
@@ -1272,8 +1264,9 @@ object SparkEntry {
     * plan literal, so plan size is independent of vocabulary size.
     * Cleared (and unpersisted) by [[releaseSessionCaches]].
     */
-  private val lmModelCache =
-    scala.collection.concurrent.TrieMap.empty[String, (DataFrame, DataFrame, Long)]
+  private val lmModelCache = new Fixture[(DataFrame, DataFrame, Long)](
+    "lmmodel", { case (ug, bg, _) =>
+      ug.unpersist(blocking = false); bg.unpersist(blocking = false) })
 
   /** Cache-free trainer, DataFrame-parameterized so ScaleProbe can run it
     * on replicated corpora; returns persisted model frames + vocab size.
@@ -1299,7 +1292,7 @@ object SparkEntry {
   }
 
   private def lmModel(s: SparkSession, dir: String): (DataFrame, DataFrame, Long) =
-    lmModelCache.getOrElseUpdate(dir, lmModelFrom(t(s, dir, "documents")))
+    lmModelCache(s, dir)(_ => lmModelFrom(t(s, dir, "documents")))
 
   /** Documents with their per-pair probability lists (shared by d32's
     * score report, d33's curriculum ordering and d34's keep policy).
@@ -1433,7 +1426,7 @@ object SparkEntry {
     * loss/duplication in the write-upsert-read cycle breaks the hash.
     */
   private def q40Materialize(s: SparkSession, dir: String): DataFrame = {
-    val tw = new graft.sources.TableWriter(q40Scratch)
+    val tw = new graft.sources.TableWriter(Fixture.scratch)
     val orders = t(s, dir, "orders").select(
       col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
       col("o_orderdate"), col("o_orderstatus"))
@@ -1502,7 +1495,7 @@ object SparkEntry {
         col("n_events"), col("sum_value"))
     // the memory sink holds the converged result; the staged files are
     // done — no per-invocation leak across Bench's timing runs
-    deleteTree(java.nio.file.Paths.get(stage))
+    Fixture.deleteTree(stage)
     out
   }
 
@@ -1514,7 +1507,7 @@ object SparkEntry {
     */
   private def q51JsonlRoundtrip(s: SparkSession, dir: String): DataFrame = {
     val d = t(s, dir, "documents")
-    val out = s"$q40Scratch/documents_jsonl"
+    val out = s"${Fixture.scratch}/documents_jsonl"
     d.write.mode("overwrite").json(out)
     s.read.schema(d.schema).json(out)
       .groupBy(col("lang"))
@@ -1595,8 +1588,7 @@ object SparkEntry {
       .withColumn("price",
         (col("price") + lit(1000).cast("decimal(18,2)")).cast("decimal(18,2)"))
       .unionByName(o.filter(col("k") % 3 === 1 && col("k") % 5 === 0))
-    val wh = s"$q40Scratch/mergestore"
-    deleteTree(java.nio.file.Paths.get(wh))
+    val wh = Fixture.freshDir("mergestore")
     val writer = new graft.sources.TableWriter(wh)
     writer.mergeByKey(s, "orders_merged", base, "k")
     writer.mergeByKey(s, "orders_merged", changes, "k")
@@ -1622,8 +1614,7 @@ object SparkEntry {
       .withColumn("price",
         (col("price") + lit(1000).cast("decimal(18,2)")).cast("decimal(18,2)"))
       .unionByName(o.filter(col("okey") % 3 === 1 && col("okey") % 5 === 0))
-    val wh = s"$q40Scratch/mergestore_str"
-    deleteTree(java.nio.file.Paths.get(wh))
+    val wh = Fixture.freshDir("mergestore_str")
     val writer = new graft.sources.TableWriter(wh)
     writer.mergeByKey(s, "orders_merged_str", base.drop("okey"), "k")
     writer.mergeByKey(s, "orders_merged_str", changes.drop("okey"), "k")
@@ -1656,8 +1647,7 @@ object SparkEntry {
       .withColumn("price",
         (col("price") + lit(1000).cast("decimal(18,2)")).cast("decimal(18,2)"))
       .unionByName(o.filter(col("k") % 3 === 1 && col("k") % 5 === 0))
-    val wh = s"$q40Scratch/clonestore"
-    deleteTree(java.nio.file.Paths.get(wh))
+    val wh = Fixture.freshDir("clonestore")
     val writer = new graft.sources.TableWriter(wh)
     writer.mergeByKey(s, "orders_src", base, "k")
     writer.shallowClone(s, "orders_src", "orders_branch")
@@ -1702,8 +1692,7 @@ object SparkEntry {
   private def q59SnapshotMaterialized(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.SnapshotStore
     val (v1, v2, t1, t2) = scd2Sources(s, dir)
-    val wh = s"$q40Scratch/snapstore"
-    deleteTree(java.nio.file.Paths.get(wh))
+    val wh = Fixture.freshDir("snapstore")
     val writer = new graft.sources.TableWriter(wh)
     SnapshotStore.run(s, writer, "orders_snap", v1, "k", Seq("price"), t1)
     SnapshotStore.run(s, writer, "orders_snap", v2, "k", Seq("price"), t2)
@@ -1720,7 +1709,7 @@ object SparkEntry {
     */
   private def q55SchemaEvolution(s: SparkSession, dir: String): DataFrame = {
     val o = t(s, dir, "orders")
-    val out = s"$q40Scratch/orders_evo"
+    val out = s"${Fixture.scratch}/orders_evo"
     o.filter(col("o_orderkey") % 2 === 0)
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
       .write.mode("overwrite").parquet(s"$out/gen=1")
@@ -1757,7 +1746,7 @@ object SparkEntry {
         org.apache.spark.sql.Row(-1L, q57FixtureText, "fixture", "fixture",
           q57FixtureText.length.toLong)),
       d.schema)
-    val out = s"$q40Scratch/documents_csv"
+    val out = s"${Fixture.scratch}/documents_csv"
     d.unionByName(fixture).write.mode("overwrite")
       .option("header", "true")
       .option("escape", "\"") // RFC-4180 doubled quotes, not backslash
@@ -1774,72 +1763,18 @@ object SparkEntry {
         sum(length(col("text"))).cast("long").as("sum_text_len"))
   }
 
-  /** One scratch warehouse per JVM, shared by every q40 invocation
-    * (materialize is an Overwrite — repeated runs are idempotent, so
-    * Bench's timing iterations no longer leak a partitioned copy of
-    * orders per run) and removed on JVM exit.
-    */
-  private lazy val q40Scratch: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_wh_")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => deleteTree(dir)))
-    dir.toString
-  }
-
-  private def deleteTree(root: java.nio.file.Path): Unit = {
-    import java.nio.file.Files
-    if (Files.exists(root)) {
-      val walk = Files.walk(root)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.deleteIfExists(p))
-      finally walk.close()
-    }
-  }
-
-  /** Releases every session-lifetime cache this object holds: the shared
-    * persisted frames (d2 pairs, q32/q33 classified, q41/q42 real-seed
-    * classified) and the q40 scratch warehouse. Harmless mid-run (the
-    * frames rebuild on next use); call it when a Bench/Verify pass is done
-    * so a long-lived service embedding these queries doesn't accrete
-    * persisted RDDs.
+  /** Releases everything a session acquired through this object: every
+    * declared [[Fixture]] (its persisted frames unpersisted, its entries
+    * dropped), the versioned-table manifest cache and the whole scratch
+    * warehouse ([[Fixture.scratch]]). Harmless mid-run: each fixture
+    * rebuilds on next use. Call it when a Bench/Verify pass is done, so a
+    * long-lived service embedding these queries doesn't accrete
+    * persisted RDDs or files.
     */
   def releaseSessionCaches(): Unit = {
-    (d2PairCache.values ++ classifiedCache.values ++ refClassifiedCache.values)
-      .foreach(df => df.unpersist(blocking = false))
-    lmModelCache.values.foreach { case (ug, bg, _) =>
-      ug.unpersist(blocking = false); bg.unpersist(blocking = false)
-    }
-    d2PairCache.clear()
-    classifiedCache.clear()
-    refClassifiedCache.clear()
-    lmModelCache.clear()
-    dppBuildCache.clear()
-    d37IndexCache.clear()
-    ivfIndexCache.clear()
-    ivfPqIndexCache.clear()
-    ivfIncCache.clear()
-    ivfDelCache.clear()
-    ivfUpdCache.clear()
-    bm25IndexCache.clear()
-    bm25IncCache.clear()
-    bm25DelCache.clear()
-    pqCodebookCache.clear()
-    dagRunCache.clear()
-    posIndexCache.clear()
-    posIncCache.clear()
-    posDelCache.clear()
-    cdcCache.clear()
-    compactIdxCache.clear()
-    compactPosCache.clear()
-    compactIvfCache.clear()
-    cdcIdxCache.clear()
-    cdcIvfCache.clear()
-    snapIdxCache.clear()
-    snapPosCache.clear()
-    snapIvfCache.clear()
-    feedRetCache.clear()
-    commitCompactCache.clear()
+    Fixture.all.foreach(_.release())
     graft.sources.VersionedTable.clearManifestCache()
-    deleteTree(java.nio.file.Paths.get(q40Scratch))
+    Fixture.deleteTree(Fixture.scratch)
   }
 
   /** The full classifier over the reference's REAL seed content (795
@@ -1851,11 +1786,9 @@ object SparkEntry {
     */
   // q41/q42 share the frame, materialized once per session (q32/q33
   // pattern — table scan instead of a persisted giant plan)
-  private val refClassifiedCache =
-    scala.collection.concurrent.TrieMap.empty[SparkSession, DataFrame]
-  private def refClassified(s: SparkSession): DataFrame =
-    refClassifiedCache.getOrElseUpdate(s, {
-      val path = s"$q40Scratch/ref_classified"
+  private val refClassifiedCache = new Fixture[DataFrame]("ref_classified")
+  private def refClassified(s: SparkSession, dir: String): DataFrame =
+    refClassifiedCache(s, dir) { wh =>
       graft.models.CardModels.classifiedCardTransactions(
         graft.models.RefSeedFixture.txDf(s),
         graft.models.RefSeeds.rules,
@@ -1863,12 +1796,12 @@ object SparkEntry {
         graft.models.RefSeeds.mapDf(s),
         graft.models.RefSeeds.leafDf(s),
         graft.models.RefSeeds.merchantSeed)
-        .write.mode("overwrite").parquet(path)
-      s.read.parquet(path)
-    })
+        .write.mode("overwrite").parquet(wh)
+      s.read.parquet(wh)
+    }
 
   private def q41ClassifiedRef(s: SparkSession, dir: String): DataFrame =
-    refClassified(s).withColumn("amount", col("amount").cast("double"))
+    refClassified(s, dir).withColumn("amount", col("amount").cast("double"))
 
   /** Reference spend_daily over the REAL-seed classified output — the
     * end-to-end real-content path: 795-rule classification feeding the
@@ -1876,7 +1809,7 @@ object SparkEntry {
     */
   private def q42SpendDailyRef(s: SparkSession, dir: String): DataFrame =
     Rollups.measureRollup(
-      refClassified(s), col("date"), Grain.Day,
+      refClassified(s, dir), col("date"), Grain.Day,
       Seq("merchant_name", "category", "subcategory", "billing_model",
         "spend_nature", "discretion", "gl_code", "account_name",
         "account_id").map(n => n -> col(n)),
@@ -2021,8 +1954,7 @@ object SparkEntry {
     * (IncrementalIndexSpec asserts it, plus append == full rebuild), so
     * the oracle is the EXACT new-vs-old pair set.
     */
-  private val d37IndexCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.sources.TableWriter]
+  private val d37IndexCache = new Fixture[graft.sources.TableWriter]("lshindex")
 
   private def d37IncrementalMinhash(s: SparkSession, dir: String): DataFrame = {
     val d = t(s, dir, "documents")
@@ -2030,9 +1962,8 @@ object SparkEntry {
     // (Dedup.buildLshBandIndex) and the batch probe partition-prunes to
     // its own bands' buckets — batch cost tracks batch bands, not index
     // size, once B is sized to the index (the r8 verdict's ask #9)
-    val writer = d37IndexCache.getOrElseUpdate((s, dir), {
-      val w = new graft.sources.TableWriter(
-        s"$q40Scratch/lshindex_${java.lang.Integer.toHexString(dir.hashCode)}")
+    val writer = d37IndexCache(s, dir) { wh =>
+      val w = new graft.sources.TableWriter(wh)
       Dedup.buildLshBandIndex(
         Dedup.minhashBandRows(
           Dedup.minhashSignatures(
@@ -2041,7 +1972,7 @@ object SparkEntry {
           numHashes = 64, bands = 32),
         w, "lsh_bands")
       w
-    })
+    }
     val newBands = Dedup.minhashBandRows(
       Dedup.minhashSignatures(
         d.filter(col("doc_id") % 10 === 0), "doc_id", "text",
@@ -2461,7 +2392,7 @@ object SparkEntry {
     * oracle states.
     */
   private def q63BucketedJoin(s: SparkSession, dir: String): DataFrame = {
-    val writer = new graft.sources.TableWriter(s"$q40Scratch/bucketed")
+    val writer = new graft.sources.TableWriter(s"${Fixture.scratch}/bucketed")
     writer.materializeBucketed(
       t(s, dir, "orders").select(col("o_custkey").as("ck"), col("o_totalprice")),
       "bk_orders_q63", Seq("ck"), numBuckets = 8)
@@ -2521,8 +2452,7 @@ object SparkEntry {
     val o = t(s, dir, "orders")
       .select(col("o_orderkey").as("k"),
         col("o_totalprice").cast("decimal(18,2)").as("price"))
-    val wh = s"$q40Scratch/compactstore"
-    deleteTree(java.nio.file.Paths.get(wh))
+    val wh = Fixture.freshDir("compactstore")
     val writer = new graft.sources.TableWriter(wh)
     // large generation: one file compaction must leave byte-identical
     o.filter(col("k") % 3 === 0).coalesce(1)
@@ -2557,8 +2487,7 @@ object SparkEntry {
       pmod(col("o_custkey"), lit(1024)).cast("int").as("a"),
       pmod(col("o_orderkey"), lit(1024)).cast("int").as("b"),
       col("o_totalprice").cast("decimal(18,2)").as("price"))
-    val wh = s"$q40Scratch/zorder"
-    deleteTree(java.nio.file.Paths.get(wh))
+    val wh = Fixture.freshDir("zorder")
     val writer = new graft.sources.TableWriter(wh)
     writer.materializeClustered(o, "orders_z",
       graft.functions.ZOrder.zValue16(col("a"), col("b")), "z", numFiles = 16)
@@ -2590,8 +2519,7 @@ object SparkEntry {
       pmod(col("o_custkey"), lit(1024)).cast("int").as("a"),
       pmod(col("o_orderkey"), lit(1024)).cast("int").as("b"),
       col("o_totalprice").cast("decimal(18,2)").as("price"))
-    val wh = s"$q40Scratch/manifest"
-    deleteTree(java.nio.file.Paths.get(wh))
+    val wh = Fixture.freshDir("manifest")
     val writer = new graft.sources.TableWriter(wh)
     writer.materializeClustered(o, "orders_m",
       graft.functions.ZOrder.zValue16(col("a"), col("b")), "z", numFiles = 16)
@@ -2623,8 +2551,7 @@ object SparkEntry {
     val v3 = v2.withColumn("price",
       when(col("k") % 11 === 0, col("price") + lit(500).cast("decimal(18,2)"))
         .otherwise(col("price")).cast("decimal(18,2)"))
-    val wh = s"$q40Scratch/snaptt"
-    deleteTree(java.nio.file.Paths.get(wh))
+    val wh = Fixture.freshDir("snaptt")
     val writer = new graft.sources.TableWriter(wh)
     SnapshotStore.run(s, writer, "orders_snap", v1, "k", Seq("price"), t1)
     SnapshotStore.run(s, writer, "orders_snap", v2, "k", Seq("price"), t2)
@@ -2673,8 +2600,7 @@ object SparkEntry {
       col("l_quantity").cast("decimal(18,2)").as("qty"),
       col("l_extendedprice").cast("decimal(18,2)").as("price"),
       col("l_shipdate").cast("date").as("d"))
-    val out = s"$q40Scratch/orc_rt"
-    deleteTree(java.nio.file.Paths.get(out))
+    val out = Fixture.freshDir("orc_rt")
     l.write.mode("overwrite").orc(out)
     s.read.orc(out)
       .groupBy(col("l_returnflag"))
@@ -2741,16 +2667,9 @@ object SparkEntry {
   // The partitioned fact + month dim are a FIXTURE (at scale the corpus is
   // already date-partitioned on disk) — built once per (session, sfdir) so
   // the entry times the DPP probe, not 5 s of setup I/O on every run.
-  // Cleared by releaseSessionCaches alongside the scratch dir it lives in.
-  private val dppBuildCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+  private val dppBuildCache = new Fixture[String]("dpp")
   private def dppBuild(s: SparkSession, dir: String): String =
-    dppBuildCache.getOrElseUpdate((s, dir), {
-      // dir-suffixed path: the cache key is (session, dir) but the files
-      // are shared disk — two sfDirs in one session must not overwrite
-      // each other's build (same pattern as the classified scratch table)
-      val wh = s"$q40Scratch/dpp_${java.lang.Integer.toHexString(dir.hashCode)}"
-      deleteTree(java.nio.file.Paths.get(wh))
+    dppBuildCache(s, dir) { wh =>
       val l = t(s, dir, "lineitem").select(
         col("l_orderkey"), col("l_returnflag"),
         col("l_quantity").cast(DecimalType(18, 2)).as("qty"),
@@ -2766,7 +2685,7 @@ object SparkEntry {
             ceil(substring(col("ship_month"), 6, 2).cast("int") / 3)))
         .write.mode("overwrite").parquet(s"$wh/month_dim")
       wh
-    })
+    }
 
   private def q82DynamicPruning(s: SparkSession, dir: String): DataFrame = {
     val wh = dppBuild(s, dir)
@@ -2799,8 +2718,7 @@ object SparkEntry {
     val o = t(s, dir, "orders")
       .select(col("o_orderkey").as("k"),
         col("o_orderdate").cast("date").as("d"))
-    val wh = s"$q40Scratch/metacount"
-    deleteTree(java.nio.file.Paths.get(wh))
+    val wh = Fixture.freshDir("metacount")
     val writer = new graft.sources.TableWriter(wh)
     o.repartitionByRange(16, col("d")).sortWithinPartitions("d")
       .write.parquet(writer.path("orders_r"))
@@ -2863,8 +2781,7 @@ object SparkEntry {
     val v3 = v2.withColumn("price",
       when(col("k") % 11 === 0, col("price") + lit(500).cast("decimal(18,2)"))
         .otherwise(col("price")).cast("decimal(18,2)"))
-    val wh = s"$q40Scratch/snapvac"
-    deleteTree(java.nio.file.Paths.get(wh))
+    val wh = Fixture.freshDir("snapvac")
     val writer = new graft.sources.TableWriter(wh)
     SnapshotStore.run(s, writer, "orders_snap", v1, "k", Seq("price"), t1)
     SnapshotStore.run(s, writer, "orders_snap", v2, "k", Seq("price"), t2)
@@ -2891,8 +2808,7 @@ object SparkEntry {
     val o = t(s, dir, "orders")
       .select(col("o_orderkey").as("k"),
         col("o_totalprice").cast("decimal(18,2)").as("price"))
-    val wh = s"$q40Scratch/deletestore"
-    deleteTree(java.nio.file.Paths.get(wh))
+    val wh = Fixture.freshDir("deletestore")
     val writer = new graft.sources.TableWriter(wh)
     writer.mergeByKey(s, "orders_del", o, "k")
     val doomed = o.filter(col("k") % 13 === 0).select(col("k"))
@@ -2985,7 +2901,7 @@ object SparkEntry {
       EventsOps.sessionStats(stream, "30 minutes"),
       "q61_stream_multibatch_sink")
       .select("user_id", "session_start", "n_events", "sum_value")
-    deleteTree(java.nio.file.Paths.get(stage))
+    Fixture.deleteTree(stage)
     out
   }
 
@@ -3029,8 +2945,7 @@ object SparkEntry {
     e.withColumn("__c", pmod(col("event_id"), lit(4)).cast("int"))
       .repartition(col("__c"))
       .write.partitionBy("__c").parquet(s"$stage/chunks")
-    val wh = s"$q40Scratch/mvstream_${java.lang.Integer.toHexString(dir.hashCode)}"
-    deleteTree(java.nio.file.Paths.get(wh))
+    val wh = Fixture.freshDir("mvstream", dir)
     val w = new graft.sources.TableWriter(wh)
     MvRegistry.deregister(s, w.path("ev_base")) // maintenance unregistered
     val stream = s.readStream.schema(e.schema)
@@ -3056,9 +2971,7 @@ object SparkEntry {
           .as("sum_v"))
       .filter(col("n") > 0)
       .write.mode("overwrite").parquet(mvPath)
-    if (!s.experimental.extraOptimizations.exists(_.isInstanceOf[MvRewrite]))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ MvRewrite(s)
+    MvRewrite.install(s)
     MvRegistry.register(s, w.path("ev_base"), MvRegistry.MvDef(
       mvPath, Set("grp"), Map("v" -> "sum_v"), "n",
       comp = Some(MvRegistry.CompDef(
@@ -3081,7 +2994,7 @@ object SparkEntry {
       s"streaming MV serve did not rewrite: plan scans $roots")
     val res = out.select(col("grp"), col("n_events"),
       col("total").cast("double").as("total"))
-    deleteTree(java.nio.file.Paths.get(stage))
+    Fixture.deleteTree(stage)
     res
   }
 
@@ -3104,8 +3017,7 @@ object SparkEntry {
     e.withColumn("__c", pmod(col("event_id"), lit(4)).cast("int"))
       .repartition(col("__c"))
       .write.partitionBy("__c").parquet(s"$stage/chunks")
-    val wh = s"$q40Scratch/streamupsert"
-    deleteTree(java.nio.file.Paths.get(wh))
+    val wh = Fixture.freshDir("streamupsert")
     val writer = new graft.sources.TableWriter(wh)
     val latestW = Window.partitionBy(col("user_id"))
       .orderBy(col("ts").desc, col("event_id").desc)
@@ -3132,7 +3044,7 @@ object SparkEntry {
     val out = writer.read(s, "user_latest")
       .select(col("user_id"), col("event_id"), col("event_type"),
         col("value").cast("double").as("value"))
-    deleteTree(java.nio.file.Paths.get(stage))
+    Fixture.deleteTree(stage)
     out
   }
 
@@ -3157,8 +3069,7 @@ object SparkEntry {
     d.withColumn("__c", pmod(col("doc_id"), lit(4)).cast("int"))
       .repartition(col("__c"))
       .write.partitionBy("__c").parquet(s"$stage/chunks")
-    val wh = s"$q40Scratch/streambm25"
-    deleteTree(java.nio.file.Paths.get(wh))
+    val wh = Fixture.freshDir("streambm25")
     val writer = new graft.sources.TableWriter(wh)
     val stream = s.readStream.schema(d.schema)
       .option("maxFilesPerTrigger", "1")
@@ -3177,7 +3088,7 @@ object SparkEntry {
     val out = Retrieval.queryBm25Index(s, writer, "docs", qs,
         k = bm25K, k1 = bm25K1, b = bm25B, excludeSelf = true)
       .withColumn("rank", col("rank").cast("long"))
-    deleteTree(java.nio.file.Paths.get(stage))
+    Fixture.deleteTree(stage)
     out
   }
 
@@ -3200,8 +3111,7 @@ object SparkEntry {
     val d = t(s, dir, "documents")
     val stage = java.nio.file.Files
       .createTempDirectory("graft_q106_").toString
-    val wh = s"$q40Scratch/streambm25r"
-    deleteTree(java.nio.file.Paths.get(wh))
+    val wh = Fixture.freshDir("streambm25r")
     val writer = new graft.sources.TableWriter(wh)
     runStreamRestartIngest(s, stage, d, pmod(col("doc_id"), lit(4)),
       d.schema,
@@ -3210,7 +3120,7 @@ object SparkEntry {
     val out = Retrieval.queryBm25Index(s, writer, "docs", qs,
         k = bm25K, k1 = bm25K1, b = bm25B, excludeSelf = true)
       .withColumn("rank", col("rank").cast("long"))
-    deleteTree(java.nio.file.Paths.get(stage))
+    Fixture.deleteTree(stage)
     out
   }
 
@@ -3279,8 +3189,7 @@ object SparkEntry {
     val d = t(s, dir, "documents")
     val stage = java.nio.file.Files
       .createTempDirectory("graft_q107_").toString
-    val wh = s"$q40Scratch/streamposr"
-    deleteTree(java.nio.file.Paths.get(wh))
+    val wh = Fixture.freshDir("streamposr")
     val writer = new graft.sources.TableWriter(wh)
     runStreamRestartIngest(s, stage, d, pmod(col("doc_id"), lit(4)),
       d.schema,
@@ -3293,7 +3202,7 @@ object SparkEntry {
     val out = Retrieval.phraseQuery(s, writer, "docs", phrases,
       k = bm25K, excludeSelf = true)
       .withColumn("rank", col("rank").cast("long"))
-    deleteTree(java.nio.file.Paths.get(stage))
+    Fixture.deleteTree(stage)
     out
   }
 
@@ -3310,8 +3219,7 @@ object SparkEntry {
     val e = t(s, dir, "embeddings")
     val stage = java.nio.file.Files
       .createTempDirectory("graft_q108_").toString
-    val wh = s"$q40Scratch/streamivfr"
-    deleteTree(java.nio.file.Paths.get(wh))
+    val wh = Fixture.freshDir("streamivfr")
     val writer = new graft.sources.TableWriter(wh)
     runStreamRestartIngest(s, stage, e, pmod(col("vec_id"), lit(4)),
       e.schema,
@@ -3320,7 +3228,7 @@ object SparkEntry {
     val out = Similarity.queryIvfIndex(s, writer, "emb",
         e.filter(col("vec_id") < 8), k = 5, nprobe = 2)
       .withColumn("rank", col("rank").cast("long"))
-    deleteTree(java.nio.file.Paths.get(stage))
+    Fixture.deleteTree(stage)
     out
   }
 
@@ -3370,7 +3278,7 @@ object SparkEntry {
       .select(col("user_id"), col("l_event_id"), col("r_event_id"),
         col("l_value"), col("r_value"),
         (unix_micros(col("r_ts")) - unix_micros(col("l_ts"))).as("gap_us"))
-    deleteTree(java.nio.file.Paths.get(stage))
+    Fixture.deleteTree(stage)
     out
   }
 
@@ -3424,7 +3332,7 @@ object SparkEntry {
       .filter(col("w2.start") <= lit(maxTs))
       .select(col("w2.start").as("window_start"), col("event_type"),
         col("n_events"), col("sum_value"), col("n_hours"))
-    deleteTree(java.nio.file.Paths.get(stage))
+    Fixture.deleteTree(stage)
     out
   }
 
@@ -3470,7 +3378,7 @@ object SparkEntry {
       .select(col("user_id"), col("l_event_id"), col("r_event_id"),
         col("l_value"), col("r_value"),
         (unix_micros(col("r_ts")) - unix_micros(col("l_ts"))).as("gap_us"))
-    deleteTree(java.nio.file.Paths.get(stage))
+    Fixture.deleteTree(stage)
     out
   }
 
@@ -3583,19 +3491,16 @@ object SparkEntry {
   // Index build (train + cluster + persist) happens ONCE per (session,
   // sfdir) — serving a 100 TB corpus queries a standing index; rebuilding
   // per query would be like re-indexing per search. Steady-state v7 is the
-  // probe cost only. Cleared by releaseSessionCaches (index lives under
-  // q40Scratch, which it deletes).
-  private val ivfIndexCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.sources.TableWriter]
+  // probe cost only.
+  private val ivfIndexCache = new Fixture[graft.sources.TableWriter]("ivfindex")
   private def ivfIndex(s: SparkSession, dir: String): graft.sources.TableWriter =
-    ivfIndexCache.getOrElseUpdate((s, dir), {
+    ivfIndexCache(s, dir) { wh =>
       val e = t(s, dir, "embeddings")
       val cents = Similarity.trainIvfCentroids(e, initStride = 97L, iters = ivfIters)
-      val w = new graft.sources.TableWriter(
-        s"$q40Scratch/ivfindex_${java.lang.Integer.toHexString(dir.hashCode)}")
+      val w = new graft.sources.TableWriter(wh)
       Similarity.buildIvfIndex(e, cents, w, "emb")
       w
-    })
+    }
 
   private def v7AnnIvfIndex(s: SparkSession, dir: String): DataFrame = {
     val e = t(s, dir, "embeddings")
@@ -3641,16 +3546,18 @@ object SparkEntry {
   private val pqIters = 2
   // Codebooks are a trained model artifact (m × ksub × subDim driver-side
   // doubles) — trained once per (session, sfdir), reused across queries,
-  // exactly as a serving deployment would load them. Cleared by
-  // releaseSessionCaches.
-  private val pqCodebookCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Seq[(Int, Long, Seq[Double])]]
+  // exactly as a serving deployment would load them.
+  private val pqCodebookCache =
+    new Fixture[Seq[(Int, Long, Seq[Double])]]("pqcodebooks")
+  private def pqCodebooks(s: SparkSession, dir: String) =
+    pqCodebookCache(s, dir)(_ => Similarity.trainPqCodebooks(
+      t(s, dir, "embeddings"), pqM, pqSubDim, pqStride, pqKsub, pqIters))
+
   private def v8AnnPq(s: SparkSession, dir: String): DataFrame = {
     val e = t(s, dir, "embeddings")
-    val cbs = pqCodebookCache.getOrElseUpdate((s, dir),
-      Similarity.trainPqCodebooks(e, pqM, pqSubDim, pqStride, pqKsub, pqIters))
     Similarity.pqTopK(e, e.filter(col("vec_id") < 8), k = 5,
-        codebooks = cbs, m = pqM, subDim = pqSubDim, rerankFactor = 8)
+        codebooks = pqCodebooks(s, dir), m = pqM, subDim = pqSubDim,
+        rerankFactor = 8)
       .withColumn("rank", col("rank").cast("long"))
   }
 
@@ -3669,19 +3576,16 @@ object SparkEntry {
     * quantized scoring, rerank — so the persisted index is bit-checked,
     * not just shaped.
     */
-  private val ivfPqIndexCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.sources.TableWriter]
+  private val ivfPqIndexCache = new Fixture[graft.sources.TableWriter]("ivfpq")
   private def v9AnnIvfPqIndex(s: SparkSession, dir: String): DataFrame = {
     val e = t(s, dir, "embeddings")
-    val writer = ivfPqIndexCache.getOrElseUpdate((s, dir), {
+    val writer = ivfPqIndexCache(s, dir) { wh =>
       val cents = Similarity.trainIvfCentroids(e, initStride = 97L, iters = ivfIters)
-      val cbs = pqCodebookCache.getOrElseUpdate((s, dir),
-        Similarity.trainPqCodebooks(e, pqM, pqSubDim, pqStride, pqKsub, pqIters))
-      val w = new graft.sources.TableWriter(
-        s"$q40Scratch/ivfpq_${java.lang.Integer.toHexString(dir.hashCode)}")
-      Similarity.buildIvfPqIndex(e, cents, cbs, pqM, pqSubDim, w, "emb")
+      val w = new graft.sources.TableWriter(wh)
+      Similarity.buildIvfPqIndex(e, cents, pqCodebooks(s, dir), pqM, pqSubDim,
+        w, "emb")
       w
-    })
+    }
     Similarity.queryIvfPqIndex(s, writer, "emb", e,
         e.filter(col("vec_id") < 8), k = 5, nprobe = 2, rerankFactor = 8)
       .withColumn("rank", col("rank").cast("long"))
@@ -3700,21 +3604,19 @@ object SparkEntry {
     * replays base-only Lloyd training plus one-pass assignment of the
     * union.
     */
-  private val ivfIncCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.sources.TableWriter]
+  private val ivfIncCache = new Fixture[graft.sources.TableWriter]("ivfinc")
 
   private def v12AnnIvfAppend(s: SparkSession, dir: String): DataFrame = {
     val e = t(s, dir, "embeddings")
-    val writer = ivfIncCache.getOrElseUpdate((s, dir), {
+    val writer = ivfIncCache(s, dir) { wh =>
       val base = e.filter(col("vec_id") % 10 =!= 0)
       val cents = Similarity.trainIvfCentroids(base, initStride = 97L,
         iters = ivfIters)
-      val w = new graft.sources.TableWriter(
-        s"$q40Scratch/ivfinc_${java.lang.Integer.toHexString(dir.hashCode)}")
+      val w = new graft.sources.TableWriter(wh)
       Similarity.buildIvfIndex(base, cents, w, "emb")
       Similarity.appendIvfIndex(e.filter(col("vec_id") % 10 === 0), w, "emb")
       w
-    })
+    }
     Similarity.queryIvfIndex(s, writer, "emb",
         e.filter(col("vec_id") < 8), k = 5, nprobe = 2)
       .withColumn("rank", col("rank").cast("long"))
@@ -3736,8 +3638,7 @@ object SparkEntry {
     * assignment and probes over the UPDATED one — exactly what
     * frozen-quantizer re-ingest computes.
     */
-  private val ivfUpdCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.sources.TableWriter]
+  private val ivfUpdCache = new Fixture[graft.sources.TableWriter]("ivfupd")
 
   private def v19Updated(e: DataFrame): DataFrame =
     e.withColumn("embedding",
@@ -3749,16 +3650,15 @@ object SparkEntry {
   private def v19AnnUpdate(s: SparkSession, dir: String): DataFrame = {
     val e = t(s, dir, "embeddings")
     val upd = v19Updated(e)
-    val writer = ivfUpdCache.getOrElseUpdate((s, dir), {
+    val writer = ivfUpdCache(s, dir) { wh =>
       val cents = Similarity.trainIvfCentroids(e, initStride = 97L, iters = ivfIters)
-      val w = new graft.sources.TableWriter(
-        s"$q40Scratch/ivfupd_${java.lang.Integer.toHexString(dir.hashCode)}")
+      val w = new graft.sources.TableWriter(wh)
       Similarity.buildIvfIndex(e, cents, w, "emb")
       Similarity.deleteFromIvfIndex(e.filter(col("vec_id") % 13 === 2), w, "emb")
       Similarity.vacuumIvfIndex(s, w, "emb")
       Similarity.appendIvfIndex(upd.filter(col("vec_id") % 13 === 2), w, "emb")
       w
-    })
+    }
     Similarity.queryIvfIndex(s, writer, "emb",
         upd.filter(col("vec_id") < 8), k = 5, nprobe = 2)
       .withColumn("rank", col("rank").cast("long"))
@@ -3786,16 +3686,14 @@ object SparkEntry {
     * a victim: queries come from the corpus table, so a deleted vector
     * still queries — it just can no longer be ANYONE's neighbor.
     */
-  private val ivfDelCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.sources.TableWriter]
+  private val ivfDelCache = new Fixture[graft.sources.TableWriter]("ivfdel")
 
   private def v17AnnDelete(s: SparkSession, dir: String): DataFrame = {
     val e = t(s, dir, "embeddings")
     val qs = e.filter(col("vec_id") < 8)
-    val writer = ivfDelCache.getOrElseUpdate((s, dir), {
+    val writer = ivfDelCache(s, dir) { wh =>
       val cents = Similarity.trainIvfCentroids(e, initStride = 97L, iters = ivfIters)
-      val w = new graft.sources.TableWriter(
-        s"$q40Scratch/ivfdel_${java.lang.Integer.toHexString(dir.hashCode)}")
+      val w = new graft.sources.TableWriter(wh)
       Similarity.buildIvfIndex(e, cents, w, "emb")
       Similarity.deleteFromIvfIndex(e.filter(col("vec_id") % 9 === 4), w, "emb")
       // serve under tombstones, persist the answer, THEN vacuum — the
@@ -3805,7 +3703,7 @@ object SparkEntry {
         Similarity.queryIvfIndex(s, w, "emb", qs, k = 5, nprobe = 2))
       Similarity.vacuumIvfIndex(s, w, "emb")
       w
-    })
+    }
     val strike = writer.read(s, "strike_result")
       .withColumn("phase", lit("strike"))
     val vacuumed = Similarity.queryIvfIndex(s, writer, "emb", qs, k = 5, nprobe = 2)
@@ -3857,16 +3755,14 @@ object SparkEntry {
     * v10 and v11 query it. Bit-identical to the one-shot
     * [[Retrieval.bm25TopK]], which RetrievalSpec pins.
     */
-  private val bm25IndexCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.sources.TableWriter]
+  private val bm25IndexCache = new Fixture[graft.sources.TableWriter]("bm25")
 
   private def bm25Index(s: SparkSession, dir: String): graft.sources.TableWriter =
-    bm25IndexCache.getOrElseUpdate((s, dir), {
-      val w = new graft.sources.TableWriter(
-        s"$q40Scratch/bm25_${java.lang.Integer.toHexString(dir.hashCode)}")
+    bm25IndexCache(s, dir) { wh =>
+      val w = new graft.sources.TableWriter(wh)
       Retrieval.buildBm25Index(t(s, dir, "documents"), w, "docs")
       w
-    })
+    }
 
   private def v10Bm25TopK(s: SparkSession, dir: String): DataFrame = {
     val d = t(s, dir, "documents")
@@ -3965,19 +3861,17 @@ object SparkEntry {
     * (deleted docs query, they just can't be retrieved). Oracle: v10's
     * replay over the corpus minus the victims.
     */
-  private val bm25DelCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.sources.TableWriter]
+  private val bm25DelCache = new Fixture[graft.sources.TableWriter]("bm25del")
 
   private def v18Bm25Delete(s: SparkSession, dir: String): DataFrame = {
     val d = t(s, dir, "documents")
-    val writer = bm25DelCache.getOrElseUpdate((s, dir), {
-      val w = new graft.sources.TableWriter(
-        s"$q40Scratch/bm25del_${java.lang.Integer.toHexString(dir.hashCode)}")
+    val writer = bm25DelCache(s, dir) { wh =>
+      val w = new graft.sources.TableWriter(wh)
       Retrieval.buildBm25Index(d, w, "docs")
       Retrieval.deleteFromBm25Index(d.filter(col("doc_id") % 11 === 5), w, "docs")
       Retrieval.deleteFromBm25Index(d.filter(col("doc_id") % 11 === 5), w, "docs")
       w
-    })
+    }
     val qs = Retrieval.queryTerms(d, col("doc_id") % 97 === 0, bm25QTerms)
     Retrieval.queryBm25Index(s, writer, "docs", qs,
         k = bm25K, k1 = bm25K1, b = bm25B, excludeSelf = true)
@@ -4009,8 +3903,7 @@ object SparkEntry {
     * full-table query workload, because the query side reads the
     * MERGED table).
     */
-  private val cdcIdxCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.sources.TableWriter]
+  private val cdcIdxCache = new Fixture[graft.sources.TableWriter]("cdcidx")
 
   /** The shared q109/q110 CDC flow + both index syncs, built once per
     * (session, sfdir): the feed drives the BM25 AND positional indexes,
@@ -4019,10 +3912,8 @@ object SparkEntry {
     */
   private def cdcIdxWriter(s: SparkSession, dir: String)
       : graft.sources.TableWriter =
-    cdcIdxCache.getOrElseUpdate((s, dir), {
+    cdcIdxCache(s, dir) { wh =>
       val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val wh = s"$q40Scratch/cdcidx_${java.lang.Integer.toHexString(dir.hashCode)}"
-      deleteTree(java.nio.file.Paths.get(wh))
       val w = new graft.sources.TableWriter(wh)
       w.mergeByKeyCdc(s, "docs_tbl", d, "doc_id", 1L)
       w.mergeByKeyCdc(s, "docs_tbl",
@@ -4037,7 +3928,7 @@ object SparkEntry {
       Retrieval.syncPositionalIndexFromFeed(s, w, "docs_tbl", "phridx")
       Retrieval.syncPositionalIndexFromFeed(s, w, "docs_tbl", "phridx")
       w
-    })
+    }
 
   private def q109CdcIndexSync(s: SparkSession, dir: String): DataFrame = {
     val writer = cdcIdxWriter(s, dir)
@@ -4094,16 +3985,13 @@ object SparkEntry {
     * of both candidates and queries — the ivfQueryOracleSql replay with
     * v19's updateExpr.
     */
-  private val cdcIvfCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.sources.TableWriter]
+  private val cdcIvfCache = new Fixture[graft.sources.TableWriter]("cdcivf")
 
   private def cdcIvfWriter(s: SparkSession, dir: String)
       : graft.sources.TableWriter =
-    cdcIvfCache.getOrElseUpdate((s, dir), {
+    cdcIvfCache(s, dir) { wh =>
       val e = t(s, dir, "embeddings").select(col("vec_id"),
         graft.functions.VectorFns.toDouble(col("embedding")).as("embedding"))
-      val wh = s"$q40Scratch/cdcivf_${java.lang.Integer.toHexString(dir.hashCode)}"
-      deleteTree(java.nio.file.Paths.get(wh))
       val w = new graft.sources.TableWriter(wh)
       w.mergeByKeyCdc(s, "emb_tbl", e, "vec_id", 1L)
       w.mergeByKeyCdc(s, "emb_tbl",
@@ -4119,7 +4007,7 @@ object SparkEntry {
       Similarity.syncIvfIndexFromFeed(s, w, "emb_tbl", "embidx",
         trainIters = ivfIters)
       w
-    })
+    }
 
   private def q111CdcVectorSync(s: SparkSession, dir: String): DataFrame = {
     val writer = cdcIvfWriter(s, dir)
@@ -4242,21 +4130,18 @@ object SparkEntry {
     * pins max-score equality, the delete-leg refusal, healing via real
     * redelivery, and the untouched quiescent plan.
     */
-  private val snapIdxCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.sources.TableWriter]
+  private val snapIdxCache = new Fixture[graft.sources.TableWriter]("snapread")
 
   private def q112SnapshotRead(s: SparkSession, dir: String): DataFrame = {
     val d = t(s, dir, "documents")
-    val writer = snapIdxCache.getOrElseUpdate((s, dir), {
-      val wh = s"$q40Scratch/snapread_${java.lang.Integer.toHexString(dir.hashCode)}"
-      deleteTree(java.nio.file.Paths.get(wh))
+    val writer = snapIdxCache(s, dir) { wh =>
       val w = new graft.sources.TableWriter(wh)
       (0 to 2).foreach(c => Retrieval.appendBm25IndexBatch(
         d.filter(pmod(col("doc_id"), lit(4)) === c), w, "docs", c))
       Retrieval.injectCrashedBm25Append(
         d.filter(pmod(col("doc_id"), lit(4)) === 3), w, "docs", 3L)
       w
-    })
+    }
     val qs = Retrieval.queryTerms(d, col("doc_id") % 97 === 0, bm25QTerms)
     Retrieval.queryBm25Index(s, writer, "docs", qs,
         k = bm25K, k1 = bm25K1, b = bm25B, excludeSelf = true)
@@ -4275,21 +4160,18 @@ object SparkEntry {
     * (batches 0–2) exactly. Queries still come from the full table —
     * an unindexed doc may query, it just can't be retrieved.
     */
-  private val snapPosCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.sources.TableWriter]
+  private val snapPosCache = new Fixture[graft.sources.TableWriter]("snappos")
 
   private def q113SnapshotPhrase(s: SparkSession, dir: String): DataFrame = {
     val d = t(s, dir, "documents")
-    val writer = snapPosCache.getOrElseUpdate((s, dir), {
-      val wh = s"$q40Scratch/snappos_${java.lang.Integer.toHexString(dir.hashCode)}"
-      deleteTree(java.nio.file.Paths.get(wh))
+    val writer = snapPosCache(s, dir) { wh =>
       val w = new graft.sources.TableWriter(wh)
       (0 to 2).foreach(c => Retrieval.appendPositionalIndexBatch(
         d.filter(pmod(col("doc_id"), lit(4)) === c), w, "docs", c))
       Retrieval.injectCrashedPositionalAppend(
         d.filter(pmod(col("doc_id"), lit(4)) === 3), w, "docs", 3L)
       w
-    })
+    }
     val phrases = d
       .filter(col("doc_id") % 97 === 0
         && size(split(col("text"), " ")) >= 3)
@@ -4311,14 +4193,11 @@ object SparkEntry {
     * Oracle: train on chunk 0, assign the COMMITTED corpus (vec_id %
     * 4 <> 3), probe with the standard query set.
     */
-  private val snapIvfCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.sources.TableWriter]
+  private val snapIvfCache = new Fixture[graft.sources.TableWriter]("snapivf")
 
   private def q114SnapshotIvf(s: SparkSession, dir: String): DataFrame = {
     val e = t(s, dir, "embeddings")
-    val writer = snapIvfCache.getOrElseUpdate((s, dir), {
-      val wh = s"$q40Scratch/snapivf_${java.lang.Integer.toHexString(dir.hashCode)}"
-      deleteTree(java.nio.file.Paths.get(wh))
+    val writer = snapIvfCache(s, dir) { wh =>
       val w = new graft.sources.TableWriter(wh)
       (0 to 2).foreach(c => Similarity.appendIvfIndexBatch(
         e.filter(pmod(col("vec_id"), lit(4)) === c), w, "emb", c,
@@ -4326,7 +4205,7 @@ object SparkEntry {
       Similarity.injectCrashedIvfAppend(
         e.filter(pmod(col("vec_id"), lit(4)) === 3), w, "emb", 3L)
       w
-    })
+    }
     Similarity.queryIvfIndex(s, writer, "emb",
         e.filter(col("vec_id") < 8), k = 5, nprobe = 2)
       .withColumn("rank", col("rank").cast("long"))
@@ -4345,14 +4224,11 @@ object SparkEntry {
     * application survives truncation because the dedup state lives in
     * the index's commit markers, not in feed presence.
     */
-  private val feedRetCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.sources.TableWriter]
+  private val feedRetCache = new Fixture[graft.sources.TableWriter]("feedret")
 
   private def q115FeedRetention(s: SparkSession, dir: String): DataFrame = {
-    val writer = feedRetCache.getOrElseUpdate((s, dir), {
+    val writer = feedRetCache(s, dir) { wh =>
       val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val wh = s"$q40Scratch/feedret_${java.lang.Integer.toHexString(dir.hashCode)}"
-      deleteTree(java.nio.file.Paths.get(wh))
       val w = new graft.sources.TableWriter(wh)
       w.mergeByKeyCdc(s, "docs_tbl", d, "doc_id", 1L)
       w.mergeByKeyCdc(s, "docs_tbl",
@@ -4366,7 +4242,7 @@ object SparkEntry {
       w.truncateChangeFeed(s, "docs_tbl", beforeBatchId = 3L)
       Retrieval.syncBm25IndexFromFeed(s, w, "docs_tbl", "docsidx")
       w
-    })
+    }
     val fin = writer.readResolved(s, "docs_tbl")
       .select(col("doc_id"), col("text"))
     val qs = Retrieval.queryTerms(fin, col("doc_id") % 97 === 0, bm25QTerms)
@@ -4386,14 +4262,11 @@ object SparkEntry {
     * frontier` exactly as its deleted marker would have — and serving
     * must still match v10's replay of the full corpus.
     */
-  private val commitCompactCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.sources.TableWriter]
+  private val commitCompactCache = new Fixture[graft.sources.TableWriter]("cmtcmp")
 
   private def q117CommitCompaction(s: SparkSession, dir: String): DataFrame = {
     val d = t(s, dir, "documents")
-    val writer = commitCompactCache.getOrElseUpdate((s, dir), {
-      val wh = s"$q40Scratch/cmtcmp_${java.lang.Integer.toHexString(dir.hashCode)}"
-      deleteTree(java.nio.file.Paths.get(wh))
+    val writer = commitCompactCache(s, dir) { wh =>
       val w = new graft.sources.TableWriter(wh)
       (0 to 3).foreach(c => Retrieval.appendBm25IndexBatch(
         d.filter(pmod(col("doc_id"), lit(4)) === c), w, "docs", c))
@@ -4403,7 +4276,7 @@ object SparkEntry {
       (0 to 3).foreach(c => Retrieval.appendBm25IndexBatch(
         d.filter(pmod(col("doc_id"), lit(4)) === c), w, "docs", c))
       w
-    })
+    }
     val qs = Retrieval.queryTerms(d, col("doc_id") % 97 === 0, bm25QTerms)
     Retrieval.queryBm25Index(s, writer, "docs", qs,
         k = bm25K, k1 = bm25K1, b = bm25B, excludeSelf = true)
@@ -4438,8 +4311,7 @@ object SparkEntry {
         (col("price") + lit(1000).cast("decimal(18,2)")).cast("decimal(18,2)"))
       .unionByName(o.filter(col("k") % 3 === 1 && col("k") % 5 === 0))
     val doomed = o.filter(col("k") % 9 === 0).select("k")
-    val wh = s"$q40Scratch/vtable_${java.lang.Integer.toHexString(dir.hashCode)}"
-    deleteTree(java.nio.file.Paths.get(wh))
+    val wh = Fixture.freshDir("vtable", dir)
     val root = s"$wh/orders_v"
     VersionedTable.commitMerge(s, root, base, "k")    // v0
     VersionedTable.commitMerge(s, root, changes, "k") // v1
@@ -4473,8 +4345,7 @@ object SparkEntry {
       .withColumn("status", lit("bumped"))
       .unionByName(o.filter(col("k") % 3 === 1 && col("k") % 5 === 0)
         .withColumn("status", lit("new")))
-    val wh = s"$q40Scratch/vtevo_${java.lang.Integer.toHexString(dir.hashCode)}"
-    deleteTree(java.nio.file.Paths.get(wh))
+    val wh = Fixture.freshDir("vtevo", dir)
     val root = s"$wh/orders_evo"
     VersionedTable.commitMerge(s, root, base, "k")
     VersionedTable.commitMerge(s, root, evolved, "k")
@@ -4491,18 +4362,16 @@ object SparkEntry {
     * the whole corpus, and the oracle is exactly v10's full-corpus
     * replay — same discipline as v7 sharing v3's oracle.
     */
-  private val bm25IncCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.sources.TableWriter]
+  private val bm25IncCache = new Fixture[graft.sources.TableWriter]("bm25inc")
 
   private def v13Bm25Append(s: SparkSession, dir: String): DataFrame = {
     val d = t(s, dir, "documents")
-    val writer = bm25IncCache.getOrElseUpdate((s, dir), {
-      val w = new graft.sources.TableWriter(
-        s"$q40Scratch/bm25inc_${java.lang.Integer.toHexString(dir.hashCode)}")
+    val writer = bm25IncCache(s, dir) { wh =>
+      val w = new graft.sources.TableWriter(wh)
       Retrieval.buildBm25Index(d.filter(col("doc_id") % 10 =!= 0), w, "docs")
       Retrieval.appendBm25Index(d.filter(col("doc_id") % 10 === 0), w, "docs")
       w
-    })
+    }
     val qs = Retrieval.queryTerms(d, col("doc_id") % 97 === 0, bm25QTerms)
     Retrieval.queryBm25Index(s, writer, "docs", qs,
         k = bm25K, k1 = bm25K1, b = bm25B, excludeSelf = true)
@@ -5193,16 +5062,14 @@ object SparkEntry {
     * phrase-search sibling of [[bm25Index]] (same bucket-pruned serving
     * layout, positions instead of tf).
     */
-  private val posIndexCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.sources.TableWriter]
+  private val posIndexCache = new Fixture[graft.sources.TableWriter]("posidx")
 
   private def posIndex(s: SparkSession, dir: String): graft.sources.TableWriter =
-    posIndexCache.getOrElseUpdate((s, dir), {
-      val w = new graft.sources.TableWriter(
-        s"$q40Scratch/posidx_${java.lang.Integer.toHexString(dir.hashCode)}")
+    posIndexCache(s, dir) { wh =>
+      val w = new graft.sources.TableWriter(wh)
       Retrieval.buildPositionalIndex(t(s, dir, "documents"), w, "docs")
       w
-    })
+    }
 
   /** Exact phrase search (v14): every 97th document's first three tokens
     * as the query phrase, served from the persisted positional index —
@@ -5266,18 +5133,16 @@ object SparkEntry {
     * oracle, the strongest instance of the v7/v13 shared-oracle
     * discipline.
     */
-  private val posIncCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.sources.TableWriter]
+  private val posIncCache = new Fixture[graft.sources.TableWriter]("posinc")
 
   private def v16PhraseAppend(s: SparkSession, dir: String): DataFrame = {
     val d = t(s, dir, "documents")
-    val writer = posIncCache.getOrElseUpdate((s, dir), {
-      val w = new graft.sources.TableWriter(
-        s"$q40Scratch/posinc_${java.lang.Integer.toHexString(dir.hashCode)}")
+    val writer = posIncCache(s, dir) { wh =>
+      val w = new graft.sources.TableWriter(wh)
       Retrieval.appendPositionalIndex(d.filter(col("doc_id") % 10 =!= 0), w, "docs")
       Retrieval.appendPositionalIndex(d.filter(col("doc_id") % 10 === 0), w, "docs")
       w
-    })
+    }
     val phrases = d
       .filter(col("doc_id") % 97 === 0
         && size(split(col("text"), " ")) >= 3)
@@ -5298,21 +5163,19 @@ object SparkEntry {
     * 291 still queries. Oracle: v14's trigram replay over the surviving
     * corpus.
     */
-  private val posDelCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.sources.TableWriter]
+  private val posDelCache = new Fixture[graft.sources.TableWriter]("posdel")
 
   private def v20PhraseDelete(s: SparkSession, dir: String): DataFrame = {
     val d = t(s, dir, "documents")
-    val writer = posDelCache.getOrElseUpdate((s, dir), {
-      val w = new graft.sources.TableWriter(
-        s"$q40Scratch/posdel_${java.lang.Integer.toHexString(dir.hashCode)}")
+    val writer = posDelCache(s, dir) { wh =>
+      val w = new graft.sources.TableWriter(wh)
       Retrieval.buildPositionalIndex(d, w, "docs")
       Retrieval.deleteFromPositionalIndex(
         d.filter(col("doc_id") % 11 === 5), w, "docs")
       Retrieval.deleteFromPositionalIndex(
         d.filter(col("doc_id") % 11 === 5), w, "docs")
       w
-    })
+    }
     val phrases = d
       .filter(col("doc_id") % 97 === 0
         && size(split(col("text"), " ")) >= 3)
@@ -5384,11 +5247,10 @@ object SparkEntry {
     * must append ZERO feed rows; the delete appends the CURRENT (post-
     * update) images.
     */
-  private val cdcCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.sources.TableWriter]
+  private val cdcCache = new Fixture[graft.sources.TableWriter]("cdcstore")
 
   private def cdcRun(s: SparkSession, dir: String): graft.sources.TableWriter =
-    cdcCache.getOrElseUpdate((s, dir), {
+    cdcCache(s, dir) { wh =>
       val o = t(s, dir, "orders")
         .select(col("o_orderkey").as("k"),
           col("o_totalprice").cast("decimal(18,2)").as("price"))
@@ -5398,8 +5260,6 @@ object SparkEntry {
           (col("price") + lit(1000).cast("decimal(18,2)"))
             .cast("decimal(18,2)"))
         .unionByName(o.filter(col("k") % 3 === 1 && col("k") % 5 === 0))
-      val wh = s"$q40Scratch/cdcstore_${java.lang.Integer.toHexString(dir.hashCode)}"
-      deleteTree(java.nio.file.Paths.get(wh))
       val w = new graft.sources.TableWriter(wh)
       w.mergeByKeyCdc(s, "orders_cdc", base, "k", batchId = 1L)
       w.mergeByKeyCdc(s, "orders_cdc", changes, "k", batchId = 2L)
@@ -5407,7 +5267,7 @@ object SparkEntry {
       w.deleteByKeyCdc(s, "orders_cdc",
         base.filter(col("k") % 11 === 0).select(col("k")), "k", batchId = 4L)
       w
-    })
+    }
 
   /** Change-data feed of the merge/delete flow (q90): every row-level
     * change the table went through, batch-stamped — inserts on first
@@ -5462,8 +5322,7 @@ object SparkEntry {
     */
   private def q99CdcReplica(s: SparkSession, dir: String): DataFrame = {
     val feed = cdcRun(s, dir).readChangeFeed(s, "orders_cdc")
-    val wh = s"$q40Scratch/cdcreplica_${java.lang.Integer.toHexString(dir.hashCode)}"
-    deleteTree(java.nio.file.Paths.get(wh))
+    val wh = Fixture.freshDir("cdcreplica", dir)
     val w = new graft.sources.TableWriter(wh)
     // bounded collect: one id per feed batch
     val batches = feed.select("batch_id").distinct()
@@ -5574,8 +5433,7 @@ object SparkEntry {
       .withColumn("price",
         (col("price") + lit(1000).cast("decimal(18,2)")).cast("decimal(18,2)"))
       .unionByName(o.filter(col("k") % 3 === 1 && col("k") % 5 === 0))
-    val wh = s"$q40Scratch/mvstore_${java.lang.Integer.toHexString(dir.hashCode)}"
-    deleteTree(java.nio.file.Paths.get(wh))
+    val wh = Fixture.freshDir("mvstore", dir)
     val w = new graft.sources.TableWriter(wh)
     MvRegistry.deregister(s, w.path("orders_mvbase")) // maintenance runs unregistered
     w.mergeByKeyCdc(s, "orders_mvbase", base, "k", batchId = 1L)
@@ -5593,9 +5451,7 @@ object SparkEntry {
           .as("sum_price"))
       .filter(col("n") > 0)
       .write.mode("overwrite").parquet(mvPath)
-    if (!s.experimental.extraOptimizations.exists(_.isInstanceOf[MvRewrite]))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ MvRewrite(s)
+    MvRewrite.install(s)
     MvRegistry.register(s, w.path("orders_mvbase"), MvRegistry.MvDef(
       mvPath, Set("cust"), Map("price" -> "sum_price"), "n"))
     val q = s.read.parquet(w.path("orders_mvbase"))
@@ -5668,8 +5524,7 @@ object SparkEntry {
         (col("price") + lit(2000).cast("decimal(18,2)")).cast("decimal(18,2)"))
       .unionByName(o.filter(col("k") % 3 === 2 && col("k") % 10 === 0))
     val doomed = o.filter(col("k") % 3 === 1 && col("k") % 5 === 0).select("k")
-    val wh = s"$q40Scratch/mvcomp_${java.lang.Integer.toHexString(dir.hashCode)}"
-    deleteTree(java.nio.file.Paths.get(wh))
+    val wh = Fixture.freshDir("mvcomp", dir)
     val w = new graft.sources.TableWriter(wh)
     MvRegistry.deregister(s, w.path("orders_cmpbase")) // maintenance runs unregistered
     w.mergeByKeyCdc(s, "orders_cmpbase", base, "k", batchId = 1L)
@@ -5690,9 +5545,7 @@ object SparkEntry {
     // the base moves past the view's frontier
     w.mergeByKeyCdc(s, "orders_cmpbase", batch3, "k", batchId = 3L)
     w.deleteByKeyCdc(s, "orders_cmpbase", doomed, "k", batchId = 4L)
-    if (!s.experimental.extraOptimizations.exists(_.isInstanceOf[MvRewrite]))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ MvRewrite(s)
+    MvRewrite.install(s)
     MvRegistry.register(s, w.path("orders_cmpbase"), MvRegistry.MvDef(
       mvPath, Set("cust"), Map("price" -> "sum_price"), "n",
       comp = Some(MvRegistry.CompDef(
@@ -5766,8 +5619,7 @@ object SparkEntry {
         (col("price") + lit(2000).cast("decimal(18,2)")).cast("decimal(18,2)"))
       .unionByName(o.filter(col("k") % 3 === 2 && col("k") % 10 === 0))
     val doomed = o.filter(col("k") % 3 === 1 && col("k") % 5 === 0).select("k")
-    val wh = s"$q40Scratch/mvrefresh_${java.lang.Integer.toHexString(dir.hashCode)}"
-    deleteTree(java.nio.file.Paths.get(wh))
+    val wh = Fixture.freshDir("mvrefresh", dir)
     val w = new graft.sources.TableWriter(wh)
     val mvPath = s"$wh/orders_rmv"
     MvRegistry.deregister(s, w.path("orders_rbase")) // maintenance unregistered
@@ -5780,9 +5632,7 @@ object SparkEntry {
     w.deleteByKeyCdc(s, "orders_rbase", doomed, "k", batchId = 4L)
     val fr2 = MvMaintain.refresh(s, w.path("orders_rbase_changes"), mvPath, vdef)
     require(fr2 == 4L, s"second refresh frontier: $fr2")
-    if (!s.experimental.extraOptimizations.exists(_.isInstanceOf[MvRewrite]))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ MvRewrite(s)
+    MvRewrite.install(s)
     MvRegistry.register(s, w.path("orders_rbase"), MvRegistry.MvDef(
       mvPath, Set("cust"), Map("price" -> "sum_price"), "n",
       comp = Some(MvRegistry.CompDef(
@@ -5841,8 +5691,7 @@ object SparkEntry {
       .select((col("o_custkey") % 30).as("cust"),
         ((col("o_custkey") % 30) % 5).as("region"),
         col("o_totalprice").cast("decimal(18,2)").as("price"))
-    val wh = s"$q40Scratch/mvlat_${java.lang.Integer.toHexString(dir.hashCode)}"
-    deleteTree(java.nio.file.Paths.get(wh))
+    val wh = Fixture.freshDir("mvlat", dir)
     val basePath = s"$wh/lat_base"
     val fine = s"$wh/lat_fine"
     val coarse = s"$wh/lat_coarse"
@@ -5854,9 +5703,7 @@ object SparkEntry {
     s.read.parquet(basePath).groupBy("region")
       .agg(count(lit(1)).as("n"), sum(col("price")).as("sum_price"))
       .write.mode("overwrite").parquet(coarse)
-    if (!s.experimental.extraOptimizations.exists(_.isInstanceOf[MvRewrite]))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ MvRewrite(s)
+    MvRewrite.install(s)
     MvRegistry.register(s, basePath, Seq(
       MvRegistry.MvDef(fine, Set("cust", "region"),
         Map("price" -> "sum_price"), "n"),
@@ -5893,16 +5740,12 @@ object SparkEntry {
     * to the summary view exactly like path-read bases. The entry
     * REQUIRES the optimized plan to scan only the view.
     */
-  private val mvCatCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (String, String)]
+  private val mvCatCache = new Fixture[(String, String)]("mvcat")
 
   private def q128MvCatalogBase(s: SparkSession, dir: String): DataFrame = {
     import graft.plans.{MvRegistry, MvRewrite}
-    val hex = java.lang.Integer.toHexString(dir.hashCode)
-    val (tbl, mvPath) = mvCatCache.getOrElseUpdate((s, dir), {
-      val wh = s"$q40Scratch/mvcat_$hex"
-      deleteTree(java.nio.file.Paths.get(wh))
-      val tb = s"mv_cat_base_$hex"
+    val (tbl, mvPath) = mvCatCache(s, dir) { wh =>
+      val tb = s"mv_cat_base_${java.lang.Integer.toHexString(dir.hashCode)}"
       s.sql(s"DROP TABLE IF EXISTS $tb")
       t(s, dir, "orders")
         .select(col("o_orderkey").as("k"),
@@ -5914,10 +5757,8 @@ object SparkEntry {
         .agg(count(lit(1)).as("n"), sum(col("price")).as("sum_price"))
         .write.mode("overwrite").parquet(s"$wh/cat_mv")
       (tb, s"$wh/cat_mv")
-    })
-    if (!s.experimental.extraOptimizations.exists(_.isInstanceOf[MvRewrite]))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ MvRewrite(s)
+    }
+    MvRewrite.install(s)
     MvRegistry.registerTable(s, tbl, MvRegistry.MvDef(
       mvPath, Set("cust"), Map("price" -> "sum_price"), "n"))
     val q = s.table(tbl).groupBy("cust")
@@ -5953,8 +5794,7 @@ object SparkEntry {
     * the plan to read view + base (semi-joined), and the oracle is the
     * fresh closed form.
     */
-  private val mvExtCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.sources.TableWriter]
+  private val mvExtCache = new Fixture[graft.sources.TableWriter]("mvext")
 
   private def q129MvCompExtrema(s: SparkSession, dir: String): DataFrame = {
     import graft.plans.{MvRegistry, MvRewrite}
@@ -5962,9 +5802,7 @@ object SparkEntry {
       .select(col("o_orderkey").as("k"),
         (col("o_custkey") % 40).as("cust"),
         col("o_totalprice").cast("decimal(18,2)").as("price"))
-    val w = mvExtCache.getOrElseUpdate((s, dir), {
-      val wh = s"$q40Scratch/mvext_${java.lang.Integer.toHexString(dir.hashCode)}"
-      deleteTree(java.nio.file.Paths.get(wh))
+    val w = mvExtCache(s, dir) { wh =>
       val wr = new graft.sources.TableWriter(wh)
       MvRegistry.deregister(s, wr.path("ext_base"))
       wr.mergeByKeyCdc(s, "ext_base", o.filter(col("k") % 2 === 0),
@@ -5985,10 +5823,8 @@ object SparkEntry {
         o.filter(col("k") % 2 === 0 && col("k") % 11 === 3).select("k"),
         "k", batchId = 3L)
       wr
-    })
-    if (!s.experimental.extraOptimizations.exists(_.isInstanceOf[MvRewrite]))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ MvRewrite(s)
+    }
+    MvRewrite.install(s)
     MvRegistry.register(s, w.path("ext_base"), MvRegistry.MvDef(
       s"${w.path("ext_mv")}", Set("cust"), Map("price" -> "sum_price"), "n",
       comp = Some(MvRegistry.CompDef(w.path("ext_base_changes"), frontier = 1L)),
@@ -6064,8 +5900,7 @@ object SparkEntry {
     e.withColumn("__c", pmod(col("event_id"), lit(4)).cast("int"))
       .repartition(col("__c"))
       .write.partitionBy("__c").parquet(s"$stage/chunks")
-    val wh = s"$q40Scratch/mvret_${java.lang.Integer.toHexString(dir.hashCode)}"
-    deleteTree(java.nio.file.Paths.get(wh))
+    val wh = Fixture.freshDir("mvret", dir)
     val w = new graft.sources.TableWriter(wh)
     MvRegistry.deregister(s, w.path("ev_rbase"))
     val stream = s.readStream.schema(e.schema)
@@ -6095,9 +5930,7 @@ object SparkEntry {
     w.deleteByKeyCdc(s, "ev_rbase",
       e.filter(col("event_id") % 9 === 5).select("event_id"),
       "event_id", batchId = 5L)
-    if (!s.experimental.extraOptimizations.exists(_.isInstanceOf[MvRewrite]))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ MvRewrite(s)
+    MvRewrite.install(s)
     def roots(df: DataFrame): Seq[String] =
       df.queryExecution.optimizedPlan.collect {
         case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
@@ -6147,7 +5980,7 @@ object SparkEntry {
     require(r2.nonEmpty && r2.forall(_.endsWith("ev_rmv")),
       s"phase 2 (fresh view) must serve alone: plan scans $r2")
     val out2 = materialize(p2, "fresh")
-    deleteTree(java.nio.file.Paths.get(stage))
+    Fixture.deleteTree(stage)
     import s.implicits._
     (out1 ++ out2).toDF("phase", "grp", "n_events", "total")
   }
@@ -6188,8 +6021,7 @@ object SparkEntry {
     val e = t(s, dir, "events")
       .select(col("event_id").as("k"), (col("user_id") % 30).as("grp"),
         col("value").cast("decimal(18,2)").as("v"))
-    val wh = s"$q40Scratch/mvdyn_${java.lang.Integer.toHexString(dir.hashCode)}"
-    deleteTree(java.nio.file.Paths.get(wh))
+    val wh = Fixture.freshDir("mvdyn", dir)
     val w = new graft.sources.TableWriter(wh)
     val mvPath = s"$wh/dyn_mv"
     MvRegistry.deregister(s, w.path("dyn_base"))
@@ -6198,9 +6030,7 @@ object SparkEntry {
       batchId = 1L)
     val fr1 = MvMaintain.refresh(s, w.path("dyn_base_changes"), mvPath, vdef)
     require(fr1 == 1L, s"first refresh frontier: $fr1")
-    if (!s.experimental.extraOptimizations.exists(_.isInstanceOf[MvRewrite]))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ MvRewrite(s)
+    MvRewrite.install(s)
     // THE one registration — never repeated below
     MvRegistry.register(s, w.path("dyn_base"), MvRegistry.MvDef(
       mvPath, Set("grp"), Map("v" -> "sum_v"), "n",
@@ -6293,15 +6123,13 @@ object SparkEntry {
     * equal a fresh build over the latest version — q109's oracle
     * verbatim, because the final corpus is identical.
     */
-  private val vtIdxCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.sources.TableWriter]
+  private val vtIdxCache = new Fixture[graft.sources.TableWriter]("vtidx")
 
-  private def q133VtIndexSync(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.VersionedTable
-    val writer = vtIdxCache.getOrElseUpdate((s, dir), {
+  private def vtIdxWriter(s: SparkSession, dir: String)
+      : graft.sources.TableWriter =
+    vtIdxCache(s, dir) { wh =>
+      import graft.sources.VersionedTable
       val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val wh = s"$q40Scratch/vtidx_${java.lang.Integer.toHexString(dir.hashCode)}"
-      deleteTree(java.nio.file.Paths.get(wh))
       val root = s"$wh/docs_vt"
       VersionedTable.commitMerge(s, root, d, "doc_id")             // v0
       VersionedTable.commitMerge(s, root,
@@ -6315,7 +6143,11 @@ object SparkEntry {
       Retrieval.syncBm25IndexFromVersionedTable(s, root, w, "vtdocs")
       Retrieval.syncBm25IndexFromVersionedTable(s, root, w, "vtdocs")
       w
-    })
+    }
+
+  private def q133VtIndexSync(s: SparkSession, dir: String): DataFrame = {
+    import graft.sources.VersionedTable
+    val writer = vtIdxWriter(s, dir)
     val fin = VersionedTable.read(s, writer.path("docs_vt"))
       .select(col("doc_id"), col("text"))
     val qs = Retrieval.queryTerms(fin, col("doc_id") % 97 === 0, bm25QTerms)
@@ -6337,12 +6169,11 @@ object SparkEntry {
     * compare (NET changes, not file churn). Oracle: the v0 and v2
     * closed-form states full-outer-diffed in SQL.
     */
-  private val vtCdfCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
+  private val vtCdfCache = new Fixture[String]("vtcdf")
 
-  private def q131VersionedCdf(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.VersionedTable
-    val root = vtCdfCache.getOrElseUpdate((s, dir), {
+  private def vtCdfRoot(s: SparkSession, dir: String): String =
+    vtCdfCache(s, dir) { wh =>
+      import graft.sources.VersionedTable
       val o = t(s, dir, "orders")
         .select(col("o_orderkey").as("k"),
           col("o_totalprice").cast("decimal(18,2)").as("price"))
@@ -6352,14 +6183,16 @@ object SparkEntry {
           (col("price") + lit(1000).cast("decimal(18,2)")).cast("decimal(18,2)"))
         .unionByName(o.filter(col("k") % 3 === 1 && col("k") % 5 === 0))
       val doomed = base.filter(col("k") % 9 === 0).select("k")
-      val wh = s"$q40Scratch/vtcdf_${java.lang.Integer.toHexString(dir.hashCode)}"
-      deleteTree(java.nio.file.Paths.get(wh))
       val r = s"$wh/orders_cdf"
       VersionedTable.commitMerge(s, r, base, "k")    // v0
       VersionedTable.commitMerge(s, r, changes, "k") // v1
       VersionedTable.commitDelete(s, r, doomed, "k") // v2
       r
-    })
+    }
+
+  private def q131VersionedCdf(s: SparkSession, dir: String): DataFrame = {
+    import graft.sources.VersionedTable
+    val root = vtCdfRoot(s, dir)
     VersionedTable.changesBetween(s, root, "k", 0L, 2L)
       .select(col("change_op"), col("k"),
         col("price").cast("double").as("price"))
@@ -6407,8 +6240,7 @@ object SparkEntry {
       .filter(col("o_orderkey") % 2 === 0)
       .select((col("o_custkey") % 40).as("cust"),
         col("o_totalprice").cast("decimal(18,2)").as("price"))
-    val wh = s"$q40Scratch/mvagg_${java.lang.Integer.toHexString(dir.hashCode)}"
-    deleteTree(java.nio.file.Paths.get(wh))
+    val wh = Fixture.freshDir("mvagg", dir)
     val basePath = s"$wh/agg_base"
     val mvPath = s"$wh/agg_mv"
     // view maintenance must run UNREGISTERED: a registered base would
@@ -6419,9 +6251,7 @@ object SparkEntry {
       .agg(count(lit(1)).as("n"), sum(col("price")).as("sum_price"),
         min(col("price")).as("min_price"), max(col("price")).as("max_price"))
       .write.mode("overwrite").parquet(mvPath)
-    if (!s.experimental.extraOptimizations.exists(_.isInstanceOf[MvRewrite]))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ MvRewrite(s)
+    MvRewrite.install(s)
     MvRegistry.register(s, basePath, MvRegistry.MvDef(
       mvPath, Set("cust"), Map("price" -> "sum_price"), "n",
       minCols = Map("price" -> "min_price"),
@@ -6487,8 +6317,7 @@ object SparkEntry {
       .filter(col("o_orderkey") % 2 === 1)
       .select((col("o_custkey") % 25).as("cust"),
         col("o_totalprice").cast("decimal(18,2)").as("price"))
-    val wh = s"$q40Scratch/mvstar_${java.lang.Integer.toHexString(dir.hashCode)}"
-    deleteTree(java.nio.file.Paths.get(wh))
+    val wh = Fixture.freshDir("mvstar", dir)
     val basePath = s"$wh/star_base"
     val mvPath = s"$wh/star_mv"
     MvRegistry.deregister(s, basePath) // maintenance runs unregistered
@@ -6497,9 +6326,7 @@ object SparkEntry {
       .agg(count(lit(1)).as("n"), sum(col("price")).as("sum_price"),
         min(col("price")).as("min_price"), max(col("price")).as("max_price"))
       .write.mode("overwrite").parquet(mvPath)
-    if (!s.experimental.extraOptimizations.exists(_.isInstanceOf[MvRewrite]))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ MvRewrite(s)
+    MvRewrite.install(s)
     MvRegistry.register(s, basePath, MvRegistry.MvDef(
       mvPath, Set("cust"), Map("price" -> "sum_price"), "n",
       minCols = Map("price" -> "min_price"),
@@ -6574,8 +6401,7 @@ object SparkEntry {
       .select(col("o_orderkey").as("k"),
         ((col("o_orderkey") * lit(2654435761L)) % lit(1000000007L)).as("v"),
         col("o_totalprice").cast("decimal(18,2)").as("price"))
-    val wh = s"$q40Scratch/bloomskip_${java.lang.Integer.toHexString(dir.hashCode)}"
-    deleteTree(java.nio.file.Paths.get(wh))
+    val wh = Fixture.freshDir("bloomskip", dir)
     val path = s"$wh/t"
     src.repartition(10, col("k")).write.mode("overwrite").parquet(path)
     ManifestIndex.buildBloom(s, path, "v", numBits, numHashes)
@@ -6615,8 +6441,7 @@ object SparkEntry {
     * content-invisibility argument (q69) into the full maintenance
     * cycle: ingest → compact → serve.
     */
-  private val compactIdxCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.sources.TableWriter]
+  private val compactIdxCache = new Fixture[graft.sources.TableWriter]("compactbm25")
 
   private def q92IndexCompaction(s: SparkSession, dir: String): DataFrame = {
     val d = t(s, dir, "documents")
@@ -6624,9 +6449,7 @@ object SparkEntry {
     // bm25Index/v7 discipline: the maintained index is a session
     // artifact, steady cost is SERVING cost (CompactionSpec pins the
     // structural claims of the cycle itself)
-    val writer = compactIdxCache.getOrElseUpdate((s, dir), {
-      val wh = s"$q40Scratch/compactbm25_${java.lang.Integer.toHexString(dir.hashCode)}"
-      deleteTree(java.nio.file.Paths.get(wh))
+    val writer = compactIdxCache(s, dir) { wh =>
       val w = new graft.sources.TableWriter(wh)
       (0 to 3).foreach { c =>
         Retrieval.appendBm25Index(
@@ -6634,7 +6457,7 @@ object SparkEntry {
       }
       w.compact(s, "docs_postings", targetBytes = 256L * 1024 * 1024)
       w
-    })
+    }
     val qs = Retrieval.queryTerms(d, col("doc_id") % 97 === 0, bm25QTerms)
     Retrieval.queryBm25Index(s, writer, "docs", qs,
         k = bm25K, k1 = bm25K1, b = bm25B, excludeSelf = true)
@@ -6648,14 +6471,11 @@ object SparkEntry {
     * v14's oracle. With q92 (BM25) and q104 (IVF lists) this closes
     * ingest → compact → serve for all three serving-index families.
     */
-  private val compactPosCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.sources.TableWriter]
+  private val compactPosCache = new Fixture[graft.sources.TableWriter]("compactpos")
 
   private def q103PosCompaction(s: SparkSession, dir: String): DataFrame = {
     val d = t(s, dir, "documents")
-    val writer = compactPosCache.getOrElseUpdate((s, dir), {
-      val wh = s"$q40Scratch/compactpos_${java.lang.Integer.toHexString(dir.hashCode)}"
-      deleteTree(java.nio.file.Paths.get(wh))
+    val writer = compactPosCache(s, dir) { wh =>
       val w = new graft.sources.TableWriter(wh)
       (0 to 3).foreach { c =>
         Retrieval.appendPositionalIndex(
@@ -6663,7 +6483,7 @@ object SparkEntry {
       }
       w.compact(s, "docs_positions", targetBytes = 256L * 1024 * 1024)
       w
-    })
+    }
     val phrases = d
       .filter(col("doc_id") % 97 === 0
         && size(split(col("text"), " ")) >= 3)
@@ -6681,17 +6501,14 @@ object SparkEntry {
     * directory and the probed serving must stay rank-identical — v12's
     * oracle (base training + union assignment replayed in SQL).
     */
-  private val compactIvfCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.sources.TableWriter]
+  private val compactIvfCache = new Fixture[graft.sources.TableWriter]("compactivf")
 
   private def q104IvfCompaction(s: SparkSession, dir: String): DataFrame = {
     val e = t(s, dir, "embeddings")
-    val writer = compactIvfCache.getOrElseUpdate((s, dir), {
+    val writer = compactIvfCache(s, dir) { wh =>
       val base = e.filter(col("vec_id") % 10 =!= 0)
       val cents = Similarity.trainIvfCentroids(base, initStride = 97L,
         iters = ivfIters)
-      val wh = s"$q40Scratch/compactivf_${java.lang.Integer.toHexString(dir.hashCode)}"
-      deleteTree(java.nio.file.Paths.get(wh))
       val w = new graft.sources.TableWriter(wh)
       Similarity.buildIvfIndex(base, cents, w, "emb")
       (0 to 2).foreach { c =>
@@ -6701,7 +6518,7 @@ object SparkEntry {
       }
       w.compact(s, "emb_lists", targetBytes = 256L * 1024 * 1024)
       w
-    })
+    }
     Similarity.queryIvfIndex(s, writer, "emb",
         e.filter(col("vec_id") < 8), k = 5, nprobe = 2)
       .withColumn("rank", col("rank").cast("long"))
@@ -6852,8 +6669,7 @@ object SparkEntry {
           .cast("decimal(18,2)"))
       .unionByName(o.filter(col("k") % 3 === 1 && col("k") % 5 === 0))
     val late = o.filter(col("k") % 3 === 2 && col("k") % 5 === 0)
-    val wh = s"$q40Scratch/rebucket_${java.lang.Integer.toHexString(dir.hashCode)}"
-    deleteTree(java.nio.file.Paths.get(wh))
+    val wh = Fixture.freshDir("rebucket", dir)
     val w = new graft.sources.TableWriter(wh)
     w.mergeByKey(s, "orders_rb", base, "k", numBuckets = 8)
     w.mergeByKey(s, "orders_rb", changes, "k", numBuckets = 8)
@@ -6980,8 +6796,7 @@ object SparkEntry {
     val base = t(s, dir, "orders")
       .select(col("o_orderdate").as("d"),
         col("o_totalprice").cast("decimal(18,2)").as("price"))
-    val wh = s"$q40Scratch/mvexpr_${java.lang.Integer.toHexString(dir.hashCode)}"
-    deleteTree(java.nio.file.Paths.get(wh))
+    val wh = Fixture.freshDir("mvexpr", dir)
     val basePath = s"$wh/expr_base"
     val mvPath = s"$wh/expr_mv"
     MvRegistry.deregister(s, basePath) // maintenance runs unregistered
@@ -6990,9 +6805,7 @@ object SparkEntry {
       .agg(count(lit(1)).as("n"), sum(col("price")).as("sum_price"),
         min(col("price")).as("min_price"), max(col("price")).as("max_price"))
       .write.mode("overwrite").parquet(mvPath)
-    if (!s.experimental.extraOptimizations.exists(_.isInstanceOf[MvRewrite]))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ MvRewrite(s)
+    MvRewrite.install(s)
     MvRegistry.register(s, basePath, MvRegistry.MvDef(
       mvPath, Set("d"), Map("price" -> "sum_price"), "n",
       minCols = Map("price" -> "min_price"),
@@ -7056,8 +6869,7 @@ object SparkEntry {
       .withColumn("price",
         (col("price") + lit(2000).cast("decimal(18,2)")).cast("decimal(18,2)"))
     val doomed = base.filter(col("k") % 9 === 0).select("k")
-    val wh = s"$q40Scratch/vtocc_${java.lang.Integer.toHexString(dir.hashCode)}"
-    deleteTree(java.nio.file.Paths.get(wh))
+    val wh = Fixture.freshDir("vtocc", dir)
     val root = s"$wh/orders_occ"
     VersionedTable.commitMergeOptimistic(s, root, base, "k",
       writerId = "wA")                                          // v0
@@ -7108,8 +6920,10 @@ object SparkEntry {
   private def q136VtCdfStream(s: SparkSession, dir: String): DataFrame = {
     // the q131 fixture: v0 = base merge, v1 = update+insert merge,
     // v2 = delete — built once per (session, sf), shared with q131
-    q131VersionedCdf(s, dir) // ensures the cached table exists
-    val root = vtCdfCache((s, dir))
+    // q131's diff planning runs on every call: it is part of q136's
+    // recorded job/FS-op profile
+    q131VersionedCdf(s, dir)
+    val root = vtCdfRoot(s, dir)
     val stream = s.readStream
       .format(graft.streaming.VtCdfStream.format)
       .option("root", root).option("key", "k").load()
@@ -7153,20 +6967,22 @@ object SparkEntry {
     * oracle verbatim, the third consumer of that contract after q109
     * and q133).
     */
-  private val vtStreamIdxCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.sources.TableWriter]
+  private val vtStreamIdxCache =
+    new Fixture[graft.sources.TableWriter]("vtstreamidx")
 
   private def q137VtStreamIndexSync(s: SparkSession, dir: String): DataFrame = {
     import graft.sources.VersionedTable
-    q133VtIndexSync(s, dir).count() // ensures the versioned table exists
-    val writer = vtStreamIdxCache.getOrElseUpdate((s, dir), {
-      val wh = s"$q40Scratch/vtidx_${java.lang.Integer.toHexString(dir.hashCode)}"
-      val w = new graft.sources.TableWriter(wh)
-      val ck = s"$wh/vtsdocs_ck"
-      Retrieval.syncBm25IndexFromVtStream(s, s"$wh/docs_vt", w, "vtsdocs", ck)
-      Retrieval.syncBm25IndexFromVtStream(s, s"$wh/docs_vt", w, "vtsdocs", ck)
+    // q133's serve runs on every call: it is part of q137's recorded
+    // job/FS-op profile
+    q133VtIndexSync(s, dir).count()
+    // the streamed index lives next to q133's, in q133's warehouse
+    val writer = vtStreamIdxCache(s, dir) { _ =>
+      val w = vtIdxWriter(s, dir)
+      val ck = w.path("vtsdocs_ck")
+      Retrieval.syncBm25IndexFromVtStream(s, w.path("docs_vt"), w, "vtsdocs", ck)
+      Retrieval.syncBm25IndexFromVtStream(s, w.path("docs_vt"), w, "vtsdocs", ck)
       w
-    })
+    }
     val fin = VersionedTable.read(s, writer.path("docs_vt"))
       .select(col("doc_id"), col("text"))
     val qs = Retrieval.queryTerms(fin, col("doc_id") % 97 === 0, bm25QTerms)
@@ -7198,8 +7014,7 @@ object SparkEntry {
       .select(col("o_orderkey").as("k"),
         (col("o_custkey") % 50).as("cust"),
         col("o_totalprice").cast("decimal(18,2)").as("price"))
-    val wh = s"$q40Scratch/vtmv_${java.lang.Integer.toHexString(dir.hashCode)}"
-    deleteTree(java.nio.file.Paths.get(wh))
+    val wh = Fixture.freshDir("vtmv", dir)
     val root = s"$wh/orders_vt"
     val mvPath = s"$wh/orders_vtmv"
     MvRegistry.deregister(s, root) // maintenance runs unregistered
@@ -7216,9 +7031,7 @@ object SparkEntry {
       "k")                                                       // v1
     VersionedTable.commitDelete(s, root,
       base.filter(col("k") % 9 === 0).select("k"), "k")          // v2
-    if (!s.experimental.extraOptimizations.exists(_.isInstanceOf[MvRewrite]))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ MvRewrite(s)
+    MvRewrite.install(s)
     MvRegistry.register(s, root, MvRegistry.MvDef(
       mvPath, Set("cust"), Map("price" -> "sum_price"), "n",
       comp = Some(MvRegistry.CompDef.versioned(root, "k", 0L))))
@@ -7273,8 +7086,7 @@ object SparkEntry {
       .select(col("o_orderkey").as("k"),
         col("o_totalprice").cast("decimal(18,2)").as("price"))
     val base = o.filter(col("k") % 3 === 0)
-    val wh = s"$q40Scratch/vtrb_${java.lang.Integer.toHexString(dir.hashCode)}"
-    deleteTree(java.nio.file.Paths.get(wh))
+    val wh = Fixture.freshDir("vtrb", dir)
     val root = s"$wh/orders_rb"
     VersionedTable.commitMerge(s, root, base, "k", 8)            // v0 @ 8
     VersionedTable.commitMerge(s, root,
@@ -7331,8 +7143,7 @@ object SparkEntry {
         (col("o_custkey") % 30).as("grp"),
         col("o_totalprice").cast("decimal(18,2)").as("v"))
     val base = o.filter(col("k") % 3 === 0)
-    val wh = s"$q40Scratch/vtdyn_${java.lang.Integer.toHexString(dir.hashCode)}"
-    deleteTree(java.nio.file.Paths.get(wh))
+    val wh = Fixture.freshDir("vtdyn", dir)
     val root = s"$wh/vtdyn_base"
     val mvPath = s"$wh/vtdyn_mv"
     MvRegistry.deregister(s, root)
@@ -7340,9 +7151,7 @@ object SparkEntry {
     VersionedTable.commitMerge(s, root, base, "k")                // v0
     require(MvMaintain.refreshFromVersionedTable(s, root, "k", mvPath,
       vdef) == 0L, "bootstrap refresh must land at version 0")
-    if (!s.experimental.extraOptimizations.exists(_.isInstanceOf[MvRewrite]))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ MvRewrite(s)
+    MvRewrite.install(s)
     // THE one registration — never repeated below
     MvRegistry.register(s, root, MvRegistry.MvDef(
       mvPath, Set("grp"), Map("v" -> "sum_v"), "n",
@@ -7434,8 +7243,7 @@ object SparkEntry {
       .select(col("o_orderdate").as("d"),
         col("o_orderstatus").as("order_status"),
         col("o_totalprice").cast("decimal(18,2)").as("price"))
-    val wh = s"$q40Scratch/spmv_${java.lang.Integer.toHexString(dir.hashCode)}"
-    deleteTree(java.nio.file.Paths.get(wh))
+    val wh = Fixture.freshDir("spmv", dir)
     val basePath = s"$wh/sp_base"
     val mvPath = s"$wh/sp_day_mv"
     MvRegistry.deregister(s, basePath)
@@ -7443,9 +7251,7 @@ object SparkEntry {
     s.read.parquet(basePath).groupBy("d", "order_status")
       .agg(count(lit(1)).as("n"), sum(col("price")).as("sum_price"))
       .write.mode("overwrite").parquet(mvPath)
-    if (!s.experimental.extraOptimizations.exists(_.isInstanceOf[MvRewrite]))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ MvRewrite(s)
+    MvRewrite.install(s)
     MvRegistry.register(s, basePath, MvRegistry.MvDef(
       mvPath, Set("d", "order_status"), Map("price" -> "sum_price"), "n"))
     def rollup(grain: String): Seq[(String, java.sql.Date, String, Long, Double)] = {
@@ -7504,8 +7310,7 @@ object SparkEntry {
         (col("o_custkey") % 50).as("cust"),
         col("o_totalprice").cast("decimal(18,2)").as("price"))
     val base = o.filter(col("k") % 3 === 0)
-    val wh = s"$q40Scratch/vttt_${java.lang.Integer.toHexString(dir.hashCode)}"
-    deleteTree(java.nio.file.Paths.get(wh))
+    val wh = Fixture.freshDir("vttt", dir)
     val root = s"$wh/orders_tt"
     val mvPath = s"$wh/orders_ttmv"
     MvRegistry.deregister(s, root)
@@ -7521,9 +7326,7 @@ object SparkEntry {
       .write.mode("overwrite").parquet(mvPath)
     VersionedTable.commitDelete(s, root,
       base.filter(col("k") % 9 === 0).select("k"), "k")           // v2
-    if (!s.experimental.extraOptimizations.exists(_.isInstanceOf[MvRewrite]))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ MvRewrite(s)
+    MvRewrite.install(s)
     MvRegistry.register(s, root, MvRegistry.MvDef(
       mvPath, Set("cust"), Map("price" -> "sum_price"), "n",
       comp = Some(MvRegistry.CompDef.versioned(root, "k", 1L))))

@@ -19,12 +19,8 @@ object RunReferencePipeline {
     val seedsDir = args.headOption
     val asOf = LocalDate.parse(
       if (args.length > 1) args(1) else "2022-03-15")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = graft.GraftSession.builder(cpus, "graft-reference-pipeline")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._

@@ -11,20 +11,6 @@ import org.apache.spark.sql.DataFrame
   */
 object Parallelism {
 
-  /** Spread `df` out to the session's default parallelism iff its
-    * current partition count is below half of it. The redistribution runs
-    * at the RDD level on purpose: a DataFrame `repartition(n)` is an AQE
-    * exchange, and when that exchange is REUSED by several consumers
-    * AQE's size-based coalescing folded the small-but-CPU-heavy consumer
-    * stages back to one task each (observed on the classifier's three
-    * arms). The RDD boundary is invisible to AQE, and it only ever runs
-    * under the guard — tiny inputs, where the row round-trip is noise.
-    *
-    * Rows are assigned by CONTENT hash, not round-robin: round-robin
-    * depends on input iteration order, which is not retry-stable after a
-    * shuffle fetch; a content hash gives every row the same partition on
-    * any attempt, in any order.
-    */
   /** Overlap two INDEPENDENT driver-side legs of a multi-action
     * operation (guide §2.6: Spark schedules concurrent jobs happily —
     * actions are only sequential because driver code calls them
@@ -104,6 +90,20 @@ object Parallelism {
     }
   }
 
+  /** Spread `df` out to the session's default parallelism iff its
+    * current partition count is below half of it. The redistribution runs
+    * at the RDD level on purpose: a DataFrame `repartition(n)` is an AQE
+    * exchange, and when that exchange is REUSED by several consumers
+    * AQE's size-based coalescing folded the small-but-CPU-heavy consumer
+    * stages back to one task each (observed on the classifier's three
+    * arms). The RDD boundary is invisible to AQE, and it only ever runs
+    * under the guard — tiny inputs, where the row round-trip is noise.
+    *
+    * Rows are assigned by CONTENT hash, not round-robin: round-robin
+    * depends on input iteration order, which is not retry-stable after a
+    * shuffle fetch; a content hash gives every row the same partition on
+    * any attempt, in any order.
+    */
   def fanOut(df: DataFrame): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < (target + 1) / 2) {

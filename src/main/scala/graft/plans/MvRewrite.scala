@@ -230,6 +230,19 @@ object MvRegistry {
     key.map(k => regByTable.getOrElse(k, Seq.empty)).getOrElse(Seq.empty)
 }
 
+object MvRewrite {
+  /** Adds the rewrite to `spark`'s extra optimizations unless one is
+    * already there; safe to call any number of times (as
+    * [[graft.GraftSession.install]] is).
+    */
+  def install(spark: SparkSession): SparkSession = {
+    if (!spark.experimental.extraOptimizations.exists(_.isInstanceOf[MvRewrite]))
+      spark.experimental.extraOptimizations =
+        spark.experimental.extraOptimizations :+ MvRewrite(spark)
+    spark
+  }
+}
+
 case class MvRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
 
   // names the rewrite standardizes the partials frame onto (prefixed to

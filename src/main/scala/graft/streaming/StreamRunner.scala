@@ -1,7 +1,6 @@
 package graft.streaming
 
 import graft.operators.EventsOps
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Structured-Streaming CLI: streams the events table through the SAME
@@ -15,12 +14,8 @@ object StreamRunner {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val width = if (args.length > 1) args(1) else "1 hour"
     val watermark = if (args.length > 2) args(2) else "10 minutes"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = graft.GraftSession.builder(4, "graft-stream")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-path FS-op breakdown of ONE SparkEntry query: runs the entry
   * under [[graft.core.CountingLocalFileSystem]] with SPARK_GRAFT_FS_TRACE
   * set and prints the metadata-call histogram — the §1/§6 "which paths
@@ -16,20 +14,9 @@ object FsTraceEntry {
     val sfDir = args(0)
     val name = args(1)
     val runs = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.hadoop.fs.file.impl",
-        classOf[graft.core.CountingLocalFileSystem].getName)
-      .getOrCreate()
+    val spark = graft.Bench.openSession()
     spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    try spark.read.parquet(s"$sfDir/lineitem.parquet").count()
-    catch { case _: Throwable => () }
+    graft.Bench.warmUp(spark, sfDir)
     val fn = graft.SparkEntry.queries(name)
     (0 until runs).foreach { i =>
       if (i == runs - 1) graft.core.CountingLocalFileSystem.byPath.clear()

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-job timing breakdown of ONE SparkEntry query: runs the entry
   * exactly like Bench (same session settings, `.count()` action, cold +
   * steady pass) with a listener that prints every Spark job's duration,
@@ -16,14 +14,7 @@ object ProfileEntry {
     val sfDir = args(0)
     val name = args(1)
     val runs = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Bench.openSession()
     spark.sparkContext.setLogLevel("ERROR")
 
     val jobStart = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String, Int)]()
@@ -48,9 +39,7 @@ object ProfileEntry {
         }
       })
 
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    try spark.read.parquet(s"$sfDir/lineitem.parquet").count()
-    catch { case _: Throwable => () }
+    graft.Bench.warmUp(spark, sfDir)
 
     val fn = graft.SparkEntry.queries(name)
     (0 until runs).foreach { i =>

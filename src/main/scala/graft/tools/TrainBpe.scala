@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** One-shot trainer for the bundled BPE merge table
@@ -19,11 +18,7 @@ import org.apache.spark.sql.functions._
 object TrainBpe {
   def main(args: Array[String]): Unit = {
     val Array(docsPath, numMerges, outPath) = args
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder(4, "graft-train-bpe").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val wordCounts = spark.read.parquet(docsPath)
       .select(explode(split(col("text"), " ")).as("w"))

@@ -186,9 +186,7 @@ class MvMaintainSpec extends SparkSpec {
     val (w, mv, _) = mkStore()
     w.mergeByKeyCdc(spark, "t", rows(1 to 30), "k", batchId = 1L)
     MvMaintain.refresh(spark, w.path("t_changes"), mv, vdef)
-    if (!spark.experimental.extraOptimizations.exists(_.isInstanceOf[MvRewrite]))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ MvRewrite(spark)
+    MvRewrite.install(spark)
     // ONE registration with an unpinned frontier — the rewrite reads
     // the frontier from the served view directory per query
     MvRegistry.register(spark, w.path("t"), MvRegistry.MvDef(
@@ -246,9 +244,7 @@ class MvMaintainSpec extends SparkSpec {
     w.mergeByKeyCdc(spark, "t", rows(1 to 40), "k", batchId = 1L)
     w.mergeByKeyCdc(spark, "t", rows(41 to 50), "k", batchId = 2L)
     val fr = MvMaintain.refresh(spark, w.path("t_changes"), mv, vdef)
-    if (!spark.experimental.extraOptimizations.exists(_.isInstanceOf[MvRewrite]))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ MvRewrite(spark)
+    MvRewrite.install(spark)
     MvRegistry.register(spark, w.path("t"), MvRegistry.MvDef(
       mv, Set("g"), Map("price" -> "sum_price"), "n",
       comp = Some(MvRegistry.CompDef(w.path("t_changes"), frontier = fr))))

@@ -29,9 +29,7 @@ class MvRewriteSpec extends SparkSpec {
       .groupBy("cust", "region")
       .agg(count(lit(1)).as("n"), sum(col("price")).as("sum_price"))
       .write.mode("overwrite").parquet(mvPath)
-    if (!spark.experimental.extraOptimizations.exists(_.isInstanceOf[MvRewrite]))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ MvRewrite(spark)
+    MvRewrite.install(spark)
     MvRegistry.register(spark, basePath, MvRegistry.MvDef(
       mvPath, Set("cust", "region"), Map("price" -> "sum_price"), "n"))
     (basePath, mvPath)
@@ -198,9 +196,7 @@ class MvRewriteSpec extends SparkSpec {
       .toDF("batch_id", "change_op", "k", "g", "price")
       .withColumn("price", col("price").cast("decimal(18,2)"))
       .write.mode("overwrite").parquet(feedRoot + "/batch=3")
-    if (!spark.experimental.extraOptimizations.exists(_.isInstanceOf[MvRewrite]))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ MvRewrite(spark)
+    MvRewrite.install(spark)
     MvRegistry.register(spark, basePath, MvRegistry.MvDef(
       mvPath, Set("g"), Map("price" -> "sum_price"), "n",
       comp = Some(MvRegistry.CompDef(feedRoot, frontier = 2L))))
@@ -289,9 +285,7 @@ class MvRewriteSpec extends SparkSpec {
         sum(col("dprice")).as("sum_dprice"),
         min(col("price")).as("min_price"), max(col("price")).as("max_price"))
       .write.mode("overwrite").parquet(mvPath)
-    if (!spark.experimental.extraOptimizations.exists(_.isInstanceOf[MvRewrite]))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ MvRewrite(spark)
+    MvRewrite.install(spark)
     MvRegistry.register(spark, basePath, MvRegistry.MvDef(
       mvPath, Set("cust"),
       Map("price" -> "sum_price", "dprice" -> "sum_dprice"), "n",
@@ -511,9 +505,7 @@ class MvRewriteSpec extends SparkSpec {
     spark.read.parquet(basePath).groupBy("region")
       .agg(count(lit(1)).as("n"), sum(col("price")).as("sum_price"))
       .write.mode("overwrite").parquet(coarse)
-    if (!spark.experimental.extraOptimizations.exists(_.isInstanceOf[MvRewrite]))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ MvRewrite(spark)
+    MvRewrite.install(spark)
     MvRegistry.register(spark, basePath, Seq(
       MvRegistry.MvDef(fine, Set("cust", "region"),
         Map("price" -> "sum_price"), "n"),
@@ -556,9 +548,7 @@ class MvRewriteSpec extends SparkSpec {
     spark.table("mvrw_cat").groupBy("cust")
       .agg(count(lit(1)).as("n"), sum(col("price")).as("sum_price"))
       .write.mode("overwrite").parquet(mvPath)
-    if (!spark.experimental.extraOptimizations.exists(_.isInstanceOf[MvRewrite]))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ MvRewrite(spark)
+    MvRewrite.install(spark)
     MvRegistry.registerTable(spark, "mvrw_cat", MvRegistry.MvDef(
       mvPath, Set("cust"), Map("price" -> "sum_price"), "n"))
     try {
@@ -603,9 +593,7 @@ class MvRewriteSpec extends SparkSpec {
       .agg(count(lit(1)).as("n"), sum(col("price")).as("sum_price"),
         min(col("price")).as("min_price"), max(col("price")).as("max_price"))
       .write.mode("overwrite").parquet(mvPath)
-    if (!spark.experimental.extraOptimizations.exists(_.isInstanceOf[MvRewrite]))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ MvRewrite(spark)
+    MvRewrite.install(spark)
     MvRegistry.register(spark, basePath, MvRegistry.MvDef(
       mvPath, Set("g"), Map("price" -> "sum_price"), "n",
       comp = Some(MvRegistry.CompDef(w.path("t_changes"), frontier = 1L)),
@@ -678,9 +666,7 @@ class MvRewriteSpec extends SparkSpec {
       .agg(count(lit(1)).as("n"), sum(col("price")).as("sum_price"),
         min(col("price")).as("min_price"), max(col("price")).as("max_price"))
       .write.mode("overwrite").parquet(mvPath)
-    if (!spark.experimental.extraOptimizations.exists(_.isInstanceOf[MvRewrite]))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ MvRewrite(spark)
+    MvRewrite.install(spark)
     def register(): Unit = MvRegistry.register(spark, basePath, MvRegistry.MvDef(
       mvPath, Set("g"), Map("price" -> "sum_price"), "n",
       comp = Some(MvRegistry.CompDef(w.path("tn_changes"), frontier = 1L)),
@@ -735,9 +721,7 @@ class MvRewriteSpec extends SparkSpec {
       .agg(count(lit(1)).as("n"), sum(col("price")).as("sum_price"),
         min(col("price")).as("min_price"), max(col("price")).as("max_price"))
       .write.mode("overwrite").parquet(mvPath)
-    if (!spark.experimental.extraOptimizations.exists(_.isInstanceOf[MvRewrite]))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ MvRewrite(spark)
+    MvRewrite.install(spark)
     MvRegistry.register(spark, basePath, MvRegistry.MvDef(
       mvPath, Set("g"), Map("price" -> "sum_price"), "n",
       comp = Some(MvRegistry.CompDef(w.path("ts_changes"), frontier = 1L)),
@@ -786,9 +770,7 @@ class MvRewriteSpec extends SparkSpec {
       .write.mode("overwrite").parquet(mvPath)
     val s2 = spark.newSession()
     s2.conf.set("spark.sql.sources.useV1SourceList", "")
-    if (!s2.experimental.extraOptimizations.exists(_.isInstanceOf[MvRewrite]))
-      s2.experimental.extraOptimizations =
-        s2.experimental.extraOptimizations :+ MvRewrite(s2)
+    MvRewrite.install(s2)
     MvRegistry.register(s2, basePath, MvRegistry.MvDef(
       mvPath, Set("cust"), Map("price" -> "sum_price"), "n"))
     try {
@@ -843,9 +825,7 @@ class MvRewriteSpec extends SparkSpec {
       .agg(count(lit(1)).as("n"), sum(col("price")).as("sum_price"),
         max(col("price")).as("max_price"))
       .write.mode("overwrite").parquet(mvPath)
-    if (!spark.experimental.extraOptimizations.exists(_.isInstanceOf[MvRewrite]))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ MvRewrite(spark)
+    MvRewrite.install(spark)
     MvRegistry.register(spark, basePath, MvRegistry.MvDef(
       mvPath, Set("g"), Map("price" -> "sum_price"), "n",
       comp = Some(MvRegistry.CompDef(w.path("t_changes"), frontier = 1L)),
@@ -889,9 +869,7 @@ class MvRewriteSpec extends SparkSpec {
     spark.read.parquet(basePath).groupBy("cust", "region")
       .agg(count(lit(1)).as("n"), sum(col("price")).as("sum_price"))
       .write.mode("overwrite").parquet(wideSmall)
-    if (!spark.experimental.extraOptimizations.exists(_.isInstanceOf[MvRewrite]))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ MvRewrite(spark)
+    MvRewrite.install(spark)
     MvRegistry.register(spark, basePath, Seq(
       MvRegistry.MvDef(narrowBig, Set("k"),
         Map("price" -> "sum_price"), "n"),
@@ -928,9 +906,7 @@ class MvRewriteSpec extends SparkSpec {
     spark.read.parquet(basePath).groupBy("cust")
       .agg(count(lit(1)).as("n"), sum(col("price")).as("sum_price"))
       .write.mode("overwrite").parquet(mvPath)
-    if (!spark.experimental.extraOptimizations.exists(_.isInstanceOf[MvRewrite]))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ MvRewrite(spark)
+    MvRewrite.install(spark)
     MvRegistry.register(spark, basePath, MvRegistry.MvDef(
       mvPath, Set("cust"), Map("price" -> "sum_price"), "n"))
     try {
@@ -984,9 +960,7 @@ class MvRewriteSpec extends SparkSpec {
       .agg(count(lit(1)).as("n"), sum(col("amt")).as("s_amt"),
         min(col("amt")).as("mn_amt"), max(col("amt")).as("mx_amt"))
       .write.mode("overwrite").parquet(mvPath)
-    if (!spark.experimental.extraOptimizations.exists(_.isInstanceOf[MvRewrite]))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ MvRewrite(spark)
+    MvRewrite.install(spark)
     MvRegistry.register(spark, basePath, dateMvDef(mvPath))
     (basePath, mvPath)
   }
@@ -1022,9 +996,7 @@ class MvRewriteSpec extends SparkSpec {
     VersionedTable.read(spark, root, Some(0L)).groupBy("g")
       .agg(count(lit(1)).as("n"), sum(col("price")).as("sum_price"))
       .write.mode("overwrite").parquet(mvPath)
-    if (!spark.experimental.extraOptimizations.exists(_.isInstanceOf[MvRewrite]))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ MvRewrite(spark)
+    MvRewrite.install(spark)
     MvRegistry.register(spark, root, MvRegistry.MvDef(
       mvPath, Set("g"), Map("price" -> "sum_price"), "n",
       comp = Some(MvRegistry.CompDef.versioned(root, "k", 0L))))
@@ -1099,9 +1071,7 @@ class MvRewriteSpec extends SparkSpec {
       .write.mode("overwrite").parquet(mvPath)
     VersionedTable.commitDelete(spark, root,
       (1 to 240).filter(_ % 4 == 2).map(_.toLong).toDF("k"), "k", 8) // v2
-    if (!spark.experimental.extraOptimizations.exists(_.isInstanceOf[MvRewrite]))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ MvRewrite(spark)
+    MvRewrite.install(spark)
     def register(): Unit = MvRegistry.register(spark, root, MvRegistry.MvDef(
       mvPath, Set("g"), Map("price" -> "sum_price"), "n",
       comp = Some(MvRegistry.CompDef.versioned(root, "k", 1L))))
@@ -1148,9 +1118,7 @@ class MvRewriteSpec extends SparkSpec {
     assert(MvMaintain.refreshFromVersionedTable(spark, root, "k",
       mvPath, vdef) === 0L)
     assert(MvMaintain.frontier(spark, mvPath) === Some(0L))
-    if (!spark.experimental.extraOptimizations.exists(_.isInstanceOf[MvRewrite]))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ MvRewrite(spark)
+    MvRewrite.install(spark)
     // ONE registration, dynamic vt frontier
     MvRegistry.register(spark, root, MvRegistry.MvDef(
       mvPath, Set("g"), Map("price" -> "sum_price"), "n",
@@ -1260,9 +1228,7 @@ class MvRewriteSpec extends SparkSpec {
     spark.read.parquet(basePath).groupBy("d")
       .agg(count(lit(1)).as("n"), sum(col("amt")).as("s_amt"))
       .write.mode("overwrite").parquet(mvPath)
-    if (!spark.experimental.extraOptimizations.exists(_.isInstanceOf[MvRewrite]))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ MvRewrite(spark)
+    MvRewrite.install(spark)
     MvRegistry.register(spark, basePath, MvRegistry.MvDef(
       mvPath, Set("d"), Map("amt" -> "s_amt"), "n",
       comp = Some(MvRegistry.CompDef(w.path("xg_changes"), frontier = 1L))))

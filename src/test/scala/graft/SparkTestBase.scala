@@ -6,12 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local session for all suites (one JVM, one session). */
 object SparkTestBase {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
+    val s = GraftSession.builder(4, "graft-test")
       .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -51,6 +51,10 @@ class SqlSurfaceSpec extends SparkSpec {
       .count(_ == graft.plans.RewriteDotProduct) == 1)
     assert(spark.sql("SELECT graft_dot(array(1.0D), array(2.0D))")
       .head().getDouble(0) == 2.0)
+    graft.plans.MvRewrite.install(spark)
+    graft.plans.MvRewrite.install(spark)
+    assert(spark.experimental.extraOptimizations
+      .count(_.isInstanceOf[graft.plans.MvRewrite]) == 1)
   }
 
   test("GraftExtensions injects without error") {
