@@ -1632,7 +1632,8 @@ object ScaleProbe {
           s"term_bucket=$i/b9-$i.parquet")
         val o = fs.create(p, true); o.write(1); o.close(); p.toString
       }
-      val mf = new org.apache.hadoop.fs.Path(s"$whDir/docs_commits/staged_9")
+      val mf = graft.operators.IndexFamily.Bm25.commits(spark, w, "docs")
+        .staged(9)
       graft.operators.IndexProtocol.writeLinesAtomic(fs, mf, strays)
       t("redo_manifest") {
         graft.operators.IndexProtocol.redoFromManifest(fs, mf)

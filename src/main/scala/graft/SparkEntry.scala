@@ -1313,7 +1313,7 @@ object SparkEntry {
     // fanned out once for both consumers (the bigram explode here and the
     // text re-read the callers run bpeTokenCount over): per-row CPU whose
     // parallelism is inherited from a possibly-single-split scan
-    // (Parallelism.fanOut is a no-op once the scan has real splits)
+    // (Parallelism.fanOutScan is a no-op once the scan has real splits)
     val base = graft.operators.Parallelism.fanOutScan(
       d.select(col("doc_id"), col("text")), col("doc_id"))
     val flat = base.filter(size(ws) >= 2)
@@ -3051,9 +3051,10 @@ object SparkEntry {
   /** Streaming search-index maintenance (q89): "the crawl is a stream".
     * The corpus arrives as a file stream of hash-sliced chunks
     * (maxFilesPerTrigger=1 → one microbatch per chunk) and every batch
-    * is ingested into the persisted BM25 index by
-    * [[Retrieval.appendBm25Index]] — the first batch BOOTSTRAPS the
-    * index, later ones append postings / merge dfs / sum stats. All
+    * is ingested into the persisted BM25 index by the exactly-once
+    * [[Retrieval.appendBm25IndexBatch]] under the micro-batch id — the
+    * first batch BOOTSTRAPS the index, later ones append postings /
+    * merge dfs / sum stats. All
     * merge steps are integer addition over disjoint doc sets, so the
     * maintained index is batch-order-independent and BIT-equal to a
     * one-shot build over the whole corpus — which is why this streaming
@@ -4254,7 +4255,7 @@ object SparkEntry {
   /** Commit-marker compaction under redelivery (q117 — the metadata-
     * growth answer for long-lived streamed indexes): four exactly-once
     * batch appends build the index, then
-    * [[graft.operators.Retrieval.compactBm25IndexCommits]] folds the
+    * [[graft.operators.IndexFamily.compactCommits]] folds the
     * per-batch markers into the frontier file (commits dir drops to
     * O(1) names — at 10⁶ streamed batches the per-serve listStatus and
     * per-redelivery marker checks would otherwise walk 10⁶ entries),
@@ -4270,7 +4271,7 @@ object SparkEntry {
       val w = new graft.sources.TableWriter(wh)
       (0 to 3).foreach(c => Retrieval.appendBm25IndexBatch(
         d.filter(pmod(col("doc_id"), lit(4)) === c), w, "docs", c))
-      Retrieval.compactBm25IndexCommits(s, w, "docs")
+      IndexFamily.Bm25.compactCommits(s, w, "docs")
       // redeliver every folded batch: all must fast-path under the
       // frontier (CommitCompactionSpec additionally pins byte-stability)
       (0 to 3).foreach(c => Retrieval.appendBm25IndexBatch(

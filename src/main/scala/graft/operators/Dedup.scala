@@ -344,7 +344,7 @@ object Dedup {
     // fan out before the shingle+hash pass: it is pure per-row CPU whose
     // parallelism is inherited from the scan, and a small corpus is one
     // input split — one core signs everything while the rest idle
-    // (Parallelism.fanOut is a no-op once the scan has real splits)
+    // (Parallelism.fanOutScan is a no-op once the scan has real splits)
     Parallelism.fanOutScan(
         df.select(col(idCol).as("id"), col(textCol).as("__t")), col("id"))
       .select(col("id"), TextFns.shingleSet(col("__t"), n).as("sh"))

@@ -1,11 +1,88 @@
 package graft.operators
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
-/** Shared pieces of the three index families' exactly-once batch-commit
-  * protocols (BM25 [[Retrieval.appendBm25IndexBatch]], positional
-  * [[Retrieval.appendPositionalIndexBatch]], IVF
-  * [[Similarity.appendIvfIndexBatch]]):
+import graft.sources.TableWriter
+
+/** The three index families as their exactly-once protocol sees them:
+  * each index keeps its commit state in its own commits dir next to its
+  * data. Maintenance is one call for any family, e.g.
+  * `IndexFamily.Positional.compactCommits(spark, writer, "docs")`.
+  */
+sealed abstract class IndexFamily(commitsSuffix: String) {
+
+  /** The commits dir of index `name` under `writer`'s warehouse. */
+  private[graft] def commits(spark: SparkSession, writer: TableWriter,
+      name: String): IndexProtocol.Commits = {
+    val d = new Path(writer.path(name + commitsSuffix))
+    new IndexProtocol.Commits(
+      d.getFileSystem(spark.sessionState.newHadoopConf()), d)
+  }
+
+  /** The family's write-ahead flag for derived state, if it has one. */
+  private[graft] def dirtyFlag(writer: TableWriter, name: String): Option[Path] =
+    None
+
+  /** Fold a quiescent index's per-batch commit markers into the frontier
+    * files ([[IndexProtocol.compactCommitMarkers]]) — run it on the
+    * maintenance cadence alongside file compaction so the commits dir
+    * stays O(1) names instead of one marker per batch ever ingested.
+    * Serving and redelivery semantics are unchanged: `id ≤ frontier`
+    * answers exactly what the deleted markers did (monotone batch ids).
+    */
+  def compactCommits(spark: SparkSession, writer: TableWriter,
+      name: String): Unit = {
+    val c = commits(spark, writer, name)
+    IndexProtocol.compactCommitMarkers(c, dirtyFlag(writer, name))
+  }
+
+  /** Hand over the index's single-writer lease (see
+    * [[IndexProtocol.acquireLease]]): only safe once the owning stream
+    * is stopped; the next batch leg of ANY writerId may then acquire.
+    */
+  def releaseWriterLease(spark: SparkSession, writer: TableWriter,
+      name: String): Unit = {
+    val c = commits(spark, writer, name)
+    IndexProtocol.releaseLease(c.fs, c.dir)
+  }
+}
+
+object IndexFamily {
+  /** [[Retrieval.appendBm25IndexBatch]] / [[Retrieval.deleteFromBm25IndexBatch]]. */
+  case object Bm25 extends IndexFamily("_commits") {
+    /** The vocab/stats write-ahead flag of the append leg's step 3. */
+    private[graft] def vocabDirty(writer: TableWriter, name: String): Path =
+      new Path(writer.path(s"${name}_vocab_dirty"))
+    override private[graft] def dirtyFlag(writer: TableWriter,
+        name: String): Option[Path] = Some(vocabDirty(writer, name))
+  }
+  /** [[Retrieval.appendPositionalIndexBatch]] /
+    * [[Retrieval.deleteFromPositionalIndexBatch]].
+    */
+  case object Positional extends IndexFamily("_pos_commits")
+  /** [[Similarity.appendIvfIndexBatch]] / [[Similarity.deleteFromIvfIndexBatch]]. */
+  case object Ivf extends IndexFamily("_ivf_commits")
+}
+
+/** The index families' exactly-once batch-commit protocol. Every batch
+  * leg — append or delete, BM25, positional or IVF — is one call to
+  * [[runLeg]], which owns the skeleton; the family supplies only its
+  * body:
+  *
+  *   1. acquire the WRITER LEASE ([[acquireLease]]);
+  *   2. FAST PATH: the leg's marker (`batch_<id>` / `del_<id>`) exists
+  *      or the batch is folded under the frontier → sweep the leg's
+  *      litter (what a crash between marker and clears left) and return;
+  *   3. the family BODY: redo from the staged manifest, stage, move in,
+  *      derived-state write-aheads — whatever the family needs;
+  *   4. FENCE CHECK ([[assertLease]]), then the MARKER — the commit
+  *      point; every marker write goes through here;
+  *   5. sweep the litter.
+  *
+  * [[Commits]] is the only place that builds commits-dir, marker,
+  * manifest, flag and frontier names. The pieces the legs use:
   *
   *   - atomic small-file writes (stage to a dot-tmp name, rename in) for
   *     protocol state the recovery path must never observe half-written:
@@ -27,11 +104,165 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *     incarnation of the owning stream is the expected redelivery case,
   *     indistinguishable from and safe under the idempotent protocol.
   *     Decommissioning a stream hands the index over via
-  *     [[releaseLease]]. On filesystems with atomic rename-no-replace
-  *     (HDFS, local) the acquisition race between two new writers is
-  *     decided by the rename; object stores would use a conditional put.
+  *     [[IndexFamily.releaseWriterLease]]. On filesystems with atomic
+  *     rename-no-replace (HDFS, local) the acquisition race between two
+  *     new writers is decided by the rename; object stores would use a
+  *     conditional put;
+  *   - [[applyChangeBatch]] and its feed loop [[syncFromFeed]], which
+  *     feed a CDC batch through a family's two legs in order.
   */
 private[graft] object IndexProtocol {
+
+  /** A leg kind: its marker prefix and frontier file. */
+  sealed abstract class Leg(val prefix: String) {
+    def frontier: String = s"frontier_$prefix"
+  }
+  case object Append extends Leg("batch")
+  case object Delete extends Leg("del")
+
+  /** One index's commits dir: the names of every protocol file in it. */
+  final class Commits(val fs: FileSystem, val dir: Path) {
+    def marker(leg: Leg, id: Long): Path = new Path(dir, s"${leg.prefix}_$id")
+    /** Staged-file manifest of append `id` ([[moveStagedIn]]). */
+    def staged(id: Long): Path = new Path(dir, s"staged_$id")
+    /** Reader fence of a delete leg that rewrites files in place. */
+    def delFlag(id: Long): Path = new Path(dir, s"delflag_$id")
+    /** BM25 delete write-aheads: pre-delete stats, struck index rows. */
+    def delState(id: Long): Path = new Path(dir, s"delstate_$id")
+    def struck(id: Long): Path = new Path(dir, s"struck_$id")
+    /** Sentinel: a prebuilt index handed to a streamed writer. */
+    def adopted: Path = new Path(dir, "adopted")
+
+    /** Writer-side committed check: marker present, or folded under the
+      * frontier. One exists + (at most) one tiny read — called once per
+      * batch, not per row.
+      */
+    def isMarked(leg: Leg, id: Long): Boolean =
+      fs.exists(marker(leg, id)) || readFrontier(fs, dir, leg.frontier) >= id
+
+    /** Commit HISTORY (one listing): an append was ever committed —
+      * marker or frontier — or the index was adopted.
+      */
+    def everCommitted: Boolean = fs.listStatus(dir).exists { st =>
+      val n = st.getPath.getName
+      n.startsWith(s"${Append.prefix}_") || n == adopted.getName ||
+        n == Append.frontier
+    }
+
+    def state: CommitsState = commitsState(fs, dir)
+  }
+
+  /** Run one exactly-once batch leg (see the object doc): lease, fast
+    * path, `body`, fenced marker, litter sweep. `litter` lists the
+    * leg's write-ahead paths; they are deleted on the fast path and
+    * after the marker, never before it. `body` returns whether it may
+    * have left litter: a no-op body (unborn index, nothing to apply)
+    * returns false and the marker is written without the sweep.
+    */
+  def runLeg(c: Commits, leg: Leg, batchId: Long, writerId: String,
+      what: String, litter: Seq[Path])(body: => Boolean): Unit = {
+    val epoch = acquireLease(c.fs, c.dir, writerId, what)
+    if (c.isMarked(leg, batchId)) {
+      litter.foreach(c.fs.delete(_, true))
+      return
+    }
+    val wroteLitter = body
+    // fence check at the point of no return: a writer fenced (lease
+    // epoch bumped by a TTL successor) mid-protocol must NOT publish
+    assertLease(c.fs, c.dir, writerId, epoch, what)
+    c.fs.create(c.marker(leg, batchId), true).close()
+    if (wroteLitter) litter.foreach(c.fs.delete(_, true))
+  }
+
+  /** The delete leg of the families whose strike converges from any
+    * partial state by itself (positional, IVF): no derived state to
+    * write ahead, so the leg is the marker plus a write-ahead
+    * in-progress flag. The strike rewrites files in place, so snapshot
+    * readers have no pre-image to fall back to — the flag makes the
+    * window DETECTABLE and readers refuse loudly instead of serving a
+    * half-deleted index. It is cleared only after the marker, so a
+    * crash anywhere inside keeps readers fenced until the leg is
+    * redelivered. An absent `index` (unborn) commits without striking.
+    */
+  def flaggedDeleteLeg(c: Commits, batchId: Long, writerId: String,
+      what: String, index: Path)(strike: => Unit): Unit = {
+    val flag = c.delFlag(batchId)
+    runLeg(c, Delete, batchId, writerId, what, Seq(flag)) {
+      c.fs.exists(index) && {
+        c.fs.create(flag, true).close()
+        strike
+        true
+      }
+    }
+  }
+
+  /** An append leg's staging step: `rows` written partitioned by
+    * `partCol` into `stage`, then moved into `liveRoot` behind the
+    * batch's staged manifest ([[moveStagedIn]]). `alongside` runs
+    * concurrently with the write ([[Parallelism.overlap]]).
+    */
+  def stageBatch(c: Commits, batchId: Long, rows: DataFrame, partCol: String,
+      stage: Path, liveRoot: Path,
+      alongside: Option[() => Unit] = None): Seq[Path] = {
+    def write(): Unit = rows.repartition(col(partCol))
+      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+      .partitionBy(partCol).parquet(stage.toString)
+    alongside match {
+      case Some(a) => Parallelism.overlap(a())(write())
+      case None => write()
+    }
+    moveStagedIn(c.fs, stage, liveRoot, s"$partCol=", s"b$batchId-",
+      c.staged(batchId))
+  }
+
+  /** A family's two batch legs bound to one index. */
+  final case class ChangeLegs(delete: (DataFrame, Long) => Unit,
+      append: (DataFrame, Long) => Unit)
+
+  /** Apply one change batch to a family: the pre-images (`update_pre`,
+    * `delete`) go through the delete leg, THEN the post-images
+    * (`insert`, `update_post`) through the append leg, both under
+    * `batchId` and each exactly-once under its own marker — so a re-run,
+    * or a crash anywhere inside the batch, resumes and converges.
+    *
+    * The order is load-bearing: an UPDATE's pre-image must strike
+    * BEFORE its post-image appends — applied reversed, the strike
+    * removes the freshly-appended new rows and the document is lost.
+    * Batches must arrive in id order for the same reason.
+    */
+  def applyChangeBatch(legs: ChangeLegs, changes: DataFrame, batchId: Long,
+      cols: Seq[String]): Unit = {
+    val keep = cols.map(col)
+    legs.delete(changes.filter(col("change_op").isin("update_pre", "delete"))
+      .select(keep: _*), batchId)
+    legs.append(changes.filter(col("change_op").isin("insert", "update_post"))
+      .select(keep: _*), batchId)
+  }
+
+  /** Drive an index from a table's CDC change feed
+    * ([[graft.sources.TableWriter.mergeByKeyCdc]] / `deleteByKeyCdc`
+    * write it) — the DB→search-index replication pattern: every feed
+    * batch, in batch_id order, through [[applyChangeBatch]]. The feed
+    * carries pre-image payloads, so delete legs prune to the victims'
+    * true buckets without touching the table; the feed read is the
+    * batch's own directory.
+    *
+    * Why there is deliberately no readStream variant over the feed
+    * files: Spark's file stream source orders by file, not by feed
+    * batch, and a multi-file batch can split across microbatches (half
+    * a delete leg would commit its marker and skip the rest). Feed
+    * batch ids are the ordering contract; a streaming deployment gets
+    * it from an offset-ordered log (Kafka), not directory listings.
+    */
+  def syncFromFeed(spark: SparkSession, writer: TableWriter,
+      tableName: String, legs: ChangeLegs, cols: Seq[String]): Unit = {
+    // bounded collect: one id per feed batch
+    val batchIds = writer.readChangeFeed(spark, tableName)
+      .select("batch_id").distinct().collect().map(_.getLong(0)).sorted
+    for (bid <- batchIds)
+      applyChangeBatch(legs, spark.read.parquet(
+        writer.path(s"${tableName}_changes") + s"/batch=$bid"), bid, cols)
+  }
 
   /** One metadata read of a commits directory, interpreted for SNAPSHOT
     * READERS (the serving-side complement of the writer protocols):
@@ -101,27 +332,18 @@ private[graft] object IndexProtocol {
     // "del_" does not prefix-collide with "delstate_"/"delflag_": the
     // char after "del" differs, and non-numeric suffixes parse to None
     CommitsState(
-      committedAppends = ids("batch_"),
+      committedAppends = ids(s"${Append.prefix}_"),
       stagedAppends = ids("staged_"),
-      delMarkers = ids("del_"),
+      delMarkers = ids(s"${Delete.prefix}_"),
       writeAheadDeletes = ids("delstate_") ++ ids("struck_") ++ ids("delflag_"),
       frontierBatch =
-        if (names.contains("frontier_batch"))
-          readFrontier(fs, commitsDir, "frontier_batch") else Long.MinValue,
+        if (names.contains(Append.frontier))
+          readFrontier(fs, commitsDir, Append.frontier) else Long.MinValue,
       frontierDel =
-        if (names.contains("frontier_del"))
-          readFrontier(fs, commitsDir, "frontier_del") else Long.MinValue,
+        if (names.contains(Delete.frontier))
+          readFrontier(fs, commitsDir, Delete.frontier) else Long.MinValue,
       fingerprint = names)
   }
-
-  /** Writer-side committed check: marker present, or folded under the
-    * frontier. One exists + (at most) one tiny read — called once per
-    * batch, not per row.
-    */
-  def isMarked(fs: FileSystem, commitsDir: Path, markerName: String,
-      frontierName: String, id: Long): Boolean =
-    fs.exists(new Path(commitsDir, markerName)) ||
-      readFrontier(fs, commitsDir, frontierName) >= id
 
   /** Fold a QUIESCENT index's per-batch commit markers into the two
     * frontier files — the metadata-growth answer for long-lived streamed
@@ -142,9 +364,9 @@ private[graft] object IndexProtocol {
     * uncommitted id under the frontier would declare a half-applied
     * batch committed forever.
     */
-  def compactCommitMarkers(fs: FileSystem, commitsDir: Path,
-      dirtyPath: Option[Path] = None): (Long, Long) = {
-    val st = commitsState(fs, commitsDir)
+  def compactCommitMarkers(c: Commits, dirtyPath: Option[Path]): (Long, Long) = {
+    val fs = c.fs
+    val st = c.state
     require(st.uncommittedAppends.isEmpty,
       s"compactCommitMarkers: append(s) ${st.uncommittedAppends} are " +
         "staged but uncommitted — compact only a quiescent index")
@@ -157,23 +379,18 @@ private[graft] object IndexProtocol {
     val fb = (st.committedAppends + st.frontierBatch).max
     val fd = (st.delMarkers + st.frontierDel).max
     if (fb > Long.MinValue)
-      writeLinesAtomic(fs, new Path(commitsDir, "frontier_batch"),
-        Seq(fb.toString))
+      writeLinesAtomic(fs, new Path(c.dir, Append.frontier), Seq(fb.toString))
     if (fd > Long.MinValue)
-      writeLinesAtomic(fs, new Path(commitsDir, "frontier_del"),
-        Seq(fd.toString))
-    st.committedAppends.foreach(id =>
-      fs.delete(new Path(commitsDir, s"batch_$id"), false))
-    st.delMarkers.foreach(id =>
-      fs.delete(new Path(commitsDir, s"del_$id"), false))
+      writeLinesAtomic(fs, new Path(c.dir, Delete.frontier), Seq(fd.toString))
+    st.committedAppends.foreach(id => fs.delete(c.marker(Append, id), false))
+    st.delMarkers.foreach(id => fs.delete(c.marker(Delete, id), false))
     // stale write-ahead litter under the frontier (crash between a
     // marker and its clears) is swept with the markers
-    st.stagedAppends.foreach(id =>
-      fs.delete(new Path(commitsDir, s"staged_$id"), false))
+    st.stagedAppends.foreach(id => fs.delete(c.staged(id), false))
     st.writeAheadDeletes.foreach { id =>
-      fs.delete(new Path(commitsDir, s"delstate_$id"), false)
-      fs.delete(new Path(commitsDir, s"delflag_$id"), false)
-      fs.delete(new Path(commitsDir, s"struck_$id"), true)
+      fs.delete(c.delState(id), false)
+      fs.delete(c.delFlag(id), false)
+      fs.delete(c.struck(id), true)
     }
     (fb, fd)
   }

@@ -493,40 +493,57 @@ object Retrieval {
       buckets: Int = 64, vocabBuckets: Int = 16,
       idCol: String = "doc_id", textCol: String = "text",
       writerId: String = "default"): Unit = {
+    val c = IndexFamily.Bm25.commits(newDocs.sparkSession, writer, name)
+    IndexProtocol.runLeg(c, IndexProtocol.Append, batchId, writerId,
+        s"appendBm25IndexBatch($name)",
+        Seq(IndexFamily.Bm25.vocabDirty(writer, name), c.staged(batchId))) {
+      applyBm25Batch(newDocs, writer, c, name, batchId, buckets,
+        vocabBuckets, idCol, textCol)
+    }
+  }
+
+  /** The batch's postings with their term bucket: what the BM25 append
+    * leg stages.
+    */
+  private def bm25BatchPostings(newDocs: DataFrame, buckets: Int,
+      idCol: String, textCol: String): DataFrame =
+    postingsOf(newDocs, idCol, textCol)
+      .withColumn("term_bucket",
+        pmod(xxhash64(col("term")), lit(buckets.toLong)).cast("int"))
+
+  /** BM25's staging step: the batch postings moved into the postings
+    * layout behind the staged manifest.
+    */
+  private def stageBm25Batch(tfB: DataFrame,
+      writer: graft.sources.TableWriter, c: IndexProtocol.Commits,
+      name: String, batchId: Long,
+      alongside: Option[() => Unit] = None): Unit =
+    IndexProtocol.stageBatch(c, batchId, tfB, "term_bucket",
+      new org.apache.hadoop.fs.Path(writer.path(s"__stage_b${batchId}_$name")),
+      new org.apache.hadoop.fs.Path(writer.path(s"${name}_postings")),
+      alongside)
+
+  /** The body of [[appendBm25IndexBatch]] (steps 2–3); false when the
+    * batch is a no-op on an unborn index.
+    */
+  private def applyBm25Batch(newDocs: DataFrame,
+      writer: graft.sources.TableWriter, c: IndexProtocol.Commits,
+      name: String, batchId: Long, buckets: Int, vocabBuckets: Int,
+      idCol: String, textCol: String): Boolean = {
     val spark = newDocs.sparkSession
     import spark.implicits._
-    val conf = spark.sessionState.newHadoopConf()
     def path(p: String) = new org.apache.hadoop.fs.Path(writer.path(p))
-    val commitsDir = path(s"${name}_commits")
-    val fs = commitsDir.getFileSystem(conf)
-    val leaseEpoch = IndexProtocol.acquireLease(fs, commitsDir, writerId,
-      s"appendBm25IndexBatch($name)")
-    val marker = path(s"${name}_commits/batch_$batchId")
-    val stagedMf = path(s"${name}_commits/staged_$batchId")
-    val dirty = path(s"${name}_vocab_dirty")
-    if (IndexProtocol.isMarked(fs, commitsDir, s"batch_$batchId",
-        "frontier_batch", batchId)) {
-      // committed: sweep litter a crash between marker and clears left
-      fs.delete(dirty, false); fs.delete(stagedMf, false)
-      return
-    }
+    val fs = c.fs
+    val dirty = IndexFamily.Bm25.vocabDirty(writer, name)
     // an empty batch on an UNBORN index (a delete-only first feed batch
     // routed through the append leg): nothing to bootstrap from — commit
     // the marker and wait for a batch with rows. Checked only while
     // stats are absent, so the isEmpty job never runs in steady state.
-    if (!fs.exists(path(s"${name}_stats")) && newDocs.isEmpty) {
-      IndexProtocol.assertLease(fs, commitsDir, writerId, leaseEpoch,
-        s"appendBm25IndexBatch($name)")
-      fs.create(marker, true).close(); return
-    }
-    val postRoot = path(s"${name}_postings")
+    if (!fs.exists(path(s"${name}_stats")) && newDocs.isEmpty) return false
 
     // ---- step 2: postings redo (O(batch), manifest-driven) ----
-    IndexProtocol.redoFromManifest(fs, stagedMf)
-    val tfB = postingsOf(newDocs, idCol, textCol)
-      .withColumn("term_bucket",
-        pmod(xxhash64(col("term")), lit(buckets.toLong)).cast("int"))
-      .persist()
+    IndexProtocol.redoFromManifest(fs, c.staged(batchId))
+    val tfB = bm25BatchPostings(newDocs, buckets, idCol, textCol).persist()
     try {
       // batch contribution to stats AND the batch's touched vocab
       // buckets in ONE collect (two tiny tagged frames unioned — both
@@ -551,7 +568,6 @@ object Retrieval {
           .map(r => (r.getLong(1), r.getLong(2))).getOrElse((0L, 0L))
         (st, touched)
       }
-      val stage = path(s"__stage_b${batchId}_$name")
       // fused collect ∥ postings stage write (guide §2.6): both legs
       // materialize the SAME pinned batch postings (block-level cache
       // locking computes each partition once), and the collect's result
@@ -560,16 +576,8 @@ object Retrieval {
       // incremental/recovery paths that will consume it (the bootstrap
       // branch never runs the collect, keeping its job count unchanged).
       val statsExist = fs.exists(path(s"${name}_stats"))
-      graft.operators.Parallelism.overlap {
-        if (statsExist) { val _ = (bStat, touchedVb); () }
-      } {
-        tfB.repartition(col("term_bucket"))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .partitionBy("term_bucket").parquet(stage.toString)
-      }
-      IndexProtocol.moveStagedIn(fs, stage, postRoot,
-        partitionPrefix = "term_bucket=", batchPrefix = s"b$batchId-",
-        manifest = stagedMf)
+      stageBm25Batch(tfB, writer, c, name, batchId, Some(() =>
+        if (statsExist) { val _ = (bStat, touchedVb); () }))
       def writeStats(n: Long, s: Long): Unit =
         writer.materialize(s"${name}_stats",
           Seq((n, s)).toDF("n_docs", "sum_dl"))
@@ -630,8 +638,7 @@ object Retrieval {
         val ok = st.headOption.exists(_.toLong == batchId)
         if (!ok) {
           val prev = st.headOption.map(_.toLong).getOrElse(-1L)
-          require(IndexProtocol.isMarked(fs, commitsDir, s"batch_$prev",
-              "frontier_batch", prev),
+          require(c.isMarked(IndexProtocol.Append, prev),
             s"appendBm25IndexBatch($name): dirty flag names batch $prev " +
               s"with no commit marker while batch $batchId is applying — " +
               "two writers on one index?")
@@ -673,14 +680,8 @@ object Retrieval {
               touchedOpt = Some(touchedVb))
           }
       }
-      // ---- step 4: commit, then clear the flags ----
-      // fence check at the point of no return: a writer fenced (lease
-      // epoch bumped by a TTL successor) mid-protocol must NOT publish
-      IndexProtocol.assertLease(fs, commitsDir, writerId, leaseEpoch,
-        s"appendBm25IndexBatch($name)")
-      fs.create(marker, true).close()
-      fs.delete(dirty, false)
-      fs.delete(stagedMf, false)
+      // step 4 (fenced marker, then the flags clear) is runLeg's
+      true
     } finally tfB.unpersist(blocking = false)
   }
 
@@ -703,26 +704,17 @@ object Retrieval {
       idCol: String = "doc_id", textCol: String = "text"): Unit = {
     val spark = newDocs.sparkSession
     import spark.implicits._
-    val conf = spark.sessionState.newHadoopConf()
     def path(p: String) = new org.apache.hadoop.fs.Path(writer.path(p))
-    val fs = path(s"${name}_commits").getFileSystem(conf)
+    val c = IndexFamily.Bm25.commits(spark, writer, name)
+    val fs = c.fs
     val (n0, s0) = readStatsDirect(writer, name)
-    // step 2: postings staged and moved in behind the staged manifest
-    val tfB = postingsOf(newDocs, idCol, textCol)
-      .withColumn("term_bucket",
-        pmod(xxhash64(col("term")), lit(buckets.toLong)).cast("int"))
-      .persist()
+    // step 2: the leg's own staging step
+    val tfB = bm25BatchPostings(newDocs, buckets, idCol, textCol).persist()
     try {
-      val stage = path(s"__stage_b${batchId}_$name")
-      tfB.repartition(col("term_bucket"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("term_bucket").parquet(stage.toString)
-      IndexProtocol.moveStagedIn(fs, stage, path(s"${name}_postings"),
-        partitionPrefix = "term_bucket=", batchPrefix = s"b$batchId-",
-        manifest = path(s"${name}_commits/staged_$batchId"))
+      stageBm25Batch(tfB, writer, c, name, batchId)
       // step 3's write-ahead, then the merge "crashes": every vocab
       // bucket the batch touches is damaged, stats are garbage
-      IndexProtocol.writeLinesAtomic(fs, path(s"${name}_vocab_dirty"),
+      IndexProtocol.writeLinesAtomic(fs, IndexFamily.Bm25.vocabDirty(writer, name),
         Seq(batchId.toString, s"$n0\t$s0"))
       val touched = tfB
         .select(pmod(xxhash64(col("term")), lit(vocabBuckets.toLong))
@@ -737,71 +729,19 @@ object Retrieval {
     } finally tfB.unpersist(blocking = false)
   }
 
-  /** Positional twin of [[injectCrashedBm25Append]]: the batch's
-    * position postings moved in behind their staged manifest, no commit
-    * marker — the family has no derived tables, so this IS every
+  /** [[injectCrashedBm25Append]] for the positional family: the
+    * append leg's own staging step ([[stagePositionalBatch]]) and no
+    * commit marker — the family has no derived tables, so this IS every
     * pre-marker crash state with data on disk. Fixture for q113 and
     * SnapshotReadSpec; nothing in the write path calls it.
     */
   private[graft] def injectCrashedPositionalAppend(newDocs: DataFrame,
       writer: graft.sources.TableWriter, name: String, batchId: Long,
       buckets: Int = 64,
-      idCol: String = "doc_id", textCol: String = "text"): Unit = {
-    val spark = newDocs.sparkSession
-    val conf = spark.sessionState.newHadoopConf()
-    def path(p: String) = new org.apache.hadoop.fs.Path(writer.path(p))
-    val fs = path(s"${name}_pos_commits").getFileSystem(conf)
-    val stage = path(s"__stage_pb${batchId}_$name")
-    positionalPostings(newDocs, buckets, idCol, textCol)
-      .repartition(col("term_bucket"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("term_bucket").parquet(stage.toString)
-    IndexProtocol.moveStagedIn(fs, stage, path(s"${name}_positions"),
-      partitionPrefix = "term_bucket=", batchPrefix = s"b$batchId-",
-      manifest = path(s"${name}_pos_commits/staged_$batchId"))
-  }
-
-  /** Fold a quiescent BM25 index's per-batch commit markers into the
-    * frontier files ([[IndexProtocol.compactCommitMarkers]]) — run it on
-    * the maintenance cadence alongside file compaction so the commits
-    * dir stays O(1) names instead of one marker per batch ever ingested.
-    * Serving and redelivery semantics are unchanged: `id ≤ frontier`
-    * answers exactly what the deleted markers did (monotone batch ids).
-    */
-  def compactBm25IndexCommits(spark: org.apache.spark.sql.SparkSession,
-      writer: graft.sources.TableWriter, name: String): Unit = {
-    val d = new org.apache.hadoop.fs.Path(writer.path(s"${name}_commits"))
-    val fs = d.getFileSystem(spark.sessionState.newHadoopConf())
-    IndexProtocol.compactCommitMarkers(fs, d, dirtyPath = Some(
-      new org.apache.hadoop.fs.Path(writer.path(s"${name}_vocab_dirty"))))
-  }
-
-  def compactPositionalIndexCommits(spark: org.apache.spark.sql.SparkSession,
-      writer: graft.sources.TableWriter, name: String): Unit = {
-    val d = new org.apache.hadoop.fs.Path(writer.path(s"${name}_pos_commits"))
-    IndexProtocol.compactCommitMarkers(
-      d.getFileSystem(spark.sessionState.newHadoopConf()), d)
-  }
-
-  /** Hand over a BM25 index's single-writer lease (see
-    * [[IndexProtocol.acquireLease]]): only safe once the owning stream
-    * is stopped; the next [[appendBm25IndexBatch]] caller of ANY
-    * writerId may then acquire. The positional twin is
-    * [[releasePositionalWriterLease]].
-    */
-  def releaseBm25WriterLease(spark: org.apache.spark.sql.SparkSession,
-      writer: graft.sources.TableWriter, name: String): Unit = {
-    val d = new org.apache.hadoop.fs.Path(writer.path(s"${name}_commits"))
-    IndexProtocol.releaseLease(
-      d.getFileSystem(spark.sessionState.newHadoopConf()), d)
-  }
-
-  def releasePositionalWriterLease(spark: org.apache.spark.sql.SparkSession,
-      writer: graft.sources.TableWriter, name: String): Unit = {
-    val d = new org.apache.hadoop.fs.Path(writer.path(s"${name}_pos_commits"))
-    IndexProtocol.releaseLease(
-      d.getFileSystem(spark.sessionState.newHadoopConf()), d)
-  }
+      idCol: String = "doc_id", textCol: String = "text"): Unit =
+    stagePositionalBatch(newDocs, writer,
+      IndexFamily.Positional.commits(newDocs.sparkSession, writer, name),
+      name, batchId, buckets, idCol, textCol)
 
   /** Targeted delete from a persisted BM25 index — the lexical twin of
     * the ANN deletion lifecycle (v17), and the stronger form: every
@@ -951,7 +891,9 @@ object Retrieval {
     *      prunes the recompute to the ≡-mod postings buckets, else the
     *      whole vocab rebuilds), emptied buckets deleted;
     *   6. stats = snapshot − the struck set's own (n, Σdl);
-    *   7. marker, then the write-ahead files clear.
+    *   7. fence check, marker, then the write-ahead files clear
+    *      ([[IndexProtocol.runLeg]]) — on the no-op paths (empty index,
+    *      absent victims) too.
     *
     * Same single-writer lease and in-order-replay contract as the
     * append leg: a crashed delete is redelivered BEFORE any later
@@ -964,26 +906,31 @@ object Retrieval {
       buckets: Int = 64, vocabBuckets: Int = 16,
       idCol: String = "doc_id", textCol: String = "text",
       writerId: String = "default"): Unit = {
+    val c = IndexFamily.Bm25.commits(victims.sparkSession, writer, name)
+    IndexProtocol.runLeg(c, IndexProtocol.Delete, batchId, writerId,
+        s"deleteFromBm25IndexBatch($name)",
+        Seq(c.delState(batchId), c.struck(batchId))) {
+      strikeBm25Batch(victims, writer, c, name, batchId, buckets,
+        vocabBuckets, idCol, textCol)
+    }
+  }
+
+  /** The body of [[deleteFromBm25IndexBatch]] (steps 2–6); false when
+    * the index is empty and there is nothing to strike.
+    */
+  private def strikeBm25Batch(victims: DataFrame,
+      writer: graft.sources.TableWriter, c: IndexProtocol.Commits,
+      name: String, batchId: Long, buckets: Int, vocabBuckets: Int,
+      idCol: String, textCol: String): Boolean = {
     val spark = victims.sparkSession
     import spark.implicits._
-    val conf = spark.sessionState.newHadoopConf()
     def path(p: String) = new org.apache.hadoop.fs.Path(writer.path(p))
-    val commitsDir = path(s"${name}_commits")
-    val fs = commitsDir.getFileSystem(conf)
-    val leaseEpoch = IndexProtocol.acquireLease(fs, commitsDir, writerId,
-      s"deleteFromBm25IndexBatch($name)")
-    val marker = path(s"${name}_commits/del_$batchId")
-    val state = path(s"${name}_commits/delstate_$batchId")
-    val struckDir = path(s"${name}_commits/struck_$batchId")
-    def cleanup(): Unit = {
-      fs.delete(state, false); fs.delete(struckDir, true)
-    }
-    if (IndexProtocol.isMarked(fs, commitsDir, s"del_$batchId",
-        "frontier_del", batchId)) { cleanup(); return }
+    val fs = c.fs
+    val state = c.delState(batchId)
+    val struckDir = c.struck(batchId)
     val postRoot = path(s"${name}_postings")
-    if (!fs.exists(postRoot)) { // empty index: deleting nothing is done
-      fs.create(marker, true).close(); return
-    }
+    // empty index: deleting nothing is done
+    if (!fs.exists(postRoot)) return false
 
     // ---- step 2: struck-set write-ahead (pre-strike truth, once) ----
     if (!fs.exists(struckDir)) {
@@ -1009,9 +956,8 @@ object Retrieval {
           s"deleteFromBm25IndexBatch: rename $stage -> $struckDir failed")
     }
     val struck = spark.read.parquet(struckDir.toString)
-    if (struck.isEmpty) { // absent ids / re-deletes: byte-level no-op
-      fs.create(marker, true).close(); cleanup(); return
-    }
+    // absent ids / re-deletes: byte-level no-op
+    if (struck.isEmpty) return true
 
     // ---- step 3: stats snapshot write-ahead (pre-delete, once) ----
     if (!fs.exists(state)) {
@@ -1104,62 +1050,37 @@ object Retrieval {
     writer.materialize(s"${name}_stats",
       Seq((n0 - b.getAs[Long]("n"), s0 - b.getAs[Long]("s")))
         .toDF("n_docs", "sum_dl"))
-
-    // ---- step 7: commit, clear the write-ahead files ----
-    IndexProtocol.assertLease(fs, commitsDir, writerId, leaseEpoch,
-      s"deleteFromBm25IndexBatch($name)")
-    fs.create(marker, true).close()
-    cleanup()
+    // step 7 (fenced marker, then the write-aheads clear) is runLeg's
+    true
   }
 
   /** Drive a BM25 serving index from a table's CDC change feed
-    * ([[graft.sources.TableWriter.mergeByKeyCdc]] /
-    * `deleteByKeyCdc` write it) — the DB→search-index replication
-    * pattern: per feed batch, in batch_id order, the PRE-images
-    * (update_pre, delete) are struck via [[deleteFromBm25IndexBatch]]
-    * and the POST-images (insert, update_post) appended via
-    * [[appendBm25IndexBatch]], each leg exactly-once under its own
-    * marker, so a re-run (or a crash anywhere inside any batch) resumes
-    * and converges — the synced index serves bit-identically to one
-    * built from the final table state (q109's oracle; CdcIndexSyncSpec
-    * diffs against a fresh build). The feed carries pre-image TEXT, so
-    * the delete prunes to the victims' true term buckets without
-    * touching the table. Cost per batch tracks the batch (both legs are
-    * bucket-pruned); the feed read is the batch's own directory.
-    *
-    * WHY batch order is load-bearing (and why there is deliberately no
-    * readStream variant over the feed files): an UPDATE's pre-image
-    * must strike BEFORE its post-image appends — applied reversed, the
-    * strike removes the freshly-appended new rows and the document is
-    * lost. Spark's file stream source orders by file, not by feed
-    * batch, and a multi-file batch can split across microbatches (half
-    * a delete leg would commit its marker and skip the rest). Feed
-    * batch ids are the ordering contract; a streaming deployment gets
-    * it from an offset-ordered log (Kafka), not directory listings.
+    * ([[IndexProtocol.syncFromFeed]]): per feed batch, in batch_id
+    * order, the pre-images are struck via [[deleteFromBm25IndexBatch]]
+    * and the post-images appended via [[appendBm25IndexBatch]] — the
+    * synced index serves bit-identically to one built from the final
+    * table state (q109's oracle; CdcIndexSyncSpec diffs against a fresh
+    * build). Both legs are bucket-pruned, so cost per batch tracks the
+    * batch.
     */
   def syncBm25IndexFromFeed(spark: org.apache.spark.sql.SparkSession,
       writer: graft.sources.TableWriter, tableName: String,
       indexName: String, buckets: Int = 64, vocabBuckets: Int = 16,
       keyCol: String = "doc_id", textCol: String = "text",
-      writerId: String = "default"): Unit = {
-    // bounded collect: one id per feed batch
-    val batchIds = writer.readChangeFeed(spark, tableName)
-      .select("batch_id").distinct().collect().map(_.getLong(0)).sorted
-    for (bid <- batchIds) {
-      val batch = spark.read.parquet(
-        writer.path(s"${tableName}_changes") + s"/batch=$bid")
-      deleteFromBm25IndexBatch(
-        batch.filter(col("change_op").isin("update_pre", "delete"))
-          .select(col(keyCol), col(textCol)),
-        writer, indexName, bid, buckets, vocabBuckets, keyCol, textCol,
-        writerId)
-      appendBm25IndexBatch(
-        batch.filter(col("change_op").isin("insert", "update_post"))
-          .select(col(keyCol), col(textCol)),
-        writer, indexName, bid, buckets, vocabBuckets, keyCol, textCol,
-        writerId)
-    }
-  }
+      writerId: String = "default"): Unit =
+    IndexProtocol.syncFromFeed(spark, writer, tableName,
+      bm25Legs(writer, indexName, buckets, vocabBuckets, keyCol, textCol,
+        writerId), Seq(keyCol, textCol))
+
+  /** BM25's two batch legs bound to one index. */
+  private def bm25Legs(writer: graft.sources.TableWriter, name: String,
+      buckets: Int, vocabBuckets: Int, keyCol: String, textCol: String,
+      writerId: String): IndexProtocol.ChangeLegs =
+    IndexProtocol.ChangeLegs(
+      deleteFromBm25IndexBatch(_, writer, name, _, buckets, vocabBuckets,
+        keyCol, textCol, writerId),
+      appendBm25IndexBatch(_, writer, name, _, buckets, vocabBuckets,
+        keyCol, textCol, writerId))
 
   /** Targeted delete from a positional index — the third and SIMPLEST
     * of the index deletions (v17 ANN, v18 BM25, this): positional
@@ -1277,15 +1198,12 @@ object Retrieval {
       buckets: Int, vocabBuckets: Int):
       Option[(Seq[String] => DataFrame, Long, Double, Map[String, Long])] = {
     import spark.implicits._
-    val conf = spark.sessionState.newHadoopConf()
-    def path(p: String) = new org.apache.hadoop.fs.Path(writer.path(p))
-    val commitsDir = path(s"${name}_commits")
-    val fs = commitsDir.getFileSystem(conf)
-    val dirtyP = path(s"${name}_vocab_dirty")
+    val c = IndexFamily.Bm25.commits(spark, writer, name)
+    val dirtyP = IndexFamily.Bm25.vocabDirty(writer, name)
     def dirtyLines(): Seq[String] =
-      IndexProtocol.readLinesIfExists(fs, dirtyP).getOrElse(Nil)
+      IndexProtocol.readLinesIfExists(c.fs, dirtyP).getOrElse(Nil)
 
-    val (base, state, dirty) = IndexProtocol.pinnedSnapshot(fs, commitsDir,
+    val (base, state, dirty) = IndexProtocol.pinnedSnapshot(c.fs, c.dir,
       () => dirtyLines(),
       () => writer.read(spark, s"${name}_postings"),
       s"queryBm25Index($name)")
@@ -1338,7 +1256,7 @@ object Retrieval {
         if (n0 <= 0L) return None
         (n0, s0.toDouble / n0.toDouble,
           dirtyDfs(spark, writer, name, qTerms, buckets, vocabBuckets,
-            fs, dirty, posts))
+            c, dirty, posts))
       }
     Some((posts, nDocs, avgdl, dfs))
   }
@@ -1352,18 +1270,16 @@ object Retrieval {
   private def dirtyDfs(spark: org.apache.spark.sql.SparkSession,
       writer: graft.sources.TableWriter, name: String, qTerms: Seq[String],
       buckets: Int, vocabBuckets: Int,
-      fs: org.apache.hadoop.fs.FileSystem, dirty: Seq[String],
+      c: IndexProtocol.Commits, dirty: Seq[String],
       posts: Seq[String] => DataFrame): Map[String, Long] = {
-    def path(p: String): org.apache.hadoop.fs.Path =
-      new org.apache.hadoop.fs.Path(writer.path(p))
         // the crashed merge can only have touched the batch's own vocab
         // buckets — derivable from its staged manifest (postings bucket b
         // holds terms of vocab bucket b % vocabBuckets when the layouts
         // divide); conservative all-buckets fallback otherwise
         val touchedVb: Set[Int] = {
-          val mf = path(s"${name}_commits/staged_${dirty.head}")
-          if (buckets % vocabBuckets == 0 && fs.exists(mf)) {
-            IndexProtocol.readLines(fs, mf).filter(_.nonEmpty).flatMap { p =>
+          val mf = c.staged(dirty.head.toLong)
+          if (buckets % vocabBuckets == 0 && c.fs.exists(mf)) {
+            IndexProtocol.readLines(c.fs, mf).filter(_.nonEmpty).flatMap { p =>
               StagedTermBucketRe.findFirstMatchIn(p)
                 .map(_.group(1).toInt % vocabBuckets)
             }.toSet
@@ -1712,9 +1628,10 @@ object Retrieval {
     * form of [[appendPositionalIndex]] (q107), and the SIMPLEST of the
     * three batch-commit protocols: positional postings are pure
     * per-(term, doc) state with nothing derived (no vocab, no stats),
-    * so the whole protocol is the writer fence, the commit marker, and
-    * the manifest-driven `b<id>-…` postings redo — any crash point
-    * replays to identical bytes, a redelivered batch is a marker check.
+    * so the leg's body ([[IndexProtocol.runLeg]] supplies the writer
+    * fence and the commit marker) is the manifest-driven `b<id>-…`
+    * postings redo and the staging step — any crash point replays to
+    * identical bytes, a redelivered batch is a marker check.
     * Redo is O(batch): the staged-file manifest (written before any
     * rename) lists exactly the files a crashed attempt can have moved
     * in, so no bucket directory is ever listed.
@@ -1724,34 +1641,27 @@ object Retrieval {
       buckets: Int = 64,
       idCol: String = "doc_id", textCol: String = "text",
       writerId: String = "default"): Unit = {
-    val spark = newDocs.sparkSession
-    val conf = spark.sessionState.newHadoopConf()
-    def path(p: String) = new org.apache.hadoop.fs.Path(writer.path(p))
-    val commitsDir = path(s"${name}_pos_commits")
-    val fs = commitsDir.getFileSystem(conf)
-    val leaseEpoch = IndexProtocol.acquireLease(fs, commitsDir, writerId,
-      s"appendPositionalIndexBatch($name)")
-    val marker = path(s"${name}_pos_commits/batch_$batchId")
-    val stagedMf = path(s"${name}_pos_commits/staged_$batchId")
-    if (IndexProtocol.isMarked(fs, commitsDir, s"batch_$batchId",
-        "frontier_batch", batchId)) {
-      fs.delete(stagedMf, false); return
+    val c = IndexFamily.Positional.commits(newDocs.sparkSession, writer, name)
+    IndexProtocol.runLeg(c, IndexProtocol.Append, batchId, writerId,
+        s"appendPositionalIndexBatch($name)", Seq(c.staged(batchId))) {
+      IndexProtocol.redoFromManifest(c.fs, c.staged(batchId))
+      stagePositionalBatch(newDocs, writer, c, name, batchId, buckets,
+        idCol, textCol)
+      true
     }
-    val posRoot = path(s"${name}_positions")
-    IndexProtocol.redoFromManifest(fs, stagedMf)
-    val stage = path(s"__stage_pb${batchId}_$name")
-    positionalPostings(newDocs, buckets, idCol, textCol)
-      .repartition(col("term_bucket"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("term_bucket").parquet(stage.toString)
-    IndexProtocol.moveStagedIn(fs, stage, posRoot,
-      partitionPrefix = "term_bucket=", batchPrefix = s"b$batchId-",
-      manifest = stagedMf)
-    IndexProtocol.assertLease(fs, commitsDir, writerId, leaseEpoch,
-      s"appendPositionalIndexBatch($name)")
-    fs.create(marker, true).close()
-    fs.delete(stagedMf, false)
   }
+
+  /** The positional staging step: the batch's position postings moved
+    * into the positions layout behind the staged manifest.
+    */
+  private def stagePositionalBatch(newDocs: DataFrame,
+      writer: graft.sources.TableWriter, c: IndexProtocol.Commits,
+      name: String, batchId: Long, buckets: Int,
+      idCol: String, textCol: String): Unit =
+    IndexProtocol.stageBatch(c, batchId,
+      positionalPostings(newDocs, buckets, idCol, textCol), "term_bucket",
+      new org.apache.hadoop.fs.Path(writer.path(s"__stage_pb${batchId}_$name")),
+      new org.apache.hadoop.fs.Path(writer.path(s"${name}_positions")))
 
   /** EXACTLY-ONCE batch delete from a positional index — the delete leg
     * of the streamed phrase-index maintenance ([[appendPositionalIndexBatch]]
@@ -1759,79 +1669,41 @@ object Retrieval {
     * a CDC feed). Positional postings are pure per-(term, doc) state, so
     * unlike the BM25 leg there is NOTHING derived to write-ahead: the
     * underlying [[deleteFromPositionalIndex]] converges from any partial
-    * state (each run strikes whatever victim rows remain), and the
-    * protocol is just the writer fence and the commit marker that makes
-    * a redelivered batch a no-op.
+    * state (each run strikes whatever victim rows remain), and the leg
+    * is [[IndexProtocol.flaggedDeleteLeg]] — the marker that makes a
+    * redelivered batch a no-op plus the reader fence.
     */
   def deleteFromPositionalIndexBatch(victims: DataFrame,
       writer: graft.sources.TableWriter, name: String, batchId: Long,
       buckets: Int = 64,
       idCol: String = "doc_id", textCol: String = "text",
-      writerId: String = "default"): Unit = {
-    val spark = victims.sparkSession
-    val conf = spark.sessionState.newHadoopConf()
-    def path(p: String) = new org.apache.hadoop.fs.Path(writer.path(p))
-    val commitsDir = path(s"${name}_pos_commits")
-    val fs = commitsDir.getFileSystem(conf)
-    val leaseEpoch = IndexProtocol.acquireLease(fs, commitsDir, writerId,
-      s"deleteFromPositionalIndexBatch($name)")
-    val marker = path(s"${name}_pos_commits/del_$batchId")
-    if (IndexProtocol.isMarked(fs, commitsDir, s"del_$batchId",
-        "frontier_del", batchId)) {
-      // sweep a crash-between-marker-and-clear's stale reader fence
-      fs.delete(path(s"${name}_pos_commits/delflag_$batchId"), false)
-      return
+      writerId: String = "default"): Unit =
+    IndexProtocol.flaggedDeleteLeg(
+      IndexFamily.Positional.commits(victims.sparkSession, writer, name),
+      batchId, writerId, s"deleteFromPositionalIndexBatch($name)",
+      new org.apache.hadoop.fs.Path(writer.path(s"${name}_positions"))) {
+      deleteFromPositionalIndex(victims, writer, name, buckets, idCol, textCol)
     }
-    if (fs.exists(path(s"${name}_positions"))) {
-      // write-ahead in-progress flag: the strike rewrites bucket files in
-      // place, so snapshot readers have no pre-image to fall back to —
-      // the flag makes the window DETECTABLE and readers refuse loudly
-      // instead of serving a half-deleted index. Cleared only after the
-      // marker, so a crash anywhere inside keeps readers fenced until
-      // the leg is redelivered.
-      val flag = path(s"${name}_pos_commits/delflag_$batchId")
-      fs.create(flag, true).close()
-      deleteFromPositionalIndex(victims, writer, name, buckets,
-        idCol, textCol)
-      IndexProtocol.assertLease(fs, commitsDir, writerId, leaseEpoch,
-        s"deleteFromPositionalIndexBatch($name)")
-      fs.create(marker, true).close()
-      fs.delete(flag, false)
-    } else {
-      IndexProtocol.assertLease(fs, commitsDir, writerId, leaseEpoch,
-        s"deleteFromPositionalIndexBatch($name)")
-      fs.create(marker, true).close()
-    }
-  }
 
   /** Drive a positional (phrase-search) index from a table's CDC change
-    * feed — the phrase twin of [[syncBm25IndexFromFeed]]: per feed
-    * batch in batch_id order, pre-images struck, post-images appended,
-    * each leg exactly-once under its marker; re-runs fast-path and the
-    * synced index matches a fresh build over the final table state
-    * (q110's oracle).
+    * feed ([[IndexProtocol.syncFromFeed]]): per feed batch in batch_id
+    * order, pre-images struck, post-images appended, each leg
+    * exactly-once under its marker; re-runs fast-path and the synced
+    * index matches a fresh build over the final table state (q110's
+    * oracle).
     */
   def syncPositionalIndexFromFeed(spark: org.apache.spark.sql.SparkSession,
       writer: graft.sources.TableWriter, tableName: String,
       indexName: String, buckets: Int = 64,
       keyCol: String = "doc_id", textCol: String = "text",
-      writerId: String = "default"): Unit = {
-    // bounded collect: one id per feed batch
-    val batchIds = writer.readChangeFeed(spark, tableName)
-      .select("batch_id").distinct().collect().map(_.getLong(0)).sorted
-    for (bid <- batchIds) {
-      val batch = spark.read.parquet(
-        writer.path(s"${tableName}_changes") + s"/batch=$bid")
-      deleteFromPositionalIndexBatch(
-        batch.filter(col("change_op").isin("update_pre", "delete"))
-          .select(col(keyCol), col(textCol)),
-        writer, indexName, bid, buckets, keyCol, textCol, writerId)
-      appendPositionalIndexBatch(
-        batch.filter(col("change_op").isin("insert", "update_post"))
-          .select(col(keyCol), col(textCol)),
-        writer, indexName, bid, buckets, keyCol, textCol, writerId)
-    }
-  }
+      writerId: String = "default"): Unit =
+    IndexProtocol.syncFromFeed(spark, writer, tableName,
+      IndexProtocol.ChangeLegs(
+        deleteFromPositionalIndexBatch(_, writer, indexName, _, buckets,
+          keyCol, textCol, writerId),
+        appendPositionalIndexBatch(_, writer, indexName, _, buckets,
+          keyCol, textCol, writerId)),
+      Seq(keyCol, textCol))
 
   /** Exact phrase query against a [[buildPositionalIndex]] layout.
     * `phrases`: (query_id LONG, terms ARRAY<STRING>) — a bounded
@@ -1885,11 +1757,9 @@ object Retrieval {
     // uncommitted-batch file exclusion + delete-leg refusal (see
     // [[bm25ServingView]] for the full rules on the BM25 family); the
     // per-term dfs below derive from this same committed view
-    val posCommits = new org.apache.hadoop.fs.Path(
-      writer.path(s"${name}_pos_commits"))
-    val posFs = posCommits.getFileSystem(spark.sessionState.newHadoopConf())
-    val (posBase, posState, _) = IndexProtocol.pinnedSnapshot(posFs,
-      posCommits, () => Nil,
+    val posCommits = IndexFamily.Positional.commits(spark, writer, name)
+    val (posBase, posState, _) = IndexProtocol.pinnedSnapshot(posCommits.fs,
+      posCommits.dir, () => Nil,
       () => writer.read(spark, s"${name}_positions"),
       s"phraseQuery($name)")
     val posts = IndexProtocol.excludeUncommitted(
@@ -1965,19 +1835,15 @@ object Retrieval {
       keyCol: String = "doc_id", textCol: String = "text",
       writerId: String = "default"): Unit = {
     import graft.sources.VersionedTable
-    val conf = spark.sessionState.newHadoopConf()
-    val commitsDir = new org.apache.hadoop.fs.Path(
-      writer.path(s"${name}_commits"))
-    val fs = commitsDir.getFileSystem(conf)
+    val c = IndexFamily.Bm25.commits(spark, writer, name)
+    val legs = bm25Legs(writer, name, buckets, vocabBuckets, keyCol,
+      textCol, writerId)
     val vs = VersionedTable.versions(spark, tableRoot)
     for (v <- vs) {
-      val applied =
-        IndexProtocol.isMarked(fs, commitsDir, s"batch_$v",
-          "frontier_batch", v) &&
-        IndexProtocol.isMarked(fs, commitsDir, s"del_$v",
-          "frontier_del", v)
+      val applied = c.isMarked(IndexProtocol.Append, v) &&
+        c.isMarked(IndexProtocol.Delete, v)
       if (!applied) {
-        val (pre, post) =
+        val changes =
           if (v == vs.head) {
             // full-state replay is only legal onto a virgin index: sync
             // state from any OTHER version id means vacuum dropped
@@ -1988,7 +1854,7 @@ object Retrieval {
             // the stats file while v's legs are in flight) is legitimate
             // crash-redelivery of this very replay and must NOT refuse —
             // the exactly-once legs converge it.
-            val st = IndexProtocol.commitsState(fs, commitsDir)
+            val st = c.state
             val inflightForV = st.stagedAppends.contains(v) ||
               st.writeAheadDeletes.contains(v) || st.delMarkers.contains(v)
             val priorSync =
@@ -1996,7 +1862,7 @@ object Retrieval {
                 st.writeAheadDeletes).exists(_ != v) ||
               st.frontierBatch > Long.MinValue ||
               st.frontierDel > Long.MinValue ||
-              (!inflightForV && fs.exists(new org.apache.hadoop.fs.Path(
+              (!inflightForV && c.fs.exists(new org.apache.hadoop.fs.Path(
                 writer.path(s"${name}_stats"))))
             require(!priorSync,
               s"syncBm25IndexFromVersionedTable: oldest retained version " +
@@ -2004,23 +1870,12 @@ object Retrieval {
                 "carries sync state — vacuum dropped manifests past synced " +
                 "history; full replay would duplicate postings. Rebuild " +
                 "the index or restore retention before syncing.")
-            val full = VersionedTable.read(spark, tableRoot, Some(v))
-              .select(col(keyCol), col(textCol))
-            (full.limit(0), full)
-          } else {
-            val d = VersionedTable.changesBetween(spark, tableRoot,
-              keyCol, v - 1, v)
-            (d.filter(col("change_op").isin("delete", "update_pre"))
-              .select(col(keyCol), col(textCol)),
-              d.filter(col("change_op").isin("insert", "update_post"))
-                .select(col(keyCol), col(textCol)))
-          }
-        deleteFromBm25IndexBatch(pre, writer, name, batchId = v,
-          buckets = buckets, vocabBuckets = vocabBuckets,
-          idCol = keyCol, textCol = textCol, writerId = writerId)
-        appendBm25IndexBatch(post, writer, name, batchId = v,
-          buckets = buckets, vocabBuckets = vocabBuckets,
-          idCol = keyCol, textCol = textCol, writerId = writerId)
+            // the head's full state, as pure inserts
+            VersionedTable.read(spark, tableRoot, Some(v))
+              .withColumn("change_op", lit("insert"))
+          } else VersionedTable.changesBetween(spark, tableRoot, keyCol,
+            v - 1, v)
+        IndexProtocol.applyChangeBatch(legs, changes, v, Seq(keyCol, textCol))
       }
     }
   }
@@ -2053,6 +1908,8 @@ object Retrieval {
     val stream = spark.readStream
       .format(graft.streaming.VtCdfStream.format)
       .option("root", tableRoot).option("key", keyCol).load()
+    val legs = bm25Legs(writer, name, buckets, vocabBuckets, keyCol,
+      textCol, writerId)
     val q = stream.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (df: DataFrame, _: Long) =>
@@ -2061,21 +1918,10 @@ object Retrieval {
           // bounded collect: one id per version in the micro-batch
           val versions = batch.select("_commit_version").distinct()
             .collect().map(_.getLong(0)).sorted
-          for (v <- versions) {
-            val b = batch.filter(col("_commit_version") === v)
-            deleteFromBm25IndexBatch(
-              b.filter(col("change_op").isin("delete", "update_pre"))
-                .select(col(keyCol), col(textCol)),
-              writer, name, batchId = v, buckets = buckets,
-              vocabBuckets = vocabBuckets, idCol = keyCol,
-              textCol = textCol, writerId = writerId)
-            appendBm25IndexBatch(
-              b.filter(col("change_op").isin("insert", "update_post"))
-                .select(col(keyCol), col(textCol)),
-              writer, name, batchId = v, buckets = buckets,
-              vocabBuckets = vocabBuckets, idCol = keyCol,
-              textCol = textCol, writerId = writerId)
-          }
+          for (v <- versions)
+            IndexProtocol.applyChangeBatch(legs,
+              batch.filter(col("_commit_version") === v), v,
+              Seq(keyCol, textCol))
         } finally batch.unpersist()
         ()
       }.start()

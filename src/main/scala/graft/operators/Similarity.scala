@@ -314,7 +314,7 @@ object Similarity {
     // fan out before the per-row plane projections + norms: a small
     // embedding corpus is one scan split, so the vector arithmetic (and
     // the bucket join fed by it) otherwise runs on one core
-    // (Parallelism.fanOut is a no-op once the scan has real splits)
+    // (Parallelism.fanOutScan is a no-op once the scan has real splits)
     val base = Parallelism.fanOutScan(candidates.select(
         col(idCol).as("id"), VectorFns.toDouble(col(vecCol)).as("v")), col("id"))
       .withColumn("bucket", VectorFns.lshBucket(col("v"), planes))
@@ -706,33 +706,27 @@ object Similarity {
       trainIters: Int = 3, initStride: Long = 97L,
       idCol: String = "vec_id", vecCol: String = "embedding",
       writerId: String = "default"): Unit = {
+    val c = IndexFamily.Ivf.commits(batch.sparkSession, writer, name)
+    IndexProtocol.runLeg(c, IndexProtocol.Append, batchId, writerId,
+        s"appendIvfIndexBatch($name)", Seq(c.staged(batchId))) {
+      applyIvfBatch(batch, writer, c, name, batchId, trainIters, initStride,
+        idCol, vecCol)
+    }
+  }
+
+  /** The body of [[appendIvfIndexBatch]]: bootstrap or frozen-quantizer
+    * append; false when the batch is a no-op on an unborn index.
+    */
+  private def applyIvfBatch(batch: DataFrame,
+      writer: graft.sources.TableWriter, c: IndexProtocol.Commits,
+      name: String, batchId: Long, trainIters: Int, initStride: Long,
+      idCol: String, vecCol: String): Boolean = {
     val spark = batch.sparkSession
-    import spark.implicits._
-    val conf = spark.sessionState.newHadoopConf()
-    def path(p: String) = new org.apache.hadoop.fs.Path(writer.path(p))
-    val commitsDir = path(s"${name}_ivf_commits")
-    val fs = commitsDir.getFileSystem(conf)
-    val leaseEpoch = IndexProtocol.acquireLease(fs, commitsDir, writerId,
-      s"appendIvfIndexBatch($name)")
-    val marker = path(s"${name}_ivf_commits/batch_$batchId")
-    val stagedMf = path(s"${name}_ivf_commits/staged_$batchId")
-    if (IndexProtocol.isMarked(fs, commitsDir, s"batch_$batchId",
-        "frontier_batch", batchId)) {
-      fs.delete(stagedMf, false); return
-    }
-    val everCommitted = fs.listStatus(commitsDir).exists { st =>
-      val n = st.getPath.getName
-      n.startsWith("batch_") || n == "adopted" || n == "frontier_batch"
-    }
-    if (!everCommitted && batch.isEmpty) {
-      // an empty batch on an unborn index (a delete-only first feed
-      // batch routed through the append leg): nothing to train on —
-      // commit the marker and wait for a batch with vectors
-      IndexProtocol.assertLease(fs, commitsDir, writerId, leaseEpoch,
-        s"appendIvfIndexBatch($name)")
-      fs.create(marker, true).close()
-      return
-    }
+    val everCommitted = c.everCommitted
+    // an empty batch on an unborn index (a delete-only first feed
+    // batch routed through the append leg): nothing to train on —
+    // commit the marker and wait for a batch with vectors
+    if (!everCommitted && batch.isEmpty) return false
     if (!everCommitted) {
       val cents = trainIvfCentroids(batch, initStride, trainIters,
         idCol, vecCol)
@@ -740,8 +734,9 @@ object Similarity {
     } else {
       // same re-add guard as appendIvfIndex: a still-tombstoned id must
       // be vacuumed before it may re-enter (two-generations hazard)
-      val tombPath = path(s"${name}_tombstones")
-      if (fs.exists(tombPath)) {
+      val tombPath = new org.apache.hadoop.fs.Path(
+        writer.path(s"${name}_tombstones"))
+      if (c.fs.exists(tombPath)) {
         val clash = writer.read(spark, s"${name}_tombstones")
           .join(batch.select(col(idCol).as("nbr_id")).distinct(),
             Seq("nbr_id"), "left_semi")
@@ -750,54 +745,43 @@ object Similarity {
           s"appendIvfIndexBatch: batch re-adds tombstoned id ${clash.headOption
             .map(_.get(0)).getOrElse("")} — run vacuumIvfIndex first")
       }
-      val listsRoot = path(s"${name}_lists")
       // redo a crashed attempt's moves from its own staged-file manifest
       // (O(batch): no list directory is listed)
-      IndexProtocol.redoFromManifest(fs, stagedMf)
-      val centroids = writer.read(spark, s"${name}_centroids")
-        .as[(Long, Seq[Double])].collect().sortBy(_._1).toSeq
-      val stage = path(s"__stage_ib${batchId}_$name")
-      assignToCentroids(batch, centroids, idCol, vecCol)
-        .repartition(col("cent_id"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("cent_id").parquet(stage.toString)
-      IndexProtocol.moveStagedIn(fs, stage, listsRoot,
-        partitionPrefix = "cent_id=", batchPrefix = s"b$batchId-",
-        manifest = stagedMf)
+      IndexProtocol.redoFromManifest(c.fs, c.staged(batchId))
+      stageIvfBatch(batch, writer, c, name, batchId, idCol, vecCol)
     }
-    // fence check at the point of no return (see appendBm25IndexBatch)
-    IndexProtocol.assertLease(fs, commitsDir, writerId, leaseEpoch,
-      s"appendIvfIndexBatch($name)")
-    fs.create(marker, true).close()
-    fs.delete(stagedMf, false)
+    true
   }
 
-  /** IVF twin of [[Retrieval.injectCrashedBm25Append]]: the batch's
-    * assigned vectors moved into the lists behind their staged manifest,
-    * no commit marker — on this family (frozen quantizer, no derived
-    * tables past bootstrap) that IS every pre-marker crash state of a
-    * non-bootstrap append. Fixture for q114 and SnapshotReadSpec;
-    * nothing in the write path calls it.
+  /** The IVF staging step: the batch assigned against the frozen
+    * quantizer and moved into the lists behind the staged manifest.
+    */
+  private def stageIvfBatch(batch: DataFrame,
+      writer: graft.sources.TableWriter, c: IndexProtocol.Commits,
+      name: String, batchId: Long, idCol: String, vecCol: String): Unit = {
+    val spark = batch.sparkSession
+    import spark.implicits._
+    val centroids = writer.read(spark, s"${name}_centroids")
+      .as[(Long, Seq[Double])].collect().sortBy(_._1).toSeq
+    IndexProtocol.stageBatch(c, batchId,
+      assignToCentroids(batch, centroids, idCol, vecCol), "cent_id",
+      new org.apache.hadoop.fs.Path(writer.path(s"__stage_ib${batchId}_$name")),
+      new org.apache.hadoop.fs.Path(writer.path(s"${name}_lists")))
+  }
+
+  /** [[Retrieval.injectCrashedBm25Append]] for the IVF family: the append
+    * leg's own staging step ([[stageIvfBatch]]) and no commit marker —
+    * on this family (frozen quantizer, no derived tables past bootstrap)
+    * that IS every pre-marker crash state of a non-bootstrap append.
+    * Fixture for q114 and SnapshotReadSpec; nothing in the write path
+    * calls it.
     */
   private[graft] def injectCrashedIvfAppend(batch: DataFrame,
       writer: graft.sources.TableWriter, name: String, batchId: Long,
-      idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    val spark = batch.sparkSession
-    import spark.implicits._
-    val conf = spark.sessionState.newHadoopConf()
-    def path(p: String) = new org.apache.hadoop.fs.Path(writer.path(p))
-    val fs = path(s"${name}_ivf_commits").getFileSystem(conf)
-    val centroids = writer.read(spark, s"${name}_centroids")
-      .as[(Long, Seq[Double])].collect().sortBy(_._1).toSeq
-    val stage = path(s"__stage_ib${batchId}_$name")
-    assignToCentroids(batch, centroids, idCol, vecCol)
-      .repartition(col("cent_id"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("cent_id").parquet(stage.toString)
-    IndexProtocol.moveStagedIn(fs, stage, path(s"${name}_lists"),
-      partitionPrefix = "cent_id=", batchPrefix = s"b$batchId-",
-      manifest = path(s"${name}_ivf_commits/staged_$batchId"))
-  }
+      idCol: String = "vec_id", vecCol: String = "embedding"): Unit =
+    stageIvfBatch(batch, writer,
+      IndexFamily.Ivf.commits(batch.sparkSession, writer, name), name,
+      batchId, idCol, vecCol)
 
   /** EXACTLY-ONCE batch delete (+vacuum) from the IVF index — the
     * delete leg of the vector CDC sync ([[syncIvfIndexFromFeed]]).
@@ -806,108 +790,49 @@ object Similarity {
     * fresh-tombstone filter drops already-tombstoned ids, so a crashed
     * attempt's remainder lands on redelivery) and the pruned vacuum is
     * replay-convergent (already-vacuumed victims are simply absent), so
-    * the protocol is the writer fence plus the `del_<id>` marker. The
-    * vacuum runs INSIDE the leg so the following append leg may re-add
-    * updated ids — [[appendIvfIndexBatch]]'s re-add guard demands the
-    * old generation be physically gone first.
+    * the leg is [[IndexProtocol.flaggedDeleteLeg]]: the writer fence,
+    * the reader fence and the `del_<id>` marker. The vacuum runs INSIDE
+    * the leg so the following append leg may re-add updated ids —
+    * [[appendIvfIndexBatch]]'s re-add guard demands the old generation
+    * be physically gone first. An unborn index (a delete-only leg
+    * before the first append) commits without striking.
     */
   def deleteFromIvfIndexBatch(victims: DataFrame,
       writer: graft.sources.TableWriter, name: String, batchId: Long,
       idCol: String = "vec_id", vecCol: String = "embedding",
       writerId: String = "default"): Unit = {
     val spark = victims.sparkSession
-    val conf = spark.sessionState.newHadoopConf()
-    def path(p: String) = new org.apache.hadoop.fs.Path(writer.path(p))
-    val commitsDir = path(s"${name}_ivf_commits")
-    val fs = commitsDir.getFileSystem(conf)
-    val leaseEpoch = IndexProtocol.acquireLease(fs, commitsDir, writerId,
-      s"deleteFromIvfIndexBatch($name)")
-    val marker = path(s"${name}_ivf_commits/del_$batchId")
-    if (IndexProtocol.isMarked(fs, commitsDir, s"del_$batchId",
-        "frontier_del", batchId)) {
-      // sweep a crash-between-marker-and-clear's stale reader fence
-      fs.delete(path(s"${name}_ivf_commits/delflag_$batchId"), false)
-      return
-    }
-    // unborn index (a delete-only leg before the first append): no-op
-    if (fs.exists(path(s"${name}_centroids"))) {
-      // write-ahead in-progress flag: the vacuum inside this leg rewrites
-      // list files in place, so snapshot readers have no pre-image — the
-      // flag fences them (loud refusal) until the marker commits; a crash
-      // keeps the fence up through redelivery
-      val flag = path(s"${name}_ivf_commits/delflag_$batchId")
-      fs.create(flag, true).close()
+    IndexProtocol.flaggedDeleteLeg(IndexFamily.Ivf.commits(spark, writer, name),
+      batchId, writerId, s"deleteFromIvfIndexBatch($name)",
+      new org.apache.hadoop.fs.Path(writer.path(s"${name}_centroids"))) {
       deleteFromIvfIndex(victims, writer, name, idCol, vecCol)
       vacuumIvfIndex(spark, writer, name)
-      IndexProtocol.assertLease(fs, commitsDir, writerId, leaseEpoch,
-        s"deleteFromIvfIndexBatch($name)")
-      fs.create(marker, true).close()
-      fs.delete(flag, false)
-    } else {
-      IndexProtocol.assertLease(fs, commitsDir, writerId, leaseEpoch,
-        s"deleteFromIvfIndexBatch($name)")
-      fs.create(marker, true).close()
     }
   }
 
-  /** Drive the IVF index from a table's CDC change feed — the vector
-    * third of the CDC → index family (BM25
-    * [[Retrieval.syncBm25IndexFromFeed]], positional
-    * [[Retrieval.syncPositionalIndexFromFeed]], this): per feed batch
-    * in batch_id order, pre-images (update_pre, delete) are tombstoned
-    * and vacuumed via [[deleteFromIvfIndexBatch]], then post-images
-    * (insert, update_post) appended via [[appendIvfIndexBatch]] — the
-    * first batch bootstraps the quantizer from its own vectors, later
-    * batches assign frozen (an UPDATE is therefore delete → vacuum →
-    * frozen re-assign, exactly the v19 re-embedding flow). Each leg is
-    * exactly-once under its marker; re-runs fast-path, crashes resume
-    * in order (q111's oracle replays bootstrap training + final-state
-    * assignment in SQL).
+  /** Drive the IVF index from a table's CDC change feed
+    * ([[IndexProtocol.syncFromFeed]]): per feed batch in batch_id order,
+    * pre-images (update_pre, delete) are tombstoned and vacuumed via
+    * [[deleteFromIvfIndexBatch]], then post-images (insert, update_post)
+    * appended via [[appendIvfIndexBatch]] — the first batch bootstraps
+    * the quantizer from its own vectors, later batches assign frozen (an
+    * UPDATE is therefore delete → vacuum → frozen re-assign, exactly the
+    * v19 re-embedding flow). Each leg is exactly-once under its marker;
+    * re-runs fast-path, crashes resume in order (q111's oracle replays
+    * bootstrap training + final-state assignment in SQL).
     */
   def syncIvfIndexFromFeed(spark: org.apache.spark.sql.SparkSession,
       writer: graft.sources.TableWriter, tableName: String,
       indexName: String, trainIters: Int = 3, initStride: Long = 97L,
       keyCol: String = "vec_id", vecCol: String = "embedding",
-      writerId: String = "default"): Unit = {
-    import org.apache.spark.sql.functions.col
-    // bounded collect: one id per feed batch
-    val batchIds = writer.readChangeFeed(spark, tableName)
-      .select("batch_id").distinct().collect().map(_.getLong(0)).sorted
-    for (bid <- batchIds) {
-      val batch = spark.read.parquet(
-        writer.path(s"${tableName}_changes") + s"/batch=$bid")
-      deleteFromIvfIndexBatch(
-        batch.filter(col("change_op").isin("update_pre", "delete"))
-          .select(col(keyCol), col(vecCol)),
-        writer, indexName, bid, keyCol, vecCol, writerId)
-      appendIvfIndexBatch(
-        batch.filter(col("change_op").isin("insert", "update_post"))
-          .select(col(keyCol), col(vecCol)),
-        writer, indexName, bid, trainIters, initStride, keyCol, vecCol,
-        writerId)
-    }
-  }
-
-  /** IVF twin of [[Retrieval.compactBm25IndexCommits]]: fold a quiescent
-    * index's per-batch markers into the frontier files.
-    */
-  def compactIvfIndexCommits(spark: org.apache.spark.sql.SparkSession,
-      writer: graft.sources.TableWriter, name: String): Unit = {
-    val d = new org.apache.hadoop.fs.Path(writer.path(s"${name}_ivf_commits"))
-    IndexProtocol.compactCommitMarkers(
-      d.getFileSystem(spark.sessionState.newHadoopConf()), d)
-  }
-
-  /** Hand over an IVF index's single-writer lease (see
-    * [[IndexProtocol.acquireLease]]): only safe once the owning stream
-    * is stopped.
-    */
-  def releaseIvfWriterLease(spark: org.apache.spark.sql.SparkSession,
-      writer: graft.sources.TableWriter, name: String): Unit = {
-    val d = new org.apache.hadoop.fs.Path(writer.path(s"${name}_ivf_commits"))
-    IndexProtocol.releaseLease(
-      d.getFileSystem(spark.sessionState.newHadoopConf()), d)
-  }
+      writerId: String = "default"): Unit =
+    IndexProtocol.syncFromFeed(spark, writer, tableName,
+      IndexProtocol.ChangeLegs(
+        deleteFromIvfIndexBatch(_, writer, indexName, _, keyCol, vecCol,
+          writerId),
+        appendIvfIndexBatch(_, writer, indexName, _, trainIters, initStride,
+          keyCol, vecCol, writerId)),
+      Seq(keyCol, vecCol))
 
   /** Declare that a [[buildIvfIndex]]-built index is being handed to the
     * streaming append family: writes the `adopted` sentinel into the
@@ -917,15 +842,12 @@ object Similarity {
     */
   def adoptIvfIndexForStreaming(spark: org.apache.spark.sql.SparkSession,
       writer: graft.sources.TableWriter, name: String): Unit = {
-    val commitsDir = new org.apache.hadoop.fs.Path(
-      writer.path(s"${name}_ivf_commits"))
-    val fs = commitsDir.getFileSystem(spark.sessionState.newHadoopConf())
-    require(fs.exists(new org.apache.hadoop.fs.Path(
+    val c = IndexFamily.Ivf.commits(spark, writer, name)
+    require(c.fs.exists(new org.apache.hadoop.fs.Path(
         writer.path(s"${name}_centroids"))),
       s"adoptIvfIndexForStreaming: no prebuilt index at ${writer.path(name)}")
-    fs.mkdirs(commitsDir)
-    fs.create(new org.apache.hadoop.fs.Path(commitsDir, "adopted"), true)
-      .close()
+    c.fs.mkdirs(c.dir)
+    c.fs.create(c.adopted, true).close()
   }
 
   /** Targeted delete from a persisted IVF index — the missing quarter of
@@ -1115,13 +1037,10 @@ object Similarity {
     // whose commits dir shows NO committed batch and no adoption is
     // unborn — a crashed bootstrap may have left half-written centroids/
     // lists, and the committed state is an empty index, so serve that
-    val ivfCommits = new org.apache.hadoop.fs.Path(
-      writer.path(s"${name}_ivf_commits"))
-    val ivfFs = ivfCommits.getFileSystem(spark.sessionState.newHadoopConf())
-    val streamed = ivfFs.exists(ivfCommits)
-    val adopted = streamed && ivfFs.exists(
-      new org.apache.hadoop.fs.Path(ivfCommits, "adopted"))
-    val state0 = IndexProtocol.commitsState(ivfFs, ivfCommits)
+    val ivfCommits = IndexFamily.Ivf.commits(spark, writer, name)
+    val streamed = ivfCommits.fs.exists(ivfCommits.dir)
+    val adopted = streamed && ivfCommits.fs.exists(ivfCommits.adopted)
+    val state0 = ivfCommits.state
     if (streamed && !adopted && state0.committedAppends.isEmpty
         && state0.frontierBatch == Long.MinValue)
       return Seq.empty[(Long, Long, Int)].toDF("query_id", "nbr_id", "rank")
@@ -1145,8 +1064,8 @@ object Similarity {
     // pin the lists scan against a stable commits state; exclude files of
     // staged-but-unmarked batches (b<id>- names) AFTER the cent_id prune
     // so partition pruning still pushes down; refuse during delete legs
-    val (listsBase, listsState, _) = IndexProtocol.pinnedSnapshot(ivfFs,
-      ivfCommits, () => Nil,
+    val (listsBase, listsState, _) = IndexProtocol.pinnedSnapshot(ivfCommits.fs,
+      ivfCommits.dir, () => Nil,
       () => readListsLongCentId(spark, listsPath),
       s"queryIvfIndex($name)")
     val pruned = IndexProtocol.excludeUncommitted(

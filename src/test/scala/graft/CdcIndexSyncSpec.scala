@@ -1,7 +1,8 @@
 package graft
 
-import graft.operators.Retrieval
+import graft.operators.{Retrieval, Similarity}
 import graft.sources.TableWriter
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** CDC-driven BM25 index maintenance (q109): the change feed of a
@@ -83,7 +84,6 @@ class CdcIndexSyncSpec extends SparkSpec {
   }
 
   test("feed-synced IVF index == the explicit delete→vacuum→append flow") {
-    import graft.operators.Similarity
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .select(col("vec_id"),
         graft.functions.VectorFns.toDouble(col("embedding")).as("embedding"))
@@ -126,21 +126,31 @@ class CdcIndexSyncSpec extends SparkSpec {
   test("delete batch: absent victims and committed markers are byte-level no-ops") {
     val dir = java.nio.file.Files.createTempDirectory("cdcsync2").toString
     val w = new TableWriter(dir)
+    val vecs = spark.range(200).select(col("id").as("vec_id"),
+      array((1 to 8).map(i => sin(col("id") * i + i)): _*).as("embedding"))
     Retrieval.appendBm25IndexBatch(docs, w, "idx", 0L)
-    val sigs = parquetFileSigs(dir)
-    // victims that are not in the index
-    Retrieval.deleteFromBm25IndexBatch(
-      docs.limit(3).withColumn("doc_id", col("doc_id") + 900000L),
-      w, "idx", 1L)
-    assert(parquetFileSigs(dir).view.filterKeys(!_.contains("_commits")).toMap
-      == sigs.view.filterKeys(!_.contains("_commits")).toMap)
-    // a real delete, then its redelivery (marker fast path)
-    Retrieval.deleteFromBm25IndexBatch(
-      docs.filter(col("doc_id") % 11 === 5), w, "idx", 2L)
-    val after = parquetFileSigs(dir)
-    Retrieval.deleteFromBm25IndexBatch(
-      docs.filter(col("doc_id") % 11 === 5), w, "idx", 2L)
-    assert(parquetFileSigs(dir) == after)
+    Retrieval.appendPositionalIndexBatch(docs, w, "pidx", 0L)
+    Similarity.appendIvfIndexBatch(vecs, w, "eidx", 0L, trainIters = 2)
+    def dataSigs() =
+      parquetFileSigs(dir).view.filterKeys(!_.contains("_commits")).toMap
+    def noOps(idCol: String, absent: DataFrame, present: DataFrame,
+        del: (DataFrame, Long) => Unit): Unit = {
+      // victims that are not in the index
+      val before = dataSigs()
+      del(absent.withColumn(idCol, col(idCol) + 900000L), 1L)
+      assert(dataSigs() == before)
+      // a real delete, then its redelivery (marker fast path)
+      del(present, 2L)
+      val after = parquetFileSigs(dir)
+      del(present, 2L)
+      assert(parquetFileSigs(dir) == after)
+    }
+    noOps("doc_id", docs.limit(3), docs.filter(col("doc_id") % 11 === 5),
+      Retrieval.deleteFromBm25IndexBatch(_, w, "idx", _))
+    noOps("doc_id", docs.limit(3), docs.filter(col("doc_id") % 11 === 5),
+      Retrieval.deleteFromPositionalIndexBatch(_, w, "pidx", _))
+    noOps("vec_id", vecs.limit(3), vecs.filter(col("vec_id") % 11 === 5),
+      Similarity.deleteFromIvfIndexBatch(_, w, "eidx", _))
   }
 
   test("redelivery replays the PERSISTED struck set, not the passed victims") {

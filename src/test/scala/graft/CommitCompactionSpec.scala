@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{IndexProtocol, Retrieval, Similarity}
+import graft.operators.{IndexFamily, IndexProtocol, Retrieval, Similarity}
 import graft.sources.TableWriter
 import org.apache.spark.sql.functions._
 
@@ -28,7 +28,7 @@ class CommitCompactionSpec extends SparkSpec {
     (0 to 3).foreach(c => Retrieval.appendBm25IndexBatch(batch(c), w, "docs", c))
     val before = rows(Retrieval.queryBm25Index(spark, w, "docs", qs,
       k = 10, excludeSelf = true))
-    Retrieval.compactBm25IndexCommits(spark, w, "docs")
+    IndexFamily.Bm25.compactCommits(spark, w, "docs")
     val names = new java.io.File(s"$dir/docs_commits").listFiles.map(_.getName)
     assert(!names.exists(_.startsWith("batch_")),
       s"markers must fold into the frontier: ${names.toList}")
@@ -46,7 +46,7 @@ class CommitCompactionSpec extends SparkSpec {
       w, "docs", 4L)
     assert(new java.io.File(s"$dir/docs_commits/batch_4").exists)
     // idempotent re-compaction folds the new marker too
-    Retrieval.compactBm25IndexCommits(spark, w, "docs")
+    IndexFamily.Bm25.compactCommits(spark, w, "docs")
     assert(!new java.io.File(s"$dir/docs_commits/batch_4").exists)
   }
 
@@ -58,7 +58,7 @@ class CommitCompactionSpec extends SparkSpec {
     val staged = java.nio.file.Paths.get(s"$dir/docs_commits/staged_9")
     java.nio.file.Files.write(staged, "x\n".getBytes("UTF-8"))
     intercept[IllegalArgumentException] {
-      Retrieval.compactBm25IndexCommits(spark, w, "docs")
+      IndexFamily.Bm25.compactCommits(spark, w, "docs")
     }
     java.nio.file.Files.delete(staged)
     // stale litter of a COMMITTED batch (crash between marker and clear)
@@ -66,7 +66,7 @@ class CommitCompactionSpec extends SparkSpec {
     java.nio.file.Files.write(
       java.nio.file.Paths.get(s"$dir/docs_commits/staged_2"),
       "x\n".getBytes("UTF-8"))
-    Retrieval.compactBm25IndexCommits(spark, w, "docs")
+    IndexFamily.Bm25.compactCommits(spark, w, "docs")
     val names = new java.io.File(s"$dir/docs_commits").listFiles.map(_.getName)
     assert(!names.exists(_.startsWith("staged_")), names.toList.toString)
   }
@@ -82,7 +82,7 @@ class CommitCompactionSpec extends SparkSpec {
     w.deleteByKeyCdc(spark, "t",
       d.filter(col("doc_id") % 11 === 5).select("doc_id"), "doc_id", 3L)
     Retrieval.syncBm25IndexFromFeed(spark, w, "t", "idx")
-    Retrieval.compactBm25IndexCommits(spark, w, "idx")
+    IndexFamily.Bm25.compactCommits(spark, w, "idx")
     val sigs = parquetFileSigs(w.path("idx_postings")) ++
       parquetFileSigs(w.path("idx_vocab"))
     Retrieval.syncBm25IndexFromFeed(spark, w, "t", "idx")
@@ -102,7 +102,7 @@ class CommitCompactionSpec extends SparkSpec {
         slice(split(col("text"), " "), 1, 3).as("terms"))
     val pBefore = rows(Retrieval.phraseQuery(spark, pw, "docs", phrases, k = 10,
       excludeSelf = true))
-    Retrieval.compactPositionalIndexCommits(spark, pw, "docs")
+    IndexFamily.Positional.compactCommits(spark, pw, "docs")
     val pSigs = parquetFileSigs(pd)
     (0 to 3).foreach(c =>
       Retrieval.appendPositionalIndexBatch(batch(c), pw, "docs", c))
@@ -117,7 +117,7 @@ class CommitCompactionSpec extends SparkSpec {
     val queries = embs.filter(col("vec_id") < 8)
     val vBefore = rows(Similarity.queryIvfIndex(spark, vw, "emb", queries,
       k = 5, nprobe = 2))
-    Similarity.compactIvfIndexCommits(spark, vw, "emb")
+    IndexFamily.Ivf.compactCommits(spark, vw, "emb")
     val vSigs = parquetFileSigs(vd)
     // redelivery of the BOOTSTRAP batch under the frontier must also
     // no-op (everCommitted sees the frontier, the fast-path the marker's

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Retrieval
+import graft.operators.{IndexFamily, IndexProtocol, Retrieval, Similarity}
 import graft.sources.TableWriter
 import org.apache.spark.sql.functions._
 
@@ -317,7 +317,7 @@ class IndexRestartSpec extends SparkSpec {
     assert(parquetFileSigs(dir) == sigs,
       "a refused writer must not have modified the index")
     // explicit handover lets the new writer in
-    Retrieval.releaseBm25WriterLease(spark, w, "docs")
+    IndexFamily.Bm25.releaseWriterLease(spark, w, "docs")
     Retrieval.appendBm25IndexBatch(batch(2), w, "docs", 2,
       writerId = "stream-B")
     Retrieval.appendBm25IndexBatch(batch(3), w, "docs", 3,
@@ -326,6 +326,29 @@ class IndexRestartSpec extends SparkSpec {
     val (p, v, st) = indexState(w)
     val (pr, vr, str) = indexState(buildClean(cleanDir))
     assert(p == pr); assert(v == vr); assert(st == str)
+    // the positional and IVF legs: same refusal, same one release
+    val vecs = spark.range(200).select(col("id").as("vec_id"),
+      array((1 to 8).map(i => sin(col("id") * i + i)): _*).as("embedding"))
+    def ebatch(c: Int) = vecs.filter(pmod(col("vec_id"), lit(4)) === c)
+    val others: Seq[(IndexFamily, String, (Int, String) => Unit)] = Seq(
+      (IndexFamily.Positional, "docs", (c, id) =>
+        Retrieval.appendPositionalIndexBatch(batch(c), w, "docs", c,
+          writerId = id)),
+      (IndexFamily.Ivf, "emb", (c, id) =>
+        Similarity.appendIvfIndexBatch(ebatch(c), w, "emb", c,
+          trainIters = 2, writerId = id)))
+    for ((family, name, append) <- others) {
+      append(0, "stream-A")
+      append(1, "stream-A")
+      val before = parquetFileSigs(dir)
+      val refused = intercept[IllegalStateException](append(2, "stream-B"))
+      assert(refused.getMessage.contains("stream-A"), family.toString)
+      assert(parquetFileSigs(dir) == before,
+        s"$family: a refused writer must not have modified the index")
+      family.releaseWriterLease(spark, w, name)
+      append(2, "stream-B")
+      assert(family.commits(spark, w, name).isMarked(IndexProtocol.Append, 2))
+    }
   }
 
   test("served rankings from the batch build match the one-shot path") {

@@ -135,6 +135,31 @@ class LeaseLivenessSpec extends SparkSpec {
     assert(hits == Set(2L, 3L))
   }
 
+  test("fenced BM25 delete leg refuses at its no-op marker (absent victims)") {
+    import spark.implicits._
+    val dir = tmpDir("lease-bm25del")
+    val w = new TableWriter(dir)
+    Retrieval.appendBm25IndexBatch(
+      Seq((1L, "alpha beta"), (2L, "beta gamma")).toDF("doc_id", "text"),
+      w, "docs", batchId = 0L, buckets = 8, vocabBuckets = 4,
+      writerId = "stream-A")
+    // evaluating the victims fences stream-A mid-leg, as a TTL successor
+    // would while A's delete runs
+    val commits = w.path("docs_commits")
+    val fence = udf { (t: String) =>
+      LeaseLivenessSpec.fenceBy("stream-B", commits); t
+    }.asNondeterministic()
+    val absent = Seq((9L, "alpha delta")).toDF("doc_id", "text")
+      .withColumn("text", fence(col("text")))
+    val e = intercept[IllegalStateException] {
+      Retrieval.deleteFromBm25IndexBatch(absent, w, "docs", batchId = 1L,
+        buckets = 8, vocabBuckets = 4, writerId = "stream-A")
+    }
+    assert(e.getMessage.contains("FENCED"))
+    assert(!new java.io.File(s"$dir/docs_commits/del_1").exists,
+      "a fenced writer must not publish the delete marker")
+  }
+
   test("VersionedTable: dead writer fenced through commitMerge(leaseTtlMs)") {
     import spark.implicits._
     val dir = tmpDir("lease-vt")
@@ -157,5 +182,21 @@ class LeaseLivenessSpec extends SparkSpec {
     val rows = VersionedTable.read(spark, dir)
       .select("k", "v").collect().map(r => (r.getLong(0), r.getString(1))).toSet
     assert(rows == Set((1L, "a"), (2L, "b2")))
+  }
+}
+
+object LeaseLivenessSpec {
+  /** Backdate the lease under `commits` and fence it by `successor`
+    * (a no-op once `successor` holds it). Called from inside Spark
+    * tasks, which `local` mode runs in this JVM.
+    */
+  def fenceBy(successor: String, commits: String): Unit = synchronized {
+    val dir = new Path(commits)
+    val fs = dir.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val lease = new Path(dir, "writer")
+    if (!IndexProtocol.readLines(fs, lease).headOption.contains(successor)) {
+      fs.setTimes(lease, System.currentTimeMillis() - 60000, -1)
+      IndexProtocol.acquireLease(fs, dir, successor, "spec", ttlMs = 5000)
+    }
   }
 }

@@ -34,6 +34,40 @@ class ParallelismSpec extends SparkSpec {
     assert(layout() == layout())
   }
 
+  private def oneFileScan(rows: Int): org.apache.spark.sql.DataFrame = {
+    val dir = java.nio.file.Files.createTempDirectory("fanoutscan").toString
+    (0 until rows).map(i => (i.toLong, s"row $i")).toDF("id", "s")
+      .coalesce(1).write.mode("overwrite").parquet(dir)
+    spark.read.parquet(dir)
+  }
+
+  test("fanOutScan spreads a one-split parquet scan to default parallelism") {
+    val df = oneFileScan(10000)
+    assert(df.rdd.getNumPartitions == 1)
+    val fanned = Parallelism.fanOutScan(df, col("id"))
+    assert(fanned.rdd.getNumPartitions ==
+      spark.sparkContext.defaultParallelism)
+    assert(fanned.orderBy("id").as[(Long, String)].collect()
+      .sameElements(df.orderBy("id").as[(Long, String)].collect()))
+  }
+
+  test("fanOutScan leaves a scan with enough splits unchanged") {
+    val key = "spark.sql.files.maxPartitionBytes"
+    val old = spark.conf.get(key)
+    spark.conf.set(key, "1024")
+    try {
+      val df = oneFileScan(10000)
+      assert(df.rdd.getNumPartitions >=
+        (spark.sparkContext.defaultParallelism + 1) / 2)
+      assert(Parallelism.fanOutScan(df, col("id")) eq df)
+    } finally spark.conf.set(key, old)
+  }
+
+  test("fanOutScan leaves a frame above a shuffle unchanged") {
+    val df = oneFileScan(100).groupBy("id").count()
+    assert(Parallelism.fanOutScan(df, col("id")) eq df)
+  }
+
   test("packSequences: empty input and budget-1 edge") {
     val empty = Seq.empty[(Long, Int)].toDF("id", "n")
     assert(Packing.packSequences(empty, col("id"), col("n"), 512L)

@@ -6,9 +6,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import scala.jdk.CollectionConverters._
 
-/** Source guards for two drifts that were removed: sessions built outside
-  * [[GraftSession.builder]], and session caches in [[SparkEntry]] declared
-  * as ad-hoc maps instead of a [[Fixture]] (which is what releases them).
+/** Source guards for drifts that were removed: sessions built outside
+  * [[GraftSession.builder]], session caches in [[SparkEntry]] declared
+  * as ad-hoc maps instead of a [[Fixture]] (which is what releases them),
+  * and index-protocol file names built outside `IndexProtocol.scala`.
   * The patterns are spelled in pieces so this file does not match itself.
   */
 class SourceGuardSpec extends AnyFunSuite {
@@ -32,5 +33,27 @@ class SourceGuardSpec extends AnyFunSuite {
     val adHoc = "Trie" + "Map"
     val entry = read(Paths.get("src/main/scala/graft/SparkEntry.scala"))
     assert(!entry.contains(adHoc), s"SparkEntry.scala declares a $adHoc")
+  }
+
+  test("index commits-dir, marker, manifest, flag and frontier names are built only by IndexProtocol") {
+    // quoted index-protocol names: `<name>_commits` dirs, `batch_<id>`,
+    // `del_<id>`, `delflag_<id>`, `staged_<id>` and the frontier files.
+    // VersionedTable.scala is the table protocol, with its own
+    // `_commits/staged_<v>` layout (ROADMAP #4 merges the two).
+    val names =
+      "(\\w|\\})_commits(\"|/)|\\b(batch|del|delflag|delstate|struck|staged)_(\\$|\\d|\")|\\bfrontier_".r
+    val literal = "\"(?:[^\"\\\\]|\\\\.)*\"".r
+    val exempt = Set("IndexProtocol.scala", "VersionedTable.scala")
+    val offenders = for {
+      p <- scalaFiles("src/main")
+      if !exempt(p.getFileName.toString)
+      (line, i) <- read(p).split("\n").zipWithIndex
+      code = line.trim
+      if !code.startsWith("*") && !code.startsWith("/*") && !code.startsWith("//")
+      lit <- literal.findAllIn(line)
+      if names.findFirstIn(lit).nonEmpty
+    } yield s"${p.getFileName}:${i + 1}: $lit"
+    assert(offenders.isEmpty,
+      s"index protocol names built outside IndexProtocol: $offenders")
   }
 }
