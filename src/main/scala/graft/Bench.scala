@@ -47,7 +47,8 @@ import org.apache.spark.sql.SparkSession
   * Every run (with or without flags) also writes the full parsed result
   * — steady + cold per query, failures, runs, sf — to BENCH_FULL.json,
   * so round-over-round comparison never depends on a truncated stdout
-  * capture.
+  * capture. Its `codegen` map holds each entry's codegen compiles and
+  * compile ms for the cold and the steady run.
   */
 object Bench {
 
@@ -244,6 +245,15 @@ object Bench {
         "tasks" -> taskCount.get)
     }
 
+    // per-run codegen compiles and compile ms (JVM-wide counters, exact
+    // because entries run one at a time); reported next to the
+    // fingerprint, never in it: a cache hit or miss is not a plan change
+    def codegenSnapshot(): (Long, Long) = (
+      org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME.getCount,
+      org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+        .compileTime / 1000000L)
+
     warmUp(spark, sfDir)
 
     // A failed query must not masquerade as a fast one (round-6 post-mortem:
@@ -255,6 +265,9 @@ object Bench {
       sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSeq)
     val profiles = scala.collection.mutable.LinkedHashMap
       .empty[String, Map[String, Long]]
+    // entry -> (cold, steady) codegen (compiles, compile ms)
+    val codegen = scala.collection.mutable.LinkedHashMap
+      .empty[String, ((Long, Long), (Long, Long))]
     val raw = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.exists(n.startsWith)) }
       .map { case (name, fn) =>
@@ -265,6 +278,7 @@ object Bench {
         // the timing, so a slow capture is adjudicable from the artifact
         val last = i == runs - 1
         val pre = if (last) profileSnapshot() else Map.empty[String, Long]
+        val cg0 = codegenSnapshot()
         val t0 = System.nanoTime()
         try { fn(spark, sfDir).count() } catch {
           case e: Throwable =>
@@ -273,12 +287,14 @@ object Bench {
             err = Some(msg)
         }
         val sec = (System.nanoTime() - t0) / 1e9
+        val cg1 = codegenSnapshot()
         if (last && err.isEmpty)
           profiles(name) = profileSnapshot().map { case (k, v) =>
             k -> (v - pre(k)) }
-        sec
+        (sec, (cg1._1 - cg0._1, cg1._2 - cg0._2))
       }
-      (name, times.min, times.head, err)
+      codegen(name) = (times.head._2, times.last._2)
+      (name, times.map(_._1).min, times.head._1, err)
     }
     val results = raw.collect { case (n, s, c, None) => (n, s, c) }
     val failed = raw.collect { case (n, _, _, Some(_)) => n }
@@ -349,10 +365,15 @@ object Bench {
         .map { case (k, v) => "\"" + k + "\":" + v }
         .mkString("{", ",", "}")
     }.mkString("{", ",", "}")
+    val codegenJson = codegen.toSeq.sortBy(_._1).map {
+      case (n, ((cc, cms), (sc, sms))) =>
+        s""""$n":{"cold_compiles":$cc,"cold_ms":$cms,""" +
+          s""""steady_compiles":$sc,"steady_ms":$sms}"""
+    }.mkString("{", ",", "}")
     def violMap(vs: Seq[(String, Double, Double)]): String = vs.sortBy(_._1)
       .map { case (n, s, b) => "\"" + n + "\":" + f"[$s%.3f,$b%.3f]" }
       .mkString("{", ",", "}")
-    val fullJson = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"queries_cold":$cold,"total_cold":$totalCold,"remeasured":$remJson,"failed":$failedJson,"violations_contention":${violMap(violContention)},"violations_regression":${violMap(violRegression)},"runs":$runs,"sf":"$sfDir","profile":$profJson}"""
+    val fullJson = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"queries_cold":$cold,"total_cold":$totalCold,"remeasured":$remJson,"failed":$failedJson,"violations_contention":${violMap(violContention)},"violations_regression":${violMap(violRegression)},"runs":$runs,"sf":"$sfDir","profile":$profJson,"codegen":$codegenJson}"""
     println(fullJson)
     // the durable per-round artifact: stdout capture gets truncated by
     // harnesses, this file never does. Skipped under a BENCH_ONLY filter

@@ -4,7 +4,19 @@ import org.apache.spark.sql.SparkSession
 
 /** Session factory with the engine's recommended configuration: AQE on,
   * UTC (oracle parity), shuffle partitions sized to the machine instead of
-  * the 200 default, and the graft SQL functions + optimizer rule installed.
+  * the 200 default, a generated-class cache that holds a whole DAG build,
+  * and the graft SQL functions + optimizer rule installed.
+  *
+  * The class cache (`spark.sql.codegen.cache.maxEntries`) is JVM-wide and
+  * Spark sizes it once, from the session conf alive at the JVM's first
+  * codegen compile; a later session, or [[install]] on a session built
+  * elsewhere, cannot resize it. Spark's default of 100 is smaller than one
+  * build of the 27-model reference DAG, which uses ~250 distinct classes,
+  * so an LRU of 100 evicts every class before the next build reuses it and
+  * each nightly rebuild recompiles them all. Deployments that install the
+  * engine through `spark.sql.extensions=graft.GraftExtensions` instead of
+  * this builder need the same setting at submit time:
+  * `--conf spark.sql.codegen.cache.maxEntries=800`.
   */
 object GraftSession {
 
@@ -19,6 +31,13 @@ object GraftSession {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // generated classes kept compiled. Measured working sets (distinct
+      // classes of one run, set-up included): ~250 for a build of the
+      // 27-model reference DAG, ~150 for the corpus dedup pipeline, ~300
+      // for a served versioned table with index sync. 800 leaves room for
+      // classes a run compiles once (per-step literals) and for the
+      // cache's 4 independently evicting segments of 200 each
+      .config("spark.sql.codegen.cache.maxEntries", "800")
 
   def local(cores: Int = Runtime.getRuntime.availableProcessors(),
       appName: String = "graft"): SparkSession =
@@ -26,7 +45,8 @@ object GraftSession {
 
   /** Install graft SQL functions and optimizer rules on any live session
     * (cluster deployments should prefer
-    * `--conf spark.sql.extensions=graft.GraftExtensions`).
+    * `--conf spark.sql.extensions=graft.GraftExtensions`). It does not size
+    * the generated-class cache; see the object doc.
     */
   def install(spark: SparkSession): SparkSession = {
     GraftFunctions.register(spark)

@@ -114,7 +114,9 @@ final class ModelRegistry {
     * dependencies' futures; Spark job submission is thread-safe, so
     * concurrent writers keep the cluster busy while long models build.
     * Results are identical to [[runAll]] — scheduling changes wall-clock,
-    * not output (ModelRegistrySpec pins both).
+    * not output (ModelRegistrySpec pins both). On failure every started
+    * model settles before the first failure in topological order is
+    * rethrown, so no sibling is still writing when the caller sees it.
     */
   def runAllParallel(spark: SparkSession, sources: Map[String, DataFrame],
       writer: Option[graft.sources.TableWriter] = None,
@@ -132,9 +134,12 @@ final class ModelRegistry {
           val depFs = m.deps.map { d =>
             models.get(d) match {
               case Some(dm) => futureFor(dm).map(d -> _)
-              case None => Future.successful(d -> sources.getOrElse(d,
-                throw new IllegalArgumentException(
-                  s"model ${m.name}: unresolved dep $d")))
+              case None => sources.get(d) match {
+                case Some(df) => Future.successful(d -> df)
+                // failed, not thrown: the models already started must settle
+                case None => Future.failed(new IllegalArgumentException(
+                  s"model ${m.name}: unresolved dep $d"))
+              }
             }
           }
           Future.sequence(depFs).map { ins =>
@@ -150,9 +155,8 @@ final class ModelRegistry {
         })
       }
       val all = topoOrder.map(m => m.name -> futureFor(m))
-      val builtModels = all.map { case (n, f) =>
-        n -> Await.result(f, Duration.Inf)
-      }
+      all.foreach { case (_, f) => Await.ready(f, Duration.Inf) }
+      val builtModels = all.map { case (n, f) => n -> f.value.get.get }
       sources ++ builtModels
     } finally pool.shutdown()
   }

@@ -61,6 +61,24 @@ class ModelRegistrySpec extends SparkSpec {
     }
   }
 
+  test("parallel runner throws only after every started sibling settled") {
+    val reg = new ModelRegistry
+    reg.register(Model("boom", Seq("src")) { (_, _) =>
+      throw new IllegalStateException("boom")
+    })
+    reg.register(Model("slow", Seq("src")) { (_, in) =>
+      Thread.sleep(1500); in("src")
+    })
+    val wh = java.nio.file.Files.createTempDirectory("graft_par_fail_").toString
+    val err = intercept[IllegalStateException] {
+      reg.runAllParallel(spark, Map("src" -> src),
+        Some(new graft.sources.TableWriter(wh)))
+    }
+    assert(err.getMessage == "boom")
+    // the independent sibling finished its write before the call threw
+    assert(spark.read.parquet(s"$wh/slow").count() == 10L)
+  }
+
   test("incremental model: re-run rewrites only the arriving partitions") {
     val reg = new ModelRegistry
     reg.register(Model("daily", Seq("src")) { (_, in) =>
