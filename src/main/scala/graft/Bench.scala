@@ -52,15 +52,14 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
-  /** Bench's session: [[GraftSession.builder]] on SPARK_GRAFT_CPUS cores
+  /** Bench's session: [[GraftSession.builder]] on [[GraftSession.cores]]
     * with every file:// FS op counted (r10 verdict #1: each entry's steady
     * run carries its FS-op fingerprint — load skew amplifies TIME but not
     * op counts). The per-entry tools open theirs here too, so they run an
     * entry exactly as Bench does.
     */
   private[graft] def openSession(): SparkSession =
-    GraftSession.builder(
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, "graft-bench")
+    GraftSession.builder(GraftSession.cores, "graft-bench")
       .config("spark.hadoop.fs.file.impl",
         classOf[graft.core.CountingLocalFileSystem].getName)
       .getOrCreate()

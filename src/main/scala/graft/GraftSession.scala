@@ -39,6 +39,12 @@ object GraftSession {
       // cache's 4 independently evicting segments of 200 each
       .config("spark.sql.codegen.cache.maxEntries", "800")
 
+  /** The mains' core count: `SPARK_GRAFT_CPUS` when set, otherwise every
+    * available processor, as [[local]] defaults to.
+    */
+  def cores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
   def local(cores: Int = Runtime.getRuntime.availableProcessors(),
       appName: String = "graft"): SparkSession =
     install(builder(cores, appName).getOrCreate())

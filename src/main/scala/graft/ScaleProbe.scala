@@ -37,7 +37,7 @@ object ScaleProbe {
         "triangles", "ranktopk", "ivftrain", "recovery", "annrank",
         "snapshot", "vtable", "manifest", "mvext", "occ", "vtstream")
     def on(p: String) = probes.contains(p)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = GraftSession.cores
     val spark = GraftSession.builder(cpus, "graft-scale-probe").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

@@ -12,8 +12,8 @@ object Verify {
       if (args.length > 2) Some(args(2).split(",").toSeq) else None
     def selected(name: String): Boolean =
       only.forall(_.exists(name.startsWith))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = GraftSession.builder(cpus, "graft-verify").getOrCreate()
+    val spark = GraftSession.builder(GraftSession.cores, "graft-verify")
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // A query that throws must NOT silently vanish from the round's
@@ -34,18 +34,9 @@ object Verify {
         }
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    // every control char escaped (Artifacts.esc): a tab or CR in an
+    // entry's SQL would otherwise make the file unparseable JSON
+    def q(s: String): String = "\"" + graft.core.Artifacts.esc(s) + "\""
     SparkEntry.releaseSessionCaches()
     val json = SparkEntry.oracleSql
       .filter { case (k, _) => selected(k) }

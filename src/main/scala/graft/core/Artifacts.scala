@@ -1,21 +1,16 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
-/** dbt-artifact parity for the DAG runner (SURVEY §3: `dbt run` emits
+/** dbt-artifact parity for [[ModelRegistry.run]] (SURVEY §3: `dbt run` emits
   * `target/manifest.json` at compile time and `target/run_results.json`
   * after execution — reference logs/dbt.log:398-404). Tooling that watches
   * a dbt project reads exactly these two files, so the engine writes the
   * same shapes: a node graph with dependency edges, and per-node
-  * status/rows/timing. JSON is rendered by hand — tiny, dependency-free,
-  * driver-side only.
+  * status/rows/timing, rendered by hand (tiny, dependency-free) from a
+  * finished run. Only [[rowCounts]] runs Spark jobs, one count per model.
   */
 object Artifacts {
 
-  final case class NodeResult(name: String, status: String, rows: Long,
-      seconds: Double, error: Option[String])
-
-  private def esc(s: String): String =
+  private[graft] def esc(s: String): String =
     s.flatMap {
       case '"' => "\\\""
       case '\\' => "\\\\"
@@ -43,69 +38,35 @@ object Artifacts {
   private def sec(v: Double): String =
     String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
 
-  def runResultsJson(results: Seq[NodeResult]): String = {
-    val rs = results.map { r =>
-      val err = r.error.map(e => s""", "message": "${esc(e)}"""").getOrElse("")
-      s"""    {"name": "${esc(r.name)}", "status": "${r.status}", "rows": ${r.rows}, "execution_time": ${sec(r.seconds)}$err}"""
+  /** Rows of every model that built, counted after the run (one job
+    * each), for the run_results `rows` field.
+    */
+  def rowCounts(run: ModelRegistry.Run): Map[String, Long] =
+    run.results.collect {
+      case r if r.status == "success" => r.name -> run.built(r.name).count()
+    }.toMap
+
+  /** Per-model status/rows/seconds; `elapsed_time` is the run's wall time,
+    * which is less than the sum of node times once models overlap.
+    */
+  def runResultsJson(run: ModelRegistry.Run, rows: Map[String, Long]): String = {
+    val rs = run.results.map { r =>
+      val err = r.error.map { e =>
+        s""", "message": "${esc(Option(e.getMessage).getOrElse(e.getClass.getName))}""""
+      }.getOrElse("")
+      s"""    {"name": "${esc(r.name)}", "status": "${r.status}", "rows": ${rows.getOrElse(r.name, 0L)}, "execution_time": ${sec(r.seconds)}$err}"""
     }
-    val elapsed = results.map(_.seconds).sum
-    s"""{\n  "elapsed_time": ${sec(elapsed)},\n  "results": [\n""" +
+    s"""{\n  "elapsed_time": ${sec(run.seconds)},\n  "results": [\n""" +
       rs.mkString(",\n") + "\n  ]\n}\n"
   }
 
-  /** Materialize the DAG like [[ModelRegistry.runAll]] but record per-model
-    * status/rows/wall-clock, continuing past failures the way `dbt run`
-    * does (a failed node marks itself `error` and its transitive dependents
-    * `skipped`; independent subtrees still build). The resolve/materialize
-    * loop intentionally mirrors `runAll` — keep the two in step when the
-    * write path changes (they differ only in failure semantics: `runAll`
-    * throws, this continues).
-    */
-  def runWithResults(reg: ModelRegistry, spark: SparkSession,
-      sources: Map[String, DataFrame], writer: graft.sources.TableWriter,
-      partitioning: Map[String, Seq[String]] = Map.empty,
-      incremental: Set[String] = Set.empty)
-      : (Map[String, DataFrame], Seq[NodeResult]) = {
-    val built = scala.collection.mutable.Map[String, DataFrame](sources.toSeq: _*)
-    val failed = scala.collection.mutable.Set.empty[String]
-    val results = scala.collection.mutable.ArrayBuffer.empty[NodeResult]
-    reg.topoOrder.foreach { m =>
-      if (m.deps.exists(failed)) {
-        failed += m.name
-        results += NodeResult(m.name, "skipped", 0L, 0.0, None)
-      } else {
-        val t0 = System.nanoTime()
-        try {
-          val in = m.deps.map { d =>
-            d -> built.getOrElse(d, throw new IllegalArgumentException(
-              s"model ${m.name}: unresolved dep $d"))
-          }.toMap
-          val out = m.transform(spark, in)
-          ModelRegistry.writeModel(writer, m.name, out, partitioning,
-            incremental)
-          val back = writer.read(spark, m.name)
-          built(m.name) = back
-          results += NodeResult(m.name, "success", back.count(),
-            (System.nanoTime() - t0) / 1e9, None)
-        } catch {
-          case e: Exception =>
-            failed += m.name
-            results += NodeResult(m.name, "error", 0L,
-              (System.nanoTime() - t0) / 1e9,
-              Some(Option(e.getMessage).getOrElse(e.getClass.getName)))
-        }
-      }
-    }
-    (built.toMap, results.toSeq)
-  }
-
-  def writeTargetDir(dir: String, reg: ModelRegistry,
-      results: Seq[NodeResult]): Unit = {
+  def writeTargetDir(dir: String, reg: ModelRegistry, run: ModelRegistry.Run,
+      rows: Map[String, Long]): Unit = {
     val p = java.nio.file.Paths.get(dir)
     java.nio.file.Files.createDirectories(p)
     java.nio.file.Files.write(p.resolve("manifest.json"),
       manifestJson(reg).getBytes("UTF-8"))
     java.nio.file.Files.write(p.resolve("run_results.json"),
-      runResultsJson(results).getBytes("UTF-8"))
+      runResultsJson(run, rows).getBytes("UTF-8"))
   }
 }

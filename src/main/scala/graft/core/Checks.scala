@@ -6,9 +6,10 @@ import org.apache.spark.sql.functions._
 /** Data-quality checks — the engine's analogue of dbt schema tests
   * (not_null / unique / accepted_values / relationships). The reference
   * project ships none (SURVEY §5), so this is completion of the dbt surface
-  * rather than parity. Each check compiles to ONE aggregation over the
-  * frame; `runAll` unions the verdicts into a single report DataFrame so a
-  * whole table's checks execute in one pass per check.
+  * rather than parity. Each check compiles to one aggregate expression;
+  * `run` evaluates all of a frame's checks in a single aggregation job and
+  * returns one (check, violations) row per check. `relationships` is the
+  * exception: [[referentialViolations]] is its own anti-join job.
   */
 object Checks {
 

@@ -2,6 +2,7 @@ package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.collection.mutable
+import scala.util.control.NonFatal
 
 /** A named derived table in the transformation DAG — the Spark-native analogue
   * of a dbt model (reference dbt_project.yml:14-16 materializes every model as
@@ -25,31 +26,30 @@ object Model {
   }
 }
 
-/** Topological runner over registered models — the engine-side replacement for
-  * `dbt run` (reference logs/dbt.log:215 ran the 31-node DAG on 1 thread; here
-  * independent subtrees could run concurrently, and each model's plan is
-  * optimized by Catalyst before any write).
+/** The engine's `dbt run` (reference logs/dbt.log:215 ran the 31-node DAG on
+  * 1 thread): one scheduler, [[ModelRegistry.run]], builds every registered
+  * model with independent subtrees running concurrently; serial is
+  * `maxParallel = 1`. Each model's plan is optimized by Catalyst before any
+  * write.
   */
 object ModelRegistry {
-  /** One write of one model — shared by every runner (serial, parallel,
-    * artifact-capturing). Models listed in `incremental` use dbt's
-    * incremental-by-partition semantics (dynamic-partition overwrite:
-    * only the partitions present in this build are rewritten); everything
-    * else is a full table rebuild.
+  /** One model's outcome: `success`, `error` (with what it threw) or
+    * `skipped` (a dependency did not build). `seconds` run from the start
+    * of its `transform` to the end of its write.
     */
-  private[graft] def writeModel(w: graft.sources.TableWriter, name: String,
-      out: DataFrame, partitioning: Map[String, Seq[String]],
-      incremental: Set[String]): Unit = {
-    val parts = partitioning.getOrElse(name, Nil)
-    if (incremental.contains(name)) {
-      require(parts.nonEmpty,
-        s"incremental model $name needs partition columns")
-      w.upsertPartitions(out, name, parts)
-    } else w.materialize(name, out, parts)
-  }
+  final case class Result(name: String, status: String, seconds: Double,
+      error: Option[Throwable] = None)
+
+  /** One run: the sources plus every built model's frame, each model's
+    * result in topological order, and the run's wall seconds.
+    */
+  final case class Run(built: Map[String, DataFrame], results: Seq[Result],
+      seconds: Double)
 }
 
 final class ModelRegistry {
+  import ModelRegistry.{Result, Run}
+
   private val models = mutable.LinkedHashMap.empty[String, Model]
 
   def register(m: Model): this.type = { models.put(m.name, m); this }
@@ -78,86 +78,88 @@ final class ModelRegistry {
     order.toSeq
   }
 
-  /** Materialize every model in dependency order. `sources` seeds the
-    * resolution map; each model's output becomes available to its dependents
-    * under its name. Returns all built frames by name.
+  /** Build every model, continuing past failures the way `dbt run` does: a
+    * model that throws is an `error`, its transitive dependents are
+    * `skipped`, and independent subtrees still build. Each model is a
+    * memoized future gated on its dependencies' futures, on a pool of
+    * `maxParallel` threads; Spark job submission is thread-safe, so
+    * concurrent writers keep the cluster busy while long models build.
+    * Scheduling changes wall-clock, not output. Returns once every model
+    * has settled.
     *
     * With a `writer`, each model is physically written (S3 table
-    * materialization) and dependents read the materialized table — exactly
-    * dbt's table semantics, and at scale the write acts as a stage barrier
-    * that truncates lineage per model.
+    * materialization) and dependents read the materialized table — dbt's
+    * table semantics, and at scale the write acts as a stage barrier that
+    * truncates lineage per model. Models listed in `incremental` use dbt's
+    * incremental-by-partition semantics (dynamic-partition overwrite: only
+    * the partitions present in this build are rewritten); everything else
+    * is a full table rebuild.
     */
-  def runAll(spark: SparkSession, sources: Map[String, DataFrame],
+  def run(spark: SparkSession, sources: Map[String, DataFrame],
       writer: Option[graft.sources.TableWriter] = None,
       partitioning: Map[String, Seq[String]] = Map.empty,
-      incremental: Set[String] = Set.empty): Map[String, DataFrame] = {
-    val built = mutable.Map[String, DataFrame](sources.toSeq: _*)
-    topoOrder.foreach { m =>
-      val in = m.deps.map { d =>
-        d -> built.getOrElse(d,
-          throw new IllegalArgumentException(s"model ${m.name}: unresolved dep $d"))
-      }.toMap
-      val out = m.transform(spark, in)
-      built(m.name) = writer match {
-        case Some(w) =>
-          ModelRegistry.writeModel(w, m.name, out, partitioning, incremental)
-          w.read(spark, m.name)
-        case None => out
+      maxParallel: Int = 4,
+      incremental: Set[String] = Set.empty): Run = {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration.Duration
+    val t0 = System.nanoTime()
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(maxParallel)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    try {
+      val futures = mutable.Map.empty[String, Future[(Result, Option[DataFrame])]]
+      def futureFor(m: Model): Future[(Result, Option[DataFrame])] = synchronized {
+        futures.getOrElseUpdate(m.name, {
+          val depFs = m.deps.flatMap(models.get).map(futureFor)
+          Future.sequence(depFs).map { deps =>
+            if (deps.exists(_._2.isEmpty)) (Result(m.name, "skipped", 0.0), None)
+            else {
+              val t = System.nanoTime()
+              def secs = (System.nanoTime() - t) / 1e9
+              try {
+                val built = deps.map { case (r, df) => r.name -> df.get }.toMap
+                val in = m.deps.map { d =>
+                  d -> built.getOrElse(d, sources.getOrElse(d,
+                    throw new IllegalArgumentException(
+                      s"model ${m.name}: unresolved dep $d")))
+                }.toMap
+                val out = m.transform(spark, in)
+                writer.foreach { w =>
+                  val parts = partitioning.getOrElse(m.name, Nil)
+                  if (incremental.contains(m.name)) {
+                    require(parts.nonEmpty,
+                      s"incremental model ${m.name} needs partition columns")
+                    w.upsertPartitions(out, m.name, parts)
+                  } else w.materialize(m.name, out, parts)
+                }
+                val seconds = secs
+                (Result(m.name, "success", seconds),
+                  Some(writer.fold(out)(_.read(spark, m.name))))
+              } catch {
+                case NonFatal(e) => (Result(m.name, "error", secs, Some(e)), None)
+              }
+            }
+          }
+        })
       }
-    }
-    built.toMap
+      val all = topoOrder.map(futureFor)
+      val settled = all.map(f => Await.result(f, Duration.Inf))
+      Run(sources ++ settled.collect { case (r, Some(df)) => r.name -> df },
+        settled.map(_._1), (System.nanoTime() - t0) / 1e9)
+    } finally pool.shutdown()
   }
 
-  /** Parallel `dbt build`: independent DAG subtrees materialize
-    * concurrently (the reference ran its 31-node DAG on 1 thread —
-    * logs/dbt.log:215). Each model becomes a memoized future gated on its
-    * dependencies' futures; Spark job submission is thread-safe, so
-    * concurrent writers keep the cluster busy while long models build.
-    * Results are identical to [[runAll]] — scheduling changes wall-clock,
-    * not output (ModelRegistrySpec pins both). On failure every started
-    * model settles before the first failure in topological order is
-    * rethrown, so no sibling is still writing when the caller sees it.
+  /** [[run]], throwing: once every started model has settled (so no
+    * sibling is still writing when the caller sees it), the first failure
+    * in topological order is rethrown. Returns the sources plus every
+    * built frame by name.
     */
   def runAllParallel(spark: SparkSession, sources: Map[String, DataFrame],
       writer: Option[graft.sources.TableWriter] = None,
       partitioning: Map[String, Seq[String]] = Map.empty,
       maxParallel: Int = 4,
       incremental: Set[String] = Set.empty): Map[String, DataFrame] = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(maxParallel)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-    try {
-      val futures = mutable.Map.empty[String, Future[DataFrame]]
-      def futureFor(m: Model): Future[DataFrame] = synchronized {
-        futures.getOrElseUpdate(m.name, {
-          val depFs = m.deps.map { d =>
-            models.get(d) match {
-              case Some(dm) => futureFor(dm).map(d -> _)
-              case None => sources.get(d) match {
-                case Some(df) => Future.successful(d -> df)
-                // failed, not thrown: the models already started must settle
-                case None => Future.failed(new IllegalArgumentException(
-                  s"model ${m.name}: unresolved dep $d"))
-              }
-            }
-          }
-          Future.sequence(depFs).map { ins =>
-            val out = m.transform(spark, ins.toMap)
-            writer match {
-              case Some(w) =>
-                ModelRegistry.writeModel(w, m.name, out, partitioning,
-                  incremental)
-                w.read(spark, m.name)
-              case None => out
-            }
-          }
-        })
-      }
-      val all = topoOrder.map(m => m.name -> futureFor(m))
-      all.foreach { case (_, f) => Await.ready(f, Duration.Inf) }
-      val builtModels = all.map { case (n, f) => n -> f.value.get.get }
-      sources ++ builtModels
-    } finally pool.shutdown()
+    val r = run(spark, sources, writer, partitioning, maxParallel, incremental)
+    r.results.flatMap(_.error).headOption.foreach(e => throw e)
+    r.built
   }
 }

@@ -10,8 +10,8 @@ import java.time.LocalDate
 /** Wires the full reference DAG (27 models + 4 seeds; reference
   * target/graph_summary.json) as a ModelRegistry over this engine's
   * grain-parameterized transformations. Sources and seeds are supplied by
-  * name; `runAll` materializes every model in dependency order, the engine
-  * analogue of `dbt run`.
+  * name; `runAll` builds every model through the one DAG runner
+  * ([[graft.core.ModelRegistry.run]]), the engine analogue of `dbt run`.
   */
 object ReferencePipeline {
 
@@ -121,10 +121,10 @@ object ReferencePipeline {
     reg
   }
 
-  /** Run the whole DAG over the given sources. */
+  /** Run the whole DAG over the given sources (in memory, no writer). */
   def runAll(spark: SparkSession, sources: Map[String, DataFrame],
       asOf: LocalDate): Map[String, DataFrame] =
-    registry(asOf).runAll(spark, sources)
+    registry(asOf).runAllParallel(spark, sources)
 
   /** Schema tests over the built DAG — the `dbt build` test phase the
     * reference never had (SURVEY §5). Returns one (model, check,

@@ -11,6 +11,14 @@ import java.time.LocalDate
   * merchants, merchant_account_map). Fact sources default to a small built-in
   * sample so the DAG is runnable standalone; point a real deployment at its
   * own parquet/CSV facts via ReferencePipeline.runAll directly.
+  *
+  * One path: [[graft.core.ModelRegistry.run]] builds every model on the
+  * session's cores ([[graft.GraftSession.cores]]), independent subtrees in
+  * parallel, and a status line per model follows (status, rows counted
+  * after the run, seconds). With `SPARK_GRAFT_WAREHOUSE` set each model is
+  * materialized there and dbt's `target/manifest.json` and
+  * `target/run_results.json` are written under it. Exits 1 when a model
+  * errored, as `dbt run` does.
   */
 object RunReferencePipeline {
   def main(args: Array[String]): Unit = {
@@ -19,7 +27,7 @@ object RunReferencePipeline {
     val seedsDir = args.headOption
     val asOf = LocalDate.parse(
       if (args.length > 1) args(1) else "2022-03-15")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val cpus = graft.GraftSession.cores
     val spark = graft.GraftSession.builder(cpus, "graft-reference-pipeline")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -66,57 +74,29 @@ object RunReferencePipeline {
         .toDF("Date", "Ingredient", "Quantity", "Price"))
 
     // With SPARK_GRAFT_WAREHOUSE set, every model materializes to parquet
-    // (dbt table semantics) and dependents read the written tables.
+    // (dbt table semantics), dependents read the written tables, and dbt's
+    // target/manifest.json + run_results.json land next to the warehouse.
     val writer = sys.env.get("SPARK_GRAFT_WAREHOUSE")
       .map(new graft.sources.TableWriter(_))
-
-    // SPARK_GRAFT_DAG_THREADS > 1 runs independent subtrees concurrently
-    // (the reference executed its DAG on 1 thread; same results either way)
-    val dagThreads = sys.env.getOrElse("SPARK_GRAFT_DAG_THREADS", "1").toInt
-    val t0 = System.nanoTime()
     val registry = ReferencePipeline.registry(asOf)
     // rollup outputs partition by their grain so downstream reads prune
     // periods instead of scanning history (SCALE.md); at daily loads the
     // spend family could also be run incremental = same set
     val partitioning = registry.names.filter(_.startsWith("spend_"))
       .map(_ -> Seq("date_period")).toMap
-    writer match {
-      case Some(w) if dagThreads > 1 =>
-        // parallel materialized run: subtree concurrency wins over the
-        // per-node artifact capture (runWithResults is sequential)
-        registry.runAllParallel(spark, sources, Some(w), partitioning,
-          maxParallel = dagThreads)
-        println(f"DAG complete (materialized, $dagThreads threads, no " +
-          f"run_results capture): ${registry.names.size} models in " +
-          f"${(System.nanoTime() - t0) / 1e9}%.1f s")
-      case Some(w) =>
-        // materialized run: per-model status/rows/timing, dbt-style
-        // target/manifest.json + run_results.json next to the warehouse
-        val (_, results) =
-          graft.core.Artifacts.runWithResults(registry, spark, sources, w,
-            partitioning)
-        results.foreach { r =>
-          println(f"${r.status.toUpperCase}%-8s ${r.name}%-32s " +
-            f"${r.rows}%6d rows  ${r.seconds}%.2f s")
-        }
-        graft.core.Artifacts.writeTargetDir(
-          w.path("target"), registry, results)
-        println(f"DAG complete (materialized): ${results.size} models in " +
-          f"${(System.nanoTime() - t0) / 1e9}%.1f s — artifacts in " +
-          w.path("target"))
-      case None =>
-        val built =
-          if (dagThreads > 1)
-            registry.runAllParallel(spark, sources, None,
-              maxParallel = dagThreads)
-          else registry.runAll(spark, sources, None)
-        registry.topoOrder.foreach { m =>
-          val n = built(m.name).count()
-          println(f"OK  ${m.name}%-32s $n%6d rows")
-        }
-        println(f"DAG complete (in-memory): ${built.size - sources.size} " +
-          f"models in ${(System.nanoTime() - t0) / 1e9}%.1f s")
+    val run = registry.run(spark, sources, writer, partitioning,
+      maxParallel = cpus)
+    val rows = graft.core.Artifacts.rowCounts(run)
+    run.results.foreach { r =>
+      println(f"${r.status.toUpperCase}%-8s ${r.name}%-32s " +
+        f"${rows.getOrElse(r.name, 0L)}%6d rows  ${r.seconds}%.2f s")
     }
+    writer.foreach { w =>
+      graft.core.Artifacts.writeTargetDir(w.path("target"), registry, run, rows)
+    }
+    println(f"DAG complete: ${run.results.size} models in ${run.seconds}%.1f s" +
+      writer.fold("")(w => s", artifacts in ${w.path("target")}"))
     spark.stop()
+    if (run.results.exists(_.status == "error")) sys.exit(1)
   }
 }

@@ -12,9 +12,8 @@ import org.apache.spark.sql.functions._
 object RunCorpusPipeline {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = graft.GraftSession.local(
-      cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt,
-      appName = "graft-corpus-pipeline")
+    val spark = graft.GraftSession.local(graft.GraftSession.cores,
+      "graft-corpus-pipeline")
     spark.sparkContext.setLogLevel("WARN")
 
     val docs = Tables.load(spark, sfDir, "documents")

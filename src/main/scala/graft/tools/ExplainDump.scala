@@ -21,8 +21,8 @@ object ExplainDump {
     val suffix = args(2)
     val only: Option[Seq[String]] =
       if (args.length > 3) Some(args(3).split(",").toSeq) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
-    val spark = graft.GraftSession.builder(cpus, "graft-explain")
+    val spark = graft.GraftSession.builder(graft.GraftSession.cores,
+        "graft-explain")
       .config("spark.sql.maxMetadataStringLength", "2000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

@@ -56,7 +56,7 @@ class CoreSpec extends SparkSpec {
     reg.register(Model("c", Seq("b", "a")) { (_, in) => in("b").join(in("a"), Seq("x")) })
     reg.register(Model("a") { (s, _) => { import s.implicits._; Seq(1, 2).toDF("x") } })
     assert(reg.topoOrder.map(_.name) == Seq("a", "b", "c"))
-    val built = reg.runAll(spark, Map.empty)
+    val built = reg.runAllParallel(spark, Map.empty)
     assert(built("c").count() == 2)
 
     val cyc = new ModelRegistry

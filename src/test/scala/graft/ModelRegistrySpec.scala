@@ -32,7 +32,7 @@ class ModelRegistrySpec extends SparkSpec {
 
   test("parallel runner produces the same results as the serial runner") {
     val serial = diamond(new AtomicInteger, new AtomicInteger)
-      .runAll(spark, Map("src" -> src))
+      .runAllParallel(spark, Map("src" -> src), maxParallel = 1)
     val parallel = diamond(new AtomicInteger, new AtomicInteger)
       .runAllParallel(spark, Map("src" -> src))
     val s = serial("joined").orderBy("x").collect().map(_.toString)
@@ -45,17 +45,20 @@ class ModelRegistrySpec extends SparkSpec {
     val peak = new AtomicInteger
     diamond(running, peak).runAllParallel(spark, Map("src" -> src))
     assert(peak.get() >= 2, s"peak concurrency was ${peak.get()}")
-    // and the serial runner never overlaps
+    // and maxParallel = 1 never overlaps
     val sRunning = new AtomicInteger
     val sPeak = new AtomicInteger
-    diamond(sRunning, sPeak).runAll(spark, Map("src" -> src))
+    diamond(sRunning, sPeak).runAllParallel(spark, Map("src" -> src),
+      maxParallel = 1)
     assert(sPeak.get() == 1)
   }
 
   test("unresolved dependency fails with a clear error on both paths") {
     val reg = new ModelRegistry
     reg.register(Model("m", Seq("missing")) { (_, in) => in("missing") })
-    intercept[IllegalArgumentException] { reg.runAll(spark, Map.empty) }
+    intercept[IllegalArgumentException] {
+      reg.runAllParallel(spark, Map.empty, maxParallel = 1)
+    }
     intercept[IllegalArgumentException] {
       reg.runAllParallel(spark, Map.empty)
     }
@@ -91,24 +94,26 @@ class ModelRegistrySpec extends SparkSpec {
     val inc = Set("daily")
 
     val full = Seq(("d1", 1L), ("d1", 2L), ("d2", 10L)).toDF("day", "x")
-    reg.runAll(spark, Map("src" -> full), Some(w), parts, inc)
+    reg.runAllParallel(spark, Map("src" -> full), Some(w), parts,
+      incremental = inc)
     // incremental day-2 reload with corrected data; day-1 must survive
     val day2 = Seq(("d2", 99L)).toDF("day", "x")
-    reg.runAll(spark, Map("src" -> day2), Some(w), parts, inc)
+    reg.runAllParallel(spark, Map("src" -> day2), Some(w), parts,
+      incremental = inc)
 
     val got = w.read(spark, "daily").as[(Long, String)].collect()
       .map(_.swap).toMap
     assert(got == Map("d1" -> 3L, "d2" -> 99L))
 
     // a FULL rebuild from the day-2-only source would drop day 1
-    reg.runAll(spark, Map("src" -> day2), Some(w), parts)
+    reg.runAllParallel(spark, Map("src" -> day2), Some(w), parts)
     assert(w.read(spark, "daily").count() == 1)
 
     // incremental without partition columns is a hard error
     val noParts = new ModelRegistry
     noParts.register(Model("daily", Seq("src")) { (_, in) => in("src") })
     intercept[IllegalArgumentException] {
-      noParts.runAll(spark, Map("src" -> day2), Some(w),
+      noParts.runAllParallel(spark, Map("src" -> day2), Some(w),
         incremental = Set("daily"))
     }
   }
@@ -126,11 +131,13 @@ class ModelRegistrySpec extends SparkSpec {
     reg.register(Model("independent", Seq("good")) { (_, in) => in("good") })
 
     val wh = java.nio.file.Files.createTempDirectory("graft_art_").toString
-    val (built, results) = Artifacts.runWithResults(
-      reg, spark, Map("src" -> src), new graft.sources.TableWriter(wh))
+    val run = reg.run(spark, Map("src" -> src),
+      Some(new graft.sources.TableWriter(wh)))
+    val built = run.built
+    val rows = Artifacts.rowCounts(run)
 
-    val byName = results.map(r => r.name -> r).toMap
-    assert(byName("good").status == "success" && byName("good").rows == 10L)
+    val byName = run.results.map(r => r.name -> r).toMap
+    assert(byName("good").status == "success" && rows("good") == 10L)
     assert(byName("bad").status == "error" && byName("bad").error.nonEmpty)
     assert(byName("downstream").status == "skipped")
     // the failure doesn't poison the independent subtree (dbt run semantics)
@@ -139,7 +146,7 @@ class ModelRegistrySpec extends SparkSpec {
     // materialized read-back, not the lazy plan
     assert(spark.read.parquet(s"$wh/good").count() == 10L)
 
-    Artifacts.writeTargetDir(s"$wh/target", reg, results)
+    Artifacts.writeTargetDir(s"$wh/target", reg, run, rows)
     val manifest = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(s"$wh/target/manifest.json")), "UTF-8")
     assert(manifest.contains("\"name\": \"downstream\""))
@@ -149,5 +156,22 @@ class ModelRegistrySpec extends SparkSpec {
     assert(rr.contains("\"status\": \"skipped\""))
     assert(rr.contains("\"status\": \"error\"") && rr.contains("message"))
     assert(rr.contains("elapsed_time"))
+  }
+
+  test("run_results elapsed_time is the run's wall time, not the node sum") {
+    val reg = diamond(new AtomicInteger, new AtomicInteger)
+    val run = reg.run(spark, Map("src" -> src))
+    val nodeSum = run.results.map(_.seconds).sum
+    assert(run.results.forall(_.status == "success"))
+    // a and b overlap, so the run is shorter than its nodes' total
+    assert(run.seconds < nodeSum, s"run ${run.seconds} s vs nodes $nodeSum s")
+    val json = graft.core.Artifacts.runResultsJson(run,
+      graft.core.Artifacts.rowCounts(run))
+    val elapsed = "\"elapsed_time\": ([0-9.]+)".r
+      .findFirstMatchIn(json).get.group(1).toDouble
+    val nodes = "\"execution_time\": ([0-9.]+)".r
+      .findAllMatchIn(json).map(_.group(1).toDouble).sum
+    // margin: per-node rounding to ms must not make a serial sum pass
+    assert(elapsed < nodes - 0.1, json)
   }
 }

@@ -9,7 +9,8 @@ import scala.jdk.CollectionConverters._
 /** Source guards for drifts that were removed: sessions built outside
   * [[GraftSession.builder]], session caches in [[SparkEntry]] declared
   * as ad-hoc maps instead of a [[Fixture]] (which is what releases them),
-  * and index-protocol file names built outside `IndexProtocol.scala`.
+  * index-protocol file names built outside `IndexProtocol.scala`, and
+  * DAG loops other than `ModelRegistry.run`.
   * The patterns are spelled in pieces so this file does not match itself.
   */
 class SourceGuardSpec extends AnyFunSuite {
@@ -55,5 +56,20 @@ class SourceGuardSpec extends AnyFunSuite {
     } yield s"${p.getFileName}:${i + 1}: $lit"
     assert(offenders.isEmpty,
       s"index protocol names built outside IndexProtocol: $offenders")
+  }
+
+  test("one DAG loop: models are transformed only by ModelRegistry.run") {
+    // Model.transform takes (spark, inputs); Dataset.transform takes one
+    // function, so a two-argument call is a model being built
+    val modelCall = ("\\.trans" + "form\\(\\s*\\w+\\s*,").r
+    val calls = for {
+      p <- scalaFiles("src/main")
+      (line, i) <- read(p).split("\n").zipWithIndex
+      code = line.trim
+      if !code.startsWith("*") && !code.startsWith("/*") && !code.startsWith("//")
+      if modelCall.findFirstIn(line).nonEmpty
+    } yield s"${p.getParent.getFileName}/${p.getFileName}:${i + 1}"
+    assert(calls.size == 1 && calls.head.startsWith("core/Model.scala:"),
+      s"model transform calls outside the one runner: $calls")
   }
 }

@@ -142,7 +142,7 @@ class TableWriterSpec extends SparkSpec {
       in("facts").groupBy("date_period").agg(sum("v").as("total"))
     })
 
-    val built = reg.runAll(spark, Map.empty, Some(writer),
+    val built = reg.runAllParallel(spark, Map.empty, Some(writer),
       Map("facts" -> Seq("date_period")))
     assert(built("rollup").count() == 2)
 
