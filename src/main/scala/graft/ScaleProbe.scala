@@ -1,1710 +1,92 @@
 package graft
 
-import graft.operators.{Dedup, Retrieval, Similarity}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-
-/** Measured scale probe for the heavy operator family: replicates the
-  * sf0.1 inputs `mult`× (default 10×, with per-replica text mutation so
-  * replicas form NEAR-dup families rather than exact dups — the harder
-  * shape for the dedup paths) and wall-clocks each heavy path at 1× and
-  * at mult×. This is the "would it survive a scale-up" check run as a
-  * MEASUREMENT, not an assertion; results are recorded in SCALE.md.
+/** Scale probe: runs registry entries on an sf dir and on its
+  * `mult`×-replicated copy ([[ScaleData]]) and prints, per entry, the cold
+  * and steady wall time at each scale and their ratio. It measures the
+  * entries exactly as the oracle checks them, through
+  * [[SparkEntry.queries]], so a scale number always belongs to a checked
+  * entry. Results are recorded in SCALE.md.
   *
-  * Usage: runMain graft.ScaleProbe [sfDir] [mult] [probes]
-  *   probes: comma-separated subset of
-  *     d3,d11,d15,d18,d21,d35,d36,d37,bpe,v3,v5,v6,v8,v9,v12,v17,q32,
-  *     d33,d34,q59,q62,q63,q69,q70,q71,q20,q43,bm25,stream,restart,
-  *     clone,gapfill,analytics,triangles,maxscore,vocab,d36h
-  *   (default: all except stream)
-  *   — selectable because the probes scale very differently on purpose:
-  *   d18's exact all-pairs twin is EXPECTED to stop being runnable as the
-  *   corpus grows (its cutover point is the measurement), and running it
-  *   at 100× would hide the scalable paths behind hours of exact-pair
-  *   output.
+  * Usage: runMain graft.ScaleProbe sfDir [mult] [names]
+  *   sfDir: the source sf dir
+  *   mult:  replication factor (default 10)
+  *   names: comma-separated registry entry names (default [[defaultEntries]])
+  *
+  * The action forces the entry's whole output with a noop write: a
+  * `.count()` lets Catalyst prune the columns, and with them most of the
+  * work, of entries such as `d35_span_dedup`. Cold is an entry's first
+  * run at a scale, fixture builds included; steady is its second. The
+  * N× cold run reuses the classes the 1× pass compiled, because Spark's
+  * codegen cache is JVM-wide.
   */
 object ScaleProbe {
+
+  /** One registry entry per heavy path the scale notes in SCALE.md cover. */
+  val defaultEntries: Seq[String] = Seq(
+    "d3_minhash_lsh", "d11_dedup_clusters", "d15_corpus_pipeline",
+    "d18_jaccard_prefix", "d21_line_dedup", "d35_span_dedup",
+    "d36_semdedup", "d37_incremental_minhash", "d28_bpe_apply",
+    "d33_curriculum_pack", "d34_cluster_rep", "d41_dsir_select",
+    "d43_quality_classifier", "d44_triangle_count", "d45_countmin",
+    "v3_ann_ivf", "v4_ann_topk_agg", "v5_ann_sq8", "v6_ann_ivf_sq8",
+    "v8_ann_pq", "v9_ann_ivfpq_index", "v10_bm25_topk", "v12_ann_ivf_append",
+    "v13_bm25_append", "v14_phrase_topk", "v17_ann_delete",
+    "v21_bm25_maxscore", "q20_asof_join", "q32_classified",
+    "q43_interval_join", "q59_snapshot_store", "q62_incremental_merge",
+    "q63_bucketed_join", "q69_compaction", "q70_zorder_cluster",
+    "q71_delete_by_key", "q88_run_all_parallel", "q90_cdc_feed",
+    "q95_shallow_clone", "q96_gapfill", "q101_funnel", "q102_retention",
+    "q112_snapshot_read", "q118_versioned_table", "q120_mv_rewrite",
+    "q121_mv_compensation", "q124_bloom_skip", "q126_mv_refresh",
+    "q129_mv_comp_extrema", "q135_vt_occ", "q136_vt_cdf_stream")
+
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
+    require(args.nonEmpty, "usage: graft.ScaleProbe sfDir [mult] [names]")
+    val sfDir = args(0)
     val mult = if (args.length > 1) args(1).toInt else 10
-    val probes: Set[String] =
-      if (args.length > 2) args(2).split(",").toSet
-      else Set("d3", "d11", "d15", "d18", "d21", "d35", "d36", "d37", "bpe",
-        "v3", "v5", "v6", "q32", "d33", "d34", "q59", "q62", "q63", "q69",
-        "q70", "q71", "q20", "q43", "v8", "v9", "v12", "v17", "bm25",
-        "dsir", "phrase", "cdc", "clf", "clone", "gapfill", "analytics",
-        "mvrewrite", "bloomskip", "mvrefresh",
-        "triangles", "ranktopk", "ivftrain", "recovery", "annrank",
-        "snapshot", "vtable", "manifest", "mvext", "occ", "vtstream")
-    def on(p: String) = probes.contains(p)
-    val cpus = GraftSession.cores
-    val spark = GraftSession.builder(cpus, "graft-scale-probe").getOrCreate()
+    val names = if (args.length > 2) args(2).split(",").toSeq else defaultEntries
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"not registry entries: ${unknown.mkString(", ")}")
+    val spark = GraftSession.builder(GraftSession.cores, "graft-scale-probe")
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    Bench.warmUp(spark, sfDir)
 
-    def t(name: String)(body: => Long): Unit = {
+    def timed[T](body: => T): (T, Double) = {
       val t0 = System.nanoTime()
-      val rows = body
-      println(f"PROBE $name%-28s ${(System.nanoTime() - t0) / 1e9}%8.2f s  ($rows rows)")
+      val v = body
+      (v, (System.nanoTime() - t0) / 1e9)
     }
+    // (cold, steady) seconds per entry; None when the entry threw
+    def measure(label: String, dir: String): Map[String, Option[(Double, Double)]] =
+      names.map { name =>
+        def once() = timed(SparkEntry.queries(name)(spark, dir)
+          .write.format("noop").mode("overwrite").save())._2
+        val r = try Some((once(), once())) catch { case e: Throwable =>
+          println(s"PROBE $name $label FAILED: ${e.getMessage}")
+          None
+        }
+        r.foreach { case (c, s) =>
+          println(f"PROBE $name%-26s $label%4s cold $c%8.2f s  steady $s%8.2f s")
+        }
+        name -> r
+      }.toMap
 
-    def replicate(df: DataFrame, idCol: String, n: Int,
-        mutate: Boolean): DataFrame =
-      (0 until n).map { r =>
-        val shifted = df.withColumn(idCol, col(idCol) + lit(r * 10000000L))
-        if (mutate && r > 0)
-          shifted.withColumn("text", concat(col("text"), lit(s" rep$r")))
-        else shifted
-      }.reduce(_ unionByName _)
+    val one = measure("1x", sfDir)
+    SparkEntry.releaseSessionCaches()
+    // written into the scratch warehouse, which the release at the end
+    // empties, replicated dir included
+    val (dirN, gen) = timed(ScaleData.write(spark, sfDir, mult,
+      Fixture.freshDir(s"scale_${mult}x")))
+    println(f"PROBE generated the ${mult}x copy of $sfDir in $gen%.1f s")
+    val many = try measure(s"${mult}x", dirN)
+      finally SparkEntry.releaseSessionCaches()
 
-    if (probes.intersect(
-        Set("d3", "d11", "d15", "d18", "d21", "d35", "d37", "bpe", "d33",
-          "d34", "bm25", "dsir", "phrase", "clf", "maxscore", "recovery",
-          "ranktopk", "annrank", "snapshot")).nonEmpty) {
-      val docs1 = graft.sources.Tables.load(spark, sfDir, "documents")
-      val docsN = replicate(docs1, "doc_id", mult, mutate = true)
-        .repartition(cpus).persist()
-      println(s"corpus: ${docs1.count()} docs -> ${docsN.count()} docs (${mult}x)")
-
-      for ((label, d) <- Seq("1x" -> docs1, s"${mult}x" -> docsN)) {
-        if (on("d3")) t(s"d3_minhash_verify_$label") {
-          Dedup.verifyPairsExact(d,
-            Dedup.minhashLshPairs(d, "doc_id", "text",
-              n = 3, numHashes = 64, bands = 32, minEstJaccard = 0.0),
-            "doc_id", "text", n = 3, threshold = 0.35).count()
-        }
-        if (on("d11")) t(s"d11_pairs_clusters_$label") {
-          Dedup.clusters(Dedup.ngramJaccardPairs(d, "doc_id", "text",
-            n = 3, threshold = 0.2, maxDocFreq = 50L)).count()
-        }
-        if (on("d15")) t(s"d15_corpus_pipeline_$label") {
-          graft.pipeline.CorpusPipeline.clean(d)
-            .groupBy(col("lang")).agg(count(lit(1))).count()
-        }
-        if (on("d18")) t(s"d18_prefix_jaccard_$label") {
-          Dedup.ngramJaccardPairsPrefix(d, "doc_id", "text",
-            n = 3, threshold = 0.35).count()
-        }
-        // d35: cross-doc span dedup (Lee et al.) — ONE gram-keyed shuffle
-        // over in-row 8-grams; replicas share their pre-mutation passages,
-        // so duplicated-span mass GROWS with mult (the hard direction)
-        // sum over the REBUILT text (not .count()): the output is one row
-        // per doc through left joins on unique keys, so a bare count lets
-        // the optimizer collapse the whole strike/reassemble pipeline —
-        // measured: flat 0.8 s from 5k to 500k docs, i.e. nothing ran
-        if (on("d35")) t(s"d35_span_dedup_$label") {
-          Dedup.spanDedup(d, "doc_id", "text", k = 8)
-            .select(sum(length(col("cleaned"))) + sum(col("n_dup_pos")))
-            .head().getLong(0)
-        }
-        // d21: line-boilerplate strike — two line-keyed shuffles. The
-        // testdata text carries no newlines, so a line structure is
-        // synthesized the way the d21 fixture does: a header every doc
-        // shares, the doc body, a per-group promo line, a unique tail.
-        if (on("d21")) t(s"d21_line_dedup_$label") {
-          val lined = d.withColumn("text", concat_ws("\n",
-            lit("=== COMMON HEADER ==="), col("text"),
-            concat(lit("group"), pmod(col("doc_id"), lit(97)),
-              lit(" shared promo line")),
-            concat(lit("tail "), col("doc_id"))))
-          Dedup.dropBoilerplateLines(lined, "doc_id", "text",
-              maxLineDocFreq = 50L)
-            .select(sum(length(col("text")))).head().getLong(0)
-        }
-        // d37: incremental dedup against a persisted band index. The NEW
-        // batch is FIXED (the base corpus's %10 slice — one crawl
-        // increment) while the indexed corpus grows with mult, so the two
-        // timers separate the once-per-corpus index build (~linear) from
-        // the per-batch incremental cost (one broadcast-join scan of the
-        // index, no signature recompute for indexed docs).
-        if (on("d37")) {
-          // batch = a small crawl increment (0.1% of the base corpus, a
-          // FIXED workload) against an index that grows with mult; the
-          // bucket count follows the index (the sizing rule), so the
-          // pruned probe's read fraction shrinks as the index grows
-          val newBatch = docs1.filter(col("doc_id") % 100 === 0)
-          val oldDocs = d.filter(col("doc_id") % 10 =!= 0)
-          val bCount = if (label == "1x") 64 else 64 * mult
-          val idxDir = java.nio.file.Files
-            .createTempDirectory("probe_lshidx_").toString
-          val w = new graft.sources.TableWriter(idxDir)
-          t(s"d37_index_build_$label") {
-            Dedup.buildLshBandIndex(
-              Dedup.minhashBandRows(
-                Dedup.minhashSignatures(oldDocs, "doc_id", "text",
-                  n = 3, numHashes = 64), numHashes = 64, bands = 32),
-              w, "lsh_bands", buckets = bCount)
-            spark.read.parquet(s"$idxDir/lsh_bands").count()
-          }
-          t(s"d37_incremental_$label") {
-            val nb = Dedup.minhashBandRows(
-              Dedup.minhashSignatures(newBatch, "doc_id", "text",
-                n = 3, numHashes = 64), numHashes = 64, bands = 32)
-            val hit = nb.select(pmod(col("band_hash"), lit(bCount.toLong))
-              .cast("int")).distinct().count()
-            println(s"PROBE-INFO d37_$label: batch hits $hit of $bCount " +
-              s"index buckets (${100L * hit / bCount}% read)")
-            val cands = Dedup.incrementalLshCandidatesIndexed(
-                spark, w, "lsh_bands", nb, buckets = bCount)
-              .select(col("id_old").as("id_a"), col("id_new").as("id_b"))
-            val candIds = cands.select(col("id_a").as("doc_id"))
-              .unionByName(cands.select(col("id_b").as("doc_id"))).distinct()
-            val slim = d.join(candIds, Seq("doc_id"), "left_semi")
-            Dedup.verifyPairsExact(slim, cands, "doc_id", "text",
-              n = 3, threshold = 0.35).count()
-          }
-          Fixture.deleteTree(idxDir)
-        }
-        if (on("bpe")) t(s"d28_bpe_tokens_$label") {
-          // corpus-linear per-row merge loop (memoized per distinct word)
-          d.select(graft.functions.Bpe.bpeTokenCount(col("text")).as("n"))
-            .agg(sum(col("n"))).count()
-        }
-        // d33/d34 probe the LM-model family end to end at scale: train
-        // (model TABLES + broadcast-join apply — the round-6 scale-safe
-        // shape; nothing vocabulary-sized on the driver), then the full
-        // curriculum rank+pack / cluster-argmax compositions
-        if (on("d33")) t(s"d33_curriculum_$label") {
-          val model = SparkEntry.lmModelFrom(d)
-          val n = SparkEntry.curriculumChain(
-            SparkEntry.lmScoredDocsFrom(d, model)).count()
-          model._1.unpersist(blocking = false)
-          model._2.unpersist(blocking = false)
-          n
-        }
-        if (on("d34")) t(s"d34_cluster_rep_$label") {
-          val model = SparkEntry.lmModelFrom(d)
-          val pairs = Dedup.ngramJaccardPairs(d, "doc_id", "text",
-            n = 3, threshold = 0.2, maxDocFreq = 50L)
-          val n = SparkEntry.clusterRepChain(
-            SparkEntry.lmScoredDocsFrom(d, model), pairs).count()
-          model._1.unpersist(blocking = false)
-          model._2.unpersist(blocking = false)
-          n
-        }
-        // BM25 serving index: build is the once-per-corpus-version cost
-        // (~linear: tokenize + one combine-agg shuffle + bucketed write);
-        // append ingests a FIXED batch (one crawl increment) so its cost
-        // must stay flat as the indexed corpus grows; the query probe
-        // runs a fixed workload against each index size. HONESTY NOTE:
-        // this corpus's 31-term vocabulary makes every query term a
-        // max-df term, so the candidate set IS the corpus and query time
-        // tracks corpus size BY CONSTRUCTION — on a real (Zipf, 100k+
-        // term) vocabulary the candidate set tracks query-term document
-        // frequency instead; what this probe CAN pin is that build and
-        // append stay linear/flat and the query plan stays
-        // bucket-pruned.
-        if (on("bm25")) {
-          val whDir = java.nio.file.Files
-            .createTempDirectory("probe_bm25_").toString
-          val w = new graft.sources.TableWriter(whDir)
-          t(s"bm25_index_build_$label") {
-            Retrieval.buildBm25Index(d, w, "docs")
-            spark.read.parquet(s"$whDir/docs_postings").count()
-          }
-          val qs = Retrieval.queryTerms(docs1, col("doc_id") % 97 === 0, 8)
-          t(s"bm25_query_$label") {
-            Retrieval.queryBm25Index(spark, w, "docs", qs, k = 10,
-              excludeSelf = true).count()
-          }
-          t(s"bm25_append_$label") {
-            Retrieval.appendBm25Index(
-              docs1.filter(col("doc_id") % 10 === 0)
-                .withColumn("doc_id", col("doc_id") + lit(990000000L)),
-              w, "docs")
-            spark.read.parquet(s"$whDir/docs_vocab").count()
-          }
-          Fixture.deleteTree(whDir)
-        }
-        // Max-score serving on the DELIBERATELY high-df adversary the r8
-        // verdict asked for (production queries contain stop words): five
-        // universal terms are appended to EVERY doc (max df), plus one of
-        // 97 rare marker terms per doc (df ≈ N/97). Queries mix the
-        // three stop words with the query doc's rare marker. The naive
-        // plan drags the whole corpus through the fold shuffle (every doc
-        // matches the stop words); max-score proves the stop words
-        // non-essential and bounds candidates by the marker's df — the
-        // candidate FRACTION shrinks as the corpus grows, so pruned query
-        // time must stay near-flat while naive grows corpus-linearly.
-        // Same shape for phrase search: the phrase "za zb u<q>" matches
-        // only the marker's docs, and rarest-term-first candidacy keeps
-        // the intersection shuffle marker-bounded instead of fanning
-        // df(za) = N postings into it.
-        if (on("maxscore")) {
-          val zd = d.withColumn("text",
-            concat(col("text"), lit(" za zb zc zd ze u"),
-              pmod(col("doc_id"), lit(97L)))).persist()
-          val qdocs = docs1.filter(col("doc_id") % 97 === 0)
-            .select(col("doc_id").as("query_id"),
-              concat(lit("u"), pmod(col("doc_id"), lit(97L))).as("uterm"))
-          val qs = qdocs.select(col("query_id"),
-            explode(array(lit("za"), lit("zb"), lit("zc"), col("uterm")))
-              .as("term"))
-          val whDir = java.nio.file.Files
-            .createTempDirectory("probe_ms_").toString
-          val w = new graft.sources.TableWriter(whDir)
-          t(s"ms_bm25_build_$label") {
-            Retrieval.buildBm25Index(zd, w, "docs")
-            spark.read.parquet(s"$whDir/docs_postings").count()
-          }
-          t(s"ms_bm25_naive_$label") {
-            Retrieval.queryBm25Index(spark, w, "docs", qs, k = 10,
-              excludeSelf = true).count()
-          }
-          t(s"ms_bm25_maxscore_$label") {
-            Retrieval.queryBm25IndexMaxScore(spark, w, "docs", qs, k = 10,
-              excludeSelf = true).count()
-          }
-          Fixture.deleteTree(whDir)
-          val pdDir = java.nio.file.Files
-            .createTempDirectory("probe_msp_").toString
-          val wp = new graft.sources.TableWriter(pdDir)
-          t(s"ms_pos_build_$label") {
-            Retrieval.buildPositionalIndex(zd, wp, "docs")
-            spark.read.parquet(s"$pdDir/docs_positions").count()
-          }
-          // "zd ze u<q>" is consecutive in every marked doc's suffix
-          val phrases = qdocs.select(col("query_id"),
-            array(lit("zd"), lit("ze"), col("uterm")).as("terms"))
-          t(s"ms_phrase_rarest_$label") {
-            Retrieval.phraseQuery(spark, wp, "docs", phrases, k = 10,
-              excludeSelf = true).count()
-          }
-          Fixture.deleteTree(pdDir)
-          zd.unpersist(blocking = false)
-        }
-        // ranktopk: the r9 verdict's weak, isolated — per-query rank must
-        // not sort one query's candidate mass in a single task. A scored
-        // candidate frame where ONE query owns the ENTIRE corpus (the
-        // stop-word-query worst case: every doc holds the query's term)
-        // is ranked both ways: the old `row_number over partitionBy
-        // (query_id)` window (single-task sort — cost grows with the
-        // candidate count) vs the bounded-heap TopKRankAggregator the
-        // serving paths now use (map-side ≤k rows per partition — cost
-        // tracks partitions×k, near-flat in candidates). Also times the
-        // REAL serving path with one 1%-df marker query against the
-        // index, where the rank stage is no longer the scaling term.
-        if (on("ranktopk")) {
-          // candidate mass = corpus × 100 (each doc fans into 100 scored
-          // candidate rows): at 100× this is a 50M-row candidate set for
-          // ONE query — the 10⁸-rows-at-100TB shape, scaled to the box
-          val cand = d
-            .select(explode(sequence(lit(0L), lit(99L))).as("f"),
-              col("doc_id"))
-            .select(lit(0L).as("query_id"),
-              (col("doc_id") * 100L + col("f")).as("doc_id"),
-              lit(1L).as("n_hit"),
-              (pmod(xxhash64(col("doc_id"), col("f")), lit(1000000L))
-                .cast("double")
-                / lit(1000000.0)).cast("decimal(38,18)").as("score"))
-            .persist()
-          println(s"  ranktopk candidate mass: ${cand.count()} rows, 1 query")
-          t(s"rank_window_$label") {
-            val w = org.apache.spark.sql.expressions.Window
-              .partitionBy(col("query_id"))
-              .orderBy(col("score").desc, col("doc_id").asc)
-            cand.withColumn("rank", row_number().over(w))
-              .filter(col("rank") <= 10)
-              .agg(sum(col("doc_id"))).head(); 10L
-          }
-          t(s"rank_heap_$label") {
-            val topk = udaf(new graft.functions.TopKRankAggregator(10),
-              org.apache.spark.sql.Encoders.product[graft.functions.RankedDoc])
-            cand.groupBy("query_id")
-              .agg(topk(col("score"), col("doc_id"), col("n_hit")).as("top"))
-              .select(posexplode(col("top")).as(Seq("pos", "r")))
-              .agg(sum(col("r.docId"))).head(); 10L
-          }
-          cand.unpersist(blocking = false)
-          // the real serving path with the same 1%-candidate shape: one
-          // query holding a df≈N/100 marker term
-          val md = d.withColumn("text",
-            concat(col("text"), lit(" mk"), pmod(col("doc_id"), lit(100L))))
-          val whDir = java.nio.file.Files
-            .createTempDirectory("probe_rtk_").toString
-          val w = new graft.sources.TableWriter(whDir)
-          t(s"rank_serving_build_$label") {
-            Retrieval.buildBm25Index(md, w, "docs")
-            spark.read.parquet(s"$whDir/docs_stats").count()
-          }
-          val oneQ = spark.range(1)
-            .select(lit(0L).as("query_id"), lit("mk7").as("term"))
-          t(s"rank_serving_query_$label") {
-            Retrieval.queryBm25Index(spark, w, "docs", oneQ, k = 10).count()
-          }
-          Fixture.deleteTree(whDir)
-        }
-        if (on("annrank")) {
-          // the ANN twin of ranktopk: same 100-fanout candidate mass for
-          // ONE query, DOUBLE-scored (the vector family's native type),
-          // ranked by the window vs TopKRankAggregatorD — the shape
-          // queryIvfIndex/queryIvfPqIndex now serve through
-          val cand = d
-            .select(explode(sequence(lit(0L), lit(99L))).as("f"),
-              col("doc_id"))
-            .select(lit(0L).as("query_id"),
-              (col("doc_id") * 100L + col("f")).as("nbr_id"),
-              (pmod(xxhash64(col("doc_id"), col("f")), lit(1000000L))
-                .cast("double") / lit(1000000.0)).as("sim"))
-            .persist()
-          println(s"  annrank candidate mass: ${cand.count()} rows, 1 query")
-          t(s"annrank_window_$label") {
-            val w = org.apache.spark.sql.expressions.Window
-              .partitionBy(col("query_id"))
-              .orderBy(col("sim").desc, col("nbr_id").asc)
-            cand.withColumn("rank", row_number().over(w))
-              .filter(col("rank") <= 10)
-              .agg(sum(col("nbr_id"))).head(); 10L
-          }
-          t(s"annrank_heap_$label") {
-            val topk = udaf(new graft.functions.TopKRankAggregatorD(10),
-              org.apache.spark.sql.Encoders.product[graft.functions.RankedDocD])
-            cand.groupBy("query_id")
-              .agg(topk(col("sim"), col("nbr_id")).as("top"))
-              .select(posexplode(col("top")).as(Seq("pos", "r")))
-              .agg(sum(col("r.docId"))).head(); 10L
-          }
-          cand.unpersist(blocking = false)
-        }
-        if (on("snapshot")) {
-          // snapshot-read cost at scale, both states: QUIESCENT serving
-          // must match the unguarded plan (the guard is 3 metadata calls),
-          // and the CRASHED state (uncommitted batch + dirty flag + damaged
-          // vocab buckets) must cost ~one extra pruned scan — stats from
-          // the flag, damaged-bucket dfs recomputed from committed postings
-          val whDir = java.nio.file.Files
-            .createTempDirectory("probe_snap_").toString
-          val w = new graft.sources.TableWriter(whDir)
-          t(s"snapshot_build3_$label") {
-            (0 to 2).foreach(c => Retrieval.appendBm25IndexBatch(
-              d.filter(pmod(col("doc_id"), lit(4)) === c), w, "docs", c))
-            spark.read.parquet(s"$whDir/docs_stats").count()
-          }
-          val qs = Retrieval.queryTerms(d.filter(pmod(col("doc_id"), lit(4)) < 3),
-            col("doc_id") % 997 === 0, 8)
-          t(s"snapshot_quiescent_$label") {
-            Retrieval.queryBm25Index(spark, w, "docs", qs, k = 10).count()
-          }
-          t(s"snapshot_inject_$label") {
-            Retrieval.injectCrashedBm25Append(
-              d.filter(pmod(col("doc_id"), lit(4)) === 3), w, "docs", 3L)
-            1L
-          }
-          t(s"snapshot_crashed_$label") {
-            Retrieval.queryBm25Index(spark, w, "docs", qs, k = 10).count()
-          }
-          Fixture.deleteTree(whDir)
-        }
-        // d41: DSIR — one (doc, bin) combine shuffle, a 64-row bag model,
-        // TakeOrdered selection. Must scale ~linearly in corpus size
-        // (nothing grows with the model: bins are constant).
-        // d43: in-engine classifier training — iters × two broadcast-
-        // join + combine-agg passes over the persisted (doc, bin)
-        // feature frame; the model is 17 driver doubles per step.
-        // Must scale ~linearly in corpus size.
-        if (on("clf")) t(s"d43_classifier_$label") {
-          graft.operators.Classifier.logisticQualityTopK(d,
-            col("lang") === "en", buckets = 16, iters = 3, k = 200).count()
-        }
-        if (on("dsir")) t(s"d41_dsir_$label") {
-          graft.operators.Sampling.dsirTopK(d, col("lang") === "en",
-            buckets = 64, k = 200).count()
-        }
-        // v14: positional index build (~linear tokenize + one shuffle) and
-        // phrase query over a FIXED query set — the query cost must track
-        // the query terms' posting mass (bucket-pruned read), which here
-        // grows with mult because every replica shares the query docs'
-        // leading trigram (the hard direction: candidates scale with the
-        // corpus, the read stays pruned).
-        if (on("phrase")) {
-          val whDir = java.nio.file.Files
-            .createTempDirectory("probe_pos_").toString
-          val w = new graft.sources.TableWriter(whDir)
-          t(s"v14_pos_build_$label") {
-            Retrieval.buildPositionalIndex(d, w, "docs")
-            spark.read.parquet(s"$whDir/docs_positions").count()
-          }
-          val phrases = docs1
-            .filter(col("doc_id") % 97 === 0
-              && size(split(col("text"), " ")) >= 3)
-            .select(col("doc_id").as("query_id"),
-              slice(split(col("text"), " "), 1, 3).as("terms"))
-          t(s"v14_phrase_query_$label") {
-            Retrieval.phraseQuery(spark, w, "docs", phrases, k = 10,
-              excludeSelf = true).count()
-          }
-          Fixture.deleteTree(whDir)
-        }
-      }
-      docsN.unpersist()
-    }
-
-    // CDC merge feed: the table grows mult× while the update batch stays
-    // FIXED (one crawl/ops increment) and the bucket count scales with
-    // the table (the 100 TB sizing rule: bucket volume held constant).
-    // Expected: base load ~linear; the batched update+feed FLAT —
-    // cost = touched buckets × bucket volume, both mult-independent;
-    // the idempotent re-run pays the same read but writes nothing new.
-    if (on("cdc")) {
-      val o1 = graft.sources.Tables.load(spark, sfDir, "orders")
-        .select(col("o_orderkey").as("k"),
-          col("o_totalprice").cast("decimal(18,2)").as("price"))
-      for ((label, n) <- Seq("1x" -> 1, s"${mult}x" -> mult)) {
-        val oN = (0 until n).map(r =>
-            o1.withColumn("k", col("k") + lit(r * 1000000000L)))
-          .reduce(_ unionByName _).repartition(cpus).persist()
-        oN.count()
-        val buckets = 16 * n
-        val whDir = java.nio.file.Files
-          .createTempDirectory("probe_cdc_").toString
-        val w = new graft.sources.TableWriter(whDir)
-        def feedRows(): Long = spark.read.parquet(s"$whDir/t_changes").count()
-        t(s"cdc_base_load_$label") {
-          w.mergeByKeyCdc(spark, "t", oN, "k", batchId = 1L,
-            numBuckets = buckets)
-          feedRows()
-        }
-        val batch = o1.filter(col("k") % 1000 === 0)
-          .withColumn("price",
-            (col("price") + lit(1).cast("decimal(18,2)"))
-              .cast("decimal(18,2)"))
-        t(s"cdc_update_batch_$label") {
-          w.mergeByKeyCdc(spark, "t", batch, "k", batchId = 2L,
-            numBuckets = buckets)
-          feedRows()
-        }
-        t(s"cdc_silent_rerun_$label") {
-          w.mergeByKeyCdc(spark, "t", batch, "k", batchId = 3L,
-            numBuckets = buckets)
-          feedRows()
-        }
-        // the layout migration the sizing rule implies: a deliberate
-        // full rewrite — must stay write-volume-linear (one read, one
-        // clustered write), never worse
-        t(s"cdc_rebucket_$label") {
-          w.rebucket(spark, "t", "k", newBuckets = buckets * 2)
-          spark.read.parquet(s"$whDir/t").count()
-        }
-        Fixture.deleteTree(whDir)
-        oN.unpersist()
-      }
-    }
-
-    // Time-series join family: the two custom "missing operator"
-    // implementations — bucketized range join (one equi-shuffle,
-    // candidates within buckets) and union+window as-of (one shuffle on
-    // the keys) — on time-extended replicas. Both must scale ~linearly;
-    // a naive inequality join would be O(rows² per key).
-    if (probes.intersect(Set("q20", "q43")).nonEmpty) {
-      val ev1 = graft.sources.Tables.load(spark, sfDir, "events")
-        .select(col("event_id"), col("ts"), col("user_id"),
-          col("event_type"), col("value"))
-      for ((label, n) <- Seq("1x" -> 1, s"${mult}x" -> mult)) {
-        val evN = (0 until n).map { r =>
-          ev1.withColumn("event_id", col("event_id") + lit(r * 1000000000L))
-            .withColumn("ts", col("ts") + expr(s"INTERVAL ${r * 31} DAY"))
-        }.reduce(_ unionByName _).repartition(cpus).persist()
-        evN.count()
-        val us = unix_micros(col("ts"))
-        if (on("q43")) t(s"q43_range_join_$label") {
-          val points = evN.filter(col("event_type") === "click")
-            .select(col("user_id"), us.as("p"))
-          val intervals = evN.filter(col("event_type") === "error")
-            .select(col("user_id"), (us - 3600000000L).as("lo"),
-              (us + 3600000000L).as("hi"))
-          graft.operators.RangeJoin.pointInInterval(points, intervals,
-            "p", "lo", "hi", bucketWidth = 3.6e9,
-            keys = Seq("user_id")).count()
-        }
-        if (on("q20")) t(s"q20_asof_join_$label") {
-          graft.operators.AsOfJoin.backward(
-            evN.filter(col("event_type") === "click"),
-            evN.filter(col("event_type") === "error")
-              .select(col("user_id"), col("ts"), col("value")),
-            Seq("user_id"), "ts", "ts", Seq("value")).count()
-        }
-        evN.unpersist()
-      }
-    }
-
-    // Product-analytics family (q101 funnel, q102 retention) + the
-    // Count-Min sketch (d45): all user-keyed aggregations / vocabulary-
-    // bounded sketches — replicas shift KEYS, per-key work constant.
-    if (on("analytics")) {
-      val ev1 = graft.sources.Tables.load(spark, sfDir, "events")
-        .select(col("user_id"), col("event_type"), col("ts"))
-      for ((label, n) <- Seq("1x" -> 1, s"${mult}x" -> mult)) {
-        val evN = (0 until n).map { r =>
-          ev1.withColumn("user_id", col("user_id") + lit(r * 1000000L))
-        }.reduce(_ unionByName _).repartition(cpus).persist()
-        evN.count()
-        t(s"q101_funnel_$label") {
-          val s1 = evN.filter(col("event_type") === "view")
-            .groupBy("user_id").agg(min(col("ts")).as("t1"))
-          val s2 = evN.filter(col("event_type") === "click")
-            .join(s1, Seq("user_id")).filter(col("ts") > col("t1"))
-            .groupBy("user_id").agg(min(col("ts")).as("t2"))
-          val s3 = evN.filter(col("event_type") === "purchase")
-            .join(s2, Seq("user_id")).filter(col("ts") > col("t2"))
-            .groupBy("user_id").agg(min(col("ts")).as("t3"))
-          s1.join(s2, Seq("user_id"), "left").join(s3, Seq("user_id"), "left")
-            .agg(count(col("t1")), count(col("t2")), count(col("t3")))
-            .collect()(0).getLong(2)
-        }
-        t(s"q102_retention_$label") {
-          val e = evN.select(col("user_id"),
-            date_trunc("week", col("ts")).cast("date").as("wk"))
-          val cohort = e.groupBy("user_id").agg(min(col("wk")).as("cw"))
-          e.distinct().join(cohort, Seq("user_id"))
-            .groupBy(col("cw"),
-              (datediff(col("wk"), col("cw")) / lit(7)).cast("long").as("off"))
-            .agg(countDistinct(col("user_id")).as("n")).count()
-        }
-        evN.unpersist()
-      }
-      val docs1 = graft.sources.Tables.load(spark, sfDir, "documents")
-      for ((label, n) <- Seq("1x" -> 1, s"${mult}x" -> mult)) {
-        val docsN = (0 until n).map { r =>
-          val shifted = docs1.withColumn("doc_id", col("doc_id") + lit(r * 10000000L))
-          if (r > 0) shifted.withColumn("text", concat(col("text"), lit(s" rep$r")))
-          else shifted
-        }.reduce(_ unionByName _).repartition(cpus).persist()
-        docsN.count()
-        t(s"d45_countmin_$label") {
-          graft.operators.Sketches.countMinEstimates(docsN).count()
-        }
-        docsN.unpersist()
-      }
-    }
-
-    // d44 triangle counting on a SYNTHETIC hub-heavy graph (the d2 pair
-    // graph is tiny at any corpus SF, so the probe builds the adversary
-    // directly): per 10k-node block, one 200-leaf hub, 500 K4 cliques,
-    // and a 2000-edge ring — heavy-tailed degrees with known triangle
-    // mass (500 × 4 per block). Degree orientation must keep wedge work
-    // near-linear in edges despite the hubs.
-    if (on("triangles")) {
-      for ((label, n) <- Seq("1x" -> 1, s"${mult}x" -> mult)) {
-        val blocks = spark.range(n.toLong).select(col("id").as("blk"))
-        val base = col("blk") * 10000L
-        val hub = blocks.select(base.as("id_a"),
-          explode(sequence(lit(1), lit(200))).as("leaf"))
-          .select(col("id_a"), (col("id_a") + col("leaf") + 500L).as("id_b"))
-        val k4 = blocks
-          .select(base.as("b0"), explode(sequence(lit(0), lit(499))).as("c"))
-          .select((col("b0") + col("c") * 4L + 1000L).as("v"))
-          .select(explode(array(
-            struct(col("v").as("id_a"), (col("v") + 1L).as("id_b")),
-            struct(col("v").as("id_a"), (col("v") + 2L).as("id_b")),
-            struct(col("v").as("id_a"), (col("v") + 3L).as("id_b")),
-            struct((col("v") + 1L).as("id_a"), (col("v") + 2L).as("id_b")),
-            struct((col("v") + 1L).as("id_a"), (col("v") + 3L).as("id_b")),
-            struct((col("v") + 2L).as("id_a"), (col("v") + 3L).as("id_b"))))
-            .as("e"))
-          .select(col("e.id_a"), col("e.id_b"))
-        val ring = blocks
-          .select(base.as("b0"), explode(sequence(lit(0), lit(1999))).as("i"))
-          .select((col("b0") + col("i") + 4000L).as("id_a"),
-            (col("b0") + col("i") + 4001L).as("id_b"))
-        val edges = hub.unionByName(k4).unionByName(ring)
-          .repartition(cpus).persist()
-        val ne = edges.count()
-        t(s"d44_triangles_$label") {
-          val out = Dedup.triangleCounts(edges)
-            .agg(sum(col("n_tri")), count(lit(1))).collect()(0)
-          require(out.getLong(0) == n.toLong * 500L * 4L * 3L,
-            s"triangle mass off: ${out.getLong(0)} (edges $ne)")
-          out.getLong(1)
-        }
-        edges.unpersist()
-      }
-    }
-
-    // q96 gap-fill: replicas shift KEYS (user_id), the embarrassingly-
-    // parallel direction — spine hours stay constant, keys and
-    // observations grow mult×, so spine rows, window state, and output
-    // all scale linearly with per-key work constant. Expect ~linear.
-    if (on("gapfill")) {
-      val ev1 = graft.sources.Tables.load(spark, sfDir, "events")
-        .filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"), col("value"))
-      for ((label, n) <- Seq("1x" -> 1, s"${mult}x" -> mult)) {
-        val evN = (0 until n).map { r =>
-          ev1.withColumn("user_id", col("user_id") + lit(r * 1000000L))
-        }.reduce(_ unionByName _).repartition(cpus).persist()
-        evN.count()
-        t(s"q96_gapfill_$label") {
-          // aggregate over the FILLED columns — a bare count() lets
-          // column pruning drop the window expressions entirely (the
-          // d35/d21 probe-honesty rule: force what you claim to measure)
-          val r = graft.operators.GapFill.resampleHourly(
-              evN, "user_id", "ts", "value")
-            .agg(count(col("locf_value")).as("n_locf"),
-              avg(col("interp_value")).as("m"))
-            .collect()(0)
-          r.getLong(0)
-        }
-        evN.unpersist()
-      }
-    }
-
-    // Streaming family: state-store scaling. Replicas shift TIME (not
-    // keys), so window/state-key count grows linearly while per-window
-    // arrival density stays constant — the honest shape for "more history
-    // at the same rate". Measures the default (on-heap) provider, the
-    // RocksDB provider, and the stream-stream interval join. `restart`
-    // selects just the checkpoint-restore leg (the rest of the family
-    // already has recorded numbers and is expensive at 100×).
-    if (on("stream") || on("restart")) {
-      val ev1 = graft.sources.Tables.load(spark, sfDir, "events")
-        .select(col("event_id"), col("ts"), col("user_id"),
-          col("event_type"), col("value"))
-      for ((label, n) <- Seq("1x" -> 1, s"${mult}x" -> mult)) {
-        val evN = (0 until n).map { r =>
-          ev1.withColumn("event_id", col("event_id") + lit(r * 1000000000L))
-            .withColumn("ts", col("ts") + expr(s"INTERVAL ${r * 31} DAY"))
-        }.reduce(_ unionByName _)
-        val stage = java.nio.file.Files
-          .createTempDirectory("probe_stream_").toString
-        // Ingest as TIME-ORDERED slices, 2 files per microbatch: a live
-        // stream arrives over many microbatches and the watermark evicts
-        // state between them, so join/window state is bounded by the
-        // event-time window — single-batch ingest of the whole history
-        // would instead degrade a time-bounded stream-stream join to
-        // per-key cross products over ALL history (measured: 352 s at
-        // 100x vs ~30 s sliced). Slice count is FIXED so per-slice work
-        // scales with the data.
-        val slices = 16
-        // materialize the replica union ONCE; slicing re-scans the
-        // materialized copy, not the n-way union plan
-        evN.write.parquet(s"$stage/all")
-        val evM = spark.read.parquet(s"$stage/all")
-        val bounds = evM.agg(
-          min(unix_micros(col("ts"))), max(unix_micros(col("ts")))).head()
-        val (lo, hi) = (bounds.getLong(0), bounds.getLong(1) + 1)
-        val width = math.max(1L, (hi - lo) / slices)
-        (0 until slices).foreach { i =>
-          val (a, b) = (lo + i * width,
-            if (i == slices - 1) hi else lo + (i + 1) * width)
-          evM.filter(unix_micros(col("ts")) >= a &&
-              unix_micros(col("ts")) < b)
-            .coalesce(2).write.parquet(f"$stage/in/s$i%02d")
-        }
-        def stream = spark.readStream.schema(ev1.schema)
-          .option("maxFilesPerTrigger", "2").parquet(s"$stage/in/s*")
-        def tumbling = stream
-          .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-          .agg(count(lit(1)).as("n"))
-        if (on("stream")) t(s"stream_tumbling_$label") {
-          graft.streaming.StreamOracle
-            .converge(tumbling, "probe_stream_sink").count()
-        }
-        if (on("stream")) t(s"stream_rocksdb_$label") {
-          val key = "spark.sql.streaming.stateStore.providerClass"
-          spark.conf.set(key,
-            "org.apache.spark.sql.execution.streaming.state." +
-              "RocksDBStateStoreProvider")
-          try graft.streaming.StreamOracle
-            .converge(tumbling, "probe_stream_rdb_sink").count()
-          finally spark.conf.unset(key)
-        }
-        if (on("stream")) t(s"stream_interval_join_$label") {
-          graft.streaming.StreamOracle.convergeAppend(
-            graft.operators.EventsOps.intervalJoin(
-              stream.filter(col("event_type") === "error"),
-              stream.filter(col("event_type") === "click"),
-              "user_id", before = "2 HOURS", after = "2 HOURS",
-              watermark = "1 hour"),
-            "probe_stream_ij_sink").count()
-        }
-        // checkpoint-restore: the production restart story (q84's missing
-        // leg). Run 1 drains the full history into a CHECKPOINTED RocksDB
-        // aggregation; run 2 restarts the SAME checkpoint with one new
-        // slice appended. Warm time = state reload + one microbatch, and
-        // state size grows ~linearly with mult (time shift → more
-        // windows), so warm-vs-mult is the reload-cost-vs-state-size curve.
-        locally {
-          val key = "spark.sql.streaming.stateStore.providerClass"
-          spark.conf.set(key,
-            "org.apache.spark.sql.execution.streaming.state." +
-              "RocksDBStateStoreProvider")
-          try {
-            def runOnce(ck: String, qn: String): Long = {
-              val q = tumbling.writeStream
-                .outputMode("complete").format("memory").queryName(qn)
-                .option("checkpointLocation", ck).start()
-              try { q.processAllAvailable(); spark.table(qn).count() }
-              finally q.stop()
-            }
-            val ck = s"$stage/_restart_ckpt"
-            t(s"stream_restart_cold_$label") { runOnce(ck, "probe_restart_sink") }
-            // one more slice lands after the shutdown
-            evM.filter(unix_micros(col("ts")) >= hi - width)
-              .coalesce(2).write.parquet(f"$stage/in/s$slices%02d")
-            t(s"stream_restart_warm_$label") { runOnce(ck, "probe_restart_sink2") }
-            // same curve under CHANGELOG checkpointing — the production
-            // toggle that commits per-batch changelogs instead of full
-            // RocksDB snapshots (cheaper steady-state commits; restore =
-            // last snapshot + changelog replay). Fresh checkpoint dir:
-            // the format is checkpoint-sticky, a restart cannot flip it.
-            val clKey = "spark.sql.streaming.stateStore.rocksdb." +
-              "changelogCheckpointing.enabled"
-            spark.conf.set(clKey, "true")
-            try {
-              val ck2 = s"$stage/_restart_ckpt_cl"
-              t(s"stream_restart_cl_cold_$label") { runOnce(ck2, "probe_restart_cl") }
-              t(s"stream_restart_cl_warm_$label") { runOnce(ck2, "probe_restart_cl2") }
-            } finally spark.conf.unset(clKey)
-          } finally spark.conf.unset(key)
-        }
-        Fixture.deleteTree(stage)
-      }
-    }
-
-    // Materialization family: the WRITE paths (snapshot store, bucket-
-    // scoped merge, bucketed tables) measured under replication
-    if (probes.intersect(
-        Set("q59", "q62", "q63", "q69", "q70", "q71", "clone",
-          "vtable", "mvrewrite", "bloomskip", "mvrefresh", "manifest", "mvext",
-          "occ", "vtstream")).nonEmpty) {
-      val orders1 = graft.sources.Tables.load(spark, sfDir, "orders")
-      val ordersN = (0 until mult).map { r =>
-        orders1.withColumn("o_orderkey", col("o_orderkey") + lit(r * 100000000L))
-      }.reduce(_ unionByName _).repartition(cpus).persist()
-      println(s"orders: ${orders1.count()} -> ${ordersN.count()} (${mult}x)")
-      for ((label, o) <- Seq("1x" -> orders1, s"${mult}x" -> ordersN)) {
-        def src = o.select(col("o_orderkey").as("k"),
-          col("o_totalprice").cast("decimal(18,2)").as("price"))
-        if (on("q62")) t(s"q62_merge_$label") {
-          val wh = java.nio.file.Files
-            .createTempDirectory("probe_merge_").toString
-          val w = new graft.sources.TableWriter(wh)
-          val base = src.filter(col("k") % 3 === 0)
-          val changes = base.filter(col("k") % 7 === 0)
-            .withColumn("price", (col("price") +
-              lit(1000).cast("decimal(18,2)")).cast("decimal(18,2)"))
-            .unionByName(src.filter(col("k") % 3 === 1 && col("k") % 5 === 0))
-          w.mergeByKey(spark, "m", base, "k")
-          w.mergeByKey(spark, "m", changes, "k")
-          val n = w.read(spark, "m").count()
-          Fixture.deleteTree(wh)
-          n
-        }
-        // q95: shallow clone must be FLAT under replication (it writes
-        // only the manifest — O(files) metadata at any data volume);
-        // the COW merge targets keys hashing to ONE bucket, so its cost
-        // tracks that bucket's volume (grows with mult at fixed bucket
-        // count — the q94/CDC sizing rule holds bucket volume constant
-        // by growing the count in production).
-        // q118: the versioned-table commit protocol under the sizing
-        // rule (bucket count grows with the table, holding bucket
-        // VOLUME constant): the one-bucket commit and the pruned
-        // snapshot read must stay FLAT as the table grows mult×; the
-        // bootstrap commit and the vacuum sweep are the linear paths
-        // (full write resp. full file listing) and are labeled as such.
-        // q120/q121: the MV rewrite's claim is that the aggregate's cost
-        // moves from the BASE table to the view: the plain aggregate is
-        // the linear reference (scans mult× rows); the rewritten query
-        // reads the |grain|-sized view and must stay FLAT; the
-        // compensated query adds a fixed-size feed tail and must track
-        // view + tail, not the base.
-        if (on("mvrewrite")) {
-          import graft.plans.{MvRegistry, MvRewrite}
-          val wh = java.nio.file.Files
-            .createTempDirectory("probe_mvrw_").toString
-          val basePath = s"$wh/base"
-          val mvPath = s"$wh/mv"
-          val feedRoot = s"$wh/feed"
-          val base = src.withColumn("cust", pmod(col("k"), lit(1000L)))
-          base.write.mode("overwrite").parquet(basePath)
-          spark.read.parquet(basePath).groupBy("cust")
-            .agg(count(lit(1)).as("n"), sum(col("price")).as("sum_price"))
-            .write.mode("overwrite").parquet(mvPath)
-          // fixed-size tail regardless of mult: ~2k signed change rows
-          base.filter(col("k") % 9973 === 0).limit(2000)
-            .withColumn("batch_id", lit(1L))
-            .withColumn("change_op", lit("insert"))
-            .write.mode("overwrite").parquet(s"$feedRoot/batch=1")
-          MvRewrite.install(spark)
-          // force BOTH outputs (a count-only fold would let pruning
-          // drop the SUM partials — the probe-honesty rule)
-          def agg() = {
-            val r = spark.read.parquet(basePath).groupBy("cust")
-              .agg(count(lit(1)).as("n_rows"), sum(col("price")).as("total"))
-              .agg(sum("n_rows"), sum(col("total"))).collect()(0)
-            r.getLong(0) + r.getDecimal(1).longValue()
-          }
-          MvRegistry.deregister(spark, basePath)
-          t(s"q120_mv_plain_agg_$label")(agg()) // linear reference
-          MvRegistry.register(spark, basePath, MvRegistry.MvDef(
-            mvPath, Set("cust"), Map("price" -> "sum_price"), "n"))
-          t(s"q120_mv_rewritten_$label")(agg()) // must be FLAT
-          MvRegistry.register(spark, basePath, MvRegistry.MvDef(
-            mvPath, Set("cust"), Map("price" -> "sum_price"), "n",
-            comp = Some(MvRegistry.CompDef(feedRoot, frontier = 0L))))
-          t(s"q121_mv_compensated_$label")(agg()) // view + fixed tail
-          MvRegistry.deregister(spark, basePath)
-          Fixture.deleteTree(wh)
-        }
-        // q126: incremental view refresh must cost O(|tail| + |grain|):
-        // the bootstrap fold over the mult× feed is the linear path
-        // (labeled); a fixed ~3k-row tail batch folded into the
-        // (1000-grain) view afterwards must stay FLAT however large the
-        // already-folded history is. Feed dirs are synthesized directly
-        // (refresh reads only the feed), so the probe isolates refresh
-        // cost from CDC-merge cost.
-        if (on("mvrefresh")) {
-          import graft.sources.MvMaintain
-          val wh = java.nio.file.Files
-            .createTempDirectory("probe_mvrf_").toString
-          val feed = s"$wh/feed"
-          val mv = s"$wh/mv"
-          val big = src.withColumn("cust", pmod(col("k"), lit(1000L)))
-            .withColumn("batch_id", lit(1L))
-            .withColumn("change_op", lit("insert"))
-          big.write.mode("overwrite").parquet(s"$feed/batch=1")
-          val vdef = MvMaintain.ViewDef(
-            Seq("cust"), Map("price" -> "sum_price"), "n")
-          t(s"q126_refresh_bootstrap_$label") {
-            MvMaintain.refresh(spark, feed, mv, vdef)
-          }
-          big.filter(col("k") % 9973 === 0).limit(3000)
-            .withColumn("k", col("k") + lit(900000000000L))
-            .withColumn("batch_id", lit(2L))
-            .write.mode("overwrite").parquet(s"$feed/batch=2")
-          t(s"q126_refresh_tail_$label") {
-            MvMaintain.refresh(spark, feed, mv, vdef)
-          }
-          Fixture.deleteTree(wh)
-        }
-        // q124: bloom-skip point lookups must stay FLAT as the table
-        // grows — file size (and so per-file fpp) is held constant by
-        // growing the file COUNT with the data, so expected survivors
-        // are 1 + fpp·F per probe (fpp ≈ 1e-3 here → ~1 file however
-        // many the table holds), while the full scan is the linear
-        // reference. Build is the one linear pass, labeled as such.
-        if (on("bloomskip")) {
-          import graft.sources.ManifestIndex
-          val wh = java.nio.file.Files
-            .createTempDirectory("probe_bloom_").toString
-          val path = s"$wh/t"
-          val numBits = 1 << 18
-          val numHashes = 5
-          // bound k before the multiply: replicated keys reach 1e10 and
-          // k·2654435761 would overflow Long under ANSI
-          val tab = src.withColumn("v",
-            (pmod(col("k"), lit(1000000007L)) * lit(2654435761L))
-              % lit(1000000007L))
-          val nFiles = 10 * (if (label == "1x") 1 else mult)
-          t(s"q124_bloom_build_$label") {
-            tab.repartition(nFiles, col("k"))
-              .write.mode("overwrite").parquet(path)
-            ManifestIndex.buildBloom(spark, path, "v", numBits, numHashes)
-            nFiles.toLong
-          }
-          val targets = spark.read.parquet(path).orderBy(col("k")).limit(3)
-            .select("v").collect().map(_.getLong(0)).toSeq
-          t(s"q124_bloom_probe_$label") {
-            val (frame, scanned) = ManifestIndex.readBloomPruned(
-              spark, path, "v", targets, numBits, numHashes)
-            frame.count() * 1000L + scanned
-          }
-          t(s"q124_full_scan_$label") {
-            spark.read.parquet(path)
-              .filter(col("v").isin(targets: _*)).count()
-          }
-          Fixture.deleteTree(wh)
-        }
-        if (on("vtable")) {
-          val wh = java.nio.file.Files
-            .createTempDirectory("probe_vtable_").toString
-          import graft.sources.VersionedTable
-          val root = s"$wh/t"
-          val nb = if (label == "1x") 16 else 16 * mult
-          val base = src.filter(col("k") % 3 === 0)
-          t(s"q118_vtable_bootstrap_$label") {
-            VersionedTable.commitMerge(spark, root, base, "k", nb)
-            VersionedTable.read(spark, root).count()
-          }
-          val batch = base
-            .filter(pmod(xxhash64(col("k")), lit(nb.toLong)) === 3)
-            .withColumn("price", (col("price") +
-              lit(1000).cast("decimal(18,2)")).cast("decimal(18,2)"))
-            .persist()
-          val bn = batch.count() // materialize OUTSIDE the timed commit
-          t(s"q118_vtable_commit_1bkt_$label") {
-            VersionedTable.commitMerge(spark, root, batch, "k", nb)
-            bn
-          }
-          // commit METADATA cost: v0 is the bootstrap checkpoint
-          // (O(live files) lines), v1 the one-bucket delta (O(touched))
-          locally {
-            val fs = new org.apache.hadoop.fs.Path(root)
-              .getFileSystem(spark.sessionState.newHadoopConf())
-            def mBytes(v: Int) = fs.getFileStatus(
-              new org.apache.hadoop.fs.Path(s"$root/_commits/v_$v")).getLen
-            println(s"MANIFEST $label checkpoint v0=${mBytes(0)}B " +
-              s"one-bucket delta v1=${mBytes(1)}B")
-          }
-          t(s"q118_vtable_read_pruned_$label") {
-            VersionedTable.read(spark, root, buckets = Some(Seq(3))).count()
-          }
-          t(s"q118_vtable_vacuum_$label") {
-            val (dv, df) = VersionedTable.vacuum(spark, root, 1)
-            dv.toLong * 1000000L + df
-          }
-          batch.unpersist(blocking = false)
-          Fixture.deleteTree(wh)
-        }
-        if (on("occ")) {
-          // optimistic commits (r12): a one-bucket optimistic commit's
-          // cost must track BUCKET volume (stage + move + manifest CAS),
-          // not table size, and a forced REBASE (another writer lands
-          // between move-in and publish) must add only metadata work —
-          // the conflict check is a manifest-resolution diff, the rebase
-          // re-publishes the same staged files at head+1 with zero data
-          // movement. At 100 TB this is what lets N pipelines feed one
-          // table: data cost per writer stays per-writer, arbitration is
-          // metadata.
-          import graft.sources.VersionedTable
-          import graft.sources.VersionedTable.OccHooks
-          val wh = java.nio.file.Files
-            .createTempDirectory("probe_occ_").toString
-          val root = s"$wh/t"
-          val nb = if (label == "1x") 16 else 16 * mult
-          val base = src.filter(col("k") % 3 === 0)
-          VersionedTable.commitMergeOptimistic(spark, root, base, "k", nb,
-            writerId = "boot")
-          val mine = base
-            .filter(pmod(xxhash64(col("k")), lit(nb.toLong)) === 3)
-            .withColumn("price", (col("price") +
-              lit(500).cast("decimal(18,2)")).cast("decimal(18,2)"))
-            .persist()
-          val other = base
-            .filter(pmod(xxhash64(col("k")), lit(nb.toLong)) === 7)
-            .withColumn("price", (col("price") +
-              lit(900).cast("decimal(18,2)")).cast("decimal(18,2)"))
-            .persist()
-          val mn = mine.count(); other.count()
-          t(s"q135_occ_commit_1bkt_$label") {
-            VersionedTable.commitMergeOptimistic(spark, root, mine, "k", nb,
-              writerId = "wA")
-            mn
-          }
-          t(s"q135_occ_rebase_$label") {
-            // writer B's full commit runs INSIDE A's publish window —
-            // A's loop re-checks, sees a disjoint bucket, rebases
-            VersionedTable.commitMergeOptimistic(spark, root, mine, "k", nb,
-              writerId = "wA", hooks = OccHooks(beforePublish = () =>
-                VersionedTable.commitMergeOptimistic(spark, root, other,
-                  "k", nb, writerId = "wB")))
-            VersionedTable.versions(spark, root).size.toLong
-          }
-          mine.unpersist(blocking = false)
-          other.unpersist(blocking = false)
-          Fixture.deleteTree(wh)
-        }
-        if (on("vtstream")) {
-          // streaming manifest CDF (r12): draining a ONE-BUCKET-change
-          // version must read two generations of ONE bucket regardless
-          // of table size — planning is manifest metadata, partitions
-          // are (version x changed bucket). The probe times a fresh
-          // stream from startingVersion=<v0> over a table whose v1
-          // touched exactly one bucket, at 1x and multx table volume.
-          import graft.sources.VersionedTable
-          val wh = java.nio.file.Files
-            .createTempDirectory("probe_vts_").toString
-          val root = s"$wh/t"
-          val nb = if (label == "1x") 16 else 16 * mult
-          val base = src.filter(col("k") % 3 === 0)
-          VersionedTable.commitMerge(spark, root, base, "k", nb)
-          val batch = base
-            .filter(pmod(xxhash64(col("k")), lit(nb.toLong)) === 3)
-            .withColumn("price", (col("price") +
-              lit(1000).cast("decimal(18,2)")).cast("decimal(18,2)"))
-          VersionedTable.commitMerge(spark, root, batch, "k", nb)
-          t(s"q136_vtstream_tail_$label") {
-            // startingVersion=0: offset begins AT v0 (already emitted),
-            // so the drain covers exactly the one-bucket v1 diff
-            val buf = new java.util.concurrent.atomic.AtomicLong
-            val q = spark.readStream
-              .format(graft.streaming.VtCdfStream.format)
-              .option("root", root).option("key", "k")
-              .option("startingVersion", "0").load()
-              .writeStream
-              .option("checkpointLocation", s"$wh/ck_$label")
-              .foreachBatch { (df: DataFrame, _: Long) =>
-                buf.addAndGet(df.count()); ()
-              }.start()
-            try q.processAllAvailable() finally q.stop()
-            buf.get()
-          }
-          Fixture.deleteTree(wh)
-        }
-        if (on("mvext")) {
-          // compensated EXTREMA serving (r11): MIN/MAX from a stale
-          // view whose tail deleted group maxima — the rewrite masks
-          // view extrema on touched grains and recomputes them from
-          // the base under a PUSHED literal grain predicate. Serve
-          // cost should track |view| + |tail| + touched-grain row
-          // groups, NOT the fact table; the plain aggregate is the
-          // full-scan reference.
-          import graft.plans.{MvRegistry, MvRewrite}
-          val wh = java.nio.file.Files
-            .createTempDirectory("probe_mvext_").toString
-          val w = new graft.sources.TableWriter(wh)
-          val src2 = o.select(col("o_orderkey").as("k"),
-            pmod(col("o_custkey"), lit(1000L)).as("cust"),
-            col("o_totalprice").cast("decimal(18,2)").as("price"))
-          w.mergeByKeyCdc(spark, "xt", src2, "k", batchId = 1L)
-          spark.read.parquet(w.path("xt")).groupBy("cust")
-            .agg(count(lit(1)).as("n"), sum(col("price")).as("sum_price"),
-              min(col("price")).as("min_price"),
-              max(col("price")).as("max_price"))
-            .write.mode("overwrite").parquet(s"$wh/xmv")
-          // tail: strike 3 grains' current maxima
-          val victims = spark.read.parquet(w.path("xt"))
-            .filter(col("cust").isin(7L, 13L, 99L))
-            .groupBy("cust")
-            .agg(max(struct(col("price"), col("k"))).as("m"))
-            .select(col("m.k").as("k"))
-          w.deleteByKeyCdc(spark, "xt", victims, "k", batchId = 2L)
-          MvRewrite.install(spark)
-          MvRegistry.register(spark, w.path("xt"), MvRegistry.MvDef(
-            s"$wh/xmv", Set("cust"), Map("price" -> "sum_price"), "n",
-            comp = Some(MvRegistry.CompDef(w.path("xt_changes"), frontier = 1L)),
-            minCols = Map("price" -> "min_price"),
-            maxCols = Map("price" -> "max_price")))
-          def serveQ = spark.read.parquet(w.path("xt")).groupBy("cust")
-            .agg(min(col("price")).as("lo"), max(col("price")).as("hi"),
-              count(lit(1)).as("n_rows"), sum(col("price")).as("total"))
-          t(s"q129_mvext_serve_$label") { serveQ.collect().length.toLong }
-          MvRegistry.deregister(spark, w.path("xt"))
-          t(s"q129_mvext_plain_$label") { serveQ.collect().length.toLong }
-          Fixture.deleteTree(wh)
-        }
-        if (on("manifest") && label == "1x") {
-          // manifest METADATA layer at ~10⁵ live file entries, through
-          // the production writer (writeLinesAtomic) and resolver
-          // (resolveManifest via the test hook): the r10 verdict's
-          // 600 MB-per-commit scenario. Entries are synthetic paths —
-          // the probe measures the metadata plane, not file IO; the
-          // vtable probe above covers the end-to-end commit.
-          import graft.operators.IndexProtocol
-          val wh = java.nio.file.Files
-            .createTempDirectory("probe_manifest_").toString
-          val root = s"$wh/m"
-          val fs = new org.apache.hadoop.fs.Path(root)
-            .getFileSystem(spark.sessionState.newHadoopConf())
-          val (buckets, perBucket) = (4096, 25) // 102 400 live entries
-          val header = "#graft.v2 full schema=k BIGINT,price DECIMAL(18,2),__bucket INT"
-          val full = header +: (0 until buckets).flatMap(b =>
-            (0 until perBucket).map(i =>
-              s"$b\tfile:$root/__bucket=$b/v0-$i.parquet"))
-          t("manifest_checkpoint_100k") {
-            IndexProtocol.writeLinesAtomic(fs,
-              new org.apache.hadoop.fs.Path(s"$root/_commits/v_0"), full)
-            full.size.toLong
-          }
-          val dHeader = "#graft.v2 delta schema=k BIGINT,price DECIMAL(18,2),__bucket INT"
-          t("manifest_delta_commits_x8") {
-            (1 to 8).foreach { v =>
-              val lines = dHeader +: ("!3" +: (0 until perBucket).map(i =>
-                s"3\tfile:$root/__bucket=3/v$v-$i.parquet").toSeq)
-              IndexProtocol.writeLinesAtomic(fs,
-                new org.apache.hadoop.fs.Path(s"$root/_commits/v_$v"), lines)
-            }
-            8L * (perBucket + 2)
-          }
-          def mBytes(v: Int) = fs.getFileStatus(
-            new org.apache.hadoop.fs.Path(s"$root/_commits/v_$v")).getLen
-          println(s"MANIFEST 100k-entries checkpoint=${mBytes(0)}B " +
-            s"delta=${mBytes(1)}B (${(0 until buckets).size}x$perBucket live)")
-          t("manifest_resolve_tail8_100k") {
-            graft.sources.VersionedTable.resolvedEntries(spark, root, 8L)
-              .values.map(_.size.toLong).sum
-          }
-          Fixture.deleteTree(wh)
-        }
-        if (on("clone")) {
-          val wh = java.nio.file.Files
-            .createTempDirectory("probe_clone_").toString
-          val w = new graft.sources.TableWriter(wh)
-          val base = src.filter(col("k") % 3 === 0)
-          t(s"q95_clone_src_build_$label") {
-            w.mergeByKey(spark, "src", base, "k")
-            w.read(spark, "src").count()
-          }
-          t(s"q95_clone_shallow_$label") {
-            w.shallowClone(spark, "src", "branch")
-            1L // metadata only — nothing to count without reading data
-          }
-          t(s"q95_clone_cow_merge_$label") {
-            val batch = base
-              .filter(pmod(xxhash64(col("k")), lit(16L)) === 3)
-              .withColumn("price", (col("price") +
-                lit(1000).cast("decimal(18,2)")).cast("decimal(18,2)"))
-            w.mergeByKey(spark, "branch", batch, "k")
-            w.readResolved(spark, "branch",
-              Some(Seq(3))).count()
-          }
-          Fixture.deleteTree(wh)
-        }
-        if (on("q59")) t(s"q59_snapshot_$label") {
-          val wh = java.nio.file.Files
-            .createTempDirectory("probe_snap_").toString
-          val w = new graft.sources.TableWriter(wh)
-          val v1 = src.filter(col("k") % 3 === 0)
-          val v2 = v1.withColumn("price",
-            when(col("k") % 7 === 0, (col("price") +
-              lit(1000).cast("decimal(18,2)")).cast("decimal(18,2)"))
-              .otherwise(col("price")))
-          // phase timers (stderr): run1 = first-load write path, run2 =
-          // daily-merge write path, read = post-run reconstruction
-          def ph[T](what: String)(f: => T): T = {
-            val t0 = System.nanoTime()
-            val r = f
-            System.err.println(
-              f"    [q59_$label] $what ${(System.nanoTime() - t0) / 1e9}%.2f s")
-            r
-          }
-          ph("run1")(graft.operators.SnapshotStore.run(spark, w, "snap", v1,
-            "k", Seq("price"), java.sql.Date.valueOf("2024-01-01")))
-          val snap2 = ph("run2")(graft.operators.SnapshotStore.run(spark, w,
-            "snap", v2, "k", Seq("price"), java.sql.Date.valueOf("2024-02-01")))
-          val n = ph("count")(snap2.count())
-          Fixture.deleteTree(wh)
-          n
-        }
-        // q69's claim is "compaction cost tracks small-file MASS, not
-        // table size": the large generation grows with mult, the small
-        // trickle is FIXED (256 tiny files of 1x data) — so the timed
-        // compact call should stay flat as the table grows. Table build
-        // is untimed setup.
-        if (on("q69")) {
-          val wh = java.nio.file.Files
-            .createTempDirectory("probe_compact_").toString
-          val w = new graft.sources.TableWriter(wh)
-          src.write.mode("overwrite").parquet(w.path("t"))
-          orders1.select(col("o_orderkey").as("k"),
-            col("o_totalprice").cast("decimal(18,2)").as("price"))
-            .filter(col("k") % 3 === 1)
-            .repartition(256).write.mode("append").parquet(w.path("t"))
-          t(s"q69_compact_$label") {
-            val (before, after) = w.compact(spark, "t", targetBytes = 8L << 20)
-            (before - after).toLong
-          }
-          Fixture.deleteTree(wh)
-        }
-        // q70: range-partition + sort is ONE shuffle over the table —
-        // expected ~linear in mult; file count scales with mult so file
-        // min/max windows stay narrow
-        if (on("q70")) t(s"q70_zorder_$label") {
-          val wh = java.nio.file.Files
-            .createTempDirectory("probe_z_").toString
-          val w = new graft.sources.TableWriter(wh)
-          val src2 = o.select(
-            pmod(col("o_custkey"), lit(1024)).cast("int").as("a"),
-            pmod(col("o_orderkey"), lit(1024)).cast("int").as("b"),
-            col("o_totalprice").as("price"))
-          w.materializeClustered(src2, "z",
-            graft.functions.ZOrder.zValue16(col("a"), col("b")), "z",
-            numFiles = 16 * (if (label == "1x") 1 else mult))
-          val n = w.read(spark, "z")
-            .filter(col("a") < 128 && col("b") >= 896).count()
-          Fixture.deleteTree(wh)
-          n
-        }
-        // q71's claim is "delete cost tracks hit buckets, not table
-        // size": buckets scale with the table (constant bucket size), the
-        // doomed set is FIXED (~50 keys) — so the timed delete touches a
-        // bounded byte volume at any mult. Table build is untimed setup.
-        if (on("q71")) {
-          val wh = java.nio.file.Files
-            .createTempDirectory("probe_del_").toString
-          val w = new graft.sources.TableWriter(wh)
-          val nb = 16 * (if (label == "1x") 1 else mult)
-          w.mergeByKey(spark, "t", src, "k", numBuckets = nb)
-          // FIXED doomed set (base-replica keys only): the claim under
-          // test is that a bounded delete touches a bounded byte volume
-          // regardless of table size — a doomed set growing with mult
-          // would legitimately rewrite every bucket
-          val doomed = src.filter(col("k") % 9973 === 0 &&
-            col("k") < 100000000L).select(col("k"))
-          t(s"q71_delete_$label") {
-            w.deleteByKey(spark, "t", doomed, "k", numBuckets = nb)
-            w.read(spark, "t").count()
-          }
-          Fixture.deleteTree(wh)
-        }
-        if (on("q63")) t(s"q63_bucketed_$label") {
-          val wh = java.nio.file.Files
-            .createTempDirectory("probe_bk_").toString
-          val w = new graft.sources.TableWriter(wh)
-          val cust = graft.sources.Tables.load(spark, sfDir, "customer")
-          w.materializeBucketed(o.select(col("o_custkey").as("ck"),
-            col("o_totalprice")), s"probe_bk_orders", Seq("ck"), 8)
-          w.materializeBucketed(cust.select(col("c_custkey").as("ck"),
-            col("c_mktsegment")), s"probe_bk_cust", Seq("ck"), 8)
-          val n = spark.table("probe_bk_orders")
-            .join(spark.table("probe_bk_cust"), Seq("ck"))
-            .groupBy(col("c_mktsegment")).agg(count(lit(1))).count()
-          spark.sql("DROP TABLE IF EXISTS probe_bk_orders")
-          spark.sql("DROP TABLE IF EXISTS probe_bk_cust")
-          Fixture.deleteTree(wh)
-          n
-        }
-      }
-      ordersN.unpersist()
-    }
-
-    // ivftrain: web-scale-K quantizer training (the r9 verdict's ask #5).
-    // 10⁶ clustered vectors, K = 10⁴ (stride-100 init): training must
-    // run on the min(N, 32K)-vector id-hash SAMPLE (FAISS's
-    // train-on-a-sample rule) with the bound-pruned codegen assignment —
-    // the old full-frame broadcast-join+window would be a 10¹⁰-row
-    // intermediate per round, and the driver sees only K×dim means per
-    // iteration either way. 2000 natural clusters make the coarse-cell
-    // geometry realistic (uniform-random vectors have no prunable
-    // structure — the honest fallback is assignExact, which this probe
-    // deliberately avoids testing).
-    if (on("ivftrain")) {
-      val dim = 16
-      val vecs = spark.range(1000000L).select(col("id").as("vec_id"),
-          transform(sequence(lit(0), lit(dim - 1)), d =>
-            sin((col("id") % 2000L).cast("double") * lit(31.0)
-                + d.cast("double") * lit(7.0))
-              + lit(0.05) * sin(col("id").cast("double") * lit(13.0)
-                + d.cast("double") * lit(3.0))).as("embedding"))
-        .repartition(cpus).persist()
-      println(s"  ivftrain corpus: ${vecs.count()} vectors, K=10000, dim=$dim")
-      t("ivftrain_K1e4") {
-        Similarity.trainIvfCentroids(vecs, initStride = 100L, iters = 2)
-          .size.toLong
-      }
-      vecs.unpersist(blocking = false)
-    }
-
-    if (probes.intersect(
-        Set("v3", "v5", "v6", "v8", "v9", "v12", "v17", "d36")).nonEmpty) {
-      val emb1 = graft.sources.Tables.load(spark, sfDir, "embeddings")
-      val embN = (0 until mult).map { r =>
-        emb1.withColumn("vec_id", col("vec_id") + lit(r * 10000000L))
-      }.reduce(_ unionByName _).repartition(cpus).persist()
-      for ((label, e, m) <- Seq(("1x", emb1, 1), (s"${mult}x", embN, mult))) {
-        if (on("v5")) t(s"v5_ann_sq8_$label") {
-          Similarity.sq8TopK(e, e.filter(col("vec_id") < 8), k = 5,
-            rerankFactor = 4, dim = 64).count()
-        }
-        // K held CONSTANT under replication (stride scales with mult):
-        // the stride-init heuristic otherwise ties K to N, turning each
-        // Lloyd round and the assignment phase into O(N·K) = O(N²/stride)
-        // — measured at 100×: 435 s with K=N/97 vs the constant-K number
-        // this probe reports. Production guidance: pick K from memory/
-        // recall targets (≈√N), never from a corpus-proportional stride.
-        if (on("v3")) t(s"v3_ivf_trained_$label") {
-          val cents = Similarity.trainIvfCentroids(e, initStride = 97L * m, iters = 3)
-          Similarity.ivfTopKWithCentroids(e, e.filter(col("vec_id") < 8), k = 5,
-            centroids = cents, nprobe = 2).count()
-        }
-        if (on("v6")) t(s"v6_ivf_sq8_$label") {
-          val cents = Similarity.trainIvfCentroids(e, initStride = 97L * m, iters = 3)
-          Similarity.ivfSq8TopK(e, e.filter(col("vec_id") < 8), k = 5,
-            centroids = cents, nprobe = 2, rerankFactor = 4, dim = 64).count()
-        }
-        // v8's ksub is constant by design (256-max codebook per subspace);
-        // only the stride scales so training stays O(N)
-        if (on("v8")) t(s"v8_pq_$label") {
-          val cbs = Similarity.trainPqCodebooks(e, m = 4, subDim = 16,
-            initStride = 13L * m, ksub = 16, iters = 2)
-          Similarity.pqTopK(e, e.filter(col("vec_id") < 8), k = 5,
-            codebooks = cbs, m = 4, subDim = 16, rerankFactor = 8).count()
-        }
-        // v12: incremental IVF append — a FIXED batch (one ingest
-        // increment, the 1× corpus's %10 slice) assigned against the
-        // frozen quantizer of an index whose size grows with mult. The
-        // append must stay FLAT: assignment is O(batch × K) with K
-        // constant, and the write touches only the batch's rows.
-        if (on("v12")) {
-          val wh = java.nio.file.Files
-            .createTempDirectory("probe_ivfinc_").toString
-          val w = new graft.sources.TableWriter(wh)
-          t(s"v12_ivf_base_build_$label") {
-            val base = e.filter(col("vec_id") % 10 =!= 0)
-            // stride must intersect the %10-filtered base id set — at
-            // mult=100, 97·m=9700 shares factor 10 with the replica
-            // offset and every solution lands on an excluded %10==0 id
-            // (trainIvfCentroids now fails loud on that); 97·m+1 keeps
-            // K small and nonzero at every mult here (K 16..46)
-            val cents = Similarity.trainIvfCentroids(base,
-              initStride = 97L * m + 1, iters = 3)
-            Similarity.buildIvfIndex(base, cents, w, "emb")
-            spark.read.parquet(s"$wh/emb_lists").count()
-          }
-          t(s"v12_ivf_append_$label") {
-            Similarity.appendIvfIndex(
-              emb1.filter(col("vec_id") % 10 === 0)
-                .withColumn("vec_id", col("vec_id") + lit(990000000L)),
-              w, "emb")
-            spark.read.parquet(s"$wh/emb_lists").count()
-          }
-          Fixture.deleteTree(wh)
-        }
-        // v9: the persisted IVF+PQ serving index. Build (train + encode +
-        // write) is the once-per-corpus-version cost and must stay ~linear;
-        // the QUERY phase serves from partition-pruned code lists and must
-        // stay roughly FLAT as the corpus grows (probing nprobe/K of it).
-        // Phase timers go to stderr; the headline number is build+query.
-        if (on("v9")) t(s"v9_ivfpq_index_$label") {
-          val wh = java.nio.file.Files
-            .createTempDirectory("probe_ivfpq_").toString
-          val w = new graft.sources.TableWriter(wh)
-          def ph[T](what: String)(f: => T): T = {
-            val t0 = System.nanoTime()
-            val r = f
-            System.err.println(
-              f"    [v9_$label] $what ${(System.nanoTime() - t0) / 1e9}%.2f s")
-            r
-          }
-          ph("build") {
-            val cents = Similarity.trainIvfCentroids(e, initStride = 97L * m, iters = 3)
-            val cbs = Similarity.trainPqCodebooks(e, m = 4, subDim = 16,
-              initStride = 13L * m, ksub = 16, iters = 2)
-            Similarity.buildIvfPqIndex(e, cents, cbs, m = 4, subDim = 16, w, "emb")
-          }
-          val n = ph("query") {
-            Similarity.queryIvfPqIndex(spark, w, "emb", e,
-              e.filter(col("vec_id") < 8), k = 5, nprobe = 2,
-              rerankFactor = 8).count()
-          }
-          Fixture.deleteTree(wh)
-          n
-        }
-        // v17: index deletion lifecycle against an index that grows with
-        // mult, deleting a FIXED victim set (the 1× corpus's %9 slice,
-        // present at every mult since replica 0 keeps original ids).
-        // The tombstone delete must stay FLAT (one assignment of the
-        // victims + a tiny append — index never read); vacuum cost
-        // tracks the VOLUME OF THE TOMBSTONED LISTS, which here is most
-        // of the index (≈56 victims spread over K≈16–46 lists touch
-        // nearly all of them — worst case by construction); at real
-        // scale (K ~ √N ≫ |victims|) the untouched-list fraction is
-        // what partition pruning saves.
-        if (on("v17")) {
-          val wh = java.nio.file.Files
-            .createTempDirectory("probe_ivfdel_").toString
-          val w = new graft.sources.TableWriter(wh)
-          t(s"v17_del_build_$label") {
-            val cents = Similarity.trainIvfCentroids(e,
-              initStride = 97L * m, iters = 3)
-            Similarity.buildIvfIndex(e, cents, w, "emb")
-            spark.read.parquet(s"$wh/emb_lists").count()
-          }
-          t(s"v17_del_tombstone_$label") {
-            Similarity.deleteFromIvfIndex(
-              emb1.filter(col("vec_id") % 9 === 4), w, "emb")
-            spark.read.parquet(s"$wh/emb_tombstones").count()
-          }
-          t(s"v17_del_vacuum_$label") {
-            Similarity.vacuumIvfIndex(spark, w, "emb")
-            spark.read.parquet(s"$wh/emb_lists").count()
-          }
-          Fixture.deleteTree(wh)
-        }
-        // d36 SemDeDup: K scales as ~√N (stride = N/K), the regime that
-        // balances centroid assignment (O(N·K)) against the within-cluster
-        // pair scan (expected O(N²/K)) at O(N^1.5) total — the paper's
-        // fixed-cluster-size regime (K ∝ N) needs approximate assignment
-        // (assign through an IVF probe, not exact argmax over all K) to
-        // beat it; this probe measures the exact-assignment form.
-        if (on("d36")) {
-          val stride = math.max(1L,
-            (44 * math.sqrt(m.toDouble)).round)
-          val cents = Similarity.trainIvfCentroids(e, initStride = stride,
-            iters = 2)
-          // exact argmax assignment (O(N·K)) vs IVF-assisted (bound-
-          // pruned through √K coarse cells, still EXACT — the probe
-          // asserts identical drop counts at both scales)
-          var exactDrops = -1L
-          t(s"d36_semdedup_$label") {
-            exactDrops = Similarity.semDedup(e, cents, minCosine = 0.45)
-              .filter(!col("kept")).count()
-            exactDrops
-          }
-          t(s"d36_semdedup_ivf_$label") {
-            val d = Similarity.semDedupIvf(e, cents, minCosine = 0.45)
-              .filter(!col("kept")).count()
-            require(d == exactDrops,
-              s"ivf-assisted semdedup diverged: $d vs $exactDrops")
-            d
-          }
-        }
-      }
-      embN.unpersist()
-    }
-
-    if (on("q32")) {
-      val orders1 = graft.sources.Tables.load(spark, sfDir, "orders")
-      val ordersN = (0 until mult).map { r =>
-        orders1.withColumn("o_orderkey", col("o_orderkey") + lit(r * 100000000L))
-      }.reduce(_ unionByName _).repartition(cpus).persist()
-      for ((label, o) <- Seq("1x" -> orders1, s"${mult}x" -> ordersN)) {
-        t(s"q32_classifier_$label") {
-          o.createOrReplaceTempView("orders_scaleprobe")
-          val tx = graft.operators.Parallelism.fanOut(
-            spark.sql(graft.models.CardFixture.txSql("orders_scaleprobe")))
-          graft.models.CardModels.classifiedCardTransactions(
-            tx, graft.models.CardFixture.rules,
-            graft.models.CardFixture.merchantsDf(spark),
-            graft.models.CardFixture.mapDf(spark),
-            graft.models.CardFixture.leafDf(spark),
-            graft.models.CardFixture.merchantSeed).count()
-        }
-      }
-    }
-    // IVF-assisted SemDeDup assignment probe (r9 verdict ask #4) on a
-    // HIERARCHICAL embedding space — SemDeDup's own premise (topic →
-    // subtopic): 22 near-orthogonal super-centers × 21 sub-centers,
-    // vectors = sub-center + small deterministic noise, quantizer = the
-    // sub-centers. The coarse cells recover the super-centers with
-    // small radii, so the per-centroid bounds prune ~(K − K/√K) of the
-    // fine dots. (On the unclustered testdata embeddings the geometry
-    // check falls back to the exact plan — see the d36 probe, which
-    // asserts ivf == exact there too.)
-    if (on("d36h")) {
-      val dim = 64; val nSuper = 22
-      val rnd = new scala.util.Random(11)
-      def unitv(v: Seq[Double]) = {
-        val n = math.sqrt(v.map(x => x * x).sum); v.map(_ / n)
-      }
-      val supers = Seq.fill(nSuper)(unitv(Seq.fill(dim)(rnd.nextGaussian())))
-      // K grows with the corpus (the paper's constant-cluster-size rule:
-      // K ∝ N), so assignment — not the within-cluster pair stage — is
-      // what the probe exercises at scale
-      val scales = Seq(1, math.max(2, mult / 10), mult).distinct
-      for (m2 <- scales) {
-        val label = s"${m2}x"
-        val n = 2000L * m2
-        val nSub = 21 * math.max(1, math.sqrt(m2.toDouble).round.toInt)
-        val subs = for (s <- supers; _ <- 0 until nSub)
-          yield unitv(s.map(_ + rnd.nextGaussian() * 0.02))
-        val hk = subs.size
-        val cents = subs.zipWithIndex.map { case (v, i) => (i.toLong, v) }
-        val e = spark.range(n).select(col("id").as("vec_id"),
-            transform(
-              element_at(typedLit(subs),
-                (pmod(col("id"), lit(hk.toLong)) + 1).cast("int")),
-              (x, i) => x + sin(col("id") * lit(131) + i) * lit(0.02))
-              .cast("array<float>").as("embedding"))
-          .persist()
-        e.count()
-        println(s"d36h $label: N=$n K=$hk")
-        // the ASSIGNMENT stages timed head-to-head (the within-cluster
-        // pair stage is shared by both paths and dominates end-to-end
-        // timings, masking the argmax work the probe is about); the
-        // end-to-end drop counts are asserted equal below.
-        // sum(cent_id), not count(): a bare count lets column pruning
-        // drop the max_by argmax (and with it every dot) — the same
-        // probe-honesty trap d35 documented
-        t(s"d36h_assign_exact_$label") {
-          Similarity.assignExact(e, cents, "vec_id", "embedding")
-            .agg(sum(col("cent_id"))).head().getLong(0)
-        }
-        t(s"d36h_assign_pruned_$label") {
-          Similarity.assignPruned(e, cents, "vec_id", "embedding")
-            .agg(sum(col("cent_id"))).head().getLong(0)
-        }
-        var exactDrops = -1L
-        t(s"d36h_exact_$label") {
-          exactDrops = Similarity.semDedup(e, cents, minCosine = 0.9)
-            .filter(!col("kept")).count()
-          exactDrops
-        }
-        t(s"d36h_ivf_$label") {
-          val d = Similarity.semDedupIvf(e, cents, minCosine = 0.9)
-            .filter(!col("kept")).count()
-          require(d == exactDrops,
-            s"ivf-assisted semdedup diverged: $d vs $exactDrops")
-          d
-        }
-        e.unpersist(blocking = false)
-      }
-    }
-
-    // 10⁶-term vocabulary probe (r9 verdict ask #3): with the vocab
-    // sharded by term hash, a df merge must cost touched buckets ×
-    // bucket volume — i.e. track the BATCH's vocabulary — instead of a
-    // single-task rewrite of the whole vocabulary. 50k synthetic docs ×
-    // 20 unique terms = 10⁶ vocab rows at 1024 buckets; the appended
-    // batch carries 100 new terms, so ≤100 of 1024 buckets may rewrite.
-    if (on("vocab")) {
-      val vb = 1024
-      val nD = 50000L
-      def vdoc(ids: org.apache.spark.sql.DataFrame) = ids.select(
-        col("id").as("doc_id"),
-        concat_ws(" ", (0 until 20).map(i =>
-          concat(lit("t"), col("id") * 20 + lit(i))): _*).as("text"))
-      val vdocs = vdoc(spark.range(nD).toDF("id"))
-      val whDir = java.nio.file.Files
-        .createTempDirectory("probe_vocab_").toString
-      val w = new graft.sources.TableWriter(whDir)
-      t("vocab1m_build") {
-        Retrieval.buildBm25Index(vdocs, w, "docs", vocabBuckets = vb)
-        spark.read.parquet(s"$whDir/docs_vocab").count()
-      }
-      def vocabFiles(): Map[String, (Long, Long)] = {
-        def walk(f: java.io.File): Seq[java.io.File] =
-          if (f.isDirectory) f.listFiles.toSeq.flatMap(walk)
-          else if (f.getName.endsWith(".parquet")) Seq(f) else Nil
-        walk(new java.io.File(s"$whDir/docs_vocab"))
-          .map(f => f.getPath -> (f.length(), f.lastModified())).toMap
-      }
-      val before = vocabFiles()
-      t("vocab1m_append_100terms") {
-        Retrieval.appendBm25Index(vdoc(spark.range(nD, nD + 5).toDF("id")),
-          w, "docs", vocabBuckets = vb)
-        1L
-      }
-      val after = vocabFiles()
-      val untouched = before.count { case (p, sig) =>
-        after.get(p).contains(sig) }
-      val rewrittenBytes = after.collect {
-        case (p, (len, _)) if !before.get(p).contains(after(p)) => len }.sum
-      val totalBytes = after.values.map(_._1).sum
-      println(s"PROBE-INFO vocab1m: ${before.size} bucket files before, " +
-        s"$untouched untouched after append; rewritten " +
-        s"${rewrittenBytes / 1024} KiB of ${totalBytes / 1024} KiB total")
-      Fixture.deleteTree(whDir)
-    }
-
-    // recovery: the streamed-ingest crash paths on a REAL-vocabulary-
-    // scale index (r9 verdict asks #2/#3): 50k synthetic docs × 20
-    // unique terms = a 10⁶-term vocabulary over 4096 postings buckets /
-    // 64 vocab buckets (every bucket dir materializes).
-    // (a) bucket-scoped dirty recovery: a crashed merge of a 5-term
-    // batch is redelivered — recovery recomputes ONLY the batch's ≤5
-    // vocab buckets (reading the ≡-mod postings buckets, ≤7.8% of the
-    // index) and patches stats from the flag's snapshot, vs the old
-    // index-sized vocab rebuild (the bootstrap-dirty path, timed on the
-    // same index as the honest baseline).
-    // (b) O(batch) redo: a crashed attempt's files are deleted from its
-    // staged manifest — counted ops vs the old every-bucket-dir sweep.
-    if (on("recovery")) {
-      val nD = 50000L
-      def rdoc(ids: org.apache.spark.sql.DataFrame) = ids.select(
-        col("id").as("doc_id"),
-        concat_ws(" ", (0 until 20).map(i =>
-          concat(lit("t"), col("id") * 20 + lit(i))): _*).as("text"))
-      val whDir = java.nio.file.Files
-        .createTempDirectory("probe_rec_").toString
-      val w = new graft.sources.TableWriter(whDir)
-      t("rec_build_1mvocab_4096b") {
-        Retrieval.buildBm25Index(rdoc(spark.range(nD).toDF("id")), w, "docs",
-          buckets = 4096, vocabBuckets = 64)
-        spark.read.parquet(s"$whDir/docs_stats").count()
-      }
-      def smallBatch(off: Long) = spark.range(5).select(
-        (col("id") + off).as("doc_id"),
-        lit("zqa zqb zqc zqd zqe").as("text"))
-      val st = spark.read.parquet(s"$whDir/docs_stats").collect()(0)
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$whDir/docs_vocab_dirty"),
-        (s"7\n${st.getAs[Long]("n_docs")}\t${st.getAs[Long]("sum_dl")}\n")
-          .getBytes("UTF-8"))
-      t("rec_bucket_scoped") {
-        Retrieval.appendBm25IndexBatch(smallBatch(990000000L), w, "docs",
-          7, buckets = 4096, vocabBuckets = 64)
-        1L
-      }
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$whDir/docs_vocab_dirty"),
-        "8\nbootstrap\n".getBytes("UTF-8"))
-      t("rec_full_rebuild") {
-        Retrieval.appendBm25IndexBatch(smallBatch(995000000L), w, "docs",
-          8, buckets = 4096, vocabBuckets = 64)
-        1L
-      }
-      // (b) redo cost, counted: manifest-driven vs all-bucket listStatus
-      val conf = spark.sessionState.newHadoopConf()
-      val postRoot = new org.apache.hadoop.fs.Path(s"$whDir/docs_postings")
-      val fs = postRoot.getFileSystem(conf)
-      val strays = (0 until 3).map { i =>
-        val p = new org.apache.hadoop.fs.Path(postRoot,
-          s"term_bucket=$i/b9-$i.parquet")
-        val o = fs.create(p, true); o.write(1); o.close(); p.toString
-      }
-      val mf = graft.operators.IndexFamily.Bm25.commits(spark, w, "docs")
-        .staged(9)
-      graft.operators.IndexProtocol.writeLinesAtomic(fs, mf, strays)
-      t("redo_manifest") {
-        graft.operators.IndexProtocol.redoFromManifest(fs, mf)
-        strays.size.toLong
-      }
-      var dirsListed = 0L
-      t("redo_listall_4096") {
-        // the pre-r10 shape, for comparison: every bucket dir listed
-        var n = 0L
-        fs.listStatus(postRoot).filter(_.isDirectory).foreach { dd =>
-          dirsListed += 1
-          n += fs.listStatus(dd.getPath)
-            .count(_.getPath.getName.startsWith("b9-"))
-        }
-        n
-      }
-      println(s"PROBE-INFO redo ops: manifest = 1 read + " +
-        s"${strays.size} targeted deletes; pre-r10 sweep = " +
-        s"${dirsListed + 1} listStatus calls (every bucket dir), " +
-        "per batch, per redelivery")
-      Fixture.deleteTree(whDir)
-    }
-
-    // dag: the COMPOSED 27-model reference DAG at replication scale (r9
-    // verdict ask #7) — every operator inside it is probed individually,
-    // but the composition (classified → 5 spend grains + health metrics
-    // × 4 grains, shared-stage persists, parallel subtree scheduling)
-    // only ever ran at sf0.1. Card/health fixtures are derived from
-    // orders/customer replicated with shifted keys (dates unchanged, so
-    // per-period group sizes grow with mult — the aggregation-heavy
-    // direction), and the whole DAG materializes through the same
-    // runAllParallel q88 uses.
-    if (on("dag")) {
-      val orders1 = graft.sources.Tables.load(spark, sfDir, "orders")
-      val cust1 = graft.sources.Tables.load(spark, sfDir, "customer")
-      for ((label, mlt) <- Seq("1x" -> 1, s"${mult}x" -> mult)) {
-        (0 until mlt).map(r => orders1.withColumn("o_orderkey",
-            col("o_orderkey") + lit(r * 100000000L)))
-          .reduce(_ unionByName _)
-          .createOrReplaceTempView("orders_dagp")
-        (0 until mlt).map(r => cust1.withColumn("c_custkey",
-            col("c_custkey") + lit(r * 100000000L)))
-          .reduce(_ unionByName _)
-          .createOrReplaceTempView("customer_dagp")
-        val sources = Map(
-          "card_transactions" ->
-            spark.sql(graft.models.CardFixture.txSql("orders_dagp")),
-          "exercise_log" ->
-            spark.sql(graft.models.HealthFixture.exerciseSparkSql("orders_dagp")),
-          "weights" ->
-            spark.sql(graft.models.HealthFixture.weightsSparkSql("customer_dagp")),
-          "recipe_log" ->
-            spark.sql(graft.models.HealthFixture.recipeSparkSql("orders_dagp")),
-          "shopping_log" ->
-            spark.sql(graft.models.HealthFixture.shoppingSparkSql("orders_dagp")),
-          "merchant_regex" -> graft.models.CardFixture.regexDf(spark),
-          "merchants" -> graft.models.CardFixture.merchantsDf(spark),
-          "merchant_account_map" -> graft.models.CardFixture.mapDf(spark),
-          "accounts_leaf" -> graft.models.CardFixture.leafDf(spark))
-        val whDir = java.nio.file.Files
-          .createTempDirectory("probe_dag_").toString
-        val w = new graft.sources.TableWriter(whDir)
-        t(s"dag_run_all_$label") {
-          graft.models.ReferencePipeline.registry(
-              java.time.LocalDate.parse(graft.models.HealthFixture.asOf))
-            .runAllParallel(spark, sources, writer = Some(w))
-          spark.read.parquet(s"$whDir/metrics_month").count()
-        }
-        Fixture.deleteTree(whDir)
-      }
-    }
+    println(f"${"entry"}%-26s ${"cold 1x"}%9s ${s"cold ${mult}x"}%9s " +
+      f"${"ratio"}%6s ${"steady 1x"}%9s ${s"steady ${mult}x"}%9s ${"ratio"}%6s")
+    for (name <- names; (c1, s1) <- one(name); (cn, sn) <- many(name))
+      println(f"$name%-26s $c1%9.2f $cn%9.2f ${cn / c1}%5.1fx " +
+        f"$s1%9.2f $sn%9.2f ${sn / s1}%5.1fx")
     spark.stop()
   }
 }

@@ -582,16 +582,15 @@ object SparkEntry {
     * The oracle composes the transitive-closure clusters with the
     * re-derived LM model and the same argmax tie-break.
     */
-  private[graft] def clusterRepChain(scoredDocs: DataFrame,
-      pairs: DataFrame): DataFrame = {
-    val scored = scoredDocs
+  private def d34ClusterRep(s: SparkSession, dir: String): DataFrame = {
+    val scored = lmScoredDocs(s, dir)
       .withColumn("lm_score",
         when(size(col("ps")) > 0,
           aggregate(col("ps"), lit(0.0), (acc, p) => acc + p) /
             size(col("ps")))
           .otherwise(lit(0.0)))
       .select("doc_id", "lm_score")
-    val cl = Dedup.clusters(pairs)
+    val cl = Dedup.clusters(d2PairsShared(s, dir))
     val withCluster = scored
       .join(cl.withColumnRenamed("member_id", "doc_id"), Seq("doc_id"), "left")
       .withColumn("cluster_id", coalesce(col("cluster_id"), col("doc_id")))
@@ -605,9 +604,6 @@ object SparkEntry {
       .select(col("cluster_id"), col("doc_id").as("kept_doc"),
         col("lm_score"), col("n_members"))
   }
-
-  private def d34ClusterRep(s: SparkSession, dir: String): DataFrame =
-    clusterRepChain(lmScoredDocs(s, dir), d2PairsShared(s, dir))
 
   /** Prefix-filtered EXACT Jaccard pairs (AllPairs family) — the
     * deterministic same-output twin of d3: identical true-pair answer,
@@ -1268,31 +1264,26 @@ object SparkEntry {
     "lmmodel", { case (ug, bg, _) =>
       ug.unpersist(blocking = false); bg.unpersist(blocking = false) })
 
-  /** Cache-free trainer, DataFrame-parameterized so ScaleProbe can run it
-    * on replicated corpora; returns persisted model frames + vocab size.
-    */
-  private[graft] def lmModelFrom(docs: DataFrame): (DataFrame, DataFrame, Long) = {
-    // fanned out: the unigram/bigram explodes are per-row CPU over a
-    // possibly-single-split scan (no-op at scale — real scans have splits)
-    val toks = graft.operators.Parallelism.fanOutScan(
-        docs.select(col("text")), col("text"))
-      .select(split(col("text"), " ").as("ws"))
-    val ug = toks.select(explode(col("ws")).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("ug_c"))
-      .persist()
-    val v = ug.count() // vocab size: single scalar; also primes the persist
-    val bg = toks.filter(size(col("ws")) >= 2)
-      .select(explode(transform(sequence(lit(1), size(col("ws")) - 1),
-        i => concat_ws(" ", element_at(col("ws"), i),
-          element_at(col("ws"), i + 1)))).as("bg"))
-      .groupBy("bg").agg(count(lit(1)).as("bg_c"))
-      .filter(col("bg_c") >= lmBigramMinCount)
-      .persist()
-    (ug, bg, v)
-  }
-
   private def lmModel(s: SparkSession, dir: String): (DataFrame, DataFrame, Long) =
-    lmModelCache(s, dir)(_ => lmModelFrom(t(s, dir, "documents")))
+    lmModelCache(s, dir) { _ =>
+      // fanned out: the unigram/bigram explodes are per-row CPU over a
+      // possibly-single-split scan (no-op at scale — real scans have splits)
+      val toks = graft.operators.Parallelism.fanOutScan(
+          t(s, dir, "documents").select(col("text")), col("text"))
+        .select(split(col("text"), " ").as("ws"))
+      val ug = toks.select(explode(col("ws")).as("w"))
+        .groupBy("w").agg(count(lit(1)).as("ug_c"))
+        .persist()
+      val v = ug.count() // vocab size: single scalar; also primes the persist
+      val bg = toks.filter(size(col("ws")) >= 2)
+        .select(explode(transform(sequence(lit(1), size(col("ws")) - 1),
+          i => concat_ws(" ", element_at(col("ws"), i),
+            element_at(col("ws"), i + 1)))).as("bg"))
+        .groupBy("bg").agg(count(lit(1)).as("bg_c"))
+        .filter(col("bg_c") >= lmBigramMinCount)
+        .persist()
+      (ug, bg, v)
+    }
 
   /** Documents with their per-pair probability lists (shared by d32's
     * score report, d33's curriculum ordering and d34's keep policy).
@@ -1306,9 +1297,9 @@ object SparkEntry {
     * later left-to-right fold adds the same IEEE doubles in the same
     * order as the oracle's `list(p ORDER BY pi)`.
     */
-  private[graft] def lmScoredDocsFrom(d: DataFrame,
-      model: (DataFrame, DataFrame, Long)): DataFrame = {
-    val (ug, bg, v) = model
+  private def lmScoredDocs(s: SparkSession, dir: String): DataFrame = {
+    val d = t(s, dir, "documents")
+    val (ug, bg, v) = lmModel(s, dir)
     val ws = split(col("text"), " ")
     // fanned out once for both consumers (the bigram explode here and the
     // text re-read the callers run bpeTokenCount over): per-row CPU whose
@@ -1337,9 +1328,6 @@ object SparkEntry {
         coalesce(col("ps"), array().cast("array<double>")).as("ps"))
   }
 
-  private def lmScoredDocs(s: SparkSession, dir: String): DataFrame =
-    lmScoredDocsFrom(t(s, dir, "documents"), lmModel(s, dir))
-
   /** Curriculum packing (d33 — three machines composed end to end):
     * documents ordered globally by LM fluency (d32's score, ties by
     * doc_id) via the distributed no-single-task ranking machinery, then
@@ -1349,8 +1337,8 @@ object SparkEntry {
     * prefix sum — so any divergence in ANY of the three stages breaks
     * the hash.
     */
-  private[graft] def curriculumChain(scoredDocs: DataFrame): DataFrame = {
-    val scored = scoredDocs
+  private def d33CurriculumPack(s: SparkSession, dir: String): DataFrame = {
+    val scored = lmScoredDocs(s, dir)
       .withColumn("lm_score",
         when(size(col("ps")) > 0,
           aggregate(col("ps"), lit(0.0), (acc, p) => acc + p) /
@@ -1372,9 +1360,6 @@ object SparkEntry {
         col("n_toks").cast("long").as("n_toks"),
         col("tape_start"), col("seq_id"), col("seq_offset"))
   }
-
-  private def d33CurriculumPack(s: SparkSession, dir: String): DataFrame =
-    curriculumChain(lmScoredDocs(s, dir))
 
   private def d17QuotaSample(s: SparkSession, dir: String): DataFrame =
     Sampling.quotaSample(t(s, dir, "documents"), col("lang"), col("doc_id"),
@@ -3782,8 +3767,8 @@ object SparkEntry {
     * docs holding an essential term enter the fold-and-rank shuffle.
     * EXACT top-k by construction (pruned docs score strictly below the
     * k-th best), so the entry shares v10's oracle verbatim: the pruned
-    * plan must hash-match the full replay. The 100× high-df probe
-    * (ScaleProbe) is where the candidate-mass reduction is measured.
+    * plan must hash-match the full replay. SCALE.md, "high-df lexical
+    * serving + sharded vocab", has the candidate-mass reduction at 100×.
     */
   private def v21Bm25MaxScore(s: SparkSession, dir: String): DataFrame = {
     val d = t(s, dir, "documents")

@@ -11,10 +11,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * the result is the length-k `array<double>` of row dots. One
   * expression, one tight nested loop inside whole-stage codegen.
   *
-  * Why this exists (measured, ScaleProbe d36h): computing k per-row
-  * dots against k separate literal vectors either goes through a
-  * higher-order-function lambda (interpreted per element — ~5× slower
-  * than the codegen'd work it replaces) or through k independent
+  * Why this exists (measured; SCALE.md, "IVF-assisted SemDeDup
+  * assignment"): computing k per-row dots against k separate literal
+  * vectors either goes through a higher-order-function lambda
+  * (interpreted per element — ~5× slower than the codegen'd work it
+  * replaces) or through k independent
   * [[DotProduct]] columns, whose generated code at k ≈ 70 literal
   * 64-dim arrays blows past JIT/codegen method limits and falls back
   * to interpretation wholesale. A single expression with the matrix as

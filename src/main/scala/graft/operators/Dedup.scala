@@ -456,7 +456,8 @@ object Dedup {
     * layout: the batch's distinct bucket ids (bounded collect ≤
     * `buckets`) prune the index read before the broadcast band join —
     * same candidate set, index-size-independent scan when buckets are
-    * sized to the index (ScaleProbe d37 measures the read fraction).
+    * sized to the index (SCALE.md, "d37 bucketed band index", has the
+    * measured read fraction; `d37_incremental_minhash` runs this path).
     */
   def incrementalLshCandidatesIndexed(
       spark: org.apache.spark.sql.SparkSession,

@@ -252,8 +252,8 @@ object Retrieval {
     *     vocabulary (10⁸ terms) no longer funnels through one write
     *     task. Size `vocabBuckets` by the vocabulary the way mergeByKey
     *     sizes `__bucket` by the table: bucket volume constant, so
-    *     merge cost tracks the BATCH's vocabulary (ScaleProbe "vocab"
-    *     measures it at 10⁶ terms);
+    *     merge cost tracks the BATCH's vocabulary (SCALE.md, "high-df
+    *     lexical serving + sharded vocab", has it at 10⁶ terms);
     *   - `{name}_stats`: one row (n_docs, sum_dl).
     */
   def buildBm25Index(docs: DataFrame, writer: graft.sources.TableWriter,
@@ -380,8 +380,8 @@ object Retrieval {
     * ids (same contract as the other appends). Cost: linear in the
     * batch for postings; the df merge tracks the BATCH's vocabulary ×
     * bucket volume, not the corpus vocabulary (bucket count sized to
-    * the vocabulary, mergeByKey-style — ScaleProbe "vocab" measures a
-    * 10⁶-term vocabulary).
+    * the vocabulary, mergeByKey-style — SCALE.md, "high-df lexical
+    * serving + sharded vocab", has a 10⁶-term vocabulary).
     */
   def appendBm25Index(newDocs: DataFrame, writer: graft.sources.TableWriter,
       name: String, buckets: Int = 64, vocabBuckets: Int = 16,
@@ -475,9 +475,10 @@ object Retrieval {
     *      postings (the ground truth step 2 just made correct) and
     *      patches stats from the flag's snapshot plus the batch's own
     *      deterministic contribution — recovery cost tracks the
-    *      BATCH's vocabulary, not the index (`ScaleProbe recovery`
-    *      measures it). A crashed bootstrap rebuilds vocab+stats from
-    *      the postings, which at bootstrap are batch-sized.
+    *      BATCH's vocabulary, not the index (SCALE.md, "streamed-ingest
+    *      crash paths at index scale"). A crashed bootstrap rebuilds
+    *      vocab+stats from the postings, which at bootstrap are
+    *      batch-sized.
     *   4. marker, then the flags clear. A crash between them leaves
     *      litter that the next call's fast path (step 1) or the stale-
     *      flag check sweeps — never incorrect state.

@@ -146,10 +146,10 @@ object Similarity {
     * across runs, engines, and repartitioning; the SQL oracles replay
     * the same predicate). The stride-init rows are always included, so
     * init is unchanged. Training cost then tracks K, not the corpus:
-    * web-scale K = 10⁵ trains on c·K vectors instead of N (`ScaleProbe
-    * ivftrain` measures K = 10⁴), and the per-iteration driver traffic
-    * stays the K×dim means either way. `sampleFactor <= 0` disables
-    * sampling (train on everything).
+    * web-scale K = 10⁵ trains on c·K vectors instead of N (SCALE.md,
+    * "sampled quantizer training at web-scale K", has K = 10⁴), and the
+    * per-iteration driver traffic stays the K×dim means either way.
+    * `sampleFactor <= 0` disables sampling (train on everything).
     *
     * Returns (cent_id, vector) sorted by cent_id — tiny (K×dim), collected
     * to the driver and folded into literals exactly like v2's planes.
@@ -1374,10 +1374,10 @@ object Similarity {
 
   /** Exact argmax-cosine assignment: broadcast join against all K
     * centroids, codegen'd dots, map-side-combined [[argmaxAssign]] —
-    * zero heavy shuffles, O(N·K) dot work. Probe-visible
-    * (ScaleProbe d36h times it against [[assignPruned]]).
+    * zero heavy shuffles, O(N·K) dot work (SCALE.md, "IVF-assisted
+    * SemDeDup assignment", times it against [[assignPruned]]).
     */
-  private[graft] def assignExact(emb: DataFrame,
+  private def assignExact(emb: DataFrame,
       centroids: Seq[(Long, Seq[Double])], idCol: String,
       vecCol: String): DataFrame = {
     val spark = emb.sparkSession
@@ -1520,9 +1520,9 @@ object Similarity {
       minCosine, idCol)
 
   /** Bound-pruned assignment (see [[semDedupIvf]]); falls back to
-    * [[assignExact]] when the cell geometry cannot pay. Probe-visible.
+    * [[assignExact]] when the cell geometry cannot pay.
     */
-  private[graft] def assignPruned(emb: DataFrame,
+  private def assignPruned(emb: DataFrame,
       centroids: Seq[(Long, Seq[Double])], idCol: String,
       vecCol: String): DataFrame = {
     val spark = emb.sparkSession

@@ -9,8 +9,9 @@ import scala.jdk.CollectionConverters._
 /** Source guards for drifts that were removed: sessions built outside
   * [[GraftSession.builder]], session caches in [[SparkEntry]] declared
   * as ad-hoc maps instead of a [[Fixture]] (which is what releases them),
-  * index-protocol file names built outside `IndexProtocol.scala`, and
-  * DAG loops other than `ModelRegistry.run`.
+  * index-protocol file names built outside `IndexProtocol.scala`, DAG
+  * loops other than `ModelRegistry.run`, and a scale probe that calls
+  * operators itself instead of running registry entries.
   * The patterns are spelled in pieces so this file does not match itself.
   */
 class SourceGuardSpec extends AnyFunSuite {
@@ -71,5 +72,18 @@ class SourceGuardSpec extends AnyFunSuite {
     } yield s"${p.getParent.getFileName}/${p.getFileName}:${i + 1}"
     assert(calls.size == 1 && calls.head.startsWith("core/Model.scala:"),
       s"model transform calls outside the one runner: $calls")
+  }
+
+  test("the scale probe reaches the engine only through SparkEntry.queries") {
+    val banned = Seq("graft." + "operators", "Dedup" + ".", "Retrieval" + ".",
+      "Similarity" + ".", "createTemp" + "Directory")
+    val offenders = for {
+      f <- Seq("ScaleProbe.scala", "ScaleData.scala")
+      src = read(Paths.get(s"src/main/scala/graft/$f"))
+      b <- banned if src.contains(b)
+    } yield s"$f: $b"
+    assert(offenders.isEmpty, s"second copy of engine paths: $offenders")
+    val probe = read(Paths.get("src/main/scala/graft/ScaleProbe.scala"))
+    assert(probe.contains("SparkEntry" + ".queries(name)"))
   }
 }
