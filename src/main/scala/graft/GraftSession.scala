@@ -17,6 +17,23 @@ import org.apache.spark.sql.SparkSession
   * engine through `spark.sql.extensions=graft.GraftExtensions` instead of
   * this builder need the same setting at submit time:
   * `--conf spark.sql.codegen.cache.maxEntries=800`.
+  *
+  * Artifact isolation (`spark.sql.artifact.isolation.enabled`) is off. The
+  * engine adds no session artifacts (no `addArtifact`, no Spark Connect),
+  * so isolation gives it nothing, and it costs a compile per class per
+  * query: Spark keys the class cache by (class loader, code), and with
+  * isolation on every session UUID gets its own executor class loader.
+  * Each `StreamingQuery` runs on a cloned session with a fresh UUID, so
+  * every streamed sync recompiled its task-side classes (74 of the 82 a
+  * steady sync compiled). With it off, every session shares the default
+  * loader, and a steady streamed sync compiles no class
+  * (`CodegenCacheSpec`). Extension-installed deployments pass it at
+  * submit time too: `--conf spark.sql.artifact.isolation.enabled=false`.
+  * [[install]] does not set it. It is a runtime conf, but each session
+  * reads it once, at its first job. Set with `spark.conf.set` on a live
+  * session that has run jobs, it still reaches the sessions cloned
+  * afterwards, so streaming queries started later share one loader
+  * (measured); the live session keeps its own.
   */
 object GraftSession {
 
@@ -38,6 +55,9 @@ object GraftSession {
       // classes a run compiles once (per-step literals) and for the
       // cache's 4 independently evicting segments of 200 each
       .config("spark.sql.codegen.cache.maxEntries", "800")
+      // one executor class loader for every session, streaming clones
+      // included, so their classes hit the cache above; see the object doc
+      .config("spark.sql.artifact.isolation.enabled", "false")
 
   /** The mains' core count: `SPARK_GRAFT_CPUS` when set, otherwise every
     * available processor, as [[local]] defaults to.
@@ -51,8 +71,9 @@ object GraftSession {
 
   /** Install graft SQL functions and optimizer rules on any live session
     * (cluster deployments should prefer
-    * `--conf spark.sql.extensions=graft.GraftExtensions`). It does not size
-    * the generated-class cache; see the object doc.
+    * `--conf spark.sql.extensions=graft.GraftExtensions`). It neither
+    * sizes the generated-class cache nor turns artifact isolation off;
+    * see the object doc.
     */
   def install(spark: SparkSession): SparkSession = {
     GraftFunctions.register(spark)

@@ -917,7 +917,9 @@ object Retrieval {
   }
 
   /** The body of [[deleteFromBm25IndexBatch]] (steps 2–6); false when
-    * the index is empty and there is nothing to strike.
+    * the index is empty and there is nothing to strike. Steps 4–6 read
+    * the persisted struck set through one collect (its term buckets,
+    * vocab buckets and (n_docs, Σdl)), taken before any mutation.
     */
   private def strikeBm25Batch(victims: DataFrame,
       writer: graft.sources.TableWriter, c: IndexProtocol.Commits,
@@ -957,8 +959,31 @@ object Retrieval {
           s"deleteFromBm25IndexBatch: rename $stage -> $struckDir failed")
     }
     val struck = spark.read.parquet(struckDir.toString)
+    // everything steps 4–6 need from the struck set in ONE tagged collect
+    // (the append leg's fused shape): the set is write-ahead and never
+    // changes once renamed in, so reading it before any mutation is
+    // exact. Tag 0 rows are the distinct term buckets (≤ buckets), tag 1
+    // rows the distinct vocab buckets (≤ vocabBuckets), the tag 2 row is
+    // (n_docs, Σdl).
+    val tagged = struck
+      .select(lit(0).as("tag"), col("term_bucket").cast("long").as("a"),
+        lit(0L).as("b"))
+      .unionAll(struck.select(lit(1).as("tag"),
+        pmod(xxhash64(col("term")), lit(vocabBuckets.toLong)).as("a"),
+        lit(0L).as("b")))
+      .distinct()
+      .unionAll(struck.select(col("doc_id"), col("dl")).distinct()
+        .agg(count(lit(1)).as("n"),
+          coalesce(sum(col("dl")).cast("long"), lit(0L)).as("s"))
+        .select(lit(2).as("tag"), col("n").as("a"), col("s").as("b")))
+      .collect()
+    def ids(tag: Int) = tagged.filter(_.getInt(0) == tag).map(_.getLong(1).toInt)
+    val hit = ids(0)
     // absent ids / re-deletes: byte-level no-op
-    if (struck.isEmpty) return true
+    if (hit.isEmpty) return true
+    val touchedVb = ids(1).toSet
+    val (struckN, struckS) = tagged.find(_.getInt(0) == 2)
+      .map(r => (r.getLong(1), r.getLong(2))).get
 
     // ---- step 3: stats snapshot write-ahead (pre-delete, once) ----
     if (!fs.exists(state)) {
@@ -969,9 +994,6 @@ object Retrieval {
       IndexProtocol.readLines(fs, state).head.split("\t").map(_.toLong)
 
     // ---- step 4: strike postings (idempotent vs the persisted set) ----
-    // bounded collect: ≤ buckets ids actually holding victim rows
-    val hit = struck.select("term_bucket").distinct()
-      .collect().map(_.getInt(0))
     val pruned = spark.read.parquet(postRoot.toString)
       .withColumn("term_bucket", col("term_bucket").cast("int"))
       .filter(col("term_bucket").isin(hit.toIndexedSeq: _*))
@@ -997,11 +1019,6 @@ object Retrieval {
 
     // ---- step 5: recompute the struck terms' vocab buckets (exact,
     // idempotent — replaces decrement arithmetic entirely) ----
-    // bounded collect: ≤ vocabBuckets ids
-    val touchedVb = struck
-      .select(pmod(xxhash64(col("term")), lit(vocabBuckets.toLong))
-        .cast("int").as("vb"))
-      .distinct().collect().map(_.getInt(0)).toSet
     val vocabPath = writer.path(s"${name}_vocab")
     if (buckets % vocabBuckets == 0) {
       val pb = (0 until buckets).filter(b => touchedVb.contains(b % vocabBuckets))
@@ -1045,12 +1062,8 @@ object Retrieval {
     }
 
     // ---- step 6: stats from the snapshot + the struck set ----
-    val b = struck.select(col("doc_id"), col("dl")).distinct()
-      .agg(count(lit(1)).as("n"), sum(col("dl")).cast("long").as("s"))
-      .collect()(0)
     writer.materialize(s"${name}_stats",
-      Seq((n0 - b.getAs[Long]("n"), s0 - b.getAs[Long]("s")))
-        .toDF("n_docs", "sum_dl"))
+      Seq((n0 - struckN, s0 - struckS)).toDF("n_docs", "sum_dl"))
     // step 7 (fenced marker, then the write-aheads clear) is runLeg's
     true
   }
@@ -1887,7 +1900,9 @@ object Retrieval {
     * ([[graft.streaming.VtCdfStream]] — offsets ARE version ids) drives
     * the same exactly-once legs through `foreachBatch`. A micro-batch
     * may span several versions (backlog catch-up); rows carry
-    * `_commit_version`, so the batch is applied PER VERSION ascending —
+    * `_commit_version`, so the batch is applied PER VERSION ascending
+    * (filtered by version only when it spans several; a one-version
+    * batch is applied as is, so a steady sync plans the same every step) —
     * the strike-before-append discipline holds within and across
     * versions, and version ids double as the protocol batch ids, so a
     * crash anywhere (including a redelivered micro-batch after a
@@ -1919,9 +1934,13 @@ object Retrieval {
           // bounded collect: one id per version in the micro-batch
           val versions = batch.select("_commit_version").distinct()
             .collect().map(_.getLong(0)).sorted
+          // a one-version batch (the steady case) goes in unfiltered: a
+          // per-version literal in the filter and in the cached scan's
+          // stats predicate would make every step compile new classes
           for (v <- versions)
             IndexProtocol.applyChangeBatch(legs,
-              batch.filter(col("_commit_version") === v), v,
+              if (versions.length == 1) batch
+              else batch.filter(col("_commit_version") === v), v,
               Seq(keyCol, textCol))
         } finally batch.unpersist()
         ()
