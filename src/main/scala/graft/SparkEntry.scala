@@ -3600,7 +3600,9 @@ object SparkEntry {
         iters = ivfIters)
       val w = new graft.sources.TableWriter(wh)
       Similarity.buildIvfIndex(base, cents, w, "emb")
-      Similarity.appendIvfIndex(e.filter(col("vec_id") % 10 === 0), w, "emb")
+      Similarity.adoptIvfIndexForStreaming(s, w, "emb")
+      Similarity.appendIvfIndexBatch(e.filter(col("vec_id") % 10 === 0), w,
+        "emb", 0L)
       w
     }
     Similarity.queryIvfIndex(s, writer, "emb",
@@ -3617,7 +3619,7 @@ object SparkEntry {
     * actually changes) and the index follows by delete → TARGETED
     * vacuum → append under the frozen quantizer. The vacuum step is
     * mandatory and cheap (pruned to the victims' own lists):
-    * [[Similarity.appendIvfIndex]] REFUSES a still-tombstoned id,
+    * [[Similarity.appendIvfIndexBatch]] REFUSES a still-tombstoned id,
     * because with the old rows still physical the tombstone either
     * strikes both generations or serves both (IvfDeleteSpec pins the
     * refusal). Oracle: quantizer trained on the ORIGINAL corpus,
@@ -3640,9 +3642,11 @@ object SparkEntry {
       val cents = Similarity.trainIvfCentroids(e, initStride = 97L, iters = ivfIters)
       val w = new graft.sources.TableWriter(wh)
       Similarity.buildIvfIndex(e, cents, w, "emb")
-      Similarity.deleteFromIvfIndex(e.filter(col("vec_id") % 13 === 2), w, "emb")
-      Similarity.vacuumIvfIndex(s, w, "emb")
-      Similarity.appendIvfIndex(upd.filter(col("vec_id") % 13 === 2), w, "emb")
+      Similarity.adoptIvfIndexForStreaming(s, w, "emb")
+      Similarity.deleteFromIvfIndexBatch(e.filter(col("vec_id") % 13 === 2),
+        w, "emb", 0L)
+      Similarity.appendIvfIndexBatch(upd.filter(col("vec_id") % 13 === 2),
+        w, "emb", 0L)
       w
     }
     Similarity.queryIvfIndex(s, writer, "emb",
@@ -3854,8 +3858,10 @@ object SparkEntry {
     val writer = bm25DelCache(s, dir) { wh =>
       val w = new graft.sources.TableWriter(wh)
       Retrieval.buildBm25Index(d, w, "docs")
-      Retrieval.deleteFromBm25Index(d.filter(col("doc_id") % 11 === 5), w, "docs")
-      Retrieval.deleteFromBm25Index(d.filter(col("doc_id") % 11 === 5), w, "docs")
+      Retrieval.deleteFromBm25IndexBatch(d.filter(col("doc_id") % 11 === 5),
+        w, "docs", 0L)
+      Retrieval.deleteFromBm25IndexBatch(d.filter(col("doc_id") % 11 === 5),
+        w, "docs", 1L)
       w
     }
     val qs = Retrieval.queryTerms(d, col("doc_id") % 97 === 0, bm25QTerms)
@@ -4343,7 +4349,7 @@ object SparkEntry {
   /** Incremental BM25 index ingest (v13): the index is built from the
     * base corpus (doc_id % 10 != 0) and the rest arrives as an appended
     * batch — postings appended, dfs additively merged, stats summed
-    * (see [[Retrieval.appendBm25Index]]). Every update is integer
+    * (see [[Retrieval.appendBm25IndexBatch]]). Every update is integer
     * addition, so the merged index is BIT-identical to one built over
     * the whole corpus, and the oracle is exactly v10's full-corpus
     * replay — same discipline as v7 sharing v3's oracle.
@@ -4355,7 +4361,8 @@ object SparkEntry {
     val writer = bm25IncCache(s, dir) { wh =>
       val w = new graft.sources.TableWriter(wh)
       Retrieval.buildBm25Index(d.filter(col("doc_id") % 10 =!= 0), w, "docs")
-      Retrieval.appendBm25Index(d.filter(col("doc_id") % 10 === 0), w, "docs")
+      Retrieval.appendBm25IndexBatch(d.filter(col("doc_id") % 10 === 0), w,
+        "docs", 0L)
       w
     }
     val qs = Retrieval.queryTerms(d, col("doc_id") % 97 === 0, bm25QTerms)
@@ -5125,8 +5132,10 @@ object SparkEntry {
     val d = t(s, dir, "documents")
     val writer = posIncCache(s, dir) { wh =>
       val w = new graft.sources.TableWriter(wh)
-      Retrieval.appendPositionalIndex(d.filter(col("doc_id") % 10 =!= 0), w, "docs")
-      Retrieval.appendPositionalIndex(d.filter(col("doc_id") % 10 === 0), w, "docs")
+      Retrieval.appendPositionalIndexBatch(d.filter(col("doc_id") % 10 =!= 0),
+        w, "docs", 0L)
+      Retrieval.appendPositionalIndexBatch(d.filter(col("doc_id") % 10 === 0),
+        w, "docs", 1L)
       w
     }
     val phrases = d
@@ -5156,10 +5165,10 @@ object SparkEntry {
     val writer = posDelCache(s, dir) { wh =>
       val w = new graft.sources.TableWriter(wh)
       Retrieval.buildPositionalIndex(d, w, "docs")
-      Retrieval.deleteFromPositionalIndex(
-        d.filter(col("doc_id") % 11 === 5), w, "docs")
-      Retrieval.deleteFromPositionalIndex(
-        d.filter(col("doc_id") % 11 === 5), w, "docs")
+      Retrieval.deleteFromPositionalIndexBatch(
+        d.filter(col("doc_id") % 11 === 5), w, "docs", 0L)
+      Retrieval.deleteFromPositionalIndexBatch(
+        d.filter(col("doc_id") % 11 === 5), w, "docs", 1L)
       w
     }
     val phrases = d
@@ -6438,8 +6447,8 @@ object SparkEntry {
     val writer = compactIdxCache(s, dir) { wh =>
       val w = new graft.sources.TableWriter(wh)
       (0 to 3).foreach { c =>
-        Retrieval.appendBm25Index(
-          d.filter(pmod(col("doc_id"), lit(4)) === c), w, "docs")
+        Retrieval.appendBm25IndexBatch(
+          d.filter(pmod(col("doc_id"), lit(4)) === c), w, "docs", c.toLong)
       }
       w.compact(s, "docs_postings", targetBytes = 256L * 1024 * 1024)
       w
@@ -6464,8 +6473,8 @@ object SparkEntry {
     val writer = compactPosCache(s, dir) { wh =>
       val w = new graft.sources.TableWriter(wh)
       (0 to 3).foreach { c =>
-        Retrieval.appendPositionalIndex(
-          d.filter(pmod(col("doc_id"), lit(4)) === c), w, "docs")
+        Retrieval.appendPositionalIndexBatch(
+          d.filter(pmod(col("doc_id"), lit(4)) === c), w, "docs", c.toLong)
       }
       w.compact(s, "docs_positions", targetBytes = 256L * 1024 * 1024)
       w
@@ -6497,10 +6506,11 @@ object SparkEntry {
         iters = ivfIters)
       val w = new graft.sources.TableWriter(wh)
       Similarity.buildIvfIndex(base, cents, w, "emb")
+      Similarity.adoptIvfIndexForStreaming(s, w, "emb")
       (0 to 2).foreach { c =>
-        Similarity.appendIvfIndex(
+        Similarity.appendIvfIndexBatch(
           e.filter(col("vec_id") % 10 === 0
-            && pmod(col("vec_id") / 10, lit(3)) === c), w, "emb")
+            && pmod(col("vec_id") / 10, lit(3)) === c), w, "emb", c.toLong)
       }
       w.compact(s, "emb_lists", targetBytes = 256L * 1024 * 1024)
       w

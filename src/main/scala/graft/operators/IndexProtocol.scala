@@ -488,8 +488,7 @@ private[graft] object IndexProtocol {
     try out.write(lines.mkString("", "\n", "\n").getBytes("UTF-8"))
     finally out.close()
     if (fs.exists(p)) fs.delete(p, false)
-    if (!fs.rename(tmp, p))
-      throw new java.io.IOException(s"writeLinesAtomic: rename $tmp -> $p failed")
+    TableWriter.renameOrThrow(fs, tmp, p, "writeLinesAtomic")
   }
 
   /** Parsed lease state: legacy single-line leases (writerId only,

@@ -305,143 +305,60 @@ object Retrieval {
     }
   }
 
-  /** Merge a (term, df) delta into the bucketed vocab: only the buckets
-    * the delta's terms hash into are read, merged (staged to disk —
-    * the merge plan reads the files being overwritten), and
-    * dynamic-partition-overwritten; buckets left with no surviving
-    * terms are deleted (dynamic overwrite cannot write an empty
-    * partition). Untouched buckets stay byte-stable (spec-asserted).
-    * `combine` receives (df_old nullable, df_delta nullable) and
-    * returns the new df; rows with non-positive df are dropped.
+  /** Add a batch's (term, df_delta) into the bucketed vocab — the df
+    * merge of [[appendBm25IndexBatch]]: only the `touched` buckets (the
+    * ones the delta's terms hash into; the leg collects them fused with
+    * its batch stats) are read, merged and swapped in. Untouched buckets
+    * stay byte-stable (spec-asserted). Deltas are positive, so every
+    * touched bucket keeps at least the delta's own terms: no bucket
+    * empties, and none needs deleting.
     */
   private def mergeVocab(spark: org.apache.spark.sql.SparkSession,
       writer: graft.sources.TableWriter, name: String, delta: DataFrame,
-      vocabBuckets: Int, combine: (Column, Column) => Column,
-      touchedOpt: Option[Seq[Int]] = None): Unit = {
-    val vocabPath = writer.path(s"${name}_vocab")
-    val withBucket = delta.withColumn("vocab_bucket",
-      pmod(xxhash64(col("term")), lit(vocabBuckets.toLong)).cast("int"))
-    // bounded collect: ≤ vocabBuckets ids — or the caller's precomputed
-    // set (the batch-append leg collects it fused with the batch stats,
-    // saving a job per batch)
-    val touched = touchedOpt.map(_.sorted.toArray).getOrElse(
-      withBucket.select("vocab_bucket").distinct()
-        .collect().map(_.getInt(0)).sorted)
+      vocabBuckets: Int, touched: Seq[Int]): Unit = {
     if (touched.isEmpty) return
-    val existing = spark.read.parquet(vocabPath)
-      .withColumn("vocab_bucket", col("vocab_bucket").cast("int"))
-      .filter(col("vocab_bucket").isin(touched.toIndexedSeq: _*))
-      .select(col("term"), col("df").as("df_old"))
-    val merged = existing
-      .join(withBucket.select(col("term"), col("df_delta")),
-        Seq("term"), "full_outer")
-      .select(col("term"), combine(col("df_old"), col("df_delta")).as("df"))
-      .filter(col("df") > 0)
-      .withColumn("vocab_bucket",
-        pmod(xxhash64(col("term")), lit(vocabBuckets.toLong)).cast("int"))
-    // publish by stage-then-swap (TableWriter.swapStagedDirs): the merged
-    // buckets are physically written ONCE, partitioned — the old plan
-    // wrote them flat to a stage, read the stage back, and re-wrote
-    // everything under dynamic partition overwrite (every merged byte
-    // written twice plus an extra read and a distinct-collect job).
-    // The merge plan reads the very files being replaced, which is why
-    // the write lands in a stage dir first and reaches the live bucket
-    // dirs only as renames.
-    val stage = writer.path(s"__stage_vocab_$name")
-    val stageP = new org.apache.hadoop.fs.Path(stage)
+    val vocabPath = writer.path(s"${name}_vocab")
     val root = new org.apache.hadoop.fs.Path(vocabPath)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val surviving: Set[Int] = try {
+    graft.sources.TableWriter.recoverSwap(fs, root, "vocab_bucket=")
+    val existing = spark.read.parquet(vocabPath)
+      .withColumn("vocab_bucket", col("vocab_bucket").cast("int"))
+      .filter(col("vocab_bucket").isin(touched.sorted: _*))
+      .select(col("term"), col("df").as("df_old"))
+    val merged = existing
+      .join(delta, Seq("term"), "full_outer")
+      .select(col("term"),
+        (coalesce(col("df_old"), lit(0L)) + coalesce(col("df_delta"), lit(0L)))
+          .as("df"))
+      .withColumn("vocab_bucket",
+        pmod(xxhash64(col("term")), lit(vocabBuckets.toLong)).cast("int"))
+    // publish by stage-then-swap (TableWriter.swapStagedDirs): the merge
+    // plan reads the very files being replaced, so the merged buckets
+    // are written ONCE, partitioned, into a stage dir and reach the live
+    // bucket dirs only as renames
+    val stageP = new org.apache.hadoop.fs.Path(writer.path(s"__stage_vocab_$name"))
+    try {
       merged.repartition(col("vocab_bucket")) // one file per bucket dir
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .partitionBy("vocab_bucket")
-        .parquet(stage)
-      graft.sources.TableWriter
-        .swapStagedDirs(fs, stageP, root, "vocab_bucket=").toSet
-    } finally {
-      fs.delete(stageP, true)
-    }
-    touched.filterNot(surviving).foreach { b =>
-      fs.delete(new org.apache.hadoop.fs.Path(root, s"vocab_bucket=$b"), true)
-    }
+        .parquet(stageP.toString)
+      graft.sources.TableWriter.swapStagedDirs(fs, stageP, root, "vocab_bucket=")
+    } finally fs.delete(stageP, true)
   }
 
-  /** Incremental ingest into a persisted BM25 index — the lexical third
-    * of the crawl-pattern triad (d37 minhash bands, v12 IVF lists, this):
-    * the batch's postings are tokenized ONCE and appended into the
-    * bucket-partitioned layout (existing postings files untouched), the
-    * vocabulary's document frequencies are additively merged into ONLY
-    * the vocab buckets the batch's terms hash into ([[mergeVocab]] —
-    * untouched vocab buckets byte-stable), and the two corpus scalars
-    * are updated from driver-side longs. Every update is integer
-    * addition, so append == rebuild BIT-EXACTLY, query-for-query
-    * (RetrievalSpec pins it) — unlike the ANN indexes there is no
-    * frozen-quantizer approximation trade-off. Batch docs must be NEW
-    * ids (same contract as the other appends). Cost: linear in the
-    * batch for postings; the df merge tracks the BATCH's vocabulary ×
-    * bucket volume, not the corpus vocabulary (bucket count sized to
-    * the vocabulary, mergeByKey-style — SCALE.md, "high-df lexical
-    * serving + sharded vocab", has a 10⁶-term vocabulary).
-    */
-  def appendBm25Index(newDocs: DataFrame, writer: graft.sources.TableWriter,
-      name: String, buckets: Int = 64, vocabBuckets: Int = 16,
-      idCol: String = "doc_id", textCol: String = "text"): Unit = {
-    val spark = newDocs.sparkSession
-    // bootstrap: the first batch CREATES the index, so a streaming
-    // ingest needs no out-of-band initial build (q89 relies on this)
-    val statsP = new org.apache.hadoop.fs.Path(writer.path(s"${name}_stats"))
-    if (!statsP.getFileSystem(spark.sessionState.newHadoopConf()).exists(statsP)) {
-      buildBm25Index(newDocs, writer, name, buckets, vocabBuckets,
-        idCol, textCol)
-      return
-    }
-    // one tokenize pass serves all three updates (postings, dfs, stats):
-    // the batch postings are pinned for the scope of the append — without
-    // this, the postings write, the df merge, and the stats update each
-    // re-tokenize the batch
-    val tfB = postingsOf(newDocs, idCol, textCol)
-      .withColumn("term_bucket",
-        pmod(xxhash64(col("term")), lit(buckets.toLong)).cast("int"))
-      .persist()
-    try {
-      writer.materialize(s"${name}_postings",
-        tfB.repartition(col("term_bucket")),
-        partitionBy = Seq("term_bucket"),
-        mode = org.apache.spark.sql.SaveMode.Append)
-
-      // dfs merge and the stats update are INDEPENDENT derived writes
-      // over the same pinned batch postings — overlapped (guide §2.6).
-      // dfs merge rewrites only the buckets the BATCH's vocabulary
-      // hashes into — integer addition, so append == rebuild holds
-      // bucket for bucket. Stats: two longs via the driver — derived
-      // from the pinned postings ((doc_id, dl) is distinct per doc
-      // there; every doc has ≥1 posting since split("") = [""]); the
-      // read happens before the overwrite within its leg, so there is
-      // no read-your-own-write hazard.
-      graft.operators.Parallelism.overlap {
-        val (oldN, oldS) = readStatsDirect(writer, name)
-        val b = tfB.select(col("doc_id"), col("dl")).distinct()
-          .agg(count(lit(1)).as("n"), sum(col("dl")).cast("long").as("s"))
-          .collect()(0)
-        import spark.implicits._
-        writer.materialize(s"${name}_stats",
-          Seq((oldN + b.getAs[Long]("n"), oldS + b.getAs[Long]("s")))
-            .toDF("n_docs", "sum_dl"))
-      } {
-        mergeVocab(spark, writer, name,
-          tfB.groupBy("term").agg(count(lit(1)).as("df_delta")),
-          vocabBuckets,
-          (old, delta) => coalesce(old, lit(0L)) + coalesce(delta, lit(0L)))
-      }
-    } finally tfB.unpersist(blocking = false)
-  }
-
-  /** EXACTLY-ONCE batch append into a persisted BM25 index — the
-    * streaming-ingest form of [[appendBm25Index]] (q89/q106): Spark's
-    * foreachBatch is at-least-once (a batch whose append completed but
-    * whose checkpoint commit didn't is REDELIVERED after a restart),
-    * and a plain append double-applies it. This variant is idempotent
-    * per `batchId` under a write-ahead protocol:
+  /** EXACTLY-ONCE batch append into a persisted BM25 index — the one
+    * append path of the family (v13, q92, the streamed ingest of
+    * q89/q106): the batch's postings are tokenized ONCE and moved into
+    * the bucket-partitioned layout (existing postings files untouched),
+    * the vocabulary's dfs are additively merged into ONLY the vocab
+    * buckets the batch's terms hash into ([[mergeVocab]]), and the two
+    * corpus scalars are updated from driver-side longs. Every update is
+    * integer addition, so append == rebuild BIT-EXACTLY, query for query
+    * (RetrievalSpec pins it). Batch docs must be NEW ids; the first
+    * batch on an absent index bootstraps it. Spark's foreachBatch is
+    * at-least-once (a batch whose append completed but whose checkpoint
+    * commit didn't is REDELIVERED after a restart), so the leg is
+    * idempotent per `batchId` under a write-ahead protocol:
     *
     *   0. WRITER FENCE: the protocol assumes ONE writer; a second
     *      concurrent stream's interleaved flag/marker writes would
@@ -594,7 +511,8 @@ object Retrieval {
           partitionBy = Seq("vocab_bucket"))
         val vDst = path(s"${name}_vocab")
         fs.delete(vDst, true)
-        fs.rename(path(s"${name}_vocab_next"), vDst)
+        graft.sources.TableWriter.renameOrThrow(fs,
+          path(s"${name}_vocab_next"), vDst, s"appendBm25IndexBatch($name)")
         val st = written.select(col("doc_id"), col("dl")).distinct()
           .agg(count(lit(1)).as("n"), sum(col("dl")).cast("long").as("s"))
           .collect()(0)
@@ -676,9 +594,7 @@ object Retrieval {
             writeStats(n0 + bStat._1, s0 + bStat._2)) {
             mergeVocab(spark, writer, name,
               tfB.groupBy("term").agg(count(lit(1)).as("df_delta")),
-              vocabBuckets,
-              (o, delta) => coalesce(o, lit(0L)) + coalesce(delta, lit(0L)),
-              touchedOpt = Some(touchedVb))
+              vocabBuckets, touchedVb)
           }
       }
       // step 4 (fenced marker, then the flags clear) is runLeg's
@@ -744,137 +660,21 @@ object Retrieval {
       IndexFamily.Positional.commits(newDocs.sparkSession, writer, name),
       name, batchId, buckets, idCol, textCol)
 
-  /** Targeted delete from a persisted BM25 index — the lexical twin of
-    * the ANN deletion lifecycle (v17), and the stronger form: every
-    * update is integer subtraction (postings struck, dfs decremented,
-    * zero-df terms dropped, stats reduced), so delete == rebuild-
-    * without-victims BIT-exactly, not just rank-equal. Victims arrive
-    * WITH their text (the corpus table has it), which is what keeps the
-    * rewrite pruned: a victim's postings live exactly in the buckets
-    * its own terms hash into, so only those partitions are read, and of
-    * those only partitions actually holding victim rows are rewritten.
-    * A presence guard (victim ids ∩ pruned postings) makes absent ids
-    * and re-deletes complete no-ops — without it a re-delete would
-    * silently corrupt the df/stat decrements. Cost tracks the victims'
-    * vocabulary, not the corpus vocabulary (on a real Zipf vocabulary a
-    * small victim set touches few buckets; a tiny synthetic vocabulary
-    * touches them all — the honest worst case).
-    *
-    * The df/dl/n_docs decrements are aggregated FROM THE STRUCK INDEX
-    * ROWS (the pruned postings semi-joined with the presence set), not
-    * from re-tokenizing the caller-supplied victim text: if the passed
-    * text drifted from what was indexed, text-derived decrements would
-    * subtract the wrong terms and lengths from vocab/stats while the
-    * postings strike removed different rows — silent index corruption.
-    * Deriving both sides from the same struck rows keeps postings,
-    * vocab, and stats mutually consistent no matter what text the
-    * caller passed; the victim text only PRUNES which buckets are
-    * probed (with drifted text, postings in unpredicted buckets can
-    * survive — but the index stays internally consistent).
-    *
-    * This plain form is a single-writer MAINTENANCE operation with no
-    * protocol files, so snapshot readers ([[bm25ServingView]]) cannot
-    * detect it mid-flight — schedule it in a reader-quiet window. The
-    * CDC/streaming path uses [[deleteFromBm25IndexBatch]], whose
-    * write-ahead state both makes crashes replayable and fences
-    * concurrent snapshot readers (loud refusal, never a half-deleted
-    * read).
-    */
-  def deleteFromBm25Index(victims: DataFrame,
-      writer: graft.sources.TableWriter, name: String, buckets: Int = 64,
-      vocabBuckets: Int = 16,
-      idCol: String = "doc_id", textCol: String = "text"): Unit = {
-    val spark = victims.sparkSession
-    import spark.implicits._
-    val tfV0 = postingsOf(victims, idCol, textCol)
-      .withColumn("term_bucket",
-        pmod(xxhash64(col("term")), lit(buckets.toLong)).cast("int"))
-    // bounded collect: ≤ buckets ids — the victims' own term buckets
-    val affected = tfV0.select("term_bucket").distinct()
-      .collect().map(_.getInt(0))
-    if (affected.isEmpty) return
-    val postPath = writer.path(s"${name}_postings")
-    val pruned = spark.read.parquet(postPath)
-      .withColumn("term_bucket", col("term_bucket").cast("int"))
-      .filter(col("term_bucket").isin(affected.toIndexedSeq: _*))
-    // the struck rows — the victims' actual postings in the probed
-    // buckets — are STAGED TO DISK, not persist()ed: their lineage reads
-    // the postings path this delete is about to overwrite, and a
-    // cache-miss recomputation after the overwrite would read deleted
-    // files — the file-backed copy severs the lineage (delta-sized, no
-    // driver collect). Every decrement below aggregates these rows.
-    val struckStage = writer.path(s"__stage_struck_$name")
-    pruned
-      .join(victims.select(col(idCol).as("doc_id")).distinct(),
-        Seq("doc_id"), "left_semi")
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(struckStage)
-    val struck = spark.read.parquet(struckStage)
-    try {
-      if (struck.isEmpty) return
-      // postings: rewrite only buckets that actually hold victim rows
-      // (bounded collect: ≤ buckets ids)
-      val hit = struck.select("term_bucket").distinct()
-        .collect().map(_.getInt(0))
-      val survivors = pruned
-        .filter(col("term_bucket").isin(hit.toIndexedSeq: _*))
-        .join(struck.select("doc_id").distinct(), Seq("doc_id"), "left_anti")
-      // stage-then-swap (TableWriter.swapStagedDirs): survivors written
-      // ONCE, partitioned, instead of flat-stage + read-back + dynamic
-      // overwrite (twice the bytes plus an extra read and collect job)
-      val stage = writer.path(s"__stage_del_$name")
-      val stageP = new org.apache.hadoop.fs.Path(stage)
-      val root = new org.apache.hadoop.fs.Path(postPath)
-      val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-      val surviving: Set[Int] = try {
-        survivors.repartition(col("term_bucket")) // one file per bucket
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .partitionBy("term_bucket")
-          .parquet(stage)
-        graft.sources.TableWriter
-          .swapStagedDirs(fs, stageP, root, "term_bucket=").toSet
-      } finally {
-        fs.delete(stageP, true)
-      }
-      hit.filterNot(surviving).foreach { b =>
-        fs.delete(new org.apache.hadoop.fs.Path(root, s"term_bucket=$b"), true)
-      }
-
-      // vocab: dfs decremented by the struck per-term doc counts (struck
-      // rows are one per (term, doc), so count(*) per term IS the df
-      // decrement); terms nobody holds anymore disappear, and only the
-      // struck terms' vocab buckets rewrite
-      mergeVocab(spark, writer, name,
-        struck.groupBy("term").agg(count(lit(1)).as("df_delta")),
-        vocabBuckets,
-        // a delta term absent from the vocab would be an inconsistency
-        // upstream; coalesce keeps the arithmetic total regardless
-        (old, delta) => coalesce(old, lit(0L)) - coalesce(delta, lit(0L)))
-
-      // stats: two longs down, mirror of append's two longs up — the dl
-      // is the INDEXED document length riding the struck rows, distinct
-      // per (doc_id, dl), consistent with what build/append summed
-      val (oldN, oldS) = readStatsDirect(writer, name)
-      val b = struck.select(col("doc_id"), col("dl")).distinct()
-        .agg(count(lit(1)).as("n"), sum(col("dl")).cast("long").as("s"))
-        .collect()(0)
-      writer.materialize(s"${name}_stats",
-        Seq((oldN - b.getAs[Long]("n"), oldS - b.getAs[Long]("s")))
-          .toDF("n_docs", "sum_dl"))
-    } finally {
-      val sp = new org.apache.hadoop.fs.Path(struckStage)
-      sp.getFileSystem(spark.sessionState.newHadoopConf()).delete(sp, true)
-    }
-  }
-
-  /** EXACTLY-ONCE batch delete from a persisted BM25 index — the delete
-    * leg of the streamed-maintenance protocol ([[appendBm25IndexBatch]]
-    * is the append leg; together they let a CDC feed drive the index,
-    * [[syncBm25IndexFromFeed]]). A plain [[deleteFromBm25Index]] is NOT
-    * crash-safe: its df/stats decrements derive from the struck rows,
-    * and a crash after the postings strike but before the decrements
-    * leaves rows gone with vocab/stats never repaired — the redelivery
-    * finds no victims and no-ops, permanently inconsistent. This
-    * variant write-aheads everything the replay needs:
+  /** EXACTLY-ONCE batch delete from a persisted BM25 index — the one
+    * delete path of the family (v18; with [[appendBm25IndexBatch]] it
+    * lets a CDC feed drive the index, [[syncBm25IndexFromFeed]]) and the
+    * lexical twin of the ANN deletion lifecycle (v17): postings struck,
+    * dfs recomputed, zero-df terms dropped, stats reduced — delete ==
+    * rebuild-without-victims BIT-exactly. Victims arrive WITH their
+    * text, which keeps the strike pruned: a victim's postings live
+    * exactly in the buckets its own terms hash into. Absent ids and
+    * re-deletes are byte-level no-ops. The vocab/stats changes derive
+    * from the STRUCK INDEX ROWS, never from re-tokenizing the passed
+    * text, so a drifted text cannot make postings, vocab and stats
+    * disagree (with drifted text, postings in unpredicted buckets can
+    * survive — but the index stays internally consistent). The struck
+    * rows are the one pre-state a replay cannot recompute after the
+    * strike, so the leg write-aheads everything the replay needs:
     *
     *   1. `{name}_commits/del_<id>` marker present → done (fast path).
     *   2. STRUCK-SET WRITE-AHEAD: the victims' actual index rows are
@@ -885,7 +685,9 @@ object Retrieval {
     *   3. STATS SNAPSHOT WRITE-AHEAD (`delstate_<id>`): pre-delete
     *      (n_docs, sum_dl), written before any mutation.
     *   4. strike postings — idempotent given the persisted struck set
-    *      (anti-join converges from any partial state);
+    *      (anti-join converges from any partial state), after
+    *      [[graft.sources.TableWriter.recoverSwap]] restores a bucket a
+    *      crashed swap left in trash (run before the struck set is read);
     *   5. vocab: the struck terms' buckets are RECOMPUTED from the
     *      post-strike postings (exact and idempotent — no decrement
     *      arithmetic to double-apply; buckets % vocabBuckets == 0
@@ -934,6 +736,7 @@ object Retrieval {
     val postRoot = path(s"${name}_postings")
     // empty index: deleting nothing is done
     if (!fs.exists(postRoot)) return false
+    graft.sources.TableWriter.recoverSwap(fs, postRoot, "term_bucket=")
 
     // ---- step 2: struck-set write-ahead (pre-strike truth, once) ----
     if (!fs.exists(struckDir)) {
@@ -954,9 +757,8 @@ object Retrieval {
             Seq("doc_id"), "left_semi")
       struck0.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .parquet(stage.toString)
-      if (!fs.rename(stage, struckDir))
-        throw new java.io.IOException(
-          s"deleteFromBm25IndexBatch: rename $stage -> $struckDir failed")
+      graft.sources.TableWriter.renameOrThrow(fs, stage, struckDir,
+        "deleteFromBm25IndexBatch")
     }
     val struck = spark.read.parquet(struckDir.toString)
     // everything steps 4–6 need from the struck set in ONE tagged collect
@@ -1000,9 +802,8 @@ object Retrieval {
     val survivors = pruned
       .join(struck.select("doc_id").distinct(), Seq("doc_id"), "left_anti")
     // stage-then-swap (TableWriter.swapStagedDirs): survivors written
-    // ONCE, partitioned — see [[deleteFromBm25Index]]. Idempotent under
-    // replay: re-running the strike from any partial state re-stages
-    // the same survivors and re-swaps.
+    // ONCE, partitioned. Idempotent under replay: re-running the strike
+    // from any partial state re-stages the same survivors and re-swaps.
     val stage = path(s"__stage_delb${batchId}_$name")
     val surviving: Set[Int] = try {
       survivors.repartition(col("term_bucket")) // one file per bucket
@@ -1058,7 +859,8 @@ object Retrieval {
         partitionBy = Seq("vocab_bucket"))
       val vDst = path(s"${name}_vocab")
       fs.delete(vDst, true)
-      fs.rename(path(s"${name}_vocab_next"), vDst)
+      graft.sources.TableWriter.renameOrThrow(fs,
+        path(s"${name}_vocab_next"), vDst, s"deleteFromBm25IndexBatch($name)")
     }
 
     // ---- step 6: stats from the snapshot + the struck set ----
@@ -1096,17 +898,18 @@ object Retrieval {
       appendBm25IndexBatch(_, writer, name, _, buckets, vocabBuckets,
         keyCol, textCol, writerId))
 
-  /** Targeted delete from a positional index — the third and SIMPLEST
-    * of the index deletions (v17 ANN, v18 BM25, this): positional
-    * postings are pure per-(term, doc) state with no cross-document
-    * statistics, so striking the victims' rows IS the whole delete and
-    * delete == rebuild-without-victims bit-exactly with nothing to
-    * merge. Same pruning discipline as [[deleteFromBm25Index]]: a
-    * victim's rows live exactly in its own terms' buckets, presence is
-    * disk-staged (severing lineage through the path being overwritten),
-    * absent ids and re-deletes are byte-level no-ops.
+  /** The strike of [[deleteFromPositionalIndexBatch]] — the third and
+    * SIMPLEST of the index deletions (v17 ANN, v18 BM25, this):
+    * positional postings are pure per-(term, doc) state with no
+    * cross-document statistics, so striking the victims' rows IS the
+    * whole delete and delete == rebuild-without-victims bit-exactly with
+    * nothing to merge. Same pruning discipline as
+    * [[deleteFromBm25IndexBatch]]: a victim's rows live exactly in its
+    * own terms' buckets, presence is disk-staged (severing lineage
+    * through the path being overwritten), absent ids and re-deletes are
+    * byte-level no-ops.
     */
-  def deleteFromPositionalIndex(victims: DataFrame,
+  private def deleteFromPositionalIndex(victims: DataFrame,
       writer: graft.sources.TableWriter, name: String, buckets: Int = 64,
       idCol: String = "doc_id", textCol: String = "text"): Unit = {
     val spark = victims.sparkSession
@@ -1201,8 +1004,8 @@ object Retrieval {
     *     exactly that (None → empty result);
     *   - in-flight DELETE legs refuse loudly (in-place rewrites have no
     *     pre-image) — the delete protocols' write-ahead files make them
-    *     detectable; plain [[deleteFromBm25Index]]/compaction are
-    *     operator-scheduled maintenance outside this guarantee.
+    *     detectable; compaction is the one index write outside this
+    *     guarantee — operator-scheduled maintenance.
     *
     * Returns (pruned-committed-postings-for-terms, nDocs, avgdl, dfs);
     * None when the committed state is an unborn index.
@@ -1613,36 +1416,14 @@ object Retrieval {
         .repartition(col("term_bucket")),
       partitionBy = Seq("term_bucket"))
 
-  /** Incremental ingest into a positional index — the phrase-search leg
-    * of the crawl-pattern family (v12 IVF, v13 BM25, this): a batch of
-    * NEW documents is tokenized once and its postings appended into the
-    * bucket-partitioned layout. Positional postings are pure per-(term,
-    * doc) state — no cross-document statistics at all (unlike BM25's
-    * dfs/avgdl) — so append == rebuild BIT-exactly with nothing to
-    * merge: the strongest of the three append contracts. Bootstrap on
-    * first batch, same as appendBm25Index.
-    */
-  def appendPositionalIndex(newDocs: DataFrame,
-      writer: graft.sources.TableWriter, name: String, buckets: Int = 64,
-      idCol: String = "doc_id", textCol: String = "text"): Unit = {
-    val spark = newDocs.sparkSession
-    val tblP = new org.apache.hadoop.fs.Path(
-      writer.path(s"${name}_positions"))
-    val exists = tblP.getFileSystem(spark.sessionState.newHadoopConf())
-      .exists(tblP)
-    writer.materialize(s"${name}_positions",
-      positionalPostings(newDocs, buckets, idCol, textCol)
-        .repartition(col("term_bucket")),
-      partitionBy = Seq("term_bucket"),
-      mode = if (exists) org.apache.spark.sql.SaveMode.Append
-             else org.apache.spark.sql.SaveMode.Overwrite)
-  }
-
-  /** EXACTLY-ONCE batch append into a positional index — the streaming
-    * form of [[appendPositionalIndex]] (q107), and the SIMPLEST of the
-    * three batch-commit protocols: positional postings are pure
-    * per-(term, doc) state with nothing derived (no vocab, no stats),
-    * so the leg's body ([[IndexProtocol.runLeg]] supplies the writer
+  /** EXACTLY-ONCE batch append into a positional index — the one append
+    * path of the family (v16, q103, the streamed ingest of q107): a
+    * batch of NEW documents is tokenized once and its postings moved
+    * into the bucket-partitioned layout; the first batch on an absent
+    * index creates it. The SIMPLEST of the three batch-commit protocols:
+    * positional postings are pure per-(term, doc) state with nothing
+    * derived (no vocab, no stats), so append == rebuild BIT-exactly and
+    * the leg's body ([[IndexProtocol.runLeg]] supplies the writer
     * fence and the commit marker) is the manifest-driven `b<id>-…`
     * postings redo and the staging step — any crash point replays to
     * identical bytes, a redelivered batch is a marker check.

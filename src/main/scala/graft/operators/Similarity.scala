@@ -629,62 +629,29 @@ object Similarity {
       centroids.toDF("cent_id", "cent_vec"))
   }
 
-  /** Incremental ingest into a persisted IVF index — the ANN side of the
-    * crawl pattern (d37's discipline applied to vectors): a new batch is
-    * assigned against the EXISTING quantizer (read back from the index,
-    * so the caller needs no training state) and appended into the
-    * cent_id-partitioned lists. Nothing already indexed is re-read or
-    * re-written — cost is linear in the batch, zero in the corpus. The
-    * quantizer is intentionally frozen: re-training would move list
-    * boundaries and require a full re-encode (that operation is a
+  /** EXACTLY-ONCE batch append into a persisted IVF index — the one
+    * append path of the family (v12, v19, q104, the streamed ingest of
+    * q108), the ANN side of the crawl pattern: a batch is assigned
+    * against the EXISTING quantizer (read back from the index, so the
+    * caller needs no training state) and moved into the
+    * cent_id-partitioned lists; nothing already indexed is re-read or
+    * re-written. The quantizer is intentionally frozen: re-training
+    * would move list boundaries and require a full re-encode (a
     * REBUILD, not an append); recall drift under distribution shift is
-    * the operator's documented trade-off, exactly as in FAISS's
-    * `add`-after-`train` contract.
-    */
-  def appendIvfIndex(batch: DataFrame,
-      writer: graft.sources.TableWriter, name: String,
-      idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    val spark = batch.sparkSession
-    import spark.implicits._
-    // re-adding a tombstoned id is REFUSED: its old rows are still
-    // physically in the lists (struck only at serve time), so clearing
-    // the tombstone would serve BOTH generations, and keeping it would
-    // strike the fresh rows too. UPDATE is delete → vacuumIvfIndex
-    // (pruned to the tombstoned lists — cheap) → append; the guard
-    // turns the silent-duplicate hazard into a loud error. Check cost:
-    // one join against the delta-sized tombstone table.
-    val tombPath = new org.apache.hadoop.fs.Path(
-      writer.path(s"${name}_tombstones"))
-    val fs = tombPath.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(tombPath)) {
-      val clash = writer.read(spark, s"${name}_tombstones")
-        .join(batch.select(col(idCol).as("nbr_id")).distinct(),
-          Seq("nbr_id"), "left_semi")
-        .limit(1).collect()
-      require(clash.isEmpty,
-        s"appendIvfIndex: batch re-adds tombstoned id ${clash.headOption
-          .map(_.get(0)).getOrElse("")} — run vacuumIvfIndex first " +
-          "(old rows are still physical; serving would see two generations)")
-    }
-    val centroids = writer.read(spark, s"${name}_centroids")
-      .as[(Long, Seq[Double])].collect().sortBy(_._1).toSeq
-    val assigned = assignToCentroids(batch, centroids, idCol, vecCol)
-    writer.materialize(s"${name}_lists", assigned,
-      partitionBy = Seq("cent_id"),
-      mode = org.apache.spark.sql.SaveMode.Append)
-  }
-
-  /** EXACTLY-ONCE batch append into a persisted IVF index — the
-    * streaming form of [[appendIvfIndex]] (q108): a writer fence, per-
-    * batch commit markers, and deterministic `b<id>-…` list-file naming
-    * behind a staged-file manifest make crash replays byte-identical
-    * and redeliveries no-ops. The FIRST batch BOOTSTRAPS the index —
+    * the documented trade-off, exactly as in FAISS's `add`-after-`train`
+    * contract. Re-adding a still-tombstoned id is REFUSED: its old rows
+    * are still physical (struck only at serve time), so clearing the
+    * tombstone would serve both generations and keeping it would strike
+    * the fresh rows too — an UPDATE is [[deleteFromIvfIndexBatch]]
+    * (which vacuums) then this leg. A writer fence, per-batch commit
+    * markers, and deterministic `b<id>-…` list-file naming behind a
+    * staged-file manifest make crash replays byte-identical and
+    * redeliveries no-ops. The FIRST batch BOOTSTRAPS the index —
     * quantizer trained on that batch (stride-97 init, the v3 Lloyd
     * discipline) and the lists built from it — so a streamed ingest
     * needs no out-of-band build; bootstrap is Overwrite all the way
-    * down and therefore redo-idempotent. Later batches assign against
-    * the frozen quantizer (the appendIvfIndex contract) and land under
-    * their own batch names. No derived tables exist in this family
+    * down and therefore redo-idempotent. Later batches land under their
+    * own batch names. No derived tables exist in this family
     * (centroids are written once at bootstrap), so there is no
     * dirty-flag leg.
     *
@@ -696,10 +663,10 @@ object Similarity {
     * next to the bootstrap's files — permanent duplicate list rows.
     * Under history-based detection every pre-marker crash replays the
     * (idempotent, Overwrite-everything) bootstrap. The corollary: this
-    * family OWNS its index from birth; to stream appends into an index
-    * built out-of-band by [[buildIvfIndex]], declare the adoption first
-    * with [[adoptIvfIndexForStreaming]] — otherwise the first streamed
-    * batch would re-bootstrap over the prebuilt lists.
+    * family OWNS its index from birth; to append into an index built by
+    * [[buildIvfIndex]], declare the adoption first with
+    * [[adoptIvfIndexForStreaming]] — otherwise the first batch would
+    * re-bootstrap over the prebuilt lists.
     */
   def appendIvfIndexBatch(batch: DataFrame,
       writer: graft.sources.TableWriter, name: String, batchId: Long,
@@ -732,8 +699,9 @@ object Similarity {
         idCol, vecCol)
       buildIvfIndex(batch, cents, writer, name, idCol, vecCol)
     } else {
-      // same re-add guard as appendIvfIndex: a still-tombstoned id must
-      // be vacuumed before it may re-enter (two-generations hazard)
+      // the re-add guard (see the leg's doc): a still-tombstoned id must
+      // be vacuumed before it may re-enter (two-generations hazard);
+      // one join against the delta-sized tombstone table
       val tombPath = new org.apache.hadoop.fs.Path(
         writer.path(s"${name}_tombstones"))
       if (c.fs.exists(tombPath)) {
@@ -834,11 +802,13 @@ object Similarity {
           keyCol, vecCol, writerId)),
       Seq(keyCol, vecCol))
 
-  /** Declare that a [[buildIvfIndex]]-built index is being handed to the
-    * streaming append family: writes the `adopted` sentinel into the
-    * commits dir so [[appendIvfIndexBatch]]'s history-based bootstrap
-    * detection treats the prebuilt lists as committed state instead of
-    * re-bootstrapping over them. Call ONCE, before the stream starts.
+  /** Hand a [[buildIvfIndex]]-built index to [[appendIvfIndexBatch]],
+    * the family's one append path — for any later append, streamed or
+    * not (v12, v19 and q104 build, adopt, then append). Writes the
+    * `adopted` sentinel into the commits dir so the leg's history-based
+    * bootstrap detection treats the prebuilt lists as committed state
+    * instead of re-bootstrapping over them. Call ONCE, after the build
+    * and before the first append.
     */
   def adoptIvfIndexForStreaming(spark: org.apache.spark.sql.SparkSession,
       writer: graft.sources.TableWriter, name: String): Unit = {
@@ -872,7 +842,7 @@ object Similarity {
     * still struck in its true list. Victims absent from the index (and
     * re-deletes of already-tombstoned ids) write NOTHING — without this
     * presence guard a delete-then-insert upsert would strand a tombstone
-    * that makes [[appendIvfIndex]] refuse a legitimate first-time
+    * that makes [[appendIvfIndexBatch]] refuse a legitimate first-time
     * insert. Common-case cost: one partition-pruned probe plus a
     * two-column full-lists scan only when some victim id is not where
     * assignment predicts (absent or drifted).
@@ -958,6 +928,8 @@ object Similarity {
       .collect().map(_.getLong(0)).sorted
     if (affected.nonEmpty) {
       val listsPath = writer.path(s"${name}_lists")
+      val root = new org.apache.hadoop.fs.Path(listsPath)
+      graft.sources.TableWriter.recoverSwap(fs, root, "cent_id=")
       val lists = readListsLongCentId(spark, listsPath)
         .filter(col("cent_id").isin(affected.toIndexedSeq: _*))
       val survivors = lists
@@ -967,7 +939,6 @@ object Similarity {
       // overwrite (twice the bytes plus an extra read and collect job)
       val stage = writer.path(s"__stage_vacuum_$name")
       val stageP = new org.apache.hadoop.fs.Path(stage)
-      val root = new org.apache.hadoop.fs.Path(listsPath)
       val surviving: Set[Long] = try {
         survivors.repartition(col("cent_id"))
           .write.mode(org.apache.spark.sql.SaveMode.Overwrite)

@@ -278,13 +278,7 @@ object SnapshotStore {
     // except the vacuumed delta itself, which is exactly why the undo
     // runs BEFORE anything reads the table here).
     if (fs.exists(root))
-      fs.listStatus(root).filter(_.getPath.getName.startsWith("_trash_snap_run_"))
-        .foreach { st =>
-          val live = new org.apache.hadoop.fs.Path(root,
-            "snap_run=" + st.getPath.getName.stripPrefix("_trash_snap_run_"))
-          if (!fs.exists(live)) fs.rename(st.getPath, live)
-          else fs.delete(st.getPath, true)
-        }
+      graft.sources.TableWriter.recoverSwap(fs, root, "snap_run=")
     val full = writer.read(spark, name)
     val prefix = full.filter(col("snap_run") <= lit(upTo))
     // bounded collect: ≤ number of persisted runs
@@ -319,8 +313,9 @@ object SnapshotStore {
         collapsed.write.mode("overwrite").parquet(stagedPart.toString)
         val live = new org.apache.hadoop.fs.Path(root, s"snap_run=$upTo")
         val trash = new org.apache.hadoop.fs.Path(root, s"_trash_snap_run_$upTo")
-        if (fs.exists(live)) fs.rename(live, trash)
-        fs.rename(stagedPart, live)
+        if (fs.exists(live))
+          graft.sources.TableWriter.renameOrThrow(fs, live, trash, "vacuum")
+        graft.sources.TableWriter.renameOrThrow(fs, stagedPart, live, "vacuum")
         fs.delete(trash, true)
       } finally {
         fs.delete(stage, true)

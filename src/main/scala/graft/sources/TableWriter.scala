@@ -254,6 +254,7 @@ final class TableWriter(warehouseDir: String) extends Serializable {
         // bounded collect: ≤ numBuckets ids
         val affected = pinned.select("__bucket").distinct()
           .collect().map(_.getInt(0))
+        TableWriter.recoverSwap(fs, p, "__bucket=")
         val existing = readResolved(spark, name, Some(affected.toIndexedSeq))
           .withColumn("__gen", lit(0))
         mergeStagedSwap(spark, name,
@@ -308,8 +309,9 @@ final class TableWriter(warehouseDir: String) extends Serializable {
     // content moves to an underscore-prefixed, '='-free trash name first
     // (hidden from readers — partition discovery only keeps underscore
     // dirs that look like partitions), so readers never see two
-    // generations of one bucket; a crash mid-swap leaves at most a
-    // briefly-missing bucket and trash that the next merge sweeps.
+    // generations of one bucket; a crash mid-swap leaves a bucket in
+    // trash, which the next merge or delete restores before it reads
+    // (TableWriter.recoverSwap).
     val stage = path(s"__stage_$name")
     val stageP = new org.apache.hadoop.fs.Path(stage)
     try {
@@ -321,18 +323,13 @@ final class TableWriter(warehouseDir: String) extends Serializable {
           .parquet(stage)
       }
       if (!fs.exists(p)) fs.mkdirs(p)
-      val swapped = swapStagedDirs(fs, stageP, p, "__bucket=")
+      val swapped = TableWriter.swapStagedDirs(fs, stageP, p, "__bucket=")
       // COW bookkeeping on clones: swapped buckets are local now
       dropManifestEntries(fs, name, swapped.toSet)
     } finally {
       fs.delete(stageP, true)
     }
   }
-
-  private def swapStagedDirs(fs: org.apache.hadoop.fs.FileSystem,
-      stageP: org.apache.hadoop.fs.Path, dest: org.apache.hadoop.fs.Path,
-      prefix: String): Seq[Int] =
-    TableWriter.swapStagedDirs(fs, stageP, dest, prefix)
 
   /** Targeted delete-by-key on a [[mergeByKey]]-layout table — the
     * right-to-be-forgotten operator (at 100 TB, "delete these 10k user
@@ -369,6 +366,10 @@ final class TableWriter(warehouseDir: String) extends Serializable {
       // bounded collect: ≤ numBuckets ids
       val affected = doomed.select("__bucket").distinct()
         .collect().map(_.getInt(0))
+      val root = new org.apache.hadoop.fs.Path(path(name))
+      TableWriter.recoverSwap(
+        root.getFileSystem(spark.sessionState.newHadoopConf()), root,
+        "__bucket=")
       val (candidates, releaseCand) = TableWriter.pinScoped(
         readResolved(spark, name, Some(affected.toIndexedSeq)))
       try deletePrepared(spark, name, doomed, candidates, key)
@@ -419,7 +420,7 @@ final class TableWriter(warehouseDir: String) extends Serializable {
       }
       hitOpt.foreach { hit =>
         val surviving: Set[Int] =
-          swapStagedDirs(fs, stageP, root, "__bucket=").toSet
+          TableWriter.swapStagedDirs(fs, stageP, root, "__bucket=").toSet
         // a bucket whose every row was doomed has no staged dir — drop it
         hit.filterNot(surviving).foreach { b =>
           fs.delete(new org.apache.hadoop.fs.Path(root, s"__bucket=$b"), true)
@@ -469,8 +470,8 @@ final class TableWriter(warehouseDir: String) extends Serializable {
       .write.mode(SaveMode.Overwrite)
       .partitionBy("__bucket")
       .parquet(stage)
-    fs.rename(p, trash)
-    fs.rename(stageP, p)
+    TableWriter.renameOrThrow(fs, p, trash, "rebucket")
+    TableWriter.renameOrThrow(fs, stageP, p, "rebucket")
     fs.delete(trash, true)
     path(name)
   }
@@ -531,6 +532,7 @@ final class TableWriter(warehouseDir: String) extends Serializable {
         // bounded collect: ≤ numBuckets ids
         val affected = withBucket.select("__bucket").distinct()
           .collect().map(_.getInt(0))
+        TableWriter.recoverSwap(fs, p, "__bucket=")
         val (existing, releaseExisting) = TableWriter.pinScoped(
           readResolved(spark, name, Some(affected.toIndexedSeq)))
         try {
@@ -702,6 +704,7 @@ final class TableWriter(warehouseDir: String) extends Serializable {
         // bounded collect: ≤ numBuckets ids
         val affected = doomed.select("__bucket").distinct()
           .collect().map(_.getInt(0))
+        TableWriter.recoverSwap(fs, p, "__bucket=")
         val (candidates, releaseCand) = TableWriter.pinScoped(
           readResolved(spark, name, Some(affected.toIndexedSeq)))
         try {
@@ -795,14 +798,15 @@ final class TableWriter(warehouseDir: String) extends Serializable {
           val unveil = parts.zipWithIndex.map { case (p, i) =>
             val id = java.util.UUID.randomUUID().toString.take(8)
             val hidden = new Path(dir, s".compact-$id-$i.parquet")
-            fs.rename(p, hidden)
+            TableWriter.renameOrThrow(fs, p, hidden, "compact")
             (hidden, new Path(dir, s"compact-$id-$i.parquet"))
           }
           val out = fs.create(log, true)
           try out.write(small.map(_.getPath.toString)
             .mkString("", "\n", "\n").getBytes("UTF-8"))
           finally out.close()
-          unveil.foreach { case (h, v) => fs.rename(h, v) }
+          unveil.foreach { case (h, v) =>
+            TableWriter.renameOrThrow(fs, h, v, "compact") }
           small.foreach(f => fs.delete(f.getPath, false))
           fs.delete(log, false)
           after += live.size - small.size + unveil.size
@@ -904,18 +908,16 @@ object TableWriter {
   /** Swap staged `<prefix><id>` partition dirs into `dest` via renames
     * (old content trashed under an underscore-prefixed, '='-free name
     * first — hidden from partition discovery — so readers never see two
-    * generations of one dir; a crash mid-swap leaves at most a briefly-
-    * missing dir and trash the next swap sweeps). Returns the swapped
-    * ids. Shared by the merge, delete, and index vocab-merge publish
-    * paths — the write-once alternative to dynamic partition overwrite,
-    * which forces the staged content through a second full write.
+    * generations of one dir). Returns the swapped ids. Shared by the
+    * merge, delete, and index vocab-merge publish paths — the write-once
+    * alternative to dynamic partition overwrite, which forces the staged
+    * content through a second full write. A crash between a dir's two
+    * renames leaves that dir's only copy in trash: every caller runs
+    * [[recoverSwap]] on `dest` before it reads `dest`.
     */
   private[graft] def swapStagedDirs(fs: org.apache.hadoop.fs.FileSystem,
       stageP: org.apache.hadoop.fs.Path, dest: org.apache.hadoop.fs.Path,
-      prefix: String): Seq[Int] = {
-    // sweep trash a previous crashed swap may have left
-    fs.listStatus(dest).filter(_.getPath.getName.startsWith("_trash_"))
-      .foreach(st => fs.delete(st.getPath, true))
+      prefix: String): Seq[Int] =
     fs.listStatus(stageP)
       .filter(st => st.isDirectory && st.getPath.getName.startsWith(prefix))
       .map { st =>
@@ -923,10 +925,43 @@ object TableWriter {
         val dst = new org.apache.hadoop.fs.Path(dest, bucketDir)
         val trash = new org.apache.hadoop.fs.Path(dest,
           "_trash_" + bucketDir.replace("=", "_"))
-        if (fs.exists(dst)) fs.rename(dst, trash)
-        fs.rename(st.getPath, dst)
+        if (fs.exists(dst)) renameOrThrow(fs, dst, trash, "swapStagedDirs")
+        renameOrThrow(fs, st.getPath, dst, "swapStagedDirs")
         fs.delete(trash, true)
         bucketDir.stripPrefix(prefix).toInt
       }.toSeq
+
+  /** Finish or undo a crashed [[swapStagedDirs]] on `dest`: a `_trash_`
+    * dir whose live `<prefix><id>` dir is missing holds that dir's only
+    * copy (the swap died between its two renames) and is renamed back;
+    * any other trash is a finished swap's leftover and is deleted. Runs
+    * BEFORE a swap-publishing call reads `dest` — a read without the
+    * trashed dir would compute survivors without its rows, and the swap
+    * would then publish them lost. One listing; a missing `dest` has
+    * nothing to recover.
+    */
+  private[graft] def recoverSwap(fs: org.apache.hadoop.fs.FileSystem,
+      dest: org.apache.hadoop.fs.Path, prefix: String): Unit = {
+    val names = try fs.listStatus(dest).map(_.getPath.getName).toSet
+      catch { case _: java.io.FileNotFoundException => return }
+    val trashPrefix = "_trash_" + prefix.replace("=", "_")
+    names.filter(_.startsWith("_trash_")).foreach { n =>
+      val trash = new org.apache.hadoop.fs.Path(dest, n)
+      val live = prefix + n.stripPrefix(trashPrefix)
+      if (n.startsWith(trashPrefix) && !names(live))
+        renameOrThrow(fs, trash, new org.apache.hadoop.fs.Path(dest, live),
+          "recoverSwap")
+      else fs.delete(trash, true)
+    }
   }
+
+  /** `fs.rename`, throwing with both paths when it reports failure — a
+    * publish step must never go on to delete what the rename was to
+    * replace.
+    */
+  private[graft] def renameOrThrow(fs: org.apache.hadoop.fs.FileSystem,
+      src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path,
+      what: String): Unit =
+    if (!fs.rename(src, dst))
+      throw new java.io.IOException(s"$what: rename $src -> $dst failed")
 }

@@ -40,7 +40,8 @@ class Bm25DeleteSpec extends SparkSpec {
     val wDel = new TableWriter(delDir)
     val wRef = new TableWriter(refDir)
     Retrieval.buildBm25Index(docs, wDel, "docs")
-    Retrieval.deleteFromBm25Index(docs.filter(col("doc_id") === 3), wDel, "docs")
+    Retrieval.deleteFromBm25IndexBatch(docs.filter(col("doc_id") === 3), wDel,
+      "docs", 0L)
     Retrieval.buildBm25Index(docs.filter(col("doc_id") =!= 3), wRef, "docs")
 
     assert(postings(wDel) == postings(wRef))
@@ -63,16 +64,18 @@ class Bm25DeleteSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("bm25del2").toString
     val w = new TableWriter(dir)
     Retrieval.buildBm25Index(docs, w, "docs")
-    Retrieval.deleteFromBm25Index(docs.filter(col("doc_id") === 3), w, "docs")
+    Retrieval.deleteFromBm25IndexBatch(docs.filter(col("doc_id") === 3), w,
+      "docs", 0L)
     val sig = (dataFiles(dir), vocab(w), stats(w))
 
     // absent id: nothing in the index changes
-    Retrieval.deleteFromBm25Index(
-      Seq((99L, "a b")).toDF("doc_id", "text"), w, "docs")
+    Retrieval.deleteFromBm25IndexBatch(
+      Seq((99L, "a b")).toDF("doc_id", "text"), w, "docs", 1L)
     assert((dataFiles(dir), vocab(w), stats(w)) == sig)
 
     // re-delete of an already-deleted id: also a no-op
-    Retrieval.deleteFromBm25Index(docs.filter(col("doc_id") === 3), w, "docs")
+    Retrieval.deleteFromBm25IndexBatch(docs.filter(col("doc_id") === 3), w,
+      "docs", 2L)
     assert((dataFiles(dir), vocab(w), stats(w)) == sig)
   }
 
@@ -85,8 +88,8 @@ class Bm25DeleteSpec extends SparkSpec {
     // actually STRUCK from the postings, never the drifted text —
     // otherwise vocab/stats would subtract b/c counts while a/x rows
     // were (partially) removed
-    Retrieval.deleteFromBm25Index(
-      Seq((3L, "b c")).toDF("doc_id", "text"), w, "docs")
+    Retrieval.deleteFromBm25IndexBatch(
+      Seq((3L, "b c")).toDF("doc_id", "text"), w, "docs", 0L)
     // invariant: vocab df == df recomputed from the surviving postings,
     // stats == (distinct docs, Σdl) recomputed from the surviving
     // postings — the internal-consistency contract that makes every
@@ -110,8 +113,8 @@ class Bm25DeleteSpec extends SparkSpec {
     val wDel = new TableWriter(delDir)
     val wRef = new TableWriter(refDir)
     Retrieval.buildPositionalIndex(docs, wDel, "docs")
-    Retrieval.deleteFromPositionalIndex(
-      docs.filter(col("doc_id") === 3), wDel, "docs")
+    Retrieval.deleteFromPositionalIndexBatch(
+      docs.filter(col("doc_id") === 3), wDel, "docs", 0L)
     Retrieval.buildPositionalIndex(
       docs.filter(col("doc_id") =!= 3), wRef, "docs")
     def pos(w: TableWriter): Set[(String, Long, Seq[Int])] =
@@ -125,11 +128,34 @@ class Bm25DeleteSpec extends SparkSpec {
 
     // re-delete and absent-id delete: byte-level no-ops
     val sig = dataFiles(s"$delDir/docs_positions")
-    Retrieval.deleteFromPositionalIndex(
-      docs.filter(col("doc_id") === 3), wDel, "docs")
-    Retrieval.deleteFromPositionalIndex(
-      Seq((99L, "a b")).toDF("doc_id", "text"), wDel, "docs")
+    Retrieval.deleteFromPositionalIndexBatch(
+      docs.filter(col("doc_id") === 3), wDel, "docs", 1L)
+    Retrieval.deleteFromPositionalIndexBatch(
+      Seq((99L, "a b")).toDF("doc_id", "text"), wDel, "docs", 2L)
     assert(dataFiles(s"$delDir/docs_positions") == sig)
+  }
+
+  test("a postings bucket a crashed swap left in trash survives the next delete") {
+    val dir = java.nio.file.Files.createTempDirectory("bm25swapwin").toString
+    val refDir = java.nio.file.Files.createTempDirectory("bm25swapref").toString
+    val w = new TableWriter(dir)
+    val wRef = new TableWriter(refDir)
+    Retrieval.buildBm25Index(docs, w, "docs")
+    // the state between swapStagedDirs' two renames, in a bucket the
+    // victim (doc 3, "a x") does not touch
+    val victimBuckets = Seq("a", "x").map(Retrieval.termBucket(_, 64)).toSet
+    val b = Seq("b", "c", "d").map(Retrieval.termBucket(_, 64))
+      .find(!victimBuckets(_))
+      .getOrElse(fail("fixture degenerate: b, c, d share the victim's buckets"))
+    val root = java.nio.file.Paths.get(w.path("docs_postings"))
+    java.nio.file.Files.move(root.resolve(s"term_bucket=$b"),
+      root.resolve(s"_trash_term_bucket_$b"))
+    Retrieval.deleteFromBm25IndexBatch(docs.filter(col("doc_id") === 3), w,
+      "docs", 0L)
+    Retrieval.buildBm25Index(docs.filter(col("doc_id") =!= 3), wRef, "docs")
+    assert(postings(w) == postings(wRef), s"postings of bucket $b were lost")
+    assert(vocab(w) == vocab(wRef))
+    assert(stats(w) == stats(wRef))
   }
 
   test("untouched term buckets are never rewritten") {
@@ -137,7 +163,8 @@ class Bm25DeleteSpec extends SparkSpec {
     val w = new TableWriter(dir)
     Retrieval.buildBm25Index(docs, w, "docs")
     val before = dataFiles(s"$dir/docs_postings")
-    Retrieval.deleteFromBm25Index(docs.filter(col("doc_id") === 3), w, "docs")
+    Retrieval.deleteFromBm25IndexBatch(docs.filter(col("doc_id") === 3), w,
+      "docs", 0L)
     val after = dataFiles(s"$dir/docs_postings")
     // doc 3's terms are {a, x}; buckets not containing either term's
     // postings must be byte-stable

@@ -121,8 +121,8 @@ class CompactionSpec extends SparkSpec {
     val pdir = java.nio.file.Files.createTempDirectory("graft-compact-pos").toString
     val wp = new TableWriter(pdir)
     (0 to 3).foreach { c =>
-      Retrieval.appendPositionalIndex(
-        real.filter(pmod(col("doc_id"), lit(4)) === c), wp, "docs")
+      Retrieval.appendPositionalIndexBatch(
+        real.filter(pmod(col("doc_id"), lit(4)) === c), wp, "docs", c.toLong)
     }
     val phrases = real.filter(col("doc_id") % 11 === 0
         && size(split(col("text"), " ")) >= 3)
@@ -148,10 +148,11 @@ class CompactionSpec extends SparkSpec {
     val idir = java.nio.file.Files.createTempDirectory("graft-compact-ivf").toString
     val wi = new TableWriter(idir)
     Similarity.buildIvfIndex(base, cents, wi, "emb")
+    Similarity.adoptIvfIndexForStreaming(spark, wi, "emb")
     (0 to 2).foreach { c =>
-      Similarity.appendIvfIndex(
+      Similarity.appendIvfIndexBatch(
         emb.filter(col("vec_id") % 10 === 0
-          && pmod(col("vec_id") / 10, lit(3)) === c), wi, "emb")
+          && pmod(col("vec_id") / 10, lit(3)) === c), wi, "emb", c.toLong)
     }
     def serveIvf() = Similarity.queryIvfIndex(spark, wi, "emb",
         emb.filter(col("vec_id") < 8), k = 5, nprobe = 2)
@@ -176,8 +177,8 @@ class CompactionSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-compact-idx").toString
     val w = new TableWriter(dir)
     (0 to 3).foreach { c =>
-      graft.operators.Retrieval.appendBm25Index(
-        real.filter(pmod(col("doc_id"), lit(4)) === c), w, "docs")
+      graft.operators.Retrieval.appendBm25IndexBatch(
+        real.filter(pmod(col("doc_id"), lit(4)) === c), w, "docs", c.toLong)
     }
     def bucketFiles(): Map[String, Int] = {
       val root = java.nio.file.Paths.get(w.path("docs_postings"))

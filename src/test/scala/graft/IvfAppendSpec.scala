@@ -46,7 +46,8 @@ class IvfAppendSpec extends SparkSpec {
       walk(d).map(f => f.getPath -> f.lastModified()).toMap
     }
     val filesBefore = dataFiles(before)
-    Similarity.appendIvfIndex(batch, wInc, "emb")
+    Similarity.adoptIvfIndexForStreaming(spark, wInc, "emb")
+    Similarity.appendIvfIndexBatch(batch, wInc, "emb", 0L)
     val filesAfter = dataFiles(before)
 
     // no pre-existing list file was rewritten or removed
@@ -67,7 +68,8 @@ class IvfAppendSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("ivfinc2").toString
     val w = new TableWriter(dir)
     Similarity.buildIvfIndex(base, cents, w, "emb")
-    Similarity.appendIvfIndex(batch, w, "emb")
+    Similarity.adoptIvfIndexForStreaming(spark, w, "emb")
+    Similarity.appendIvfIndexBatch(batch, w, "emb", 0L)
     val ids = w.read(spark, "emb_lists").select("nbr_id")
       .collect().map(_.getLong(0)).toSet
     val batchIds = batch.select("vec_id").collect().map(_.getLong(0)).toSet

@@ -106,19 +106,20 @@ class IvfDeleteSpec extends SparkSpec {
         .otherwise(graft.functions.VectorFns.toDouble(col("embedding"))))
 
     Similarity.buildIvfIndex(e, cents, wUpd, "emb")
+    Similarity.adoptIvfIndexForStreaming(spark, wUpd, "emb")
     Similarity.deleteFromIvfIndex(e.filter(col("vec_id") % 13 === 2),
       wUpd, "emb")
     // without the vacuum, re-adding the id would serve two generations
     // (old rows still physical) — the append must refuse loudly
     val ex = intercept[IllegalArgumentException] {
-      Similarity.appendIvfIndex(upd.filter(col("vec_id") % 13 === 2),
-        wUpd, "emb")
+      Similarity.appendIvfIndexBatch(upd.filter(col("vec_id") % 13 === 2),
+        wUpd, "emb", 0L)
     }
     assert(ex.getMessage.contains("vacuumIvfIndex first"))
 
     Similarity.vacuumIvfIndex(spark, wUpd, "emb")
-    Similarity.appendIvfIndex(upd.filter(col("vec_id") % 13 === 2),
-      wUpd, "emb")
+    Similarity.appendIvfIndexBatch(upd.filter(col("vec_id") % 13 === 2),
+      wUpd, "emb", 0L)
 
     // == a rebuild over the UPDATED corpus under the SAME frozen quantizer
     Similarity.buildIvfIndex(upd, cents, wRef, "emb")
@@ -140,7 +141,8 @@ class IvfDeleteSpec extends SparkSpec {
     assert(!new java.io.File(s"$dir/emb_tombstones").exists,
       "absent-id delete must not strand a tombstone")
     // ... so a later first-time insert of those ids is NOT refused
-    Similarity.appendIvfIndex(victims, w, "emb")
+    Similarity.adoptIvfIndexForStreaming(spark, w, "emb")
+    Similarity.appendIvfIndexBatch(victims, w, "emb", 0L)
     val ids = w.read(spark, "emb_lists").select("nbr_id")
       .collect().map(_.getLong(0)).toSet
     assert(victimIds.subsetOf(ids))

@@ -106,7 +106,8 @@ class RetrievalSpec extends SparkSpec {
       walk(new java.io.File(s"$incDir/$sub")).map(f => f.getPath -> f.lastModified()).toMap
     }
     val postingsBefore = files("docs_postings")
-    Retrieval.appendBm25Index(real.filter(col("doc_id") % 10 === 0), wInc, "docs")
+    Retrieval.appendBm25IndexBatch(real.filter(col("doc_id") % 10 === 0), wInc,
+      "docs", 0L)
     val postingsAfter = files("docs_postings")
     postingsBefore.foreach { case (p, ts) =>
       assert(postingsAfter.get(p).contains(ts), s"append disturbed $p")
@@ -140,7 +141,7 @@ class RetrievalSpec extends SparkSpec {
       p.split('/').find(_.startsWith("vocab_bucket=")).get
     // append a single-term doc: only that term's vocab bucket may change
     val newTerm = "gamma" // existing term — pure df increment
-    Retrieval.appendBm25Index(docs(9L -> s"$newTerm $newTerm"), w, "docs")
+    Retrieval.appendBm25IndexBatch(docs(9L -> s"$newTerm $newTerm"), w, "docs", 0L)
     val touched = {
       val b = spark.range(1).select(
         pmod(xxhash64(lit(newTerm)), lit(16L)).cast("int")).head().getInt(0)
@@ -160,7 +161,8 @@ class RetrievalSpec extends SparkSpec {
 
     // delete the appended doc: same bucket discipline, df back down
     val sigsMid = parquetFileSigs(s"$tmp/docs_vocab")
-    Retrieval.deleteFromBm25Index(docs(9L -> s"$newTerm $newTerm"), w, "docs")
+    Retrieval.deleteFromBm25IndexBatch(docs(9L -> s"$newTerm $newTerm"), w,
+      "docs", 0L)
     val sigsEnd = parquetFileSigs(s"$tmp/docs_vocab")
     sigsMid.foreach { case (p, sig) =>
       if (bucketOf(p) != touched)
@@ -178,7 +180,7 @@ class RetrievalSpec extends SparkSpec {
       docs(1L -> "solo", 2L -> "alpha beta"), w, "docs")
     val soloBucket = spark.range(1).select(
       pmod(xxhash64(lit("solo")), lit(16L)).cast("int")).head().getInt(0)
-    Retrieval.deleteFromBm25Index(docs(1L -> "solo"), w, "docs")
+    Retrieval.deleteFromBm25IndexBatch(docs(1L -> "solo"), w, "docs", 0L)
     val vocabTerms = w.read(spark, "docs_vocab").select("term")
       .collect().map(_.getString(0)).toSet
     assert(!vocabTerms.contains("solo"))
@@ -394,8 +396,8 @@ class RetrievalSpec extends SparkSpec {
     val allDir = java.nio.file.Files.createTempDirectory("posall").toString
     val wInc = new graft.sources.TableWriter(incDir)
     val wAll = new graft.sources.TableWriter(allDir)
-    Retrieval.appendPositionalIndex(
-      real.filter(col("doc_id") % 10 =!= 0), wInc, "docs")
+    Retrieval.appendPositionalIndexBatch(
+      real.filter(col("doc_id") % 10 =!= 0), wInc, "docs", 0L)
     def files(): Map[String, Long] = {
       def walk(f: java.io.File): Seq[java.io.File] =
         if (f.isDirectory) f.listFiles.toSeq.flatMap(walk)
@@ -404,8 +406,8 @@ class RetrievalSpec extends SparkSpec {
         .map(f => f.getPath -> f.lastModified()).toMap
     }
     val before = files()
-    Retrieval.appendPositionalIndex(
-      real.filter(col("doc_id") % 10 === 0), wInc, "docs")
+    Retrieval.appendPositionalIndexBatch(
+      real.filter(col("doc_id") % 10 === 0), wInc, "docs", 1L)
     val after = files()
     before.foreach { case (p, ts) =>
       assert(after.get(p).contains(ts), s"append disturbed $p")

@@ -10,8 +10,9 @@ import scala.jdk.CollectionConverters._
   * [[GraftSession.builder]], session caches in [[SparkEntry]] declared
   * as ad-hoc maps instead of a [[Fixture]] (which is what releases them),
   * index-protocol file names built outside `IndexProtocol.scala`, DAG
-  * loops other than `ModelRegistry.run`, and a scale probe that calls
-  * operators itself instead of running registry entries.
+  * loops other than `ModelRegistry.run`, a scale probe that calls
+  * operators itself instead of running registry entries, and plain index
+  * writes beside each family's exactly-once legs.
   * The patterns are spelled in pieces so this file does not match itself.
   */
 class SourceGuardSpec extends AnyFunSuite {
@@ -72,6 +73,23 @@ class SourceGuardSpec extends AnyFunSuite {
     } yield s"${p.getParent.getFileName}/${p.getFileName}:${i + 1}"
     assert(calls.size == 1 && calls.head.startsWith("core/Model.scala:"),
       s"model transform calls outside the one runner: $calls")
+  }
+
+  test("one write path per index: no plain append/delete beside the legs") {
+    val removed = Seq("appendBm25" + "Index(", "deleteFromBm25" + "Index(",
+      "appendPositional" + "Index(", "appendIvf" + "Index(")
+    val offenders = for {
+      p <- scalaFiles("src")
+      src = read(p)
+      name <- removed if src.contains(name)
+    } yield s"${p.getFileName}: $name"
+    assert(offenders.isEmpty, s"plain index write paths: $offenders")
+    // the positional strike is the delete leg's private body
+    val strike = "deleteFromPositional" + "Index("
+    val callers = scalaFiles("src").filter(p => read(p).contains(strike))
+      .map(_.getFileName.toString)
+    assert(callers == Seq("Retrieval.scala"),
+      s"$strike outside Retrieval.scala: $callers")
   }
 
   test("the scale probe reaches the engine only through SparkEntry.queries") {

@@ -79,6 +79,52 @@ class TableWriterSpec extends SparkSpec {
       .collect().toSet == got)
   }
 
+  test("a bucket a crashed swap left in trash survives the next merge") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-swapwin").toString
+    val w = new TableWriter(dir)
+    val base = (0L until 40L).map(k => (k, s"v$k")).toDF("k", "v")
+    w.mergeByKey(spark, "m", base, "k")
+    // the state between swapStagedDirs' two renames: the live dir of
+    // key 0's bucket moved to its trash name, the staged one not moved in
+    val b = bucketOf(base)("0")
+    val root = java.nio.file.Paths.get(w.path("m"))
+    java.nio.file.Files.move(root.resolve(s"__bucket=$b"),
+      root.resolve(s"_trash___bucket_$b"))
+    // a merge that does not touch that bucket
+    val newKey = bucketOf((1000L until 1016L).map(k => (k, "")).toDF("k", "v"))
+      .collectFirst { case (k, kb) if kb != b => k.toLong }.get
+    w.mergeByKey(spark, "m", Seq((newKey, "new")).toDF("k", "v"), "k")
+    val got = w.read(spark, "m").select("k", "v").as[(Long, String)]
+      .collect().toSet
+    assert(got == base.as[(Long, String)].collect().toSet + ((newKey, "new")),
+      s"rows of the trashed bucket $b were lost")
+    assert(!java.nio.file.Files.exists(root.resolve(s"_trash___bucket_$b")))
+  }
+
+  test("swapStagedDirs throws with both paths when a rename fails, live dir intact") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-swapfail")
+    val live = dir.resolve("t/__bucket=0/part-0.parquet")
+    val staged = dir.resolve("stage/__bucket=0/part-0.parquet")
+    Seq(live -> "live", staged -> "staged").foreach { case (f, body) =>
+      java.nio.file.Files.createDirectories(f.getParent)
+      java.nio.file.Files.writeString(f, body)
+    }
+    val fs = new org.apache.hadoop.fs.LocalFileSystem {
+      override def rename(src: org.apache.hadoop.fs.Path,
+          dst: org.apache.hadoop.fs.Path): Boolean = false
+    }
+    fs.initialize(java.net.URI.create("file:///"),
+      new org.apache.hadoop.conf.Configuration())
+    val ex = intercept[java.io.IOException] {
+      TableWriter.swapStagedDirs(fs,
+        new org.apache.hadoop.fs.Path(dir.resolve("stage").toUri),
+        new org.apache.hadoop.fs.Path(dir.resolve("t").toUri), "__bucket=")
+    }
+    assert(ex.getMessage.contains("/t/__bucket=0") &&
+      ex.getMessage.contains("/t/_trash___bucket_0"), ex.getMessage)
+    assert(java.nio.file.Files.readString(live) == "live")
+  }
+
   test("mergeByKey: STRING business keys, same byte-stable untouched buckets") {
     val dir = java.nio.file.Files.createTempDirectory("graft-merge-s").toString
     val w = new TableWriter(dir)
