@@ -132,8 +132,10 @@ final class ModelRegistry {
                   } else w.materialize(m.name, out, parts)
                 }
                 val seconds = secs
+                // the read-back takes the schema of the frame just
+                // written: no footer-inference job per model
                 (Result(m.name, "success", seconds),
-                  Some(writer.fold(out)(_.read(spark, m.name))))
+                  Some(writer.fold(out)(_.read(spark, m.name, out.schema))))
               } catch {
                 case NonFatal(e) => (Result(m.name, "error", secs, Some(e)), None)
               }

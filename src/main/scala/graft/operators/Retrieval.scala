@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Lexical retrieval and rank fusion over the documents corpus — the
   * text half of a retrieval stack next to [[Similarity]]'s vector half.
@@ -32,6 +33,41 @@ import org.apache.spark.sql.functions._
   * while identical docs tie exactly in both engines and break on doc_id.
   */
 object Retrieval {
+
+  /** The schemas of the BM25 and positional index tables, declared next
+    * to their writers. Every read of an index table passes one, so
+    * building the read frame lists files and launches no footer-
+    * inference Spark job. Partition columns (`term_bucket`,
+    * `vocab_bucket`) come last, where Spark places them. `idType` is the
+    * document-id type: the write legs pass their input's, so a rewritten
+    * bucket keeps the type it was written with; serving passes bigint,
+    * the type [[rankTopK]] ranks ids in (the parquet reader widens
+    * narrower integer ids). The struck set of a delete leg has the
+    * postings' columns, unpartitioned. IndexLayoutSpec checks each
+    * against Spark's inference over a freshly written table.
+    */
+  private[graft] object Layout {
+    def postings(idType: DataType): StructType = StructType(Seq(
+      StructField("doc_id", idType), StructField("dl", IntegerType),
+      StructField("term", StringType), StructField("tf", LongType),
+      StructField("term_bucket", IntegerType)))
+    val vocab: StructType = StructType(Seq(StructField("term", StringType),
+      StructField("df", LongType), StructField("vocab_bucket", IntegerType)))
+    val stats: StructType = StructType(Seq(StructField("n_docs", LongType),
+      StructField("sum_dl", LongType)))
+    def positions(idType: DataType): StructType = StructType(Seq(
+      StructField("term", StringType), StructField("doc_id", idType),
+      StructField("positions", ArrayType(IntegerType)),
+      StructField("term_bucket", IntegerType)))
+    /** The stats row as parquet-hadoop writes it ([[writeStatsDirect]]). */
+    val statsFile: org.apache.parquet.schema.MessageType =
+      org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+        "message spark_schema { required int64 n_docs; required int64 sum_dl; }")
+  }
+
+  /** The document-id type of a postings-shaped frame. */
+  private def idTypeOf(postings: DataFrame): DataType =
+    postings.schema("doc_id").dataType
 
   /** Read the one-row `{name}_stats` table's two longs with a direct
     * driver-side parquet read — a protocol batch pays one file open for
@@ -64,6 +100,78 @@ object Retrieval {
     }
     out.getOrElse(
       throw new IllegalStateException(s"stats table at $dir is empty"))
+  }
+
+  /** Write the one-row `{name}_stats` table from the driver — the twin
+    * of [[readStatsDirect]], and every stats write's one path: no Spark
+    * job. parquet-hadoop writes the `(n_docs, sum_dl)` row to a hidden
+    * stage file, which one atomic OVERWRITE rename publishes as
+    * `stats.parquet` (the way TableWriter publishes a clone manifest),
+    * so a reader sees the old row or the new one, never neither. Data
+    * files another writer left in the dir (an index whose stats Spark
+    * wrote) are deleted after the rename; a crash between the two
+    * leaves two rows, which [[readStatsDirect]] refuses and the leg's
+    * replay rewrites, like a crash in a Spark overwrite of the dir.
+    */
+  private def writeStatsDirect(fs: org.apache.hadoop.fs.FileSystem,
+      writer: graft.sources.TableWriter, name: String, nDocs: Long,
+      sumDl: Long): Unit = {
+    import org.apache.hadoop.fs.Path
+    val dir = new Path(writer.path(s"${name}_stats"))
+    val tmp = new Path(dir, ".stats.parquet.tmp")
+    val dst = new Path(dir, "stats.parquet")
+    val out = org.apache.parquet.hadoop.example.ExampleParquetWriter
+      .builder(org.apache.parquet.hadoop.util.HadoopOutputFile
+        .fromPath(tmp, fs.getConf))
+      .withType(Layout.statsFile).withConf(fs.getConf)
+      .withWriteMode(org.apache.parquet.hadoop.ParquetFileWriter.Mode.OVERWRITE)
+      .build()
+    try out.write(new org.apache.parquet.example.data.simple.SimpleGroup(
+        Layout.statsFile).append("n_docs", nDocs).append("sum_dl", sumDl))
+    finally out.close()
+    org.apache.hadoop.fs.FileContext.getFileContext(fs.getUri, fs.getConf)
+      .rename(fs.makeQualified(tmp), fs.makeQualified(dst),
+        org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    fs.listStatus(dir).map(_.getPath)
+      .filter(f => f.getName != dst.getName && !f.getName.startsWith(".") &&
+        !f.getName.startsWith("_"))
+      .foreach(fs.delete(_, false))
+  }
+
+  /** Document frequencies of a postings frame, with their vocab bucket:
+    * the content of the vocab buckets the postings' terms hash into.
+    */
+  private def vocabOf(postings: DataFrame, vocabBuckets: Int): DataFrame =
+    postings.groupBy("term").agg(count(lit(1)).as("df"))
+      .withColumn("vocab_bucket",
+        pmod(xxhash64(col("term")), lit(vocabBuckets.toLong)).cast("int"))
+
+  /** The one publish path of the vocab: `dfs` (`vocabOf`-shaped, built
+    * only after a crashed swap on the vocab root is recovered) is the
+    * complete new content of the `touched` buckets. It is written once,
+    * partitioned, into a stage dir and reaches the live bucket dirs only
+    * as renames (TableWriter.swapStagedDirs); a touched bucket with no
+    * terms left has no staged dir and is deleted. The merge, the delete
+    * leg's recompute and the append leg's crash repair all publish here.
+    */
+  private def publishVocab(spark: org.apache.spark.sql.SparkSession,
+      writer: graft.sources.TableWriter, name: String,
+      touched: Set[Int])(dfs: => DataFrame): Unit = {
+    val root = new org.apache.hadoop.fs.Path(writer.path(s"${name}_vocab"))
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    graft.sources.TableWriter.recoverSwap(fs, root, "vocab_bucket=")
+    val stageP = new org.apache.hadoop.fs.Path(writer.path(s"__stage_vocab_$name"))
+    try {
+      dfs.repartition(col("vocab_bucket")) // one file per bucket dir
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+        .partitionBy("vocab_bucket")
+        .parquet(stageP.toString)
+      val swapped = graft.sources.TableWriter
+        .swapStagedDirs(fs, stageP, root, "vocab_bucket=").toSet
+      touched.filterNot(swapped).foreach { b =>
+        fs.delete(new org.apache.hadoop.fs.Path(root, s"vocab_bucket=$b"), true)
+      }
+    } finally fs.delete(stageP, true)
   }
 
   /** Distinct (query_id, term) rows from the first `nTerms` tokens of
@@ -260,9 +368,7 @@ object Retrieval {
       name: String, buckets: Int = 64, vocabBuckets: Int = 16,
       idCol: String = "doc_id", textCol: String = "text"): Unit = {
     val spark = docs.sparkSession
-    val tf = postingsOf(docs, idCol, textCol)
-      .withColumn("term_bucket",
-        pmod(xxhash64(col("term")), lit(buckets.toLong)).cast("int"))
+    val tf = bm25BatchPostings(docs, buckets, idCol, textCol)
     // cluster by bucket before the partitioned write: without this every
     // shuffle partition spills a sliver into every bucket directory
     // (partitions × buckets small files — file-listing cost dwarfs the
@@ -271,17 +377,18 @@ object Retrieval {
     writer.materialize(s"${name}_postings",
       tf.repartition(col("term_bucket")),
       partitionBy = Seq("term_bucket"))
-    val written = writer.read(spark, s"${name}_postings")
+    val written = writer.read(spark, s"${name}_postings",
+      Layout.postings(idTypeOf(tf)))
     writer.materialize(s"${name}_vocab",
-      written.groupBy("term").agg(count(lit(1)).as("df"))
-        .withColumn("vocab_bucket",
-          pmod(xxhash64(col("term")), lit(vocabBuckets.toLong)).cast("int"))
+      vocabOf(written, vocabBuckets)
         .repartition(col("vocab_bucket")), // one file per bucket dir
       partitionBy = Seq("vocab_bucket"))
-    writer.materialize(s"${name}_stats",
-      docs.select(split(col(textCol), " ").as("toks"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(size(col("toks"))).cast("long").as("sum_dl")))
+    val st = docs.select(split(col(textCol), " ").as("toks"))
+      .agg(count(lit(1)), coalesce(sum(size(col("toks"))).cast("long"), lit(0L)))
+      .collect()(0)
+    val fs = new org.apache.hadoop.fs.Path(writer.path(s"${name}_stats"))
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    writeStatsDirect(fs, writer, name, st.getLong(0), st.getLong(1))
   }
 
   /** Read the vocab pruned to the buckets a term set hashes into (the
@@ -292,8 +399,7 @@ object Retrieval {
       writer: graft.sources.TableWriter, name: String,
       terms: Seq[String], vocabBuckets: Int): DataFrame = {
     import spark.implicits._
-    val base = writer.read(spark, s"${name}_vocab")
-      .withColumn("vocab_bucket", col("vocab_bucket").cast("int"))
+    val base = writer.read(spark, s"${name}_vocab", Layout.vocab)
     if (terms.isEmpty) base
     else {
       // bucket ids via the driver-side xxhash64 replica ([[termBucket]],
@@ -317,33 +423,19 @@ object Retrieval {
       writer: graft.sources.TableWriter, name: String, delta: DataFrame,
       vocabBuckets: Int, touched: Seq[Int]): Unit = {
     if (touched.isEmpty) return
-    val vocabPath = writer.path(s"${name}_vocab")
-    val root = new org.apache.hadoop.fs.Path(vocabPath)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    graft.sources.TableWriter.recoverSwap(fs, root, "vocab_bucket=")
-    val existing = spark.read.parquet(vocabPath)
-      .withColumn("vocab_bucket", col("vocab_bucket").cast("int"))
-      .filter(col("vocab_bucket").isin(touched.sorted: _*))
-      .select(col("term"), col("df").as("df_old"))
-    val merged = existing
-      .join(delta, Seq("term"), "full_outer")
-      .select(col("term"),
-        (coalesce(col("df_old"), lit(0L)) + coalesce(col("df_delta"), lit(0L)))
-          .as("df"))
-      .withColumn("vocab_bucket",
-        pmod(xxhash64(col("term")), lit(vocabBuckets.toLong)).cast("int"))
-    // publish by stage-then-swap (TableWriter.swapStagedDirs): the merge
-    // plan reads the very files being replaced, so the merged buckets
-    // are written ONCE, partitioned, into a stage dir and reach the live
-    // bucket dirs only as renames
-    val stageP = new org.apache.hadoop.fs.Path(writer.path(s"__stage_vocab_$name"))
-    try {
-      merged.repartition(col("vocab_bucket")) // one file per bucket dir
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("vocab_bucket")
-        .parquet(stageP.toString)
-      graft.sources.TableWriter.swapStagedDirs(fs, stageP, root, "vocab_bucket=")
-    } finally fs.delete(stageP, true)
+    // the merge plan reads the very files being replaced: publishVocab
+    // stages the merged buckets before any live dir changes
+    publishVocab(spark, writer, name, touched.toSet) {
+      writer.read(spark, s"${name}_vocab", Layout.vocab)
+        .filter(col("vocab_bucket").isin(touched.sorted: _*))
+        .select(col("term"), col("df").as("df_old"))
+        .join(delta, Seq("term"), "full_outer")
+        .select(col("term"),
+          (coalesce(col("df_old"), lit(0L)) + coalesce(col("df_delta"), lit(0L)))
+            .as("df"))
+        .withColumn("vocab_bucket",
+          pmod(xxhash64(col("term")), lit(vocabBuckets.toLong)).cast("int"))
+    }
   }
 
   /** EXACTLY-ONCE batch append into a persisted BM25 index — the one
@@ -449,7 +541,6 @@ object Retrieval {
       name: String, batchId: Long, buckets: Int, vocabBuckets: Int,
       idCol: String, textCol: String): Boolean = {
     val spark = newDocs.sparkSession
-    import spark.implicits._
     def path(p: String) = new org.apache.hadoop.fs.Path(writer.path(p))
     val fs = c.fs
     val dirty = IndexFamily.Bm25.vocabDirty(writer, name)
@@ -497,17 +588,14 @@ object Retrieval {
       stageBm25Batch(tfB, writer, c, name, batchId, Some(() =>
         if (statsExist) { val _ = (bStat, touchedVb); () }))
       def writeStats(n: Long, s: Long): Unit =
-        writer.materialize(s"${name}_stats",
-          Seq((n, s)).toDF("n_docs", "sum_dl"))
+        writeStatsDirect(fs, writer, name, n, s)
+      val postingsLayout = Layout.postings(idTypeOf(tfB))
       // exact rebuild of vocab+stats from the postings (bootstrap /
       // bootstrap-crash recovery; batch-sized at bootstrap)
       def rebuildAllFromPostings(): Unit = {
-        val written = writer.read(spark, s"${name}_postings")
+        val written = writer.read(spark, s"${name}_postings", postingsLayout)
         writer.materialize(s"${name}_vocab_next",
-          written.groupBy("term").agg(count(lit(1)).as("df"))
-            .withColumn("vocab_bucket",
-              pmod(xxhash64(col("term")), lit(vocabBuckets.toLong)).cast("int"))
-            .repartition(col("vocab_bucket")),
+          vocabOf(written, vocabBuckets).repartition(col("vocab_bucket")),
           partitionBy = Seq("vocab_bucket"))
         val vDst = path(s"${name}_vocab")
         fs.delete(vDst, true)
@@ -530,19 +618,13 @@ object Retrieval {
         val touched = touchedVb.toSet
         if (touched.isEmpty) return true
         val pb = (0 until buckets).filter(b => touched.contains(b % vocabBuckets))
-        writer.read(spark, s"${name}_postings")
-          .filter(col("term_bucket").cast("int").isin(pb: _*))
-          .groupBy("term").agg(count(lit(1)).as("df"))
-          .withColumn("vocab_bucket",
-            pmod(xxhash64(col("term")), lit(vocabBuckets.toLong)).cast("int"))
-          .repartition(col("vocab_bucket")) // one file per bucket dir
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("vocab_bucket")
-          .parquet(writer.path(s"${name}_vocab"))
+        // every touched bucket keeps the batch's own terms, so none is
+        // left empty for publishVocab to delete
+        publishVocab(spark, writer, name, touched) {
+          vocabOf(writer.read(spark, s"${name}_postings", postingsLayout)
+            .filter(col("term_bucket").isin(pb: _*)), vocabBuckets)
+        }
         true
-        // (no bucket-delete sweep: append deltas are positive, so the
-        // crashed merge can never have emptied a bucket)
       }
 
       // ---- step 3: vocab + stats under the write-ahead dirty flag ----
@@ -620,7 +702,6 @@ object Retrieval {
       buckets: Int = 64, vocabBuckets: Int = 16,
       idCol: String = "doc_id", textCol: String = "text"): Unit = {
     val spark = newDocs.sparkSession
-    import spark.implicits._
     def path(p: String) = new org.apache.hadoop.fs.Path(writer.path(p))
     val c = IndexFamily.Bm25.commits(spark, writer, name)
     val fs = c.fs
@@ -641,8 +722,7 @@ object Retrieval {
       touched.foreach(b =>
         fs.delete(new org.apache.hadoop.fs.Path(vroot, s"vocab_bucket=$b"),
           true))
-      writer.materialize(s"${name}_stats",
-        Seq((-1L, -1L)).toDF("n_docs", "sum_dl"))
+      writeStatsDirect(fs, writer, name, -1L, -1L)
     } finally tfB.unpersist(blocking = false)
   }
 
@@ -728,7 +808,6 @@ object Retrieval {
       name: String, batchId: Long, buckets: Int, vocabBuckets: Int,
       idCol: String, textCol: String): Boolean = {
     val spark = victims.sparkSession
-    import spark.implicits._
     def path(p: String) = new org.apache.hadoop.fs.Path(writer.path(p))
     val fs = c.fs
     val state = c.delState(batchId)
@@ -738,29 +817,29 @@ object Retrieval {
     if (!fs.exists(postRoot)) return false
     graft.sources.TableWriter.recoverSwap(fs, postRoot, "term_bucket=")
 
+    val tfV = bm25BatchPostings(victims, buckets, idCol, textCol)
+    // the postings as the victims' id type reads them; the struck set
+    // has the same columns
+    val postingsLayout = Layout.postings(idTypeOf(tfV))
+    def readPostings(bs: Seq[Int]): DataFrame =
+      spark.read.schema(postingsLayout).parquet(postRoot.toString)
+        .filter(col("term_bucket").isin(bs: _*))
+
     // ---- step 2: struck-set write-ahead (pre-strike truth, once) ----
     if (!fs.exists(struckDir)) {
-      val tfV = postingsOf(victims, idCol, textCol)
-        .withColumn("term_bucket",
-          pmod(xxhash64(col("term")), lit(buckets.toLong)).cast("int"))
       // bounded collect: ≤ buckets ids — the victims' own term buckets
       val affected = tfV.select("term_bucket").distinct()
         .collect().map(_.getInt(0))
       val stage = path(s"__stage_struck_b${batchId}_$name")
-      val struck0 =
-        if (affected.isEmpty)
-          spark.read.parquet(postRoot.toString).limit(0)
-        else spark.read.parquet(postRoot.toString)
-          .withColumn("term_bucket", col("term_bucket").cast("int"))
-          .filter(col("term_bucket").isin(affected.toIndexedSeq: _*))
-          .join(victims.select(col(idCol).as("doc_id")).distinct(),
-            Seq("doc_id"), "left_semi")
-      struck0.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+      readPostings(affected.toIndexedSeq)
+        .join(victims.select(col(idCol).as("doc_id")).distinct(),
+          Seq("doc_id"), "left_semi")
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .parquet(stage.toString)
       graft.sources.TableWriter.renameOrThrow(fs, stage, struckDir,
         "deleteFromBm25IndexBatch")
     }
-    val struck = spark.read.parquet(struckDir.toString)
+    val struck = spark.read.schema(postingsLayout).parquet(struckDir.toString)
     // everything steps 4–6 need from the struck set in ONE tagged collect
     // (the append leg's fused shape): the set is write-ahead and never
     // changes once renamed in, so reading it before any mutation is
@@ -796,10 +875,7 @@ object Retrieval {
       IndexProtocol.readLines(fs, state).head.split("\t").map(_.toLong)
 
     // ---- step 4: strike postings (idempotent vs the persisted set) ----
-    val pruned = spark.read.parquet(postRoot.toString)
-      .withColumn("term_bucket", col("term_bucket").cast("int"))
-      .filter(col("term_bucket").isin(hit.toIndexedSeq: _*))
-    val survivors = pruned
+    val survivors = readPostings(hit.toIndexedSeq)
       .join(struck.select("doc_id").distinct(), Seq("doc_id"), "left_anti")
     // stage-then-swap (TableWriter.swapStagedDirs): survivors written
     // ONCE, partitioned. Idempotent under replay: re-running the strike
@@ -819,43 +895,18 @@ object Retrieval {
     }
 
     // ---- step 5: recompute the struck terms' vocab buckets (exact,
-    // idempotent — replaces decrement arithmetic entirely) ----
-    val vocabPath = writer.path(s"${name}_vocab")
+    // idempotent — replaces decrement arithmetic entirely); a bucket
+    // left with no terms is deleted by publishVocab ----
     if (buckets % vocabBuckets == 0) {
       val pb = (0 until buckets).filter(b => touchedVb.contains(b % vocabBuckets))
-      val recomputed = spark.read.parquet(postRoot.toString)
-        .withColumn("term_bucket", col("term_bucket").cast("int"))
-        .filter(col("term_bucket").isin(pb: _*))
-        .groupBy("term").agg(count(lit(1)).as("df"))
-        .withColumn("vocab_bucket",
-          pmod(xxhash64(col("term")), lit(vocabBuckets.toLong)).cast("int"))
-        .persist()
-      try {
-        // bounded collect: ≤ vocabBuckets ids with surviving terms
-        val survivingVb = recomputed.select("vocab_bucket").distinct()
-          .collect().map(_.getInt(0)).toSet
-        if (survivingVb.nonEmpty)
-          recomputed.repartition(col("vocab_bucket"))
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("vocab_bucket")
-            .parquet(vocabPath)
-        // a touched bucket with NO surviving terms: dynamic overwrite
-        // cannot write an empty partition — drop the stale dir
-        val vroot = new org.apache.hadoop.fs.Path(vocabPath)
-        touchedVb.filterNot(survivingVb).foreach { b =>
-          fs.delete(new org.apache.hadoop.fs.Path(vroot, s"vocab_bucket=$b"),
-            true)
-        }
-      } finally recomputed.unpersist(blocking = false)
+      publishVocab(spark, writer, name, touchedVb) {
+        vocabOf(readPostings(pb), vocabBuckets)
+      }
     } else {
       // non-divisible layout: exact full rebuild from the postings
       writer.materialize(s"${name}_vocab_next",
-        spark.read.parquet(postRoot.toString)
-          .groupBy("term").agg(count(lit(1)).as("df"))
-          .withColumn("vocab_bucket",
-            pmod(xxhash64(col("term")), lit(vocabBuckets.toLong)).cast("int"))
-          .repartition(col("vocab_bucket")),
+        vocabOf(spark.read.schema(postingsLayout).parquet(postRoot.toString),
+          vocabBuckets).repartition(col("vocab_bucket")),
         partitionBy = Seq("vocab_bucket"))
       val vDst = path(s"${name}_vocab")
       fs.delete(vDst, true)
@@ -864,8 +915,7 @@ object Retrieval {
     }
 
     // ---- step 6: stats from the snapshot + the struck set ----
-    writer.materialize(s"${name}_stats",
-      Seq((n0 - struckN, s0 - struckS)).toDF("n_docs", "sum_dl"))
+    writeStatsDirect(fs, writer, name, n0 - struckN, s0 - struckS)
     // step 7 (fenced marker, then the write-aheads clear) is runLeg's
     true
   }
@@ -922,16 +972,17 @@ object Retrieval {
     val affected = vb.distinct().collect().map(_.getInt(0))
     if (affected.isEmpty) return
     val posPath = writer.path(s"${name}_positions")
-    val pruned = spark.read.parquet(posPath)
-      .withColumn("term_bucket", col("term_bucket").cast("int"))
+    val victimIds = victims.select(col(idCol).as("doc_id")).distinct()
+    val pruned = spark.read
+      .schema(Layout.positions(victimIds.schema.head.dataType)).parquet(posPath)
       .filter(col("term_bucket").isin(affected.toIndexedSeq: _*))
     val presentStage = writer.path(s"__stage_delids_$name")
-    pruned.select("doc_id").distinct()
-      .join(victims.select(col(idCol).as("doc_id")).distinct(),
-        Seq("doc_id"), "left_semi")
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+    val presentIds = pruned.select("doc_id").distinct()
+      .join(victimIds, Seq("doc_id"), "left_semi")
+    presentIds.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .parquet(presentStage)
-    val present = spark.read.parquet(presentStage)
+    // the stages are read back with the schema of the frame written
+    val present = spark.read.schema(presentIds.schema).parquet(presentStage)
     try {
       if (present.count() == 0L) return
       // bounded collect: ≤ buckets ids actually holding victim rows
@@ -944,7 +995,7 @@ object Retrieval {
       val surviving: Set[Int] = try {
         survivors.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
           .parquet(stage)
-        val staged = spark.read.parquet(stage)
+        val staged = spark.read.schema(survivors.schema).parquet(stage)
         staged.repartition(col("term_bucket"))
           .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
           .option("partitionOverwriteMode", "dynamic")
@@ -1022,7 +1073,7 @@ object Retrieval {
 
     val (base, state, dirty) = IndexProtocol.pinnedSnapshot(c.fs, c.dir,
       () => dirtyLines(),
-      () => writer.read(spark, s"${name}_postings"),
+      () => writer.read(spark, s"${name}_postings", Layout.postings(LongType)),
       s"queryBm25Index($name)")
 
     // bucket list via the driver-side xxhash64 replica ([[termBucket]] —
@@ -1054,7 +1105,7 @@ object Retrieval {
     // one; an empty corpus has no terms at all).
     val (nDocs, avgdl, dfs): (Long, Double, Map[String, Long]) =
       if (!liveDirty) {
-        val statsRow = writer.read(spark, s"${name}_stats")
+        val statsRow = writer.read(spark, s"${name}_stats", Layout.stats)
           .select(lit(" stats ").as("term"), col("n_docs").as("a"),
             col("sum_dl").as("b"))
         val vocabRows = vocabPruned(spark, writer, name, qTerms, vocabBuckets)
@@ -1555,7 +1606,7 @@ object Retrieval {
     val posCommits = IndexFamily.Positional.commits(spark, writer, name)
     val (posBase, posState, _) = IndexProtocol.pinnedSnapshot(posCommits.fs,
       posCommits.dir, () => Nil,
-      () => writer.read(spark, s"${name}_positions"),
+      () => writer.read(spark, s"${name}_positions", Layout.positions(LongType)),
       s"phraseQuery($name)")
     val posts = IndexProtocol.excludeUncommitted(
         posBase.filter(col("term_bucket").isin(hit: _*)

@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPl
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions.{coalesce, col, lit, when}
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Transparent materialized-view rewrite — the optimizer half of the
   * incremental-view-maintenance story (q91 maintains grouped COUNT/SUM
@@ -527,7 +527,8 @@ case class MvRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     // landing between them could pair the old frontier with the new
     // view's rows (double-counting the folded tail — r11 advisor). The
     // pairing is made consistent by pinning the parquet listing FIRST
-    // (spark.read.parquet resolves its file index eagerly) and then
+    // (spark.read.parquet resolves its file index eagerly, with or
+    // without the schema the view's _frontier records) and then
     // re-reading the frontier: unchanged frontier ⇒ no swap committed
     // between the two reads (every committed fold advances it), so the
     // pinned rows belong to that frontier. A detected swap retries —
@@ -537,7 +538,7 @@ case class MvRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     val (viewRaw0, resolvedFrontier): (Option[DataFrame], Option[Long]) =
       mv.comp match {
         case Some(c) if c.isDynamic =>
-          def resolve(): (String, Long) =
+          def resolve(): (String, Long, Option[StructType]) =
             graft.sources.MvMaintain.servingView(spark, mv.mvPath)
               .getOrElse(throw new IllegalStateException(
                 s"dynamic-frontier view at ${mv.mvPath} has no committed " +
@@ -545,10 +546,10 @@ case class MvRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
           var attempt = 0
           var pinned: Option[(DataFrame, Long)] = None
           while (pinned.isEmpty) {
-            val (d1, f1) = resolve()
-            val df = spark.read.parquet(d1)
+            val (d1, f1, schema) = resolve()
+            val df = graft.sources.MvMaintain.viewFrame(spark, d1, schema)
             df.schema // force relation resolution (file index pinned)
-            val (d2, f2) = resolve()
+            val (d2, f2, _) = resolve()
             if (d1 == d2 && f1 == f2) pinned = Some((df, f1))
             else {
               attempt += 1
@@ -561,7 +562,8 @@ case class MvRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
         case Some(c) => (None, Some(c.frontier))
         case None => (None, None)
       }
-    val viewRaw = viewRaw0.getOrElse(spark.read.parquet(mv.mvPath))
+    val viewRaw = viewRaw0.getOrElse(
+      graft.sources.MvMaintain.viewAt(spark, mv.mvPath))
     def viewWith(extrema: Seq[org.apache.spark.sql.Column]): DataFrame =
       viewRaw.select(
         grain.map(col) ++

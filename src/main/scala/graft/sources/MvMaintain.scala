@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Incremental maintenance of a grain-keyed COUNT/SUM summary view from
   * a CDC change feed — the REFRESH half of the MV story (q91 proved the
@@ -16,7 +17,12 @@ import org.apache.spark.sql.functions._
   * staged view directory before the swap, so view and frontier commit
   * together — a torn refresh can never leave a view claiming the wrong
   * frontier. (Underscore-prefixed files are hidden from Spark's input
-  * listing, so readers of the view parquet never see it.) The swap is
+  * listing, so readers of the view parquet never see it.) Its second
+  * line is the view's schema DDL, committed the same way: every reader
+  * here and in [[graft.plans.MvRewrite]] builds the view frame with it
+  * instead of a footer-inference Spark job, at no extra FS call where
+  * the frontier is read anyway. A view written before the schema line
+  * existed reads with inference. The swap is
   * RETAINING: `rename(view → view__old); rename(stage → view);
   * delete(view__old)` — a crash between the renames leaves the PRIOR
   * view intact under `__old`, which [[frontier]]/[[readView]] resolve
@@ -67,26 +73,56 @@ object MvMaintain {
     else Some(oldPath(mvPath)).filter(fs.exists)
   }
 
+  /** The lines of `dir`'s `_frontier` (frontier, then schema DDL when
+    * recorded), or None when the file is absent.
+    */
+  private def frontierLines(spark: SparkSession,
+      dir: org.apache.hadoop.fs.Path): Option[Seq[String]] = {
+    val f = new org.apache.hadoop.fs.Path(dir, "_frontier")
+    graft.operators.IndexProtocol.readLinesIfExists(fsOf(spark, f), f)
+  }
+
+  private def schemaLine(lines: Seq[String]): Option[StructType] =
+    lines.lift(1).filter(_.nonEmpty).map(StructType.fromDDL)
+
+  /** The committed view in `dir` as (frontier, recorded schema); None
+    * when `dir` holds no `_frontier`.
+    */
+  private def committedIn(spark: SparkSession,
+      dir: org.apache.hadoop.fs.Path): Option[(Long, Option[StructType])] =
+    frontierLines(spark, dir).flatMap(ls =>
+      ls.headOption.map(f => (f.trim.toLong, schemaLine(ls))))
+
+  /** The view parquet at `dir`, read with `schema` when the view
+    * recorded one (no Spark job), else with footer inference.
+    */
+  private[graft] def viewFrame(spark: SparkSession, dir: String,
+      schema: Option[StructType]): DataFrame =
+    schema.fold(spark.read)(spark.read.schema).parquet(dir)
+
+  /** [[viewFrame]] at `dir` with the schema its own `_frontier` records
+    * — for readers that do not read the frontier anyway.
+    */
+  private[graft] def viewAt(spark: SparkSession, dir: String): DataFrame =
+    viewFrame(spark, dir, frontierLines(spark, new org.apache.hadoop.fs.Path(dir))
+      .flatMap(schemaLine))
+
   /** The frontier recorded by the last committed refresh, or None if no
     * (committed) view exists. Resolves through a torn swap: the prior
     * view's frontier under `__old` answers exactly.
     */
   def frontier(spark: SparkSession, mvPath: String): Option[Long] =
-    liveDir(spark, mvPath).flatMap { dir =>
-      val f = new org.apache.hadoop.fs.Path(dir, "_frontier")
-      val fs = fsOf(spark, f)
-      graft.operators.IndexProtocol.readLinesIfExists(fs, f)
-        .flatMap(_.headOption).map(_.trim.toLong)
-    }
+    liveDir(spark, mvPath).flatMap(committedIn(spark, _)).map(_._1)
 
   /** Snapshot read of the committed view, torn-swap-resolving (the
     * complement of [[frontier]] for callers that need the rows).
     */
   def readView(spark: SparkSession, mvPath: String): Option[DataFrame] =
-    liveDir(spark, mvPath).map(dir => spark.read.parquet(dir.toString))
+    liveDir(spark, mvPath).map(dir => viewAt(spark, dir.toString))
 
   /** The committed serving pair (directory, frontier) resolved from the
-    * SAME directory — what [[graft.plans.MvRewrite]]'s dynamic-frontier
+    * SAME directory, with the view schema its `_frontier` records (for
+    * [[viewFrame]]) — what [[graft.plans.MvRewrite]]'s dynamic-frontier
     * mode consumes. NOTE: this call alone does NOT pin the view's rows
     * — the returned dir's parquet listing happens later at the caller,
     * and a refresh swap landing between this frontier read and that
@@ -97,12 +133,10 @@ object MvMaintain {
     * caller must do the same dance or accept the race.
     */
   private[graft] def servingView(spark: SparkSession,
-      mvPath: String): Option[(String, Long)] =
+      mvPath: String): Option[(String, Long, Option[StructType])] =
     liveDir(spark, mvPath).flatMap { dir =>
-      val fs = fsOf(spark, dir)
-      graft.operators.IndexProtocol.readLinesIfExists(fs,
-          new org.apache.hadoop.fs.Path(dir, "_frontier"))
-        .flatMap(_.headOption).map(f => (dir.toString, f.trim.toLong))
+      committedIn(spark, dir).map { case (f, schema) =>
+        (dir.toString, f, schema) }
     }
 
   private def feedBatchIds(spark: SparkSession, feedRoot: String): Seq[Long] = {
@@ -144,7 +178,8 @@ object MvMaintain {
       else require(fs.rename(oldP, mvP),
         s"refresh: rollback rename $oldP -> $mvPath failed")
     }
-    val fr = frontier(spark, mvPath)
+    val committed = liveDir(spark, mvPath).flatMap(committedIn(spark, _))
+    val fr = committed.map(_._1)
     val ids = feedBatchIds(spark, feedRoot)
     require(ids.nonEmpty, s"refresh: no feed batches under $feedRoot")
     if (fr.isEmpty) {
@@ -170,7 +205,8 @@ object MvMaintain {
 
     val tail = spark.read.parquet(
       tailIds.map(id => s"$feedRoot/batch=$id"): _*)
-    val merged = foldInto(spark, mvPath, fr.isDefined, tail, v)
+    val merged = foldInto(
+      committed.map(c => viewFrame(spark, mvPath, c._2)), tail, v)
     stageAndSwap(spark, fs, mvPath, merged.filter(col(v.countCol) > 0),
       newFrontier, hooks)
     newFrontier
@@ -181,8 +217,8 @@ object MvMaintain {
     * stay pinned to the first-committed view schema, so refresh ==
     * full-refold frame-for-frame at any depth.
     */
-  private def foldInto(spark: SparkSession, mvPath: String,
-      haveView: Boolean, tail: DataFrame, v: ViewDef): DataFrame = {
+  private def foldInto(view: Option[DataFrame], tail: DataFrame,
+      v: ViewDef): DataFrame = {
     val pos = col("change_op").isin("insert", "update_post")
     val sign = when(pos, lit(1L)).otherwise(lit(-1L))
     val mKeys = v.sumCols.keys.toSeq.sorted
@@ -190,31 +226,32 @@ object MvMaintain {
       .agg(sum(sign).as("__dn"),
         mKeys.map(m => sum(when(pos, col(m)).otherwise(-col(m)))
           .as(s"__d_$m")): _*)
-    if (!haveView)
-      deltas.select(v.grain.map(col) ++
-        Seq(col("__dn").as(v.countCol)) ++
-        mKeys.map(m => col(s"__d_$m").as(v.sumCols(m))): _*)
-    else {
-      val old = spark.read.parquet(mvPath)
-      val schema = old.schema
-      old.join(deltas, v.grain, "full_outer")
-        .select(v.grain.map(col) ++
-          Seq((coalesce(col(v.countCol), lit(0L)) +
-            coalesce(col("__dn"), lit(0L)))
-            .cast(schema(v.countCol).dataType).as(v.countCol)) ++
-          mKeys.map { m =>
-            val s = v.sumCols(m)
-            (coalesce(col(s), lit(0).cast(schema(s).dataType)) +
-              coalesce(col(s"__d_$m"), lit(0).cast(schema(s).dataType)))
-              .cast(schema(s).dataType).as(s)
-          }: _*)
+    view match {
+      case None =>
+        deltas.select(v.grain.map(col) ++
+          Seq(col("__dn").as(v.countCol)) ++
+          mKeys.map(m => col(s"__d_$m").as(v.sumCols(m))): _*)
+      case Some(old) =>
+        val schema = old.schema
+        old.join(deltas, v.grain, "full_outer")
+          .select(v.grain.map(col) ++
+            Seq((coalesce(col(v.countCol), lit(0L)) +
+              coalesce(col("__dn"), lit(0L)))
+              .cast(schema(v.countCol).dataType).as(v.countCol)) ++
+            mKeys.map { m =>
+              val s = v.sumCols(m)
+              (coalesce(col(s), lit(0).cast(schema(s).dataType)) +
+                coalesce(col(s"__d_$m"), lit(0).cast(schema(s).dataType)))
+                .cast(schema(s).dataType).as(s)
+            }: _*)
     }
   }
 
-  /** Stage → embed frontier → RETAINING swap: the prior view survives
-    * under `__old` until the new one is in place, so a crash at any
-    * point leaves a committed view readable (prior or new) — see the
-    * class doc. `__old` is dropped last (litter if we crash before).
+  /** Stage → embed frontier and schema → RETAINING swap: the prior
+    * view survives under `__old` until the new one is in place, so a
+    * crash at any point leaves a committed view readable (prior or new)
+    * — see the class doc. `__old` is dropped last (litter if we crash
+    * before).
     */
   private def stageAndSwap(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, mvPath: String,
@@ -225,9 +262,11 @@ object MvMaintain {
     val tmpPath = new org.apache.hadoop.fs.Path(tmp)
     if (fs.exists(tmpPath)) fs.delete(tmpPath, true)
     alive.write.mode("overwrite").parquet(tmp)
+    val ddl = alive.schema.toDDL
+    require(!ddl.contains("\n"), s"view schema DDL spans lines: $ddl")
     val frFile = new org.apache.hadoop.fs.Path(tmpPath, "_frontier")
     val out = fs.create(frFile, true)
-    try out.write(newFrontier.toString
+    try out.write(s"$newFrontier\n$ddl"
       .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
     hooks.beforeSwap()
@@ -275,12 +314,12 @@ object MvMaintain {
     val latest = VersionedTable.latestVersion(spark, tableRoot).getOrElse(
       throw new IllegalArgumentException(
         s"refreshFromVersionedTable: no committed version at $tableRoot"))
-    frontier(spark, mvPath) match {
-      case Some(f) if f >= latest => f
-      case Some(f) =>
+    liveDir(spark, mvPath).flatMap(committedIn(spark, _)) match {
+      case Some((f, _)) if f >= latest => f
+      case Some((f, schema)) =>
         val tail = VersionedTable.changesBetween(spark, tableRoot, key,
           f, latest)
-        val merged = foldInto(spark, mvPath, haveView = true, tail, v)
+        val merged = foldInto(Some(viewFrame(spark, mvPath, schema)), tail, v)
         stageAndSwap(spark, fs, mvPath,
           merged.filter(col(v.countCol) > 0), latest, hooks)
         latest

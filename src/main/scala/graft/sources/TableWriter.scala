@@ -12,6 +12,29 @@ final class TableWriter(warehouseDir: String) extends Serializable {
 
   def path(name: String): String = s"$warehouseDir/$name"
 
+  private def rebucketStage(name: String) =
+    new org.apache.hadoop.fs.Path(path(s"__stage_rebucket_$name"))
+  private def rebucketTrash(name: String) =
+    new org.apache.hadoop.fs.Path(path(s"_trash_rebucket_$name"))
+
+  /** Whether table `name` exists, after undoing a [[rebucket]] that
+    * crashed between its two renames: then the old table sits whole
+    * under the rebucket trash name and nothing is at `path(name)`, so
+    * the trash is renamed back and the stage dropped. Every write that
+    * tests for the table goes through here — otherwise the missing
+    * table would read as a new one and the next merge would publish
+    * its batch alone. Costs nothing extra when the table is present.
+    */
+  private def tableExists(fs: org.apache.hadoop.fs.FileSystem,
+      name: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(path(name))
+    fs.exists(p) || (fs.exists(rebucketTrash(name)) && {
+      TableWriter.renameOrThrow(fs, rebucketTrash(name), p, "rebucket recovery")
+      fs.delete(rebucketStage(name), true)
+      true
+    })
+  }
+
   def materialize(name: String, df: DataFrame,
       partitionBy: Seq[String] = Nil,
       mode: SaveMode = SaveMode.Overwrite): String = {
@@ -21,8 +44,21 @@ final class TableWriter(warehouseDir: String) extends Serializable {
     path(name)
   }
 
+  /** Read `name`, inferring its schema from the parquet footers (one
+    * Spark job). Callers that know the layout pass it to the overload
+    * below instead.
+    */
   def read(spark: org.apache.spark.sql.SparkSession, name: String): DataFrame =
     spark.read.parquet(path(name))
+
+  /** Read `name` with a schema the caller already holds (the frame it
+    * materialized, or a declared layout): building the frame lists the
+    * files and launches no Spark job. Partition columns come last, as
+    * in an inferred read; an older file without a column null-fills it.
+    */
+  def read(spark: org.apache.spark.sql.SparkSession, name: String,
+      schema: org.apache.spark.sql.types.StructType): DataFrame =
+    spark.read.schema(schema).parquet(path(name))
 
   // ---- shallow clone (zero-copy branch) on the mergeByKey layout ----
   //
@@ -109,7 +145,7 @@ final class TableWriter(warehouseDir: String) extends Serializable {
       src: String, dst: String): String = {
     val p = new org.apache.hadoop.fs.Path(path(src))
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    require(fs.exists(p), s"shallowClone: no table at ${path(src)}")
+    require(tableExists(fs, src), s"shallowClone: no table at ${path(src)}")
     val dstP = new org.apache.hadoop.fs.Path(path(dst))
     require(!fs.exists(dstP), s"shallowClone: ${path(dst)} already exists")
     fs.mkdirs(dstP)
@@ -240,7 +276,7 @@ final class TableWriter(warehouseDir: String) extends Serializable {
       .withColumn("__gen", lit(1))
     val p = new org.apache.hadoop.fs.Path(path(name))
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p))
+    if (!tableExists(fs, name))
       mergeStagedSwap(spark, name, withBucket.drop("__gen"))
     else {
       // pin the incoming side for the scope of the merge: the affected-
@@ -367,9 +403,9 @@ final class TableWriter(warehouseDir: String) extends Serializable {
       val affected = doomed.select("__bucket").distinct()
         .collect().map(_.getInt(0))
       val root = new org.apache.hadoop.fs.Path(path(name))
-      TableWriter.recoverSwap(
-        root.getFileSystem(spark.sessionState.newHadoopConf()), root,
-        "__bucket=")
+      val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+      tableExists(fs, name) // undoes a crashed rebucket before the reads
+      TableWriter.recoverSwap(fs, root, "__bucket=")
       val (candidates, releaseCand) = TableWriter.pinScoped(
         readResolved(spark, name, Some(affected.toIndexedSeq)))
       try deletePrepared(spark, name, doomed, candidates, key)
@@ -443,20 +479,25 @@ final class TableWriter(warehouseDir: String) extends Serializable {
     * `pmod(xxhash64(key), newBuckets)` the layout contract uses, so
     * every subsequent merge/delete/prune at `newBuckets` stays correct.
     * Swap protocol: stage the new layout, move the live root to an
-    * underscore trash name, rename the stage in, drop the trash — a
-    * crash leaves either the old table plus a sweepable stage, or the
-    * new table plus sweepable trash, never a mix of generations.
+    * underscore trash name, rename the stage in, drop the trash. A crash
+    * before the first rename leaves the old table plus a sweepable
+    * stage; after the second, the new table plus sweepable trash. A
+    * crash between the two leaves NO table at the path, only the old
+    * one under the trash name and the new one as the stage: the next
+    * write or rebucket on `name` renames the trash back and drops the
+    * stage first ([[tableExists]]), so the old generation serves again
+    * and no merge ever starts from an empty table. The two generations
+    * are never mixed.
     */
   def rebucket(spark: org.apache.spark.sql.SparkSession, name: String,
       key: String, newBuckets: Int): String = {
     import org.apache.spark.sql.functions._
     val p = new org.apache.hadoop.fs.Path(path(name))
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    require(fs.exists(p), s"rebucket: no table at ${path(name)}")
-    val stage = path(s"__stage_rebucket_$name")
-    val stageP = new org.apache.hadoop.fs.Path(stage)
-    val trash = new org.apache.hadoop.fs.Path(
-      path(s"_trash_rebucket_$name"))
+    require(tableExists(fs, name), s"rebucket: no table at ${path(name)}")
+    val stageP = rebucketStage(name)
+    val stage = stageP.toString
+    val trash = rebucketTrash(name)
     fs.delete(stageP, true)
     fs.delete(trash, true)
     // resolve a clone manifest if present: rebucketing a clone is the
@@ -501,7 +542,7 @@ final class TableWriter(warehouseDir: String) extends Serializable {
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     val outCols = (Seq(col("batch_id"), col("change_op"), col(key))
       ++ valueCols.map(col))
-    if (!fs.exists(p)) {
+    if (!tableExists(fs, name)) {
       // fresh table: the feed write and the table write both consume the
       // batch — pin it once (same discipline as the incremental branch;
       // gated, see TableWriter.pinScoped)
@@ -691,7 +732,7 @@ final class TableWriter(warehouseDir: String) extends Serializable {
     import org.apache.spark.sql.functions._
     val p = new org.apache.hadoop.fs.Path(path(name))
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(p)) {
+    if (tableExists(fs, name)) {
       // feed and delete consume the same doomed set and the same touched
       // buckets — pin both once (see deleteByKey) and run the delete over
       // the pinned frames instead of re-reading everything. Gated
@@ -738,12 +779,16 @@ final class TableWriter(warehouseDir: String) extends Serializable {
     *
     * Plain parquet has no atomic multi-file commit, so the swap runs a
     * miniature write-ahead protocol: compacted files enter the directory
-    * dot-prefixed (invisible to readers), a `_compaction_log` listing
-    * the doomed small files is written, the compacted files are renamed
-    * visible, the smalls are deleted, the log is removed. A crash before
-    * the log exists leaves only invisible garbage (cleaned on the next
-    * run); a crash after leaves the log, and the next run completes the
-    * deletes before doing anything else. The only reader-visible anomaly
+    * dot-prefixed (invisible to readers), a `_compaction_log` is written
+    * atomically naming each hidden→visible pair (a tab-separated line)
+    * and the doomed small files (one path a line), the compacted files
+    * are renamed visible, the smalls are deleted, the log is removed. A
+    * crash before the log exists leaves only invisible garbage (cleaned
+    * on the next run); a crash after leaves the log, and the next run
+    * first unveils every logged pair still hidden, then completes the
+    * deletes, before doing anything else — so the rows are in the
+    * compacted files before their small copies go. Hidden files no log
+    * names are pre-log garbage and are swept. The only reader-visible anomaly
     * is transient duplication between unveil and delete — the documented
     * plain-parquet tradeoff (loss is the alternative; table formats fix
     * this with a manifest commit, which the log emulates at directory
@@ -755,7 +800,7 @@ final class TableWriter(warehouseDir: String) extends Serializable {
     val smallThreshold = smallThresholdOpt.getOrElse(targetBytes / 2)
     val root = new Path(path(name))
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    require(fs.exists(root), s"no table at ${path(name)}")
+    require(tableExists(fs, name), s"no table at ${path(name)}")
 
     def leafDirs(d: Path): Seq[Path] = {
       val entries = fs.listStatus(d).toSeq
@@ -767,11 +812,14 @@ final class TableWriter(warehouseDir: String) extends Serializable {
     var (before, after) = (0, 0)
     for (dir <- leafDirs(root)) {
       val log = new Path(dir, "_compaction_log")
-      // recovery: a previous run crashed after unveiling — finish its deletes
-      if (fs.exists(log)) {
-        val in = fs.open(log)
-        val doomed = try scala.io.Source.fromInputStream(in).getLines().toList
-          finally in.close()
+      // recovery: a previous run crashed after writing its log — unveil
+      // the logged compacted files still hidden, then finish the deletes
+      graft.operators.IndexProtocol.readLinesIfExists(fs, log).foreach { lines =>
+        val (pairs, doomed) = lines.filter(_.nonEmpty).partition(_.contains("\t"))
+        pairs.map(_.split("\t", 2)).foreach { case Array(h, v) =>
+          if (fs.exists(new Path(h)))
+            TableWriter.renameOrThrow(fs, new Path(h), new Path(v), "compact")
+        }
         doomed.foreach(f => fs.delete(new Path(f), false))
         fs.delete(log, false)
       }
@@ -801,10 +849,9 @@ final class TableWriter(warehouseDir: String) extends Serializable {
             TableWriter.renameOrThrow(fs, p, hidden, "compact")
             (hidden, new Path(dir, s"compact-$id-$i.parquet"))
           }
-          val out = fs.create(log, true)
-          try out.write(small.map(_.getPath.toString)
-            .mkString("", "\n", "\n").getBytes("UTF-8"))
-          finally out.close()
+          graft.operators.IndexProtocol.writeLinesAtomic(fs, log,
+            unveil.map { case (h, v) => s"$h\t$v" } ++
+              small.map(_.getPath.toString))
           unveil.foreach { case (h, v) =>
             TableWriter.renameOrThrow(fs, h, v, "compact") }
           small.foreach(f => fs.delete(f.getPath, false))

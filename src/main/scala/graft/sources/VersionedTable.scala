@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.operators.IndexProtocol
 
@@ -66,11 +67,12 @@ import graft.operators.IndexProtocol
   * one-bucket commit writes bytes proportional to ONE bucket, not
   * 600 MB). [[vacuum]] re-anchors the retention floor as a checkpoint
   * before dropping older manifests, so every retained version stays
-  * resolvable. Every manifest records the version's schema DDL, which
-  * is also what makes a legally EMPTY version (delete-all) readable.
-  * Reads with `mergeSchema` touch every file's footer once; a
-  * deployment past that serves the scan schema from the manifest's
-  * recorded DDL directly (as table formats do).
+  * resolvable. Every manifest records the version's schema DDL, and
+  * [[read]] serves the scan schema from it directly (as table formats
+  * do): building a read frame opens no data file and launches no Spark
+  * job, and the same DDL makes a legally EMPTY version (delete-all)
+  * readable. Only a legacy manifest with no DDL falls back to reading
+  * every footer of the version (`mergeSchema`).
   */
 object VersionedTable {
 
@@ -249,8 +251,10 @@ object VersionedTable {
     * commits are invisible, torn states unobservable. Reading a
     * vacuumed version refuses loudly, naming the retained floor.
     * `buckets` restricts to those bucket ids (the pruned read the
-    * commit paths use). `mergeSchema` spans schema evolution: files
-    * older than an additive column null-fill it.
+    * commit paths use). The scan schema is the version's recorded DDL,
+    * so the frame is built without a Spark job, and it spans schema
+    * evolution: files older than an additive column null-fill it. A
+    * legacy manifest without DDL reads every footer (`mergeSchema`).
     */
   def read(spark: SparkSession, rootStr: String,
       asOf: Option[Long] = None,
@@ -273,31 +277,30 @@ object VersionedTable {
       case None => entries
     }
     val files = selected.toSeq.flatMap(_._2).sorted
-    if (files.isEmpty) {
+    val frame = (files.isEmpty, schemaDdl.map(StructType.fromDDL)) match {
       // none of the selected buckets exist at this version — empty
-      // frame with the table schema: from the manifest's recorded DDL
-      // (which also makes a LEGALLY EMPTY version readable — a
-      // delete-all commit used to wedge the table on `has no files`),
-      // else from any committed file (legacy manifests)
-      schemaDdl match {
-        case Some(ddl) =>
-          spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-            org.apache.spark.sql.types.StructType.fromDDL(ddl))
-            .withColumn("__bucket", col("__bucket").cast("int"))
-        case None =>
-          val any = entries.toSeq.flatMap(_._2).sorted
-          require(any.nonEmpty,
-            s"version $v of $rootStr has no files and no recorded schema " +
-              "(legacy empty manifest)")
-          spark.read.option("basePath", rootStr).parquet(any.head).limit(0)
-            .withColumn("__bucket", col("__bucket").cast("int"))
-      }
-    } else {
-      spark.read.option("basePath", rootStr)
-        .option("mergeSchema", "true")
-        .parquet(files: _*)
-        .withColumn("__bucket", col("__bucket").cast("int"))
+      // frame with the table schema (which also makes a LEGALLY EMPTY
+      // version readable — a delete-all commit used to wedge the table
+      // on `has no files`)
+      case (true, Some(schema)) =>
+        spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
+          schema)
+      case (false, Some(schema)) =>
+        spark.read.option("basePath", rootStr).schema(schema)
+          .parquet(files: _*)
+      // legacy manifests record no schema: infer it from the footers
+      case (true, None) =>
+        val any = entries.toSeq.flatMap(_._2).sorted
+        require(any.nonEmpty,
+          s"version $v of $rootStr has no files and no recorded schema " +
+            "(legacy empty manifest)")
+        spark.read.option("basePath", rootStr).parquet(any.head).limit(0)
+      case (false, None) =>
+        spark.read.option("basePath", rootStr)
+          .option("mergeSchema", "true")
+          .parquet(files: _*)
     }
+    frame.withColumn("__bucket", col("__bucket").cast("int"))
   }
 
   /** Sweep every crashed attempt: a `staged_<k>` whose `v_<k>` manifest

@@ -103,6 +103,33 @@ class CompactionSpec extends SparkSpec {
       (0L until 20L))
   }
 
+  test("compact: recovery unveils the logged compacted files before deleting the smalls") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-compact-u").toString
+    val w = new TableWriter(dir)
+    (0L until 20L).toDF("k").repartition(4).write.parquet(w.path("ut"))
+    val tdir = java.nio.file.Paths.get(w.path("ut"))
+    val parts = listing(w.path("ut")).keys.toSeq.sorted
+    // the crash state: parts(0) and parts(1) compacted into one hidden
+    // file, the log written, nothing unveiled or deleted yet
+    val hidden = tdir.resolve(".compact-crash-0.parquet")
+    spark.read.parquet(parts.take(2).map(p => tdir.resolve(p).toString): _*)
+      .coalesce(1).write.parquet(w.path("ut_stage"))
+    val staged = new java.io.File(w.path("ut_stage")).listFiles
+      .filter(_.getName.endsWith(".parquet")).head.toPath
+    java.nio.file.Files.move(staged, hidden)
+    java.nio.file.Files.writeString(tdir.resolve("_compaction_log"),
+      s"$hidden\t${tdir.resolve("compact-crash-0.parquet")}\n" +
+        parts.take(2).map(p => tdir.resolve(p).toString + "\n").mkString)
+
+    w.compact(spark, "ut", targetBytes = 64L << 10,
+      smallThresholdOpt = Some(1L)) // threshold 1: nothing qualifies as small
+    assert(w.read(spark, "ut").as[Long].collect().sorted.toSeq ==
+      (0L until 20L))
+    assert(java.nio.file.Files.exists(tdir.resolve("compact-crash-0.parquet")))
+    assert(!java.nio.file.Files.exists(hidden))
+    assert(!java.nio.file.Files.exists(tdir.resolve("_compaction_log")))
+  }
+
   test("compact: positional and IVF list layouts shrink to one file per dir, serving bit-identical") {
     import graft.operators.{Retrieval, Similarity}
     def filesPerDir(path: String, prefix: String): Map[String, Int] = {

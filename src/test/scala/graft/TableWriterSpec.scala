@@ -236,4 +236,25 @@ class TableWriterSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
     assert(end.size == 501 && end(5L) == 99.0 && end(501L) == 42.0)
   }
+
+  test("rebucket crashed between its renames: the next merge keeps every old row") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-rebucket-crash").toString
+    val w = new TableWriter(dir)
+    val rows = (1L to 100L).map(k => (k, k * 2.0)).toDF("k", "v")
+    w.mergeByKey(spark, "t", rows, "k", numBuckets = 4)
+    // the crash state: the live table renamed to its rebucket trash name,
+    // the new layout staged, the stage never renamed in
+    val table = java.nio.file.Paths.get(w.path("t"))
+    java.nio.file.Files.move(table,
+      java.nio.file.Paths.get(w.path("_trash_rebucket_t")))
+    rows.limit(10).write.parquet(w.path("__stage_rebucket_t"))
+    w.mergeByKey(spark, "t", Seq((5L, 99.0), (101L, 42.0)).toDF("k", "v"),
+      "k", numBuckets = 4)
+    val end = w.read(spark, "t").select("k", "v")
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
+    assert(end.size == 101 && end(5L) == 99.0 && end(101L) == 42.0 &&
+      end(100L) == 200.0, s"${end.size} rows after the merge")
+    assert(!new java.io.File(w.path("_trash_rebucket_t")).exists())
+    assert(!new java.io.File(w.path("__stage_rebucket_t")).exists())
+  }
 }

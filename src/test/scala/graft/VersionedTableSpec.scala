@@ -206,6 +206,28 @@ class VersionedTableSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getLong(1)).toMap)
   }
 
+  test("the manifest-DDL read equals the footer-merging read after an " +
+      "additive column") {
+    val root = freshRoot()
+    VersionedTable.commitMerge(spark, root, base, "k", 8)
+    VersionedTable.commitMerge(spark, root,
+      Seq((21L, 210L, "gold"), (4L, 41L, "silver")).toDF("k", "price", "tier"),
+      "k", 8)
+    val v = VersionedTable.latestVersion(spark, root).get
+    val files = VersionedTable.resolvedEntries(spark, root, v).values.flatten.toSeq
+    val merged = spark.read.option("basePath", root)
+      .option("mergeSchema", "true").parquet(files: _*)
+      .withColumn("__bucket", col("__bucket").cast("int"))
+    val ddlRead = VersionedTable.read(spark, root)
+    assert(ddlRead.schema.map(f => (f.name, f.dataType)) ===
+      merged.schema.map(f => (f.name, f.dataType)))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq).toSet
+    assert(rows(ddlRead) === rows(merged))
+    // files older than the column null-fill it
+    assert(ddlRead.filter(col("k") === 3L).select("tier").head().isNullAt(0))
+  }
+
   test("a delete that hits nothing commits no version") {
     val root = freshRoot()
     val v0 = VersionedTable.commitMerge(spark, root, base, "k", 8)
